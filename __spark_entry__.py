@@ -63,6 +63,7 @@ from blaze_spark.pipeline import (  # noqa: E402
     top_ngram_share,
     topk_recall,
 )
+from blaze_spark.sources import local_frame  # noqa: E402
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> Table:
@@ -2871,7 +2872,8 @@ def quality_classifier_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     lex = [("the", 10), ("a", 10), ("of", 10), ("and", 10), ("to", 10),
            ("slow", -15), ("filter", -15)]
-    wts = spark.createDataFrame(
+    wts = local_frame(
+        spark,
         [(int(hashlib.md5(w.encode()).hexdigest()[:8], 16) % 4096, m)
          for w, m in lex], "bucket long, weight_milli long")
     return quality_classifier(d, wts, n_buckets=4096,
@@ -3005,7 +3007,8 @@ def targeted_corpus_build(spark, sf_dir):
                   .select("doc_id", "text", "source"), "gated_docs")
     lex = [("the", 10), ("a", 10), ("of", 10), ("and", 10), ("to", 10),
            ("slow", -15), ("filter", -15)]
-    wts = spark.createDataFrame(
+    wts = local_frame(
+        spark,
         [(int(hashlib.md5(w.encode()).hexdigest()[:8], 16) % 4096, m)
          for w, m in lex], "bucket long, weight_milli long")
     qc = quality_classifier(gated, wts, intercept_milli=-20,
@@ -3054,7 +3057,8 @@ def blaze_client_selection(spark, sf_dir):
                   spark=spark)
         lex = [("the", 10), ("a", 10), ("of", 10), ("and", 10),
                ("to", 10), ("slow", -15), ("filter", -15)]
-        wts = spark.createDataFrame(
+        wts = local_frame(
+            spark,
             [(int(hashlib.md5(w.encode()).hexdigest()[:8], 16) % 4096, m)
              for w, m in lex], "bucket long, weight_milli long")
         qc = quality_classifier(rt, wts, n_buckets=4096,

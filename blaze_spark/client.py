@@ -63,6 +63,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from .core import Table
+from .sources import local_frame
 
 __all__ = ["Client", "RemoteTable", "DEFAULT_PORT"]
 
@@ -194,7 +195,7 @@ class Client:
         if spark is None:
             raise RuntimeError("no active SparkSession; pass spark= to "
                                "Client/data()")
-        empty = spark.createDataFrame([], schema=schemas[name])
+        empty = local_frame(spark, [], schema=schemas[name])
         t = RemoteTable(empty, name, client=self)
         t._tree = {"op": "symbol", "args": [name]}
         return t

@@ -1180,10 +1180,18 @@ class Table:
                 # a broadcast LEFT SEMI join — hashed build side, no
                 # giant literal in the plan (reference IsIn cliff,
                 # SURVEY §2.3).  Null keys never match, same as In.
+                from functools import reduce
+
+                from .sources import local_frame
+
                 src_col, vals = semi
-                spark = self._df.sparkSession
-                vdf = (spark.createDataFrame([(v,) for v in vals])
-                       .toDF("__isin_val").dropDuplicates())
+                # the value type row-list inference gives (int -> long,
+                # float -> double, ...), declared for the literal frame
+                vtype = reduce(T._merge_type, map(T._infer_type, vals))
+                vdf = local_frame(
+                    self._df.sparkSession, [(v,) for v in vals],
+                    T.StructType([T.StructField("__isin_val", vtype)])
+                ).dropDuplicates()
                 out = self._new(self._df.join(
                     F.broadcast(vdf), src_col == F.col("__isin_val"),
                     "left_semi"))

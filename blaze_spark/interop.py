@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .core import ColExpr, Reduction, Table, by, concat, join, summary
-from .sources import data
+from .sources import data, local_frame
 
 __all__ = ["from_tree", "to_tree", "compute_tree", "CachedTable"]
 
@@ -535,8 +535,8 @@ def _selection_node(op: str, args: list, child: Table, walk):
             return None
         if isinstance(enc, dict):
             return walk(enc).df
-        return spark.createDataFrame(
-            [(int(b), int(c)) for b, c in enc], "bucket long, cnt long")
+        return local_frame(spark, [(int(b), int(c)) for b, c in enc],
+                           "bucket long, cnt long")
 
     _SEL_KW = {
         "quality_classifier": {"text_col", "id_col", "n_buckets",
@@ -584,14 +584,14 @@ def _selection_node(op: str, args: list, child: Table, walk):
         label = _expr(args[1], child)
         m = _tqc(child, label,
                  **_kw(args[2], "train_quality_classifier"))
-        return Table(spark.createDataFrame(
-            m.to_rows(), "bucket long, weight_milli long"),
+        return Table(local_frame(
+            spark, m.to_rows(), "bucket long, weight_milli long"),
             "trained_quality_model")
     if op == "quality_classifier":
         # args: [child, [[bucket, weight_milli], ...], {kw}]
         _arity(op, args, 3)
-        wdf = spark.createDataFrame(
-            [(int(b), int(w)) for b, w in args[1]],
+        wdf = local_frame(
+            spark, [(int(b), int(w)) for b, w in args[1]],
             "bucket long, weight_milli long")
         return Table(quality_classifier(child, wdf,
                                         **_kw(args[2],
@@ -656,8 +656,8 @@ def _lm_node(op: str, args: list, child: Table, walk):
         if isinstance(args[2], dict):
             counts = walk(args[2]).df
         else:
-            counts = spark.createDataFrame(
-                [(str(k), int(b), int(c)) for k, b, c in args[2]],
+            counts = local_frame(
+                spark, [(str(k), int(b), int(c)) for k, b, c in args[2]],
                 "kind string, bucket long, cnt long")
     allowed = {"text_col", "id_col", "n_buckets", "n", "smoothing",
                "backoff", "interpolate", "tokenizer", "kneser_ney"}
@@ -941,8 +941,8 @@ def _pq_node(op: str, args: list, child: Table, walk, stores: dict):
         spark = child.df.sparkSession
         id_col = kw.get("id_col", "vec_id")
         vec_col = kw.get("vec_col", "embedding")
-        queries = Table(spark.createDataFrame(
-            [(int(q), [float(x) for x in v]) for q, v in args[2]],
+        queries = Table(local_frame(
+            spark, [(int(q), [float(x) for x in v]) for q, v in args[2]],
             f"{id_col} long, {vec_col} array<double>"), "queries")
     return pq_topk(child, queries, codebooks, **kw)
 
@@ -978,8 +978,8 @@ def _ivf_pq_node(op: str, args: list, child: Table, walk,
         spark = child.df.sparkSession
         id_col = kw.get("id_col", "vec_id")
         vec_col = kw.get("vec_col", "embedding")
-        queries = Table(spark.createDataFrame(
-            [(int(q), [float(x) for x in v]) for q, v in args[3]],
+        queries = Table(local_frame(
+            spark, [(int(q), [float(x) for x in v]) for q, v in args[3]],
             f"{id_col} long, {vec_col} array<double>"), "queries")
     return ivf_pq_topk(child, queries, centroids, codebooks, **kw)
 
@@ -1015,8 +1015,8 @@ def _bm25_node(args: list, child: Table, walk):
         spark = child.df.sparkSession
         qid = kw.get("query_id_col", "query_id")
         qtx = kw.get("query_text_col", "query")
-        queries = spark.createDataFrame(
-            [(int(i), q) for i, q in args[1]],
+        queries = local_frame(
+            spark, [(int(i), q) for i, q in args[1]],
             T.StructType([T.StructField(qid, T.LongType()),
                           T.StructField(qtx, T.StringType())]))
     return bm25_topk(child, queries, **kw)
@@ -1074,8 +1074,8 @@ def _mix_dedup_node(op: str, args: list, child: Table, walk):
     else:
         spark = child.df.sparkSession
         src_col = kw.get("source_col", "source")
-        weights = spark.createDataFrame(
-            [(s, float(w)) for s, w in args[1]],
+        weights = local_frame(
+            spark, [(s, float(w)) for s, w in args[1]],
             T.StructType([T.StructField(src_col, T.StringType()),
                           T.StructField("sample_weight",
                                         T.DoubleType())]))

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import Table, _localize_guard
+from ..sources import local_frame
 from .curation import ngram_array
 from .dedup import _retain_cache, _spread
 
@@ -364,8 +365,8 @@ def save_bloom(bloom, path: str) -> None:
     (parameters ride as reserved negative word_idx rows)."""
     bloom = _require_bloom(bloom)
     spark = bloom.df.sparkSession
-    meta = spark.createDataFrame(
-        [(_META_M, bloom.m_bits), (_META_K, bloom.k)],
+    meta = local_frame(
+        spark, [(_META_M, bloom.m_bits), (_META_K, bloom.k)],
         "word_idx long, bits long")
     bloom.df.unionByName(meta).write.mode("overwrite").parquet(path)
 
@@ -467,7 +468,7 @@ def bloom_contains(t: Table, bloom, key_col: str,
             "args": [_require_tree(t, "bloom_contains"), bloom,
                      key_col, kw]}
     spark = t.df.sparkSession
-    empty = spark.createDataFrame([], T.StructType(
+    empty = local_frame(spark, [], T.StructType(
         list(t.df.schema.fields)
         + [T.StructField(out_col, T.BooleanType())]))
     return _wire_result(t, empty, node)
@@ -503,7 +504,7 @@ def bloom_contamination(t: Table, bloom, n: int = 3,
             "args": [_require_tree(t, "bloom_contamination"), bloom,
                      kw]}
     spark = t.df.sparkSession
-    empty = spark.createDataFrame([], T.StructType(
+    empty = local_frame(spark, [], T.StructType(
         [t.df.schema[id_col],
          T.StructField("n_ngrams", T.LongType()),
          T.StructField("n_contaminated", T.LongType()),

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core import Table
+from ..sources import local_frame
 
 __all__ = ["connected_components", "dedup_clusters", "canonical_docs"]
 
@@ -53,6 +54,15 @@ def connected_components(edges, src: str = "a", dst: str = "b",
     fine).  Isolated nodes don't appear — union the full node set and
     ``coalesce(component, node)`` downstream if needed (``canonical_docs``
     does exactly that).
+
+    Work is bounded: up to ``max_iter + 1`` hash-min hops (the seed hop
+    folded into the node census, then at most ``max_iter`` propagation
+    rounds), each followed by one convergence aggregate job.  If the
+    labels have not stopped changing after the last round, the result
+    is returned as is, without a warning: every label is still a node id
+    of its own component, so it is >= the true component minimum, but
+    one component may carry several labels (nodes farther than the hop
+    budget from the minimum keep a larger label).
     """
     e = _as_df(edges).select(F.col(src).cast("long").alias("u"),
                              F.col(dst).cast("long").alias("v"))
@@ -180,8 +190,8 @@ def connected_components(edges, src: str = "a", dst: str = "b",
             "args": [_require_tree(edges, "connected_components"),
                      {"src": src, "dst": dst,
                       "max_iter": int(max_iter)}]}
-    empty = edges.df.sparkSession.createDataFrame(
-        [], "node long, comp long")
+    empty = local_frame(
+        edges.df.sparkSession, [], "node long, comp long")
     return _wire_result(edges, empty, node)
 
 
@@ -196,8 +206,9 @@ def dedup_clusters(pairs, left: str = "doc_a", right: str = "doc_b",
             "args": [_require_tree(pairs, "dedup_clusters"),
                      {"left": left, "right": right,
                       "max_iter": int(max_iter)}]}
-    empty = pairs.df.sparkSession.createDataFrame(
-        [], "doc_id long, cluster_id long, is_canonical boolean")
+    empty = local_frame(
+        pairs.df.sparkSession, [],
+        "doc_id long, cluster_id long, is_canonical boolean")
     return _wire_result(pairs, empty, node)
 
 
@@ -228,5 +239,5 @@ def canonical_docs(docs, pairs, id_col: str = "doc_id",
         + [f for f in docs.df.schema.fields if f.name != id_col] \
         + [T.StructField("cluster_id", T.LongType()),
            T.StructField("keep", T.BooleanType())]
-    empty = docs.df.sparkSession.createDataFrame([], T.StructType(fields))
+    empty = local_frame(docs.df.sparkSession, [], T.StructType(fields))
     return _wire_result(docs, empty, node)

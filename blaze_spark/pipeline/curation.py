@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import Table, _unary_pass
+from ..sources import local_frame
 from .text import quality_features
 
 
@@ -930,7 +931,7 @@ def temperature_source_mix(t: Table, alpha: float = 0.3,
          T.StructField("token_share", T.DoubleType()),
          T.StructField("target_share", T.DoubleType()),
          T.StructField("sample_weight", T.DoubleType())])
-    return _wire_result(t, spark.createDataFrame([], schema), node)
+    return _wire_result(t, local_frame(spark, [], schema), node)
 
 
 @functools.wraps(_local_unimax_source_mix)
@@ -966,7 +967,7 @@ def unimax_source_mix(t: Table, budget_tokens: int,
          T.StructField("cap_tokens", T.DoubleType()),
          T.StructField("alloc_tokens", T.DoubleType()),
          T.StructField("sample_weight", T.DoubleType())])
-    return _wire_result(t, spark.createDataFrame([], schema), node)
+    return _wire_result(t, local_frame(spark, [], schema), node)
 
 
 @functools.wraps(_local_apply_source_mix)
@@ -1171,7 +1172,7 @@ def token_commonness(t: Table, text_col: str = "text",
          T.StructField("n_tokens", T.IntegerType()),
          T.StructField("oov_rate", T.DoubleType()),
          T.StructField("commonness", T.DoubleType())])
-    empty = t.df.sparkSession.createDataFrame([], schema)
+    empty = local_frame(t.df.sparkSession, [], schema)
     return _sweep_node(t, "token_commonness", empty,
                        {"text_col": text_col, "id_col": id_col,
                         "vocab_size": int(vocab_size)}, enc)

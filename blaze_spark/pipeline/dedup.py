@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import Table
+from ..sources import local_frame
 
 
 # Live registrations per (JVM session identity, canonicalized-plan hash):
@@ -177,17 +178,19 @@ def acquire_cache(df: DataFrame):
     released = []
 
     def _release():
-        if released:
-            return
-        released.append(True)
-        try:
+        # test-and-set under the lock: two threads releasing at once
+        # must not both pass the guard and decrement twice
+        with _CACHE_LOCK:
+            if released:
+                return
+            released.append(True)
             if key is not None:
-                with _CACHE_LOCK:
-                    live = _CACHE_REFS.get(key, 1) - 1
-                    if live > 0:
-                        _CACHE_REFS[key] = live
-                        return  # an identical frame still holds it
-                    _CACHE_REFS.pop(key, None)
+                live = _CACHE_REFS.get(key, 1) - 1
+                if live > 0:
+                    _CACHE_REFS[key] = live
+                    return  # an identical frame still holds it
+                _CACHE_REFS.pop(key, None)
+        try:
             df.unpersist(False)
         except Exception:
             pass  # session already stopped
@@ -1278,7 +1281,7 @@ def cross_doc_dup_ngrams(t: Table, n: int = 5, min_docs: int = 2,
              T.StructField("n_tokens", T.IntegerType()),
              T.StructField("dup_tokens", T.IntegerType()),
              T.StructField("dup_token_frac", T.DoubleType())])
-    return _wire_result(t, spark.createDataFrame([], schema), node)
+    return _wire_result(t, local_frame(spark, [], schema), node)
 
 
 # r12 wire sweep (VERDICT r11 #3): the exact-dedup family and line

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..core import Table
+from ..sources import local_frame
 
 __all__ = ["kmeans_fit", "ivf_assign", "ivf_topk", "ivf_neardup_pairs"]
 
@@ -321,7 +322,7 @@ def save_centroids(centroids: np.ndarray, path: str,
 
     spark = spark or SparkSession.getActiveSession()
     rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)]
-    df = spark.createDataFrame(rows, "cell_id int, centroid array<double>")
+    df = local_frame(spark, rows, "cell_id int, centroid array<double>")
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
 

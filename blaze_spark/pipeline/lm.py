@@ -65,6 +65,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import Table
+from ..sources import local_frame
 from .curation import _tokens
 from .selection import _MAX_BUCKETS, _bucket_of, _validate_features
 
@@ -827,11 +828,11 @@ def ngram_lm_logprob(t: Table, reference: Table | None = None,
     spark = t.df.sparkSession
     kind = model[0]
     ln_g, ln_c = model[1], model[2]
-    lng = spark.createDataFrame(
-        [(int(b), v) for b, v in ln_g.items()],
+    lng = local_frame(
+        spark, [(int(b), v) for b, v in ln_g.items()],
         "bucket long, lng double")
-    lnc = spark.createDataFrame(
-        [(int(b), v) for b, v in ln_c.items()],
+    lnc = local_frame(
+        spark, [(int(b), v) for b, v in ln_c.items()],
         "bucket long, lnc double")
     laddered = kind in ("backoff", "interp")
     levels = model[5] if laddered else []
@@ -847,11 +848,11 @@ def ngram_lm_logprob(t: Table, reference: Table | None = None,
     if laddered:
         ln_u, miss_u = model[3], model[4]
         for k, ln_gk, ln_ck in levels:
-            lgk = spark.createDataFrame(
-                [(int(b), v) for b, v in ln_gk.items()],
+            lgk = local_frame(
+                spark, [(int(b), v) for b, v in ln_gk.items()],
                 f"bucket long, lng{k} double")
-            lck = spark.createDataFrame(
-                [(int(b), v) for b, v in ln_ck.items()],
+            lck = local_frame(
+                spark, [(int(b), v) for b, v in ln_ck.items()],
                 f"bucket long, lnc{k} double")
             joined = (joined
                       .join(F.broadcast(lgk),
@@ -860,8 +861,8 @@ def ngram_lm_logprob(t: Table, reference: Table | None = None,
                       .join(F.broadcast(lck),
                             joined[f"cb{k}"] == lck["bucket"], "left")
                       .drop(lck["bucket"]))
-        lnu = spark.createDataFrame(
-            [(int(b), v) for b, v in ln_u.items()],
+        lnu = local_frame(
+            spark, [(int(b), v) for b, v in ln_u.items()],
             "bucket long, lnu double")
         joined = (joined
                   .join(F.broadcast(lnu),
@@ -994,11 +995,11 @@ def _logprob_kn(t: Table, model, text_col: str, id_col: str,
     ex = _ex if _ex is not None else _score_frame(
         t.df, text_col, id_col, n_buckets, n,
         [k for k, _, _ in levels], True, tokenizer)
-    gdf = spark.createDataFrame(
-        [(int(b), v) for b, v in gram.items()],
+    gdf = local_frame(
+        spark, [(int(b), v) for b, v in gram.items()],
         "bucket long, cg double")
-    cdf = spark.createDataFrame(
-        [(int(b), cc, tf) for b, (cc, tf) in top.items()],
+    cdf = local_frame(
+        spark, [(int(b), cc, tf) for b, (cc, tf) in top.items()],
         "bucket long, cc double, tfn double")
     joined = (ex
               .join(F.broadcast(gdf), ex["gb"] == gdf["bucket"], "left")
@@ -1006,11 +1007,11 @@ def _logprob_kn(t: Table, model, text_col: str, id_col: str,
               .join(F.broadcast(cdf), ex["cb"] == cdf["bucket"], "left")
               .drop(cdf["bucket"]))
     for k, tc, mid in levels:
-        tcdf = spark.createDataFrame(
-            [(int(b), v) for b, v in tc.items()],
+        tcdf = local_frame(
+            spark, [(int(b), v) for b, v in tc.items()],
             f"bucket long, tc{k} double")
-        middf = spark.createDataFrame(
-            [(int(b), td, tf) for b, (td, tf) in mid.items()],
+        middf = local_frame(
+            spark, [(int(b), td, tf) for b, (td, tf) in mid.items()],
             f"bucket long, td{k} double, tf{k} double")
         joined = (joined
                   .join(F.broadcast(tcdf),
@@ -1019,8 +1020,8 @@ def _logprob_kn(t: Table, model, text_col: str, id_col: str,
                   .join(F.broadcast(middf),
                         joined[f"cb{k}"] == middf["bucket"], "left")
                   .drop(middf["bucket"]))
-    t1df = spark.createDataFrame(
-        [(int(b), v) for b, v in t1.items()],
+    t1df = local_frame(
+        spark, [(int(b), v) for b, v in t1.items()],
         "bucket long, t1 double")
     joined = (joined
               .join(F.broadcast(t1df),
@@ -1386,8 +1387,8 @@ def ngram_lm_fit(t: Table, text_col: str = "text",
     if kw5:
         args.append(kw5)
     node = {"op": "ngram_lm_fit", "args": args}
-    empty = t.df.sparkSession.createDataFrame(
-        [], "kind string, bucket long, cnt long")
+    empty = local_frame(
+        t.df.sparkSession, [], "kind string, bucket long, cnt long")
     return _wire_result(t, empty, node)
 
 
@@ -1417,7 +1418,7 @@ def ngram_lm_logprob(t: Table, reference: Table | None = None,
                          backoff, tokenizer, interpolate, kneser_ney)
     args[3]["prefer_literal"] = bool(prefer_literal)
     node = {"op": "ngram_lm_logprob", "args": args}
-    empty = t.df.sparkSession.createDataFrame([], T.StructType(
+    empty = local_frame(t.df.sparkSession, [], T.StructType(
         [t.df.schema[id_col]]
         + [T.StructField(c, dt) for c, dt in _LM_SCHEMA]))
     return _wire_result(t, empty, node)
@@ -1450,7 +1451,7 @@ def perplexity_filter(t: Table, reference: Table | None = None,
     node = {"op": "perplexity_filter", "args": args}
     # join output order: the key, the corpus' remaining columns, then
     # the four LM exports
-    empty = t.df.sparkSession.createDataFrame([], T.StructType(
+    empty = local_frame(t.df.sparkSession, [], T.StructType(
         [t.df.schema[id_col]]
         + [f for f in t.df.schema.fields if f.name != id_col]
         + [T.StructField(c, dt) for c, dt in _LM_SCHEMA]))
@@ -1495,7 +1496,7 @@ def perplexity_buckets(t: Table, reference: Table | None = None,
     if not persist:
         args[3]["persist"] = False
     node = {"op": "perplexity_buckets", "args": args}
-    empty = t.df.sparkSession.createDataFrame([], T.StructType(
+    empty = local_frame(t.df.sparkSession, [], T.StructType(
         [t.df.schema[id_col]]
         + [f for f in t.df.schema.fields if f.name != id_col]
         + [T.StructField(c, dt) for c, dt in _LM_SCHEMA]

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import Table
+from ..sources import local_frame
 
 __all__ = ["train_val_test_split", "pack_sequences", "chunk_documents"]
 
@@ -212,8 +213,7 @@ def pack_sequences(t: Table, budget: int, text_col: str = "text",
     for r in totals:
         rows.append((int(r["__pid"]), acc))
         acc += int(r["tot"])
-    off_df = spark.createDataFrame(rows or [(0, 0)],
-                                   "__pid int, __off long")
+    off_df = local_frame(spark, rows, "__pid int, __off long")
     out = (local.join(F.broadcast(off_df), "__pid", "left")
            .withColumn("tok_start",
                        (F.col("__cum") - F.col(cost)
@@ -362,7 +362,7 @@ def pack_sequences(t: Table, budget: int, text_col: str = "text",
         + [T.StructField("n_tokens", T.LongType()),
            T.StructField("tok_start", T.LongType()),
            T.StructField("shard", T.LongType())])
-    empty = t.df.sparkSession.createDataFrame([], schema)
+    empty = local_frame(t.df.sparkSession, [], schema)
     return _wire_result(t, empty, node)
 
 

@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..core import Table
+from ..sources import local_frame
 
 __all__ = ["pq_fit", "pq_encode", "pq_decode", "pq_topk", "ivf_pq_topk",
            "pq_range_search", "ivf_pq_range_search",
@@ -390,8 +391,8 @@ def pq_topk(codes: Table, queries: Table, codebooks: np.ndarray,
     qids, _, qx = _collect_query_block(queries, id_col, vec_col)
     spark = codes.df.sparkSession
     if not len(qids):
-        return Table(spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double"),
+        return Table(local_frame(
+            spark, [], "query_id long, neighbor_id long, cosine double"),
             "pq_topk")
     m, ks, dsub = codebooks.shape
     # ship the ADC tables as a broadcast variable, not a closure capture:
@@ -490,8 +491,8 @@ def pq_range_search(codes: Table, queries: Table, codebooks: np.ndarray,
                                correct_bias, "pq_range_search")
     spark = codes.df.sparkSession
     if cand is None:
-        return Table(spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double"),
+        return Table(local_frame(
+            spark, [], "query_id long, neighbor_id long, cosine double"),
             "pq_range_search")
     return Table(_range_export(cand, round_to), "pq_range_search")
 
@@ -529,8 +530,8 @@ def ivf_pq_topk(codes: Table, queries: Table, centroids: np.ndarray,
                              cell_col, max_queries, "ivf_pq_topk")
     spark = codes.df.sparkSession
     if cand is None:
-        return Table(spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double"),
+        return Table(local_frame(
+            spark, [], "query_id long, neighbor_id long, cosine double"),
             "ivf_pq_topk")
     from .similarity import _rank_topk
 
@@ -587,14 +588,16 @@ def _ivf_pq_scored(codes: Table, queries: Table, centroids: np.ndarray,
     radii = (None if min_cosine is None
              else _range_radii(qx, codebooks, min_cosine, correct_bias))
     if radii is None:
-        qcells = spark.createDataFrame(
+        qcells = local_frame(
+            spark,
             [(int(q), int(c)) for q, cs in zip(qids, probed[:, :take_c])
              for c in cs],
             "query_id long, cell int")
     else:
         # the per-query radius rides the broadcast probe relation, so
         # the range filter below is a plain column comparison
-        qcells = spark.createDataFrame(
+        qcells = local_frame(
+            spark,
             [(int(q), int(c), float(r))
              for q, cs, r in zip(qids, probed[:, :take_c], radii)
              for c in cs],
@@ -655,8 +658,8 @@ def ivf_pq_range_search(codes: Table, queries: Table,
                              correct_bias=correct_bias)
     spark = codes.df.sparkSession
     if cand is None:
-        return Table(spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double"),
+        return Table(local_frame(
+            spark, [], "query_id long, neighbor_id long, cosine double"),
             "ivf_pq_range_search")
     return Table(_range_export(cand, round_to), "ivf_pq_range_search")
 
@@ -676,9 +679,9 @@ def save_codebooks(codebooks: np.ndarray, path: str, spark=None) -> None:
     rows = [(int(i), int(j), int(m), int(ks),
              [float(x) for x in codebooks[i, j]])
             for i in range(m) for j in range(ks)]
-    df = spark.createDataFrame(
-        rows, "subspace int, code int, m int, ks int, "
-              "centroid array<double>")
+    df = local_frame(
+        spark, rows,
+        "subspace int, code int, m int, ks int, centroid array<double>")
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
 
@@ -889,8 +892,9 @@ def pq_topk(codes: Table, queries, codebooks, k: int = 5,
                                    else int(round_to)),
                       "max_queries": (None if max_queries is None
                                       else int(max_queries))}]}
-    empty = codes.df.sparkSession.createDataFrame(
-        [], "query_id long, neighbor_id long, cosine double")
+    empty = local_frame(
+        codes.df.sparkSession, [],
+        "query_id long, neighbor_id long, cosine double")
     return _wr(codes, empty, node)
 
 
@@ -992,6 +996,7 @@ def ivf_pq_topk(codes: Table, queries, centroids, codebooks,
                                    else int(round_to)),
                       "max_queries": (None if max_queries is None
                                       else int(max_queries))}]}
-    empty = codes.df.sparkSession.createDataFrame(
-        [], "query_id long, neighbor_id long, cosine double")
+    empty = local_frame(
+        codes.df.sparkSession, [],
+        "query_id long, neighbor_id long, cosine double")
     return _wr(codes, empty, node)

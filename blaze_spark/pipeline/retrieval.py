@@ -44,6 +44,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..core import Table
+from ..sources import local_frame
 from .curation import _tokens
 
 _SALT = 32          # top-k pre-aggregation fan-in per query
@@ -63,8 +64,8 @@ def _query_relation(queries, spark, query_id_col: str,
         if not queries or not all(isinstance(q, str) for q in queries):
             raise ValueError(
                 "bm25_topk: a query list must be non-empty strings")
-        qdf = spark.createDataFrame(
-            [(i, q) for i, q in enumerate(queries)],
+        qdf = local_frame(
+            spark, [(i, q) for i, q in enumerate(queries)],
             schema=T.StructType([
                 T.StructField(query_id_col, T.LongType()),
                 T.StructField(query_text_col, T.StringType())]))
@@ -295,7 +296,7 @@ def bm25_topk(corpus: Table, queries, k: int = 10,
         kw["persist"] = False
     node = {"op": "bm25_topk",
             "args": [_require_tree(corpus, "bm25_topk"), enc, kw]}
-    empty = corpus.df.sparkSession.createDataFrame([], T.StructType([
+    empty = local_frame(corpus.df.sparkSession, [], T.StructType([
         T.StructField("query_id", T.LongType()),
         T.StructField("doc_id",
                       corpus.df.schema[id_col].dataType),

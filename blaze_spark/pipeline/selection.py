@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import Table
+from ..sources import local_frame
 from .curation import _tokens, ngram_array
 
 # Bounded driver/broadcast state: counts tables, literal maps and DSIR
@@ -195,7 +196,7 @@ def model_weights(spark, vocab: dict, n_buckets: int = 4096,
     rows = [(int(hashlib.md5(f.encode()).hexdigest()[:8], 16)
              % n_buckets, int(round(float(w) * scale)))
             for f, w in vocab.items()]
-    return spark.createDataFrame(rows, "bucket long, weight_milli long")
+    return local_frame(spark, rows, "bucket long, weight_milli long")
 
 
 def _normalized_weights(weights: DataFrame,
@@ -373,19 +374,16 @@ class TrainedQualityModel:
 
     def weights_df(self, spark) -> DataFrame:
         # memoized per (model, session): repeated classify() calls
-        # must reuse ONE plan object so quality_classifier's
-        # semantic-hash sizing memo hits — a fresh createDataFrame per
-        # call hashes differently and re-launches the bounded sizing
-        # collect every time (the VERDICT r11 one-job-per-model
-        # discipline, applied to the trained-model wrapper)
+        # reuse ONE plan object, so the weights convert once and
+        # quality_classifier's semantic-hash sizing memo hits without
+        # re-launching the bounded sizing collect (the VERDICT r11
+        # one-job-per-model discipline, applied to the trained-model
+        # wrapper)
         cached = getattr(self, "_wdf_cache", None)
         if cached is not None and cached[0] is spark:
             return cached[1]
         rows = sorted((int(b), int(w)) for b, w in self.weights.items())
-        df = spark.createDataFrame(
-            rows or [(None, None)],
-            "bucket long, weight_milli long").filter(
-                F.col("bucket").isNotNull())
+        df = local_frame(spark, rows, "bucket long, weight_milli long")
         self._wdf_cache = (spark, df)
         return df
 
@@ -425,7 +423,7 @@ class TrainedQualityModel:
         counts store pointed here by mistake) fails loudly."""
         rows = (self.to_rows()
                 + [[-2, int(self.n_buckets)], [-3, int(self.n)]])
-        (spark.createDataFrame(rows, "bucket long, weight_milli long")
+        (local_frame(spark, rows, "bucket long, weight_milli long")
          .repartition(1).write.mode("overwrite").parquet(path))
         from ..streaming.incremental_dedup import _check_sig_format
         _check_sig_format(spark, path, has_existing=False,
@@ -829,7 +827,7 @@ def dsir_log_weights(raw: Table, target: Table | None = None,
     # (the PLANS.md r5 HOF placement rule — see _bucket_of)
     from .dedup import _spread
 
-    lr = spark.createDataFrame(lr_rows, "bucket long, lr double")
+    lr = local_frame(spark, lr_rows, "bucket long, lr double")
     exploded = _spread(raw.df, id_col).select(
         F.col(id_col),
         n_tokens.alias("n_tokens"),
@@ -1173,7 +1171,7 @@ def hashed_bucket_counts(t: Table, text_col: str = "text",
                      text_col, int(n_buckets), int(n), tf]}
     schema = ("bucket long, cnt long" if target_filter is None
               else "bucket long, cnt long, target_cnt long")
-    empty = t.df.sparkSession.createDataFrame([], schema)
+    empty = local_frame(t.df.sparkSession, [], schema)
     return _wire_result(t, empty, node)
 
 
@@ -1209,7 +1207,7 @@ def quality_classifier(t: Table, weights, text_col: str = "text",
                       "max_map_literal": int(max_map_literal),
                       "n": int(n)}]}
     spark = t.df.sparkSession
-    empty = spark.createDataFrame([], T.StructType(
+    empty = local_frame(spark, [], T.StructType(
         [t.df.schema[id_col],
          T.StructField("n_tokens", T.IntegerType()),
          T.StructField("score_milli", T.LongType()),
@@ -1266,7 +1264,7 @@ def dsir_log_weights(raw: Table, target: Table | None = None,
                       "smoothing": int(smoothing), "n": int(n),
                       "max_map_literal": int(max_map_literal)}, tf]}
     spark = raw.df.sparkSession
-    empty = spark.createDataFrame([], T.StructType(
+    empty = local_frame(spark, [], T.StructType(
         [raw.df.schema[id_col],
          T.StructField("n_tokens", T.IntegerType()),
          T.StructField("logw", T.DoubleType())]))

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import Table
+from ..sources import local_frame
 
 
 def _dot(a, b) -> Column:
@@ -778,8 +779,8 @@ def pq_neardup_pairs(corpus: Table, threshold: float = 0.9,
         if codes_release is not None:
             codes_release()
     if not parts:
-        return Table(spark.createDataFrame(
-            [], "vec_a long, vec_b long, cosine double"),
+        return Table(local_frame(
+            spark, [], "vec_a long, vec_b long, cosine double"),
             "pq_neardup_pairs")
     cand_all = parts[0]
     for p in parts[1:]:
@@ -1171,7 +1172,7 @@ def assign_clusters(docs: Table, embeddings: Table,
                      {"doc_id_col": doc_id_col, "id_col": id_col,
                       "vec_col": vec_col}]}
     spark = docs.df.sparkSession
-    empty = spark.createDataFrame([], T.StructType(
+    empty = local_frame(spark, [], T.StructType(
         list(docs.df.schema.fields)
         + [T.StructField("cell", T.IntegerType())]))
     return _wire_result(docs, empty, node)

@@ -66,6 +66,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import Table
+from ..sources import local_frame
 from .selection import _MAX_BUCKETS
 from .tokenizer import (BPETokenizer, VocabTokenizer, WhitespaceTokenizer,
                         WordPieceTokenizer, _bytes_to_unicode,
@@ -674,7 +675,7 @@ def word_frequencies(t: Table, text_col: str = "text",
                       "max_words": int(max_words),
                       "min_count": int(min_count)}]}
     spark = t.df.sparkSession
-    empty = spark.createDataFrame([], "word string, cnt long")
+    empty = local_frame(spark, [], "word string, cnt long")
     return _wire_result(t, empty, node)
 
 
@@ -717,7 +718,8 @@ def tokenizer_stats(t: Table, tokenizer=None, text_col: str = "text"):
         kw["tokenizer"] = _tokenizer_wire(tokenizer)
     node = {"op": "tokenizer_stats",
             "args": [_require_tree(t, "tokenizer_stats"), kw]}
-    empty = t.df.sparkSession.createDataFrame(
-        [], "n_docs long, total_words long, total_tokens long, "
-            "fertility double, avg_doc_tokens double")
+    empty = local_frame(
+        t.df.sparkSession, [],
+        "n_docs long, total_words long, total_tokens long, "
+        "fertility double, avg_doc_tokens double")
     return _wire_result(t, empty, node)

@@ -141,6 +141,34 @@ def data(source: Any, *, spark: SparkSession | None = None,
                  name)
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A driver-side literal table (tuple ``rows`` under a declared
+    ``schema``: a StructType or a DDL string) as a ``LocalRelation``.
+
+    ``spark.createDataFrame(rows, schema)`` on a row list builds a
+    ``LogicalRDD`` over pickled rows on classic PySpark: every scan of it
+    runs ``defaultParallelism`` Python worker tasks just to unpickle a
+    few literals.  An Arrow table goes to the JVM in one batch and plans
+    as a ``LocalTableScan`` whatever the Arrow conf, empty rows
+    included."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    width = len(schema.fields)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"local_frame: every row needs {width} values "
+                         f"for schema {schema.simpleString()}")
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type)
+         for i, f in enumerate(arrow_schema)], schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
 def _parse_mongo_uri(uri: str) -> tuple[str, str | None, str | None]:
     """Split the reference's mongo URI dialect
     ``mongodb://host:port/db::collection``

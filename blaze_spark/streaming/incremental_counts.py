@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from ..core import Table
 from ..pipeline.selection import hashed_bucket_counts
+from ..sources import local_frame
 from .incremental_dedup import (_check_sig_format, _compact_store_impl,
                                 _ingest_ids, resolve_store_root)
 
@@ -64,7 +65,7 @@ def _remote_counts_leaf(spark, store_uri: str, op: str, kw: dict,
             f"remote counts store URI must be "
             f"'blaze://host:port::store_name', got {store_uri!r}")
     client = Client(head, spark=spark)
-    empty = spark.createDataFrame([], schema)
+    empty = local_frame(spark, [], schema)
     rt = RemoteTable(empty, name, client=client)
     rt._tree = {"op": op, "args": [name, kw]}
     return rt

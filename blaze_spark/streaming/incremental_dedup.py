@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..core import Table
 from ..pipeline.dedup import minhash_signatures
+from ..sources import local_frame
 
 _PAIR_SCHEMA = ("new_doc long, matched_doc long, est_jaccard double")
 
@@ -185,7 +186,7 @@ def _check_sig_format(spark, store_path: str, has_existing: bool,
     # Connect session's first batch would leave the store permanently
     # unstampable and every later batch would fail _unmarked_err.
     try:
-        (spark.createDataFrame([(expected,)], "value string")
+        (local_frame(spark, [(expected,)], "value string")
          .coalesce(1).write.mode("overwrite")
          .text(store_path.rstrip("/") + "/" + marker_name))
         return
@@ -548,8 +549,8 @@ def process_batch(batch: Table, store_path: str, text_col: str = "text",
             f"bucket(s) over max_bucket={max_bucket} — {excluded} entries "
             "excluded from pairing this batch; the store keeps the first "
             f"{max_bucket} doc_ids per hot bucket", stacklevel=2)
-        hot = F.broadcast(spark.createDataFrame(
-            [(int(r.band), int(r.bhash)) for r in hot_rows],
+        hot = F.broadcast(local_frame(
+            spark, [(int(r.band), int(r.bhash)) for r in hot_rows],
             "band int, bhash long"))
         entries = raw_entries.join(hot, ["band", "bhash"],
                                    "left_anti").persist()
