@@ -21,6 +21,7 @@ Conventions keeping the value-hash compare meaningful:
 
 from __future__ import annotations
 
+import contextlib
 import sys
 from collections.abc import Callable
 from pathlib import Path
@@ -68,6 +69,21 @@ from blaze_spark.sources import local_frame  # noqa: E402
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> Table:
     return data(f"{sf_dir}/{name}.parquet", spark=spark, name=name)
+
+
+@contextlib.contextmanager
+def _served(spark: SparkSession, datasets: dict, **kw):
+    """An in-process BlazeSparkServer on a free port for the body of a
+    ``with`` block, yielding its ``blaze://host:port`` URL; stopped on
+    exit, error or not."""
+    from blaze_spark.server import BlazeSparkServer
+
+    srv = BlazeSparkServer(datasets, spark, **kw)
+    srv.start(port=0)
+    try:
+        yield f"blaze://127.0.0.1:{srv.port}"
+    finally:
+        srv.stop()
 
 
 def _keep(df: DataFrame, *holders) -> DataFrame:
@@ -1068,19 +1084,14 @@ def blaze_client_roundtrip(spark, sf_dir):
     chain is recorded as a tree and computed SERVER-side; only the result
     crosses the wire and is re-bound as a Spark DataFrame."""
     from blaze_spark import data
-    from blaze_spark.server import BlazeSparkServer
 
     o = _t(spark, sf_dir, "orders")
-    srv = BlazeSparkServer({"orders": o}, spark)
-    srv.start(port=0)
-    try:
-        rt = data(f"blaze://127.0.0.1:{srv.port}::orders", spark=spark)
+    with _served(spark, {"orders": o}) as url:
+        rt = data(f"{url}::orders", spark=spark)
         expr = rt[rt.o_totalprice > 300000.0][
             ["o_orderkey", "o_custkey", "o_totalprice"]].sort("o_orderkey")
         pdf = expr.compute()
         schema = expr.df.schema
-    finally:
-        srv.stop()
     return spark.createDataFrame(pdf, schema=schema)
 
 
@@ -1094,13 +1105,10 @@ def blaze_client_curation(spark, sf_dir):
     high)."""
     from blaze_spark import data
     from blaze_spark import pipeline as pl
-    from blaze_spark.server import BlazeSparkServer
 
     docs = _t(spark, sf_dir, "documents")
-    srv = BlazeSparkServer({"documents": docs}, spark)
-    srv.start(port=0)
-    try:
-        rt = data(f"blaze://127.0.0.1:{srv.port}::documents", spark=spark)
+    with _served(spark, {"documents": docs}) as url:
+        rt = data(f"{url}::documents", spark=spark)
         q = pl.fingerprint(pl.quality_features(rt))
         f = q[q.n_tokens >= 5].hash_sample(0.5, on="doc_id")
         expr = f.transform(lang_u=f.lang.str.upper())[
@@ -1108,8 +1116,6 @@ def blaze_client_curation(spark, sf_dir):
         ].sort("doc_id")
         pdf = expr.compute()
         schema = expr.df.schema
-    finally:
-        srv.stop()
     return spark.createDataFrame(pdf, schema=schema)
 
 
@@ -1120,13 +1126,10 @@ def blaze_client_scalar_chain(spark, sf_dir):
     The result (last 40 urgent orders by key) crosses the wire once."""
     from blaze_spark import data
     from blaze_spark.functions import math as M
-    from blaze_spark.server import BlazeSparkServer
 
     o = _t(spark, sf_dir, "orders")
-    srv = BlazeSparkServer({"orders": o}, spark)
-    srv.start(port=0)
-    try:
-        rt = data(f"blaze://127.0.0.1:{srv.port}::orders", spark=spark)
+    with _served(spark, {"orders": o}) as url:
+        rt = data(f"{url}::orders", spark=spark)
         f = rt[rt.o_orderpriority.str.contains("URGENT")]
         expr = f.transform(
             pri=f.o_orderpriority.str.lower(),
@@ -1136,8 +1139,6 @@ def blaze_client_scalar_chain(spark, sf_dir):
             40, sort_keys="o_orderkey")
         pdf = expr.compute()
         schema = expr.df.schema
-    finally:
-        srv.stop()
     return spark.createDataFrame(pdf, schema=schema)
 
 
@@ -1153,14 +1154,11 @@ def blaze_client_fk_hop(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from blaze_spark import by, data
-    from blaze_spark.server import BlazeSparkServer
 
     c = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation")
-    srv = BlazeSparkServer({"customer": c, "nation": n}, spark)
-    srv.start(port=0)
-    try:
-        cl = data(f"blaze://127.0.0.1:{srv.port}", spark=spark)
+    with _served(spark, {"customer": c, "nation": n}) as url:
+        cl = data(url, spark=spark)
         rc = cl["customer"].with_fk("c_nationkey", cl["nation"],
                                     "n_nationkey")
         j = rc.auto_join("c_nationkey.n_name")
@@ -1169,8 +1167,6 @@ def blaze_client_fk_hop(spark, sf_dir):
                   acct_var=j.c_acctbal.var(unbiased=True))
         pdf = expr.compute()
         schema = expr.df.schema
-    finally:
-        srv.stop()
     out = spark.createDataFrame(pdf, schema=schema)
     # round the float export LOCALLY (rounding is outside the reduction
     # wire algebra); _fprobe canonicalizes any -0.0 for the byte hash
@@ -3047,14 +3043,10 @@ def blaze_client_selection(spark, sf_dir):
     from blaze_spark.pipeline import (dsir_log_weights,
                                       quality_classifier,
                                       weighted_sample)
-    from blaze_spark.server import BlazeSparkServer
 
     d = _t(spark, sf_dir, "documents")
-    srv = BlazeSparkServer({"documents": d}, spark)
-    srv.start(port=0)
-    try:
-        rt = data(f"blaze://127.0.0.1:{srv.port}::documents",
-                  spark=spark)
+    with _served(spark, {"documents": d}) as url:
+        rt = data(f"{url}::documents", spark=spark)
         lex = [("the", 10), ("a", 10), ("of", 10), ("and", 10),
                ("to", 10), ("slow", -15), ("filter", -15)]
         wts = local_frame(
@@ -3076,8 +3068,6 @@ def blaze_client_selection(spark, sf_dir):
                   "sample_key"]].sort("doc_id")
         pdf = expr.compute()
         schema = expr.df.schema
-    finally:
-        srv.stop()
     return spark.createDataFrame(pdf, schema=schema)
 
 
@@ -3378,20 +3368,15 @@ def blaze_client_pq(spark, sf_dir):
     the skew/hostile-codebook rejections."""
     from blaze_spark import data
     from blaze_spark.pipeline import pq_encode, pq_fit, pq_topk
-    from blaze_spark.server import BlazeSparkServer
 
     e = _t(spark, sf_dir, "embeddings")
     cb = pq_fit(e, m=8, ks=64, iters=4, train_rows=10_000)
     codes = pq_encode(e, cb)
-    srv = BlazeSparkServer({"codes": codes}, spark)
-    srv.start(port=0)
-    try:
-        rc = data(f"blaze://127.0.0.1:{srv.port}::codes", spark=spark)
+    with _served(spark, {"codes": codes}) as url:
+        rc = data(f"{url}::codes", spark=spark)
         q = e.df.filter(F.col("vec_id") < 12)
         out = pq_topk(rc, q, cb, k=5)
         pdf = out.compute()
-    finally:
-        srv.stop()
     return (spark.createDataFrame(pdf, schema=out.df.schema)
             .orderBy("query_id", "neighbor_id"))
 
@@ -3468,14 +3453,10 @@ def blaze_client_dedup(spark, sf_dir):
     keeper's copy count."""
     from blaze_spark import data
     from blaze_spark.pipeline import cross_doc_dup_lines, exact_dedup
-    from blaze_spark.server import BlazeSparkServer
 
     d = _t(spark, sf_dir, "documents")
-    srv = BlazeSparkServer({"documents": d}, spark)
-    srv.start(port=0)
-    try:
-        rt = data(f"blaze://127.0.0.1:{srv.port}::documents",
-                  spark=spark)
+    with _served(spark, {"documents": d}) as url:
+        rt = data(f"{url}::documents", spark=spark)
         # exact-dup groups: docs collide on their 30-char prefix
         pref = rt.transform(text=rt.text.str.slice(0, 30))
         kd = exact_dedup(pref)
@@ -3488,8 +3469,6 @@ def blaze_client_dedup(spark, sf_dir):
         ld = cross_doc_dup_lines(planted)
         lpdf = ld.compute()[["doc_id", "n_lines", "n_dup_lines",
                              "dup_line_frac"]]
-    finally:
-        srv.stop()
     lines = spark.createDataFrame(
         lpdf, schema="doc_id bigint, n_lines int, n_dup_lines int, "
                      "dup_line_frac double")
@@ -3516,14 +3495,10 @@ def blaze_client_packing(spark, sf_dir):
     from blaze_spark import data
     from blaze_spark.pipeline import (chunk_documents, pack_sequences,
                                       train_val_test_split)
-    from blaze_spark.server import BlazeSparkServer
 
     d = _t(spark, sf_dir, "documents")
-    srv = BlazeSparkServer({"documents": d}, spark)
-    srv.start(port=0)
-    try:
-        rt = data(f"blaze://127.0.0.1:{srv.port}::documents",
-                  spark=spark)
+    with _served(spark, {"documents": d}) as url:
+        rt = data(f"{url}::documents", spark=spark)
         ch = chunk_documents(rt, max_tokens=64, overlap=8)
         ch = ch.transform(chunk_key=ch.doc_id * 1000 + ch.chunk_id)
         st = train_val_test_split(ch, fractions=(0.9, 0.05, 0.05),
@@ -3540,8 +3515,6 @@ def blaze_client_packing(spark, sf_dir):
                first_chunk=packed.chunk_key.min())
         pdf = g.sort("shard").compute()
         schema = g.df.schema
-    finally:
-        srv.stop()
     return spark.createDataFrame(pdf, schema=schema)
 
 
@@ -3554,20 +3527,14 @@ def blaze_client_contamination(spark, sf_dir):
     overlap count and the threshold flag."""
     from blaze_spark import data
     from blaze_spark.pipeline import contamination_report
-    from blaze_spark.server import BlazeSparkServer
 
     d = _t(spark, sf_dir, "documents")
-    srv = BlazeSparkServer({"documents": d}, spark)
-    srv.start(port=0)
-    try:
-        rt = data(f"blaze://127.0.0.1:{srv.port}::documents",
-                  spark=spark)
+    with _served(spark, {"documents": d}) as url:
+        rt = data(f"{url}::documents", spark=spark)
         test = rt[rt.doc_id % 10 == 0]
         expr = contamination_report(rt, test, n=3, threshold=0.2)
         pdf = expr.compute()[["doc_id", "n_ngrams", "n_contaminated",
                               "contamination_rate", "contaminated"]]
-    finally:
-        srv.stop()
     return spark.createDataFrame(
         pdf, schema="doc_id bigint, n_ngrams bigint, "
                     "n_contaminated bigint, contamination_rate double, "
@@ -3609,21 +3576,15 @@ def blaze_client_mix(spark, sf_dir):
     from blaze_spark import data
     from blaze_spark.pipeline import (apply_source_mix,
                                       temperature_source_mix)
-    from blaze_spark.server import BlazeSparkServer
 
     d = _t(spark, sf_dir, "documents")
-    srv = BlazeSparkServer({"documents": d}, spark)
-    srv.start(port=0)
-    try:
-        rt = data(f"blaze://127.0.0.1:{srv.port}::documents",
-                  spark=spark)
+    with _served(spark, {"documents": d}) as url:
+        rt = data(f"{url}::documents", spark=spark)
         w = temperature_source_mix(rt, alpha=0.5)
         kept = apply_source_mix(rt, w)
         expr = kept[["doc_id", "source"]].sort("doc_id")
         pdf = expr.compute()
         schema = expr.df.schema
-    finally:
-        srv.stop()
     return spark.createDataFrame(pdf, schema=schema)
 
 
@@ -3716,22 +3677,16 @@ def blaze_client_lm(spark, sf_dir):
     WHICH documents a remote curation service would keep."""
     from blaze_spark import data
     from blaze_spark.pipeline import perplexity_filter
-    from blaze_spark.server import BlazeSparkServer
 
     d = _t(spark, sf_dir, "documents")
-    srv = BlazeSparkServer({"documents": d}, spark)
-    srv.start(port=0)
-    try:
-        rt = data(f"blaze://127.0.0.1:{srv.port}::documents",
-                  spark=spark)
+    with _served(spark, {"documents": d}) as url:
+        rt = data(f"{url}::documents", spark=spark)
         pf = perplexity_filter(rt, n_buckets=1024, n=2,
                                min_ppl=19.0, max_ppl=37.0)
         expr = pf[["doc_id", "source", "n_grams", "logp",
                    "avg_logp", "ppl"]].sort("doc_id")
         pdf = expr.compute()
         schema = expr.df.schema
-    finally:
-        srv.stop()
     return spark.createDataFrame(pdf, schema=schema)
 
 
@@ -3753,7 +3708,6 @@ def blaze_client_store_lm(spark, sf_dir):
 
     from blaze_spark import data
     from blaze_spark.pipeline import ngram_lm_logprob
-    from blaze_spark.server import BlazeSparkServer
     from blaze_spark.streaming.incremental_counts import (
         ingest_lm_counts_batch, read_lm_counts)
 
@@ -3772,11 +3726,7 @@ def blaze_client_store_lm(spark, sf_dir):
         _ing(0)
         with ThreadPoolExecutor(max_workers=2) as pool:
             list(pool.map(_ing, [1, 2]))
-        srv = BlazeSparkServer({"documents": d}, spark,
-                               stores={"lm": store})
-        srv.start(port=0)
-        try:
-            url = f"blaze://127.0.0.1:{srv.port}"
+        with _served(spark, {"documents": d}, stores={"lm": store}) as url:
             rt = data(f"{url}::documents", spark=spark)
             leaf = read_lm_counts(spark, f"{url}::lm",
                                   n_buckets=1024, n=2)
@@ -3784,8 +3734,6 @@ def blaze_client_store_lm(spark, sf_dir):
                                     n=2).sort("doc_id")
             pdf = expr.compute()
             schema = expr.df.schema
-        finally:
-            srv.stop()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(pdf, schema=schema)
@@ -3808,7 +3756,6 @@ def blaze_client_store_bloom(spark, sf_dir):
     from blaze_spark import data
     from blaze_spark.pipeline import (bloom_contamination,
                                       build_ngram_bloom, save_bloom)
-    from blaze_spark.server import BlazeSparkServer
 
     d = _t(spark, sf_dir, "documents")
     tmp = tempfile.mkdtemp(prefix="blaze_bloom_store_")
@@ -3816,17 +3763,12 @@ def blaze_client_store_bloom(spark, sf_dir):
         path = f"{tmp}/refbloom"
         save_bloom(build_ngram_bloom(d[d.doc_id % 11 == 0], n=3,
                                      m_bits=1 << 18, k=5), path)
-        srv = BlazeSparkServer({"documents": d}, spark,
-                               stores={"refbloom": path})
-        srv.start(port=0)
-        try:
-            rt = data(f"blaze://127.0.0.1:{srv.port}::documents",
-                      spark=spark)
+        with _served(spark, {"documents": d},
+                     stores={"refbloom": path}) as url:
+            rt = data(f"{url}::documents", spark=spark)
             expr = bloom_contamination(rt, "refbloom", n=3)
             pdf = expr.compute()
             schema = expr.df.schema
-        finally:
-            srv.stop()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(pdf, schema=schema).orderBy("doc_id")

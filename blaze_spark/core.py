@@ -2077,8 +2077,8 @@ def hypertable_rollup(t: Table, ts_col: str, units=("year", "month", "day"),
     tables run :func:`_local_hypertable_rollup` unchanged."""
     if getattr(t, "_client", None) is None:
         return _local_hypertable_rollup(t, ts_col, units, **reductions)
-    # lazy import: pipeline.selection imports core at ITS top
-    from .pipeline.selection import _require_tree, _wire_result
+    # lazy import: wire imports core at ITS top
+    from .wire import _require_tree, _wire_result
 
     if not reductions:
         raise ValueError("hypertable_rollup needs at least one "

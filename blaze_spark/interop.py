@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .core import ColExpr, Reduction, Table, by, concat, join, summary
+from . import wire
 from .sources import data, local_frame
 
 __all__ = ["from_tree", "to_tree", "compute_tree", "CachedTable"]
@@ -201,6 +202,7 @@ def from_tree(tree: dict, *, spark: SparkSession | None = None,
     """
     datasets = datasets or {}
     stores = stores or {}
+    wire_ops = wire.registry()
 
     _TABLE_OPS = {"symbol", "data", "projection", "selection", "head",
                   "tail", "slice", "drop_field",
@@ -232,24 +234,18 @@ def from_tree(tree: dict, *, spark: SparkSession | None = None,
                   # the reference corpus as a same-server subtree
                   "ngram_lm_fit", "ngram_lm_logprob",
                   "perplexity_filter", "perplexity_buckets",
-                  # mid-r11 literal-args table ops: dup-span
-                  # scoring/scrub and the mixture-plan pair (weights
-                  # as literal rows or a same-server subtree)
                   # r15: BM25 retrieval — corpus as a subtree, the
                   # bounded query side as literal [id, text] rows or a
                   # same-server subtree
                   "bm25_topk",
-                  "cross_doc_dup_ngrams", "temperature_source_mix",
-                  "unimax_source_mix",
+                  # mixture execution: weights as literal rows or a
+                  # same-server subtree
                   "apply_source_mix",
-                  # r12 sweep (VERDICT r11 #3/#4): the remaining
-                  # literal-args pipeline ops — exact/normalized/line
-                  # dedup, the curation reports, blocklists, cluster
-                  # resolution, and decontamination (its test corpus
-                  # rides as a same-server subtree).  The approximate
-                  # generators (random planes, trained quantizers)
-                  # stay deliberately non-serializable.
-                  *_PIPE_WIRE, "hypertable_rollup",
+                  # every registered wire op (blaze_spark.wire): table
+                  # subtrees + one literal-kwargs dict.  The
+                  # approximate generators (random planes, trained
+                  # quantizers) stay deliberately non-serializable.
+                  *wire_ops, "hypertable_rollup",
                   # r13: trained-artifact APPLICATION — the codebooks
                   # and the bounded query block ride as literal
                   # relations, the code scan runs where the store
@@ -285,6 +281,8 @@ def from_tree(tree: dict, *, spark: SparkSession | None = None,
             return data(args[0], spark=spark)
         if op in ("read_lm_counts", "read_bucket_counts"):
             return _store_leaf(op, args, spark, stores)
+        if op in wire_ops:
+            return _wire_node(op, args, walk)
         child = walk(args[0])
         if op == "projection":
             return child[args[1]]
@@ -389,13 +387,10 @@ def from_tree(tree: dict, *, spark: SparkSession | None = None,
         if op in ("ngram_lm_fit", "ngram_lm_logprob",
                   "perplexity_filter", "perplexity_buckets"):
             return _lm_node(op, args, child, walk)
-        if op in ("cross_doc_dup_ngrams", "temperature_source_mix",
-                  "unimax_source_mix", "apply_source_mix"):
-            return _mix_dedup_node(op, args, child, walk)
+        if op == "apply_source_mix":
+            return _apply_mix_node(args, child, walk)
         if op == "bm25_topk":
             return _bm25_node(args, child, walk)
-        if op in _PIPE_WIRE:
-            return _pipeline_node(op, args, child, walk)
         if op == "pq_topk":
             return _pq_node(op, args, child, walk, stores)
         if op == "assign_clusters":
@@ -661,10 +656,10 @@ def _lm_node(op: str, args: list, child: Table, walk):
                 "kind string, bucket long, cnt long")
     allowed = {"text_col", "id_col", "n_buckets", "n", "smoothing",
                "backoff", "interpolate", "tokenizer", "kneser_ney"}
-    allowed |= ({"prefer_literal"} if op == "ngram_lm_logprob"
-                else {"quantiles", "labels", "by_col", "persist"}
-                if op == "perplexity_buckets"
-                else {"max_ppl", "min_ppl"})
+    if op == "perplexity_buckets":
+        allowed |= {"quantiles", "labels", "by_col", "persist"}
+    elif op == "perplexity_filter":
+        allowed |= {"max_ppl", "min_ppl"}
     kw = dict(args[3])
     bad = set(kw) - allowed
     if bad:
@@ -686,132 +681,44 @@ def _lm_node(op: str, args: list, child: Table, walk):
     return Table(fn(child, reference, counts, **kw), op)
 
 
-# r12 wire sweep (VERDICT r11 #3/#4): op -> (keyword whitelist, shape).
-# Shapes: "unary" = [child, {kw}]; "binary" = [child, other_tree, {kw}]
-# (the second table rides as a same-server subtree — decontamination's
-# test corpus, canonical_docs' pair list); "terms" = [child, [str, ...],
-# {kw}] (a literal KB-scale blocklist); "opt_tree" = [child,
-# subtree|None, {kw}] (token_commonness' optional prebuilt vocabulary).
-_PIPE_WIRE: dict[str, tuple[frozenset, str]] = {
-    "exact_dedup": (frozenset({"text_col", "id_col"}), "unary"),
-    "normalized_dedup": (frozenset({"text_col", "id_col"}), "unary"),
-    "cross_doc_dup_lines": (
-        frozenset({"text_col", "id_col", "min_chars", "scrub"}), "unary"),
-    # r14: maximal duplicated spans (the auditor view of the
-    # exact-substring family) — a pure literal-args lazy plan
-    "cross_doc_dup_spans": (
-        frozenset({"n", "min_docs", "text_col", "id_col"}), "unary"),
-    "dup_span_popularity": (
-        frozenset({"n", "text_col", "id_col"}), "unary"),
-    # r15: winnowing (MOSS) — md5-hash fingerprints are portable, so
-    # unlike the xxhash64 MinHash/SimHash generators these serialize
-    "winnow_fingerprints": (
-        frozenset({"k", "w", "text_col", "id_col"}), "unary"),
-    "winnow_candidates": (
-        frozenset({"k", "w", "min_shared", "max_bucket", "text_col",
-                   "id_col"}), "unary"),
-    "top_ngram_share": (frozenset({"n", "text_col", "id_col"}), "unary"),
-    "source_mix": (
-        frozenset({"text_col", "source_col", "tokenizer"}), "unary"),
-    "extract_urls": (frozenset({"text_col"}), "unary"),
-    "domain_mix": (frozenset({"text_col", "id_col"}), "unary"),
-    "corpus_report": (frozenset({"text_col", "source_col"}), "unary"),
-    "token_commonness": (
-        frozenset({"text_col", "id_col", "vocab_size"}), "opt_tree"),
-    "blocklist_filter": (frozenset({"text_col", "mode"}), "terms"),
-    # tokenizer training's distributed phase (r13 second half): the
-    # top-N word count runs server-side; the TRAINERS stay client-side
-    # over the bounded computed relation
-    "word_frequencies": (
-        frozenset({"text_col", "lowercase", "byte_level", "max_words",
-                   "min_count"}), "unary"),
-    "tokenizer_stats": (frozenset({"text_col", "tokenizer"}), "unary"),
-    "contamination_report": (
-        frozenset({"n", "text_col", "id_col", "threshold"}), "binary"),
-    "connected_components": (
-        frozenset({"src", "dst", "max_iter"}), "unary"),
-    "dedup_clusters": (frozenset({"left", "right", "max_iter"}), "unary"),
-    "canonical_docs": (
-        frozenset({"id_col", "left", "right", "max_iter"}), "binary"),
-    # the packing family (late r12): split/chunk are pure projections,
-    # pack_sequences runs its driver-frozen boundary sampling + bucket
-    # offsets SERVER-side at replay (where the compute belongs)
-    "train_val_test_split": (
-        frozenset({"fractions", "on", "salt", "labels"}), "unary"),
-    "pack_sequences": (
-        frozenset({"budget", "text_col", "order_by", "partitions",
-                   "tokenizer", "sep_tokens"}),
-        "unary"),
-    "chunk_documents": (
-        frozenset({"max_tokens", "overlap", "text_col", "tokenizer"}),
-        "unary"),
-    # the extension operators (late r12): literal-kwargs lazy plans —
-    # both join sides ride as same-server subtrees
-    "asof_join": (
-        frozenset({"on", "by", "right_cols", "suffix"}), "binary"),
-    "salted_join": (
-        frozenset({"on_left", "on_right", "salt", "how"}), "binary"),
-    "range_join": (
-        frozenset({"value_col", "lo_col", "hi_col", "how"}), "binary"),
-    "bucketed_range_join": (
-        frozenset({"value_col", "lo_col", "hi_col", "bucket_width"}),
-        "binary"),
-    "sessionize": (
-        frozenset({"key", "order_by", "gap", "gap_col", "session_col"}),
-        "unary"),
-}
-
-# extension ops resolve from their own modules, not blaze_spark.pipeline
-_PIPE_MODULES = {
-    "asof_join": "blaze_spark.operators.joins_ext",
-    "salted_join": "blaze_spark.operators.joins_ext",
-    "range_join": "blaze_spark.operators.range_join",
-    "bucketed_range_join": "blaze_spark.operators.range_join",
-    "sessionize": "blaze_spark.operators.sessionize",
-}
-
-
-def _pipeline_node(op: str, args: list, child: Table, walk):
-    """Replay an r12 swept pipeline node.  Keyword args re-validate
-    through the local entry points; unknown keywords and extra
-    positional args reject loudly (the version-skew posture)."""
-    from . import pipeline as _pl
-
-    allowed, shape = _PIPE_WIRE[op]
-    _arity(op, args, 2 if shape == "unary" else 3)
-    raw_kw = args[-1] if len(args) > 1 and isinstance(args[-1], dict) \
-        else {}
-    bad = set(raw_kw) - allowed
+def _wire_node(op: str, args: list, walk) -> Table:
+    """Replay a registered wire op (:mod:`blaze_spark.wire`): ``[subtree
+    | null per table parameter, {kw}]`` → the public function over the
+    walked tables.  Keyword args re-validate through the local entry
+    point; unknown keywords and extra positional args reject loudly
+    (the version-skew posture)."""
+    spec = wire.registry()[op]
+    n = len(spec.tables)
+    _arity(op, args, n + 1)
+    kw = args[n] if len(args) > n else {}
+    if not isinstance(kw, dict):
+        raise ValueError(f"{op} wire node expects its keyword dict as "
+                         f"args[{n}]")
+    bad = set(kw) - spec.kwargs
     if bad:
         raise ValueError(
             f"{op} wire node carries unknown keyword(s) {sorted(bad)} "
             "— re-serialize with a matching client version")
-    kw = dict(raw_kw)
-    if "tokenizer" in kw:
-        # r13: tokenizers ride as bounded wire dicts (vocab/merges are
+    missing = [p for p in spec.kwargs if spec.required(p) and p not in kw]
+    if missing:
+        raise ValueError(f"{op} wire node is missing the required "
+                         f"keyword(s) {sorted(missing)}")
+    kw = dict(kw)
+    if kw.get("tokenizer") is not None:
+        # tokenizers ride as bounded wire dicts (vocab/merges are
         # literal relations); hostile forms fail in tokenizer_from_wire
         from .pipeline.tokenizer import tokenizer_from_wire
         kw["tokenizer"] = tokenizer_from_wire(kw["tokenizer"])
-    pos = [child]
-    if shape == "binary":
-        pos.append(walk(args[1]))
-    elif shape == "terms":
-        if not isinstance(args[1], list) or \
-                not all(isinstance(x, str) for x in args[1]):
-            raise ValueError(
-                f"{op} wire node expects a literal list of term "
-                "strings as args[1]")
-        pos.append(args[1])
-    elif shape == "opt_tree":
-        if args[1] is not None:
-            kw["vocab"] = walk(args[1]).df
-    if op in _PIPE_MODULES:
-        import importlib
-
-        fn = getattr(importlib.import_module(_PIPE_MODULES[op]), op)
-    else:
-        fn = getattr(_pl, op)
-    out = fn(*pos, **kw)
+    tables = {}
+    for i, name in enumerate(spec.tables):
+        sub = args[i] if i < len(args) else None
+        if sub is None and not spec.required(name):
+            continue
+        if not isinstance(sub, dict) or "op" not in sub:
+            raise ValueError(f"{op} wire node expects a table subtree "
+                             f"({name}) as args[{i}]")
+        tables[name] = walk(sub)
+    out = spec.public(**tables, **kw)
     return out if isinstance(out, Table) else Table(out, op)
 
 
@@ -1022,53 +929,20 @@ def _bm25_node(args: list, child: Table, walk):
     return bm25_topk(child, queries, **kw)
 
 
-def _mix_dedup_node(op: str, args: list, child: Table, walk):
-    """Replay a mid-r11 literal-args table node: dup-span
-    scoring/scrub, temperature mixture weights, or mixture execution
-    (weights as bounded literal rows or a same-server subtree)."""
-    from .pipeline import (apply_source_mix, cross_doc_dup_ngrams,
-                           temperature_source_mix, unimax_source_mix)
+def _apply_mix_node(args: list, child: Table, walk):
+    """Replay mixture execution (mid-r11): args = [child, weights_enc,
+    {kw}], the weights as bounded literal rows or a same-server
+    subtree."""
+    from .pipeline import apply_source_mix
 
-    def _kw(raw_kw: dict, allowed: set) -> dict:
-        bad = set(raw_kw) - allowed
-        if bad:
-            raise ValueError(
-                f"{op} wire node carries unknown keyword(s) "
-                f"{sorted(bad)} — re-serialize with a matching client "
-                "version")
-        return dict(raw_kw)
-
-    if op == "cross_doc_dup_ngrams":
-        _arity(op, args, 2)
-        kw = _kw(args[1], {"n", "min_docs", "text_col", "id_col",
-                           "scrub"})
-        return cross_doc_dup_ngrams(child, **kw)
-    if op == "temperature_source_mix":
-        _arity(op, args, 2)
-        kw = _kw(args[1], {"alpha", "text_col", "source_col",
-                           "allow_upsample", "tokenizer"})
-        if "tokenizer" in kw:
-            from .pipeline.tokenizer import tokenizer_from_wire
-            kw["tokenizer"] = tokenizer_from_wire(kw["tokenizer"])
-        return Table(temperature_source_mix(child, **kw),
-                     "temperature_source_mix")
-    if op == "unimax_source_mix":
-        _arity(op, args, 2)
-        kw = _kw(args[1], {"budget_tokens", "max_epochs", "text_col",
-                           "source_col", "tokenizer"})
-        if "budget_tokens" not in kw:
-            raise ValueError(
-                "unimax_source_mix wire node is missing the required "
-                "budget_tokens keyword")
-        if "tokenizer" in kw:
-            from .pipeline.tokenizer import tokenizer_from_wire
-            kw["tokenizer"] = tokenizer_from_wire(kw["tokenizer"])
-        return Table(unimax_source_mix(child, **kw),
-                     "unimax_source_mix")
-    # apply_source_mix — args: [child, weights_enc, {kw}]
+    op = "apply_source_mix"
     _arity(op, args, 3)
-    kw = _kw(args[2], {"source_col", "id_col", "seed",
-                       "allow_upsample"})
+    kw = dict(args[2])
+    bad = set(kw) - {"source_col", "id_col", "seed", "allow_upsample"}
+    if bad:
+        raise ValueError(
+            f"{op} wire node carries unknown keyword(s) {sorted(bad)} "
+            "— re-serialize with a matching client version")
     if isinstance(args[1], dict):
         weights = walk(args[1]).df
     else:

@@ -9,10 +9,13 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..core import Table
+from ..wire import wire_op
 
 __all__ = ["asof_join", "salted_join"]
 
 
+@wire_op("asof_join", tables=("left", "right"),
+         kwargs=("on", "by", "right_cols", "suffix"))
 def asof_join(left: Table, right: Table, on: str, by: str,
               right_cols: list[str] | None = None,
               suffix: str = "_right") -> Table:
@@ -46,6 +49,10 @@ def asof_join(left: Table, right: Table, on: str, by: str,
     return Table(out, "asof_join")
 
 
+# serializable: results equal a plain join whatever the rand() salt
+# (the salt only moves rows between reducers)
+@wire_op("salted_join", tables=("big", "small"),
+         kwargs=("on_left", "on_right", "salt", "how"))
 def salted_join(big: Table, small: Table, on_left: str, on_right: str,
                 salt: int = 8, how: str = "inner") -> Table:
     """Equi-join resilient to hot keys: the big side gets a random salt in
@@ -68,70 +75,3 @@ def salted_join(big: Table, small: Table, on_left: str, on_right: str,
     if on_left != on_right:
         joined = joined.drop(sd[on_right])
     return Table(joined, "salted_join")
-
-
-# r8 silent-empty audit: no wire-dialect form -> remote inputs raise
-# at entry instead of computing over the empty schema-only frame
-# Wire dialect (late r12): both extension joins are literal-kwargs
-# lazy plans, so they serialize as binary nodes — both sides ride as
-# same-server subtrees (the canonical_docs pattern), and the recorded
-# schema is the lazy local plan over the empty frames.  salted_join's
-# results equal a plain join regardless of the rand() salt (the salt
-# only moves rows between reducers), so serializing it is safe.
-import functools  # noqa: E402
-
-from ..pipeline.selection import (_require_tree, _same_server,  # noqa: E402
-                                  _wire_result)
-
-_local_asof_join = asof_join
-_local_salted_join = salted_join
-
-
-def _remote(x):
-    return isinstance(x, Table) and getattr(x, "_client", None) is not None
-
-
-def _binary_wire(op, left, right, local, kw):
-    node = {"op": op,
-            "args": [_require_tree(left, op),
-                     _require_tree(right, f"{op} right side"), kw]}
-    return _wire_result(left, local.df, node)
-
-
-def _check_sides(op, left, right):
-    if not (_remote(left) and _remote(right)) \
-            or not _same_server(left, right):
-        raise TypeError(
-            f"{op} over blaze://: both sides must live on the SAME "
-            "server (register them there); mixing a local side with a "
-            "remote one would join against the empty schema-only frame")
-
-
-@functools.wraps(_local_asof_join)
-def asof_join(left: Table, right: Table, on: str, by: str,
-              right_cols: list[str] | None = None,
-              suffix: str = "_right") -> Table:
-    if not _remote(left) and not _remote(right):
-        return _local_asof_join(left, right, on, by, right_cols, suffix)
-    _check_sides("asof_join", left, right)
-    local = _local_asof_join(left, right, on, by, right_cols, suffix)
-    return _binary_wire(
-        "asof_join", left, right, local,
-        {"on": on, "by": by,
-         "right_cols": (None if right_cols is None
-                        else [str(c) for c in right_cols]),
-         "suffix": suffix})
-
-
-@functools.wraps(_local_salted_join)
-def salted_join(big: Table, small: Table, on_left: str, on_right: str,
-                salt: int = 8, how: str = "inner") -> Table:
-    if not _remote(big) and not _remote(small):
-        return _local_salted_join(big, small, on_left, on_right, salt,
-                                  how)
-    _check_sides("salted_join", big, small)
-    local = _local_salted_join(big, small, on_left, on_right, salt, how)
-    return _binary_wire(
-        "salted_join", big, small, local,
-        {"on_left": on_left, "on_right": on_right, "salt": int(salt),
-         "how": how})

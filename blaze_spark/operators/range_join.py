@@ -16,10 +16,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..core import Table
+from ..wire import wire_op
 
 __all__ = ["range_join", "bucketed_range_join"]
 
 
+@wire_op("range_join", tables=("left", "right"),
+         kwargs=("value_col", "lo_col", "hi_col", "how"))
 def range_join(left: Table, right: Table, value_col: str,
                lo_col: str, hi_col: str, how: str = "inner") -> Table:
     """Join rows where ``left.value_col`` falls in
@@ -31,6 +34,8 @@ def range_join(left: Table, right: Table, value_col: str,
     return Table(l.join(r, cond, how), "range_join")
 
 
+@wire_op("bucketed_range_join", tables=("left", "right"),
+         kwargs=("value_col", "lo_col", "hi_col", "bucket_width"))
 def bucketed_range_join(left: Table, right: Table, value_col: str,
                         lo_col: str, hi_col: str, bucket_width: float) -> Table:
     """Scale path: both sides bucketized by ``bucket_width``; ranges explode
@@ -52,46 +57,3 @@ def bucketed_range_join(left: Table, right: Table, value_col: str,
     keep = [F.col(f"l.{c}") for c in left.columns] + \
            [F.col(f"r.{c}") for c in right.columns]
     return Table(exact.select(*keep), "bucketed_range_join")
-
-
-# Wire dialect (late r12): both range-join forms are literal-kwargs
-# lazy plans — binary nodes, both sides as same-server subtrees.
-import functools  # noqa: E402
-
-from ..pipeline.selection import (_require_tree, _same_server,  # noqa: E402
-                                  _wire_result)
-from .joins_ext import _binary_wire, _check_sides, _remote  # noqa: E402
-
-_local_range_join = range_join
-_local_bucketed_range_join = bucketed_range_join
-
-
-@functools.wraps(_local_range_join)
-def range_join(left: Table, right: Table, value_col: str,
-               lo_col: str, hi_col: str, how: str = "inner") -> Table:
-    if not _remote(left) and not _remote(right):
-        return _local_range_join(left, right, value_col, lo_col,
-                                 hi_col, how)
-    _check_sides("range_join", left, right)
-    local = _local_range_join(left, right, value_col, lo_col, hi_col,
-                              how)
-    return _binary_wire(
-        "range_join", left, right, local,
-        {"value_col": value_col, "lo_col": lo_col, "hi_col": hi_col,
-         "how": how})
-
-
-@functools.wraps(_local_bucketed_range_join)
-def bucketed_range_join(left: Table, right: Table, value_col: str,
-                        lo_col: str, hi_col: str,
-                        bucket_width: float) -> Table:
-    if not _remote(left) and not _remote(right):
-        return _local_bucketed_range_join(left, right, value_col,
-                                          lo_col, hi_col, bucket_width)
-    _check_sides("bucketed_range_join", left, right)
-    local = _local_bucketed_range_join(left, right, value_col, lo_col,
-                                       hi_col, bucket_width)
-    return _binary_wire(
-        "bucketed_range_join", left, right, local,
-        {"value_col": value_col, "lo_col": lo_col, "hi_col": hi_col,
-         "bucket_width": float(bucket_width)})

@@ -22,12 +22,15 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from blaze_spark.core import ColExpr, Table
+from blaze_spark.wire import wire_op
 
 
 def _name(c):
     return c.name if isinstance(c, ColExpr) else c
 
 
+@wire_op("sessionize", tables=("t",),
+         kwargs=("key", "order_by", "gap", "gap_col", "session_col"))
 def sessionize(t: Table, key, order_by, gap, gap_col=None,
                session_col: str = "session_id") -> Table:
     """Assign ``session_col`` per row: 0-based session index within ``key``.
@@ -38,6 +41,8 @@ def sessionize(t: Table, key, order_by, gap, gap_col=None,
     or exact timestamp) — same requirement the reference's Shift places on
     row order (blaze/expr/collections.py:914-950).
     """
+    if isinstance(gap, (bool, str)):
+        raise TypeError(f"sessionize: gap must be a number, got {gap!r}")
     k, o = _name(key), _name(order_by)
     g = F.col(_name(gap_col)) if gap_col is not None else F.col(o)
     w = Window.partitionBy(k).orderBy(o)
@@ -49,40 +54,3 @@ def sessionize(t: Table, key, order_by, gap, gap_col=None,
         t.df.withColumn("__new_s", new_session)
         .withColumn(session_col, F.sum("__new_s").over(run))
         .drop("__new_s"))
-
-
-# Wire dialect (late r12): sessionize is a literal-kwargs lazy window
-# plan — a unary node.  Column args must be plain NAMES and the gap a
-# JSON scalar for the wire form; expression args keep it local-only.
-import functools  # noqa: E402
-
-from ..pipeline.selection import (_client_of, _require_tree,  # noqa: E402
-                                  _wire_result)
-
-_local_sessionize = sessionize
-
-
-@functools.wraps(_local_sessionize)
-def sessionize(t: Table, key, order_by, gap, gap_col=None,
-               session_col: str = "session_id") -> Table:
-    if _client_of(t) is None:
-        return _local_sessionize(t, key, order_by, gap, gap_col,
-                                 session_col)
-    for nm, v in (("key", key), ("order_by", order_by),
-                  ("gap_col", gap_col)):
-        if v is not None and not isinstance(v, str):
-            raise TypeError(
-                f"sessionize over blaze://: {nm} must be a column NAME "
-                "(expression arguments keep the operator local-only) — "
-                "compute() the remote expression first")
-    if not isinstance(gap, (int, float)) or isinstance(gap, bool):
-        raise TypeError(
-            "sessionize over blaze://: gap must be a JSON-scalar "
-            "number for the wire form")
-    local = _local_sessionize(t, key, order_by, gap, gap_col,
-                              session_col)
-    node = {"op": "sessionize",
-            "args": [_require_tree(t, "sessionize"),
-                     {"key": key, "order_by": order_by, "gap": gap,
-                      "gap_col": gap_col, "session_col": session_col}]}
-    return _wire_result(t, local.df, node)

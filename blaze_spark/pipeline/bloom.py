@@ -394,14 +394,10 @@ def load_bloom(spark, path: str) -> BloomFilter:
 
 import functools as _functools  # noqa: E402
 
+from ..wire import _client_of, _require_tree, _wire_result  # noqa: E402
+
 _local_bloom_contains = bloom_contains
 _local_bloom_contamination = bloom_contamination
-
-
-def _bw():
-    # lazy: selection's wire helpers would be circular at import time
-    from .selection import _client_of, _require_tree, _wire_result
-    return _client_of, _require_tree, _wire_result
 
 
 def _store_geom_kw(fn_name: str, store: str, m_bits, k, store_n) -> dict:
@@ -449,7 +445,6 @@ def bloom_contains(t: Table, bloom, key_col: str,
                    out_col: str = "bloom_hit", *,
                    store: str = "saved", m_bits: int | None = None,
                    k: int | None = None, store_n: int | None = None):
-    _client_of, _require_tree, _wire_result = _bw()
     if _client_of(t) is None:
         if isinstance(bloom, str):
             bloom = _bloom_from_path(t, bloom, "bloom_contains",
@@ -483,7 +478,6 @@ def bloom_contamination(t: Table, bloom, n: int = 3,
                         m_bits: int | None = None,
                         k: int | None = None,
                         store_n: int | None = None):
-    _client_of, _require_tree, _wire_result = _bw()
     if _client_of(t) is None:
         if isinstance(bloom, str):
             bloom = _bloom_from_path(t, bloom, "bloom_contamination",

@@ -33,9 +33,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..core import Table
-from ..sources import local_frame
+from ..wire import wire_op
 
 __all__ = ["connected_components", "dedup_clusters", "canonical_docs"]
 
@@ -44,6 +45,40 @@ def _as_df(t) -> DataFrame:
     return t.df if isinstance(t, Table) else t
 
 
+# Wire forms (blaze_spark.wire): the pair list is itself a server-side
+# expression, so a remote dedup service resolves clusters without the
+# edges crossing the wire.  The local label propagation runs eager
+# per-round jobs, so the remote schemas come from these functions,
+# never from a plan-construction-time run of the loop.
+
+def _check_rounds(max_iter: int) -> None:
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+
+
+def _components_schema(max_iter, **_):
+    _check_rounds(max_iter)
+    return "node long, comp long"
+
+
+def _clusters_schema(max_iter, **_):
+    _check_rounds(max_iter)
+    return "doc_id long, cluster_id long, is_canonical boolean"
+
+
+def _canonical_schema(docs, id_col, max_iter, **_):
+    # docs' columns, the left-join key first, then cluster_id (LONG —
+    # the cc label domain) and keep, as in the local plan
+    _check_rounds(max_iter)
+    s = docs.df.schema
+    return T.StructType(
+        [s[id_col]] + [f for f in s.fields if f.name != id_col]
+        + [T.StructField("cluster_id", T.LongType()),
+           T.StructField("keep", T.BooleanType())])
+
+
+@wire_op("connected_components", tables=("edges",),
+         kwargs=("src", "dst", "max_iter"), schema=_components_schema)
 def connected_components(edges, src: str = "a", dst: str = "b",
                          max_iter: int = 20,
                          checkpoint: bool = True) -> Table:
@@ -111,6 +146,8 @@ def connected_components(edges, src: str = "a", dst: str = "b",
     return Table(labels.select("node", "comp"), "connected_components")
 
 
+@wire_op("dedup_clusters", tables=("pairs",),
+         kwargs=("left", "right", "max_iter"), schema=_clusters_schema)
 def dedup_clusters(pairs, left: str = "doc_a", right: str = "doc_b",
                    max_iter: int = 20) -> Table:
     """Near-duplicate pair list -> (doc_id, cluster_id, is_canonical).
@@ -131,6 +168,9 @@ def dedup_clusters(pairs, left: str = "doc_a", right: str = "doc_b",
         "dedup_clusters")
 
 
+@wire_op("canonical_docs", tables=("docs", "pairs"),
+         kwargs=("id_col", "left", "right", "max_iter"),
+         schema=_canonical_schema)
 def canonical_docs(docs, pairs, id_col: str = "doc_id",
                    left: str = "doc_a", right: str = "doc_b",
                    max_iter: int = 20) -> Table:
@@ -153,91 +193,3 @@ def canonical_docs(docs, pairs, id_col: str = "doc_id",
            .drop("is_canonical"))
     return Table(out, "canonical_docs")
 
-
-# r12 wire sweep (VERDICT r11 #3): cluster resolution serializes — the
-# pair list is itself a server-side expression (e.g. a registered
-# near-dup pair dataset), so a remote dedup service resolves clusters
-# without the edges ever crossing the wire.  Schemas are HAND-WRITTEN:
-# the local label-propagation loop runs eager per-round jobs
-# (localCheckpoint + isEmpty), which must never fire at
-# plan-construction time.
-import functools  # noqa: E402
-
-from pyspark.sql import types as T  # noqa: E402
-
-from .selection import (_client_of, _require_tree, _same_server,  # noqa: E402
-                        _wire_result)
-
-_local_connected_components = connected_components
-_local_dedup_clusters = dedup_clusters
-_local_canonical_docs = canonical_docs
-
-
-def _remote(x):
-    return isinstance(x, Table) and getattr(x, "_client", None) is not None
-
-
-@functools.wraps(_local_connected_components)
-def connected_components(edges, src: str = "a", dst: str = "b",
-                         max_iter: int = 20,
-                         checkpoint: bool = True) -> Table:
-    if not _remote(edges):
-        return _local_connected_components(edges, src, dst, max_iter,
-                                           checkpoint)
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    node = {"op": "connected_components",
-            "args": [_require_tree(edges, "connected_components"),
-                     {"src": src, "dst": dst,
-                      "max_iter": int(max_iter)}]}
-    empty = local_frame(
-        edges.df.sparkSession, [], "node long, comp long")
-    return _wire_result(edges, empty, node)
-
-
-@functools.wraps(_local_dedup_clusters)
-def dedup_clusters(pairs, left: str = "doc_a", right: str = "doc_b",
-                   max_iter: int = 20) -> Table:
-    if not _remote(pairs):
-        return _local_dedup_clusters(pairs, left, right, max_iter)
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    node = {"op": "dedup_clusters",
-            "args": [_require_tree(pairs, "dedup_clusters"),
-                     {"left": left, "right": right,
-                      "max_iter": int(max_iter)}]}
-    empty = local_frame(
-        pairs.df.sparkSession, [],
-        "doc_id long, cluster_id long, is_canonical boolean")
-    return _wire_result(pairs, empty, node)
-
-
-@functools.wraps(_local_canonical_docs)
-def canonical_docs(docs, pairs, id_col: str = "doc_id",
-                   left: str = "doc_a", right: str = "doc_b",
-                   max_iter: int = 20) -> Table:
-    if not _remote(docs) and not _remote(pairs):
-        return _local_canonical_docs(docs, pairs, id_col, left, right,
-                                     max_iter)
-    if not (_remote(docs) and _remote(pairs)) \
-            or not _same_server(docs, pairs):
-        raise TypeError(
-            "canonical_docs over blaze://: docs and pairs must live on "
-            "the SAME server (derive or register the pair list there); "
-            "mixing a local side with a remote one would scan the "
-            "empty schema-only frame")
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    node = {"op": "canonical_docs",
-            "args": [_require_tree(docs, "canonical_docs"),
-                     _require_tree(pairs, "canonical_docs pairs"),
-                     {"id_col": id_col, "left": left, "right": right,
-                      "max_iter": int(max_iter)}]}
-    # docs' columns, with cluster_id (LONG — the cc label domain)
-    # and keep appended; the left-join key leads, as in the local plan
-    fields = [docs.df.schema[id_col]] \
-        + [f for f in docs.df.schema.fields if f.name != id_col] \
-        + [T.StructField("cluster_id", T.LongType()),
-           T.StructField("keep", T.BooleanType())]
-    empty = local_frame(docs.df.sparkSession, [], T.StructType(fields))
-    return _wire_result(docs, empty, node)

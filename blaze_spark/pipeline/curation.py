@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import Table, _unary_pass
-from ..sources import local_frame
+from ..wire import _client_of, _require_tree, _wire_result, wire_op
 from .text import quality_features
 
 
@@ -99,6 +99,8 @@ def repetition_features(t: Table, text_col: str = "text") -> Table:
     )
 
 
+@wire_op("top_ngram_share", tables=("t",),
+         kwargs=("n", "text_col", "id_col"))
 def top_ngram_share(t: Table, n: int = 2, text_col: str = "text",
                     id_col: str = "doc_id") -> DataFrame:
     """Most frequent token ``n``-gram per document and the fraction of
@@ -114,6 +116,8 @@ def top_ngram_share(t: Table, n: int = 2, text_col: str = "text",
     fewer than ``n`` tokens are absent from the output (they have no
     n-gram), mirroring the SQL semantics of unnesting an empty list.
     """
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n}")
     c = F.col(text_col)
     base = t.df.select(
         F.col(id_col),
@@ -135,6 +139,8 @@ def top_ngram_share(t: Table, n: int = 2, text_col: str = "text",
     )
 
 
+@wire_op("contamination_report", tables=("train", "test"),
+         kwargs=("n", "text_col", "id_col", "threshold"))
 def contamination_report(train: Table, test: Table, n: int = 3,
                          text_col: str = "text", id_col: str = "doc_id",
                          threshold: float = 0.2) -> DataFrame:
@@ -150,6 +156,8 @@ def contamination_report(train: Table, test: Table, n: int = 3,
     Output: (doc_id, n_ngrams, n_contaminated, contamination_rate,
     contaminated) with ``contaminated`` as 0/1 on ``rate >= threshold``.
     """
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n}")
     from .dedup import _spread
 
     c = F.col(text_col)
@@ -378,6 +386,8 @@ def c4_clean(t: Table, text_col: str = "text",
     )
 
 
+@wire_op("source_mix", tables=("t",),
+         kwargs=("text_col", "source_col", "tokenizer"))
 def source_mix(t: Table, text_col: str = "text",
                source_col: str = "source",
                tokenizer=None) -> DataFrame:
@@ -420,6 +430,9 @@ def source_mix(t: Table, text_col: str = "text",
     )
 
 
+@wire_op("temperature_source_mix", tables=("t",),
+         kwargs=("alpha", "text_col", "source_col", "allow_upsample",
+                 "tokenizer"))
 def temperature_source_mix(t: Table, alpha: float = 0.3,
                            text_col: str = "text",
                            source_col: str = "source",
@@ -480,6 +493,9 @@ def temperature_source_mix(t: Table, alpha: float = 0.3,
     )
 
 
+@wire_op("unimax_source_mix", tables=("t",),
+         kwargs=("budget_tokens", "max_epochs", "text_col", "source_col",
+                 "tokenizer"))
 def unimax_source_mix(t: Table, budget_tokens: int,
                       max_epochs: float = 1.0,
                       text_col: str = "text",
@@ -575,6 +591,7 @@ URL_PATTERN = r"https?://[^\s]+"
 DOMAIN_PATTERN = r"https?://([^/\s:?#]+)"
 
 
+@wire_op("extract_urls", tables=("t",), kwargs=("text_col",))
 def extract_urls(t: Table, text_col: str = "text") -> Table:
     """URL/domain signals (the CommonCrawl-style curation inputs): adds
     ``n_urls``, ``domains`` (lowercased host per URL, document order) and
@@ -597,6 +614,7 @@ def extract_urls(t: Table, text_col: str = "text") -> Table:
     )
 
 
+@wire_op("domain_mix", tables=("t",), kwargs=("text_col", "id_col"))
 def domain_mix(t: Table, text_col: str = "text",
                id_col: str = "doc_id") -> DataFrame:
     """Per-domain corpus composition: (domain, n_docs, n_mentions,
@@ -624,6 +642,8 @@ def domain_mix(t: Table, text_col: str = "text",
          .alias("doc_share"))
 
 
+@wire_op("blocklist_filter", tables=("t",),
+         kwargs=("terms", "text_col", "mode"))
 def blocklist_filter(t: Table, terms: list[str], text_col: str = "text",
                      mode: str = "drop") -> Table:
     """Drop (or keep-only, ``mode="keep"``) documents containing ANY
@@ -638,10 +658,12 @@ def blocklist_filter(t: Table, terms: list[str], text_col: str = "text",
     that when the list stops fitting a regex)."""
     import re as _re
 
-    if not terms:
-        return t
     if mode not in ("drop", "keep"):
         raise ValueError("mode must be 'drop' or 'keep'")
+    if not terms:
+        return t
+    if not all(isinstance(w, str) for w in terms):
+        raise TypeError("blocklist_filter: terms must be strings")
 
     def _word(w: str) -> str:
         # \b only binds next to a WORD character: 'c++' needs no trailing
@@ -658,6 +680,22 @@ def blocklist_filter(t: Table, terms: list[str], text_col: str = "text",
     return Table(t.df.filter(~hit if mode == "drop" else hit), t._name)
 
 
+def _commonness_schema(t, id_col, vocab_size, **_):
+    """The remote form's schema: the local path runs an eager
+    vocabulary-total collect, which must not fire at plan-construction
+    time (it runs server-side at replay)."""
+    if vocab_size < 1:
+        raise ValueError(f"vocab_size must be >= 1, got {vocab_size}")
+    return T.StructType(
+        [t.df.schema[id_col],
+         T.StructField("n_tokens", T.IntegerType()),
+         T.StructField("oov_rate", T.DoubleType()),
+         T.StructField("commonness", T.DoubleType())])
+
+
+@wire_op("token_commonness", tables=("t", "vocab"),
+         kwargs=("text_col", "id_col", "vocab_size"),
+         schema=_commonness_schema)
 def token_commonness(t: Table, text_col: str = "text",
                      id_col: str = "doc_id", vocab_size: int = 50_000,
                      vocab: DataFrame | None = None) -> DataFrame:
@@ -688,6 +726,8 @@ def token_commonness(t: Table, text_col: str = "text",
     aggregates map-side in both passes."""
     c = F.col(text_col)
     toks = t.df.select(F.col(id_col), F.explode(_tokens(c)).alias("tok"))
+    if isinstance(vocab, Table):
+        vocab = vocab.df
     if vocab is None:
         counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
         # top-N via orderBy().limit() — Spark executes this as
@@ -718,6 +758,8 @@ def token_commonness(t: Table, text_col: str = "text",
     )
 
 
+@wire_op("corpus_report", tables=("t",),
+         kwargs=("text_col", "source_col"))
 def corpus_report(t: Table, text_col: str = "text",
                   source_col: str = "source") -> DataFrame:
     """One-row corpus profile — the first thing anyone runs on a new
@@ -869,112 +911,22 @@ def apply_source_mix(t: Table, weights: DataFrame,
 _MAX_UPSAMPLE = 10_000
 
 
-# r8 silent-empty audit: ops with no wire-dialect form raise at entry
-# on remote inputs instead of computing over the empty schema-only
-# frame.  r12 (VERDICT r11 #3/#4): this module's whole guarded set
-# gained wire forms (bottom of the file) — nothing left to guard here.
-
-
 # ---------------------------------------------------------------------------
-# Wire dialect (mid-r11): the mixture-plan pair serializes — a remote
-# rebalancing service computes weights AND executes the plan
-# server-side, with only the plan (or the kept rows) crossing the
-# wire.  The weights relation is ~#sources rows, so a LOCAL weights
-# frame ships as literal rows (the selection-family closure pattern);
-# a same-server weights expression (e.g. a remote
-# temperature_source_mix result) rides as a subtree.
+# Wire dialect (mid-r11): mixture execution serializes — a remote
+# rebalancing service executes the plan server-side, with only the
+# kept rows crossing the wire.  The weights relation is ~#sources
+# rows, so a LOCAL weights frame ships as literal rows (the
+# selection-family closure pattern); a same-server weights expression
+# (e.g. a remote temperature_source_mix result) rides as a subtree.
 import functools  # noqa: E402
 
-_local_temperature_source_mix = temperature_source_mix
-_local_unimax_source_mix = unimax_source_mix
 _local_apply_source_mix = apply_source_mix
-
-
-def _wire():
-    # LAZY: selection imports THIS module at its top (shared
-    # tokenization), so importing selection's wire helpers eagerly here
-    # would be circular
-    from .selection import (_MAX_BUCKETS, _client_of, _require_tree,
-                            _wire_result)
-    return _MAX_BUCKETS, _client_of, _require_tree, _wire_result
-
-
-@functools.wraps(_local_temperature_source_mix)
-def temperature_source_mix(t: Table, alpha: float = 0.3,
-                           text_col: str = "text",
-                           source_col: str = "source",
-                           allow_upsample: bool = False,
-                           tokenizer=None):
-    _MAX_BUCKETS, _client_of, _require_tree, _wire_result = _wire()
-    if _client_of(t) is None:
-        return _local_temperature_source_mix(t, alpha, text_col,
-                                             source_col, allow_upsample,
-                                             tokenizer)
-    if not 0.0 <= alpha <= 1.0:
-        raise ValueError(f"alpha must be in [0, 1], got {alpha}")
-    kw = {"alpha": float(alpha), "text_col": text_col,
-          "source_col": source_col}
-    if allow_upsample:
-        # only present when set: capped plans keep the r11 form, an
-        # uncapped plan rejects loudly on an r11 server (unknown kw)
-        kw["allow_upsample"] = True
-    if tokenizer is not None:
-        from .tokenizer import _tokenizer_wire
-        kw["tokenizer"] = _tokenizer_wire(tokenizer)
-    node = {"op": "temperature_source_mix",
-            "args": [_require_tree(t, "temperature_source_mix"), kw]}
-    spark = t.df.sparkSession
-    schema = T.StructType(
-        [t.df.schema[source_col],
-         T.StructField("n_docs", T.LongType()),
-         T.StructField("total_tokens", T.LongType()),
-         T.StructField("token_share", T.DoubleType()),
-         T.StructField("target_share", T.DoubleType()),
-         T.StructField("sample_weight", T.DoubleType())])
-    return _wire_result(t, local_frame(spark, [], schema), node)
-
-
-@functools.wraps(_local_unimax_source_mix)
-def unimax_source_mix(t: Table, budget_tokens: int,
-                      max_epochs: float = 1.0,
-                      text_col: str = "text",
-                      source_col: str = "lang",
-                      tokenizer=None):
-    _MAX_BUCKETS, _client_of, _require_tree, _wire_result = _wire()
-    if _client_of(t) is None:
-        return _local_unimax_source_mix(t, budget_tokens, max_epochs,
-                                        text_col, source_col, tokenizer)
-    if budget_tokens <= 0:
-        raise ValueError(
-            f"budget_tokens must be positive, got {budget_tokens}")
-    if not 0.0 < float(max_epochs) <= _MAX_UPSAMPLE:
-        raise ValueError(
-            f"max_epochs must be in (0, {_MAX_UPSAMPLE}], got "
-            f"{max_epochs}")
-    kw = {"budget_tokens": int(budget_tokens),
-          "max_epochs": float(max_epochs),
-          "text_col": text_col, "source_col": source_col}
-    if tokenizer is not None:
-        from .tokenizer import _tokenizer_wire
-        kw["tokenizer"] = _tokenizer_wire(tokenizer)
-    node = {"op": "unimax_source_mix",
-            "args": [_require_tree(t, "unimax_source_mix"), kw]}
-    spark = t.df.sparkSession
-    schema = T.StructType(
-        [t.df.schema[source_col],
-         T.StructField("n_docs", T.LongType()),
-         T.StructField("total_tokens", T.LongType()),
-         T.StructField("cap_tokens", T.DoubleType()),
-         T.StructField("alloc_tokens", T.DoubleType()),
-         T.StructField("sample_weight", T.DoubleType())])
-    return _wire_result(t, local_frame(spark, [], schema), node)
 
 
 @functools.wraps(_local_apply_source_mix)
 def apply_source_mix(t: Table, weights, source_col: str = "source",
                      id_col: str = "doc_id", seed: int = 42,
                      allow_upsample: bool = False) -> Table:
-    _MAX_BUCKETS, _client_of, _require_tree, _wire_result = _wire()
     if _client_of(t) is None:
         if isinstance(weights, Table) \
                 and getattr(weights, "_client", None) is not None:
@@ -986,6 +938,8 @@ def apply_source_mix(t: Table, weights, source_col: str = "source",
             weights = weights.df
         return _local_apply_source_mix(t, weights, source_col, id_col,
                                        seed, allow_upsample)
+    from .selection import _MAX_BUCKETS  # selection imports this module
+
     client = t._client
     if isinstance(weights, Table):
         if _client_of(weights) is not client:
@@ -1026,187 +980,3 @@ def apply_source_mix(t: Table, weights, source_col: str = "source",
     node = {"op": "apply_source_mix",
             "args": [_require_tree(t, "apply_source_mix"), enc, kw]}
     return _wire_result(t, local_df, node)
-
-
-# r12 wire sweep (VERDICT r11 #3/#4): the curation reports, URL/domain
-# passes, blocklists, vocabulary commonness and decontamination are
-# literal-args table ops — they serialize as plain nodes.  Lazy plans
-# derive the recorded schema from the LOCAL plan over the remote
-# table's schema-only empty frame (the _unary_pass precedent, zero
-# jobs); token_commonness hand-writes its schema instead (its local
-# path runs an eager vocabulary-total collect — exactly the plan-time
-# job the r12 quality_classifier fix removed).
-
-_local_top_ngram_share = top_ngram_share
-_local_contamination_report = contamination_report
-_local_source_mix = source_mix
-_local_extract_urls = extract_urls
-_local_domain_mix = domain_mix
-_local_blocklist_filter = blocklist_filter
-_local_corpus_report = corpus_report
-_local_token_commonness = token_commonness
-
-
-def _sweep_node(t, op, local_df, kw, *extra):
-    _MAX_BUCKETS, _client_of, _require_tree, _wire_result = _wire()
-    node = {"op": op, "args": [_require_tree(t, op), *extra, kw]}
-    return _wire_result(t, local_df, node)
-
-
-def _is_remote(x):
-    return isinstance(x, Table) and getattr(x, "_client", None) is not None
-
-
-@functools.wraps(_local_top_ngram_share)
-def top_ngram_share(t: Table, n: int = 2, text_col: str = "text",
-                    id_col: str = "doc_id"):
-    if not _is_remote(t):
-        return _local_top_ngram_share(t, n, text_col, id_col)
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    local = Table(_local_top_ngram_share(t, n, text_col, id_col), t._name)
-    return _sweep_node(t, "top_ngram_share", local.df,
-                       {"n": int(n), "text_col": text_col,
-                        "id_col": id_col})
-
-
-@functools.wraps(_local_source_mix)
-def source_mix(t: Table, text_col: str = "text",
-               source_col: str = "source", tokenizer=None):
-    if not _is_remote(t):
-        return _local_source_mix(t, text_col, source_col, tokenizer)
-    local = _local_source_mix(t, text_col, source_col, tokenizer)
-    kw = {"text_col": text_col, "source_col": source_col}
-    if tokenizer is not None:
-        # only present when set (loud on r12 servers — never a silent
-        # whitespace recount)
-        from .tokenizer import _tokenizer_wire
-        kw["tokenizer"] = _tokenizer_wire(tokenizer)
-    return _sweep_node(t, "source_mix", local, kw)
-
-
-@functools.wraps(_local_extract_urls)
-def extract_urls(t: Table, text_col: str = "text") -> Table:
-    if not _is_remote(t):
-        return _local_extract_urls(t, text_col)
-    local = _local_extract_urls(t, text_col)
-    return _sweep_node(t, "extract_urls", local.df,
-                       {"text_col": text_col})
-
-
-@functools.wraps(_local_domain_mix)
-def domain_mix(t: Table, text_col: str = "text",
-               id_col: str = "doc_id"):
-    if not _is_remote(t):
-        return _local_domain_mix(t, text_col, id_col)
-    local = _local_domain_mix(t, text_col, id_col)
-    return _sweep_node(t, "domain_mix", local,
-                       {"text_col": text_col, "id_col": id_col})
-
-
-@functools.wraps(_local_blocklist_filter)
-def blocklist_filter(t: Table, terms: list[str], text_col: str = "text",
-                     mode: str = "drop") -> Table:
-    if not _is_remote(t):
-        return _local_blocklist_filter(t, terms, text_col, mode)
-    if mode not in ("drop", "keep"):
-        raise ValueError("mode must be 'drop' or 'keep'")
-    if not all(isinstance(w, str) for w in terms):
-        raise TypeError("blocklist_filter: terms must be strings")
-    # the term list is literal KBs by design (the docstring's regex
-    # cliff) — it rides IN the node, never as a dataset
-    return _sweep_node(t, "blocklist_filter", t.df,
-                       {"text_col": text_col, "mode": mode},
-                       list(terms))
-
-
-@functools.wraps(_local_corpus_report)
-def corpus_report(t: Table, text_col: str = "text",
-                  source_col: str = "source"):
-    if not _is_remote(t):
-        return _local_corpus_report(t, text_col, source_col)
-    local = _local_corpus_report(t, text_col, source_col)
-    return _sweep_node(t, "corpus_report", local,
-                       {"text_col": text_col, "source_col": source_col})
-
-
-@functools.wraps(_local_token_commonness)
-def token_commonness(t: Table, text_col: str = "text",
-                     id_col: str = "doc_id", vocab_size: int = 50_000,
-                     vocab=None):
-    if not _is_remote(t):
-        if _is_remote(vocab):
-            raise TypeError(
-                "token_commonness: a REMOTE vocabulary with a LOCAL "
-                "corpus mixes engines — compute() the vocabulary "
-                "first, or register the corpus on the same server")
-        if isinstance(vocab, Table):
-            vocab = vocab.df
-        return _local_token_commonness(t, text_col, id_col, vocab_size,
-                                       vocab)
-    _MAX_BUCKETS, _client_of, _require_tree, _wire_result = _wire()
-    if vocab is None:
-        enc = None
-    elif isinstance(vocab, Table):
-        from .selection import _same_server
-        if not _same_server(t, vocab):
-            raise TypeError(
-                "vocab is a table from a different server (or a local "
-                "Table) — the vocabulary must live on the same server "
-                "as the corpus (register it there), or be left None "
-                "to build server-side")
-        enc = _require_tree(vocab, "token_commonness vocab")
-    else:
-        raise TypeError(
-            "token_commonness over blaze://: pass the vocabulary as a "
-            "same-server expression (ngram/token counts registered or "
-            "derived there) or None — a local DataFrame cannot ride "
-            "the wire (top-50k vocabularies exceed the literal-row "
-            "budget)")
-    if vocab_size < 1:
-        raise ValueError(f"vocab_size must be >= 1, got {vocab_size}")
-    # hand-written schema: the local path would run its eager
-    # vocabulary-total collect at plan-construction time
-    schema = T.StructType(
-        [t.df.schema[id_col],
-         T.StructField("n_tokens", T.IntegerType()),
-         T.StructField("oov_rate", T.DoubleType()),
-         T.StructField("commonness", T.DoubleType())])
-    empty = local_frame(t.df.sparkSession, [], schema)
-    return _sweep_node(t, "token_commonness", empty,
-                       {"text_col": text_col, "id_col": id_col,
-                        "vocab_size": int(vocab_size)}, enc)
-
-
-@functools.wraps(_local_contamination_report)
-def contamination_report(train: Table, test: Table, n: int = 3,
-                         text_col: str = "text", id_col: str = "doc_id",
-                         threshold: float = 0.2):
-    remote_train, remote_test = _is_remote(train), _is_remote(test)
-    if not remote_train and not remote_test:
-        return _local_contamination_report(train, test, n, text_col,
-                                           id_col, threshold)
-    _MAX_BUCKETS, _client_of, _require_tree, _wire_result = _wire()
-    from .selection import _same_server
-    if not remote_train or not remote_test \
-            or not _same_server(train, test):
-        raise TypeError(
-            "contamination_report over blaze://: train and test must "
-            "live on the SAME server (register the benchmark suite "
-            "there — it rides as a subtree, MBs never cross the wire); "
-            "mixing a local corpus with a remote one would scan the "
-            "empty schema-only frame")
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    node = {"op": "contamination_report",
-            "args": [_require_tree(train, "contamination_report"),
-                     _require_tree(test, "contamination_report test"),
-                     {"n": int(n), "text_col": text_col,
-                      "id_col": id_col, "threshold": float(threshold)}]}
-    # lazy local plan over the two empty frames → recorded schema
-    local = _local_contamination_report(train, test, n, text_col,
-                                        id_col, threshold)
-    out = train._new(local)
-    out._client = train._client
-    out._tree = node
-    return out

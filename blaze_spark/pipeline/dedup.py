@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import Table
-from ..sources import local_frame
+from ..wire import wire_op
 
 
 # Live registrations per (JVM session identity, canonicalized-plan hash):
@@ -332,6 +332,7 @@ def _shingle_hash_df(df: DataFrame, text_col: str, k: int,
     return step.select("doc_id", sh.alias(out))
 
 
+@wire_op("exact_dedup", tables=("t",), kwargs=("text_col", "id_col"))
 def exact_dedup(t: Table, text_col: str = "text", id_col: str = "doc_id") -> Table:
     """Exact dedup: hash-groupBy on md5(text); keeper = min id per group."""
     return Table(
@@ -342,6 +343,8 @@ def exact_dedup(t: Table, text_col: str = "text", id_col: str = "doc_id") -> Tab
     )
 
 
+@wire_op("normalized_dedup", tables=("t",),
+         kwargs=("text_col", "id_col"))
 def normalized_dedup(t: Table, text_col: str = "text", id_col: str = "doc_id") -> Table:
     """Exact dedup after canonicalization (lowercase, collapse whitespace)."""
     canon = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
@@ -353,6 +356,8 @@ def normalized_dedup(t: Table, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
+@wire_op("cross_doc_dup_lines", tables=("t",),
+         kwargs=("text_col", "id_col", "min_chars", "scrub"))
 def cross_doc_dup_lines(t: Table, text_col: str = "text",
                         id_col: str = "doc_id", min_chars: int = 1,
                         scrub: bool = False) -> Table:
@@ -385,6 +390,8 @@ def cross_doc_dup_lines(t: Table, text_col: str = "text",
     for scrub a per-DOC window ordered by line position (bounded by
     document length).  No driver materialization anywhere.
     """
+    if min_chars < 0:
+        raise ValueError(f"min_chars must be >= 0, got {min_chars}")
     # no _spread here: the line split is cheap string work (no
     # interpreted HOFs) — r15 measured the respread LOSING 0.3 s at
     # sf0.1 (1.01 -> 1.34 s); the gram-explode siblings keep theirs
@@ -431,6 +438,8 @@ def cross_doc_dup_lines(t: Table, text_col: str = "text",
     return Table(kept, t._name)
 
 
+@wire_op("cross_doc_dup_ngrams", tables=("t",),
+         kwargs=("n", "min_docs", "text_col", "id_col", "scrub"))
 def cross_doc_dup_ngrams(t: Table, n: int = 5, min_docs: int = 2,
                          text_col: str = "text", id_col: str = "doc_id",
                          scrub: bool = False) -> Table:
@@ -530,6 +539,8 @@ def cross_doc_dup_ngrams(t: Table, n: int = 5, min_docs: int = 2,
     return Table(kept, t._name)
 
 
+@wire_op("cross_doc_dup_spans", tables=("t",),
+         kwargs=("n", "min_docs", "text_col", "id_col"))
 def cross_doc_dup_spans(t: Table, n: int = 5, min_docs: int = 2,
                         text_col: str = "text",
                         id_col: str = "doc_id") -> Table:
@@ -639,6 +650,8 @@ def cross_doc_dup_spans(t: Table, n: int = 5, min_docs: int = 2,
     return Table(out, t._name)
 
 
+@wire_op("dup_span_popularity", tables=("t",),
+         kwargs=("n", "text_col", "id_col"))
 def dup_span_popularity(t: Table, n: int = 5, text_col: str = "text",
                         id_col: str = "doc_id") -> Table:
     """The ``min_docs`` threshold sweep for the exact-substring family
@@ -1113,6 +1126,8 @@ def simhash_candidates(t: Table, text_col: str = "text", id_col: str = "doc_id",
 _WINNOW_POS_LIMIT = 1 << 20  # position packing bound (tokens per doc)
 
 
+@wire_op("winnow_fingerprints", tables=("t",),
+         kwargs=("k", "w", "text_col", "id_col"))
 def winnow_fingerprints(t: Table, k: int = 5, w: int = 4,
                         text_col: str = "text",
                         id_col: str = "doc_id") -> Table:
@@ -1181,6 +1196,9 @@ def winnow_fingerprints(t: Table, k: int = 5, w: int = 4,
     return Table(sel, "winnow_fingerprints")
 
 
+@wire_op("winnow_candidates", tables=("t",),
+         kwargs=("k", "w", "min_shared", "max_bucket", "text_col",
+                 "id_col"))
 def winnow_candidates(t: Table, k: int = 5, w: int = 4,
                       min_shared: int = 2,
                       max_bucket: int = 1000,
@@ -1240,176 +1258,3 @@ exact_jaccard_pairs = _lg(exact_jaccard_pairs)
 simhash = _lg(simhash)
 simhash_candidates = _lg(simhash_candidates)
 
-
-# ---------------------------------------------------------------------------
-# Wire dialect (mid-r11): cross_doc_dup_ngrams is a pure literal-args
-# table op (no models, no candidate inputs), so it serializes as a
-# unary tree node — the curation-pass pattern — and a remote scrub
-# service runs it without the corpus ever crossing the wire.
-import functools  # noqa: E402
-
-from .selection import _client_of, _require_tree, _wire_result  # noqa: E402
-
-_local_cross_doc_dup_ngrams = cross_doc_dup_ngrams
-
-
-@functools.wraps(_local_cross_doc_dup_ngrams)
-def cross_doc_dup_ngrams(t: Table, n: int = 5, min_docs: int = 2,
-                         text_col: str = "text", id_col: str = "doc_id",
-                         scrub: bool = False) -> Table:
-    if _client_of(t) is None:
-        return _local_cross_doc_dup_ngrams(t, n, min_docs, text_col,
-                                           id_col, scrub)
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    if min_docs < 2:
-        raise ValueError(
-            f"min_docs must be >= 2 (cross-document), got {min_docs}")
-    node = {"op": "cross_doc_dup_ngrams",
-            "args": [_require_tree(t, "cross_doc_dup_ngrams"),
-                     {"n": int(n), "min_docs": int(min_docs),
-                      "text_col": text_col, "id_col": id_col,
-                      "scrub": bool(scrub)}]}
-    spark = t.df.sparkSession
-    if scrub:
-        schema = T.StructType(
-            [t.df.schema[id_col],
-             T.StructField("clean_text", T.StringType())])
-    else:
-        schema = T.StructType(
-            [t.df.schema[id_col],
-             T.StructField("n_tokens", T.IntegerType()),
-             T.StructField("dup_tokens", T.IntegerType()),
-             T.StructField("dup_token_frac", T.DoubleType())])
-    return _wire_result(t, local_frame(spark, [], schema), node)
-
-
-# r12 wire sweep (VERDICT r11 #3): the exact-dedup family and line
-# dedup/scrub are pure literal-args unary table ops — they serialize as
-# plain nodes (the cross_doc_dup_ngrams pattern).  Their plans are
-# fully lazy, so the recorded schema frame is simply the LOCAL plan
-# built over the remote table's schema-only empty frame (the
-# _unary_pass precedent) — zero jobs at construction.
-
-_local_exact_dedup = exact_dedup
-_local_normalized_dedup = normalized_dedup
-_local_cross_doc_dup_lines = cross_doc_dup_lines
-_local_cross_doc_dup_spans = cross_doc_dup_spans
-_local_dup_span_popularity = dup_span_popularity
-_local_winnow_fingerprints = winnow_fingerprints
-_local_winnow_candidates = winnow_candidates
-
-
-def _sweep_node(t: Table, op: str, local_plan: Table, kw: dict,
-                *extra) -> Table:
-    node = {"op": op, "args": [_require_tree(t, op), *extra, kw]}
-    return _wire_result(t, local_plan.df, node)
-
-
-@functools.wraps(_local_cross_doc_dup_spans)
-def cross_doc_dup_spans(t: Table, n: int = 5, min_docs: int = 2,
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> Table:
-    if _client_of(t) is None:
-        return _local_cross_doc_dup_spans(t, n, min_docs, text_col,
-                                          id_col)
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    if min_docs < 2:
-        raise ValueError(
-            f"min_docs must be >= 2 (cross-document), got {min_docs}")
-    return _sweep_node(
-        t, "cross_doc_dup_spans",
-        _local_cross_doc_dup_spans(t, n, min_docs, text_col, id_col),
-        {"n": int(n), "min_docs": int(min_docs), "text_col": text_col,
-         "id_col": id_col})
-
-
-@functools.wraps(_local_winnow_fingerprints)
-def winnow_fingerprints(t: Table, k: int = 5, w: int = 4,
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> Table:
-    if _client_of(t) is None:
-        return _local_winnow_fingerprints(t, k, w, text_col, id_col)
-    if k < 1:
-        raise ValueError(f"winnow_fingerprints: k must be >= 1, got {k}")
-    if w < 1:
-        raise ValueError(f"winnow_fingerprints: w must be >= 1, got {w}")
-    return _sweep_node(
-        t, "winnow_fingerprints",
-        _local_winnow_fingerprints(t, k, w, text_col, id_col),
-        {"k": int(k), "w": int(w), "text_col": text_col,
-         "id_col": id_col})
-
-
-@functools.wraps(_local_winnow_candidates)
-def winnow_candidates(t: Table, k: int = 5, w: int = 4,
-                      min_shared: int = 2, max_bucket: int = 1000,
-                      text_col: str = "text",
-                      id_col: str = "doc_id") -> Table:
-    if _client_of(t) is None:
-        return _local_winnow_candidates(t, k, w, min_shared,
-                                        max_bucket, text_col, id_col)
-    if min_shared < 1:
-        raise ValueError(
-            f"winnow_candidates: min_shared must be >= 1, got {min_shared}")
-    if max_bucket < 2:
-        raise ValueError(
-            f"winnow_candidates: max_bucket must be >= 2, got {max_bucket}")
-    return _sweep_node(
-        t, "winnow_candidates",
-        _local_winnow_candidates(t, k, w, min_shared, max_bucket,
-                                 text_col, id_col),
-        {"k": int(k), "w": int(w), "min_shared": int(min_shared),
-         "max_bucket": int(max_bucket), "text_col": text_col,
-         "id_col": id_col})
-
-
-@functools.wraps(_local_dup_span_popularity)
-def dup_span_popularity(t: Table, n: int = 5, text_col: str = "text",
-                        id_col: str = "doc_id") -> Table:
-    if _client_of(t) is None:
-        return _local_dup_span_popularity(t, n, text_col, id_col)
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    return _sweep_node(
-        t, "dup_span_popularity",
-        _local_dup_span_popularity(t, n, text_col, id_col),
-        {"n": int(n), "text_col": text_col, "id_col": id_col})
-
-
-@functools.wraps(_local_exact_dedup)
-def exact_dedup(t: Table, text_col: str = "text",
-                id_col: str = "doc_id") -> Table:
-    if _client_of(t) is None:
-        return _local_exact_dedup(t, text_col, id_col)
-    return _sweep_node(t, "exact_dedup",
-                       _local_exact_dedup(t, text_col, id_col),
-                       {"text_col": text_col, "id_col": id_col})
-
-
-@functools.wraps(_local_normalized_dedup)
-def normalized_dedup(t: Table, text_col: str = "text",
-                     id_col: str = "doc_id") -> Table:
-    if _client_of(t) is None:
-        return _local_normalized_dedup(t, text_col, id_col)
-    return _sweep_node(t, "normalized_dedup",
-                       _local_normalized_dedup(t, text_col, id_col),
-                       {"text_col": text_col, "id_col": id_col})
-
-
-@functools.wraps(_local_cross_doc_dup_lines)
-def cross_doc_dup_lines(t: Table, text_col: str = "text",
-                        id_col: str = "doc_id", min_chars: int = 1,
-                        scrub: bool = False) -> Table:
-    if _client_of(t) is None:
-        return _local_cross_doc_dup_lines(t, text_col, id_col,
-                                          min_chars, scrub)
-    if min_chars < 0:
-        raise ValueError(f"min_chars must be >= 0, got {min_chars}")
-    return _sweep_node(
-        t, "cross_doc_dup_lines",
-        _local_cross_doc_dup_lines(t, text_col, id_col, min_chars,
-                                   scrub),
-        {"text_col": text_col, "id_col": id_col,
-         "min_chars": int(min_chars), "scrub": bool(scrub)})

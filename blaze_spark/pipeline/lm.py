@@ -42,9 +42,7 @@ Plan shapes — measured, and DIFFERENT from DSIR's (PLANS.md r11):
   over: an LM gram evaluates concat_ws(slice(...)) + two md5 families
   per element INTERPRETED inside the fold lambda, so the codegen
   explode wins (2.05 vs 2.48 s at sf0.1) — and, decisively, the fold
-  form is NOT safe to filter over (next bullet).  The fold is still
-  available (``prefer_literal=True``) for compositions where the
-  per-doc shuffle genuinely dominates its ~1.2× scoring cost.
+  form is NOT safe to filter over (next bullet), so it was removed.
 - ``perplexity_filter`` applies the band ABOVE the scoring aggregation,
   where Catalyst cannot push the predicate through the projection by
   substitution.  On the fold form that substitution re-evaluated the
@@ -677,7 +675,6 @@ def ngram_lm_logprob(t: Table, reference: Table | None = None,
                      text_col: str = "text", id_col: str = "doc_id",
                      n_buckets: int = 4096, n: int = 2,
                      smoothing: float = 1.0,
-                     prefer_literal: bool = False,
                      backoff: float | None = None,
                      tokenizer=None,
                      interpolate: float | None = None,
@@ -697,16 +694,9 @@ def ngram_lm_logprob(t: Table, reference: Table | None = None,
     the fit-once-per-snapshot 100 TB form.  Exactly one of
     reference-fitting and ``counts=`` is used; passing both raises.
 
-    Default plan: positioned-index explode → two broadcast-hash joins
-    of the bounded ln() relations → per-doc re-aggregation, everything
-    per-gram in codegen.  ``prefer_literal=True`` folds the model into
-    literal maps instead — ONE shuffle-free projection, but the fold
-    lambda runs gram construction + two md5 families INTERPRETED per
-    element (measured ~1.2× the explode's scoring cost at sf0.1, vs
-    DSIR where the one-lookup-per-token fold won 7×), and a filter
-    composed over it gets substituted INTO the fold by predicate
-    pushdown (see perplexity_filter).  Use it only where the per-doc
-    shuffle genuinely dominates.
+    Plan: positioned-index explode → two broadcast-hash joins of the
+    bounded ln() relations → per-doc re-aggregation, everything
+    per-gram in codegen.
 
     ``backoff=λ`` (λ ∈ (0, 1], Brants et al.'s 0.4) switches the model
     to STUPID BACKOFF — CCNet's discriminative power lives in the
@@ -728,8 +718,7 @@ def ngram_lm_logprob(t: Table, reference: Table | None = None,
     still takes a backoff value when that is larger (max, not the
     first-seen-order conditional) — a floor against hash-collision
     noise, pinned by ``test_backoff_greatest_deviation``.  Backoff
-    requires the explode path (2n−1 broadcast ln() joins) —
-    ``prefer_literal=True`` with ``backoff`` raises.
+    scores with 2n−1 broadcast ln() joins.
 
     ``interpolate=λ`` (λ ∈ (0, 1), Jelinek & Mercer 1980; CCNet's
     KenLM default is interpolated KN — this is the JM member of the
@@ -750,9 +739,8 @@ def ngram_lm_logprob(t: Table, reference: Table | None = None,
     0 to the mixture (their λ-mass falls through to the lower
     orders); the chain is bounded below by (1−λ)^{n−1}·P_uni > 0.
     Same plan shape as backoff (2n−1 broadcast ln() joins, mixture
-    arithmetic in codegen); ``prefer_literal=True`` with
-    ``interpolate`` raises, and the three smoothing knobs are
-    mutually exclusive.
+    arithmetic in codegen); the three smoothing knobs are mutually
+    exclusive.
 
     ``kneser_ney=D`` (D ∈ (0, 1], or ``True`` to estimate D as
     n1/(n1+2·n2) from the gram counts-of-counts; Kneser & Ney 1995,
@@ -780,15 +768,8 @@ def ngram_lm_logprob(t: Table, reference: Table | None = None,
     1); the add-α continuation base keeps the floor finite.  KN fits
     are PER-SNAPSHOT: type counts are distinct counts and do not sum
     across partial fits (the incremental LM store deliberately cannot
-    carry them).  ``prefer_literal=True`` with ``kneser_ney`` raises."""
+    carry them)."""
     _validate_features(n_buckets, n)
-    if prefer_literal and (backoff is not None
-                           or interpolate is not None
-                           or kneser_ney is not None):
-        raise ValueError(
-            f"{_fn_name}: backoff=/interpolate=/kneser_ney= score via "
-            "the positioned-index explode path (broadcast joins) — "
-            "prefer_literal=True is add-α only")
     # self-scoring (reference defaults to t, no precomputed counts):
     # ONE tokenize+bucket corpus scan serves BOTH the fit and the
     # scoring pass — the fit's every (kind, bucket) row re-hashes a
@@ -798,8 +779,7 @@ def ngram_lm_logprob(t: Table, reference: Table | None = None,
     # Streaming frames keep the two-pass plan: persist() needs a
     # batch plan, and the streaming entry points score via counts=.
     ex = None
-    if counts is None and reference is None and not prefer_literal \
-            and not t.df.isStreaming:
+    if counts is None and reference is None and not t.df.isStreaming:
         ladder_args = backoff is not None or interpolate is not None
         kn_args = kneser_ney is not None
         ex = _score_frame(
@@ -818,12 +798,6 @@ def ngram_lm_logprob(t: Table, reference: Table | None = None,
             from .dedup import _retain_cache
             _retain_cache(out, ex)
         return out
-
-    if prefer_literal:
-        _, ln_g, ln_c, miss_g, miss_c = model
-        return _logprob_literal(t, ln_g, ln_c, miss_g, miss_c,
-                                text_col, id_col, n_buckets, n,
-                                tokenizer)
 
     spark = t.df.sparkSession
     kind = model[0]
@@ -925,59 +899,6 @@ def ngram_lm_logprob(t: Table, reference: Table | None = None,
         from .dedup import _retain_cache
         _retain_cache(out, ex)
     return out
-
-
-def _logprob_literal(t: Table, ln_g: dict, ln_c: dict,
-                     miss_g: float, miss_c: float, text_col: str,
-                     id_col: str, n_buckets: int, n: int,
-                     tokenizer=None) -> DataFrame:
-    """The shuffle-free fold form: both ln() tables as literal maps, one
-    projection, the per-gram work interpreted inside the fold lambda."""
-    if ln_g:
-        mg = F.map_from_arrays(F.lit(list(ln_g)),
-                               F.lit([ln_g[b] for b in ln_g]))
-        num = lambda b: F.coalesce(F.try_element_at(mg, b),
-                                   F.lit(miss_g))           # noqa: E731
-    else:
-        num = lambda b: F.lit(miss_g)                       # noqa: E731
-    if ln_c:
-        mc = F.map_from_arrays(F.lit(list(ln_c)),
-                               F.lit([ln_c[b] for b in ln_c]))
-        den = lambda b: F.coalesce(F.try_element_at(mc, b),
-                                   F.lit(miss_c))           # noqa: E731
-    else:
-        den = lambda b: F.lit(miss_c)                       # noqa: E731
-    tkx = (_tokens(F.col(text_col)) if tokenizer is None
-           else tokenizer.pieces(F.col(text_col)))
-    keyed = t.df.select(F.col(id_col), tkx.alias("tk"))
-    tk = F.col("tk")
-    n_grams = F.greatest(F.size(tk) - F.lit(n - 1),
-                         F.lit(0)).cast(T.IntegerType())
-    if n == 1:
-        # every unigram's context is '' — ONE constant denominator (the
-        # md5('') bucket, via the family's portable convention), hoisted
-        # out of the fold and applied once per gram
-        import hashlib
-        empty_b = (int(hashlib.md5(b"").hexdigest()[:8], 16)
-                   % n_buckets)
-        const = ln_c.get(empty_b, miss_c)
-        score = (F.aggregate(
-            _gram_index(tk, n), F.lit(0.0),
-            lambda acc, i: acc + num(_bucket_of(_gram_at(tk, i, n),
-                                                n_buckets)))
-            - n_grams.cast(T.DoubleType()) * F.lit(const))
-    else:
-        score = F.aggregate(
-            _gram_index(tk, n), F.lit(0.0),
-            lambda acc, i: acc
-            + num(_bucket_of(_gram_at(tk, i, n), n_buckets))
-            - den(_bucket_of(_ctx_at(tk, i, n), n_buckets)))
-    keyed = keyed.select(F.col(id_col), n_grams.alias("n_grams"),
-                         score.alias("s"))
-    # second select so CollapseProject cannot inline (and so
-    # re-evaluate) the non-cheap fold into the three exports
-    return keyed.select(F.col(id_col), F.col("n_grams"),
-                        *_lm_exports())
 
 
 def _logprob_kn(t: Table, model, text_col: str, id_col: str,
@@ -1241,7 +1162,7 @@ def perplexity_buckets(t: Table, reference: Table | None = None,
 
 import functools  # noqa: E402
 
-from .selection import _client_of, _require_tree, _wire_result  # noqa: E402
+from ..wire import _client_of, _require_tree, _wire_result  # noqa: E402
 
 _local_ngram_lm_fit = ngram_lm_fit
 _local_ngram_lm_logprob = ngram_lm_logprob
@@ -1397,26 +1318,16 @@ def ngram_lm_logprob(t: Table, reference: Table | None = None,
                      counts=None, text_col: str = "text",
                      id_col: str = "doc_id", n_buckets: int = 4096,
                      n: int = 2, smoothing: float = 1.0,
-                     prefer_literal: bool = False,
                      backoff: float | None = None, tokenizer=None,
                      interpolate: float | None = None,
                      kneser_ney=None):
     if _client_of(t) is None:
         return _local_ngram_lm_logprob(
             t, reference, counts, text_col, id_col, n_buckets, n,
-            smoothing, prefer_literal, backoff, tokenizer,
-            interpolate, kneser_ney)
-    if prefer_literal and (backoff is not None
-                           or interpolate is not None
-                           or kneser_ney is not None):
-        raise ValueError(
-            "ngram_lm_logprob: backoff=/interpolate=/kneser_ney= "
-            "score via the positioned-index explode path — "
-            "prefer_literal=True is add-α only")
+            smoothing, backoff, tokenizer, interpolate, kneser_ney)
     args = _lm_wire_args(t, reference, counts, text_col, id_col,
                          n_buckets, n, smoothing, "ngram_lm_logprob",
                          backoff, tokenizer, interpolate, kneser_ney)
-    args[3]["prefer_literal"] = bool(prefer_literal)
     node = {"op": "ngram_lm_logprob", "args": args}
     empty = local_frame(t.df.sparkSession, [], T.StructType(
         [t.df.schema[id_col]]

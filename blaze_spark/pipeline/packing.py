@@ -22,10 +22,13 @@ from pyspark.sql import types as T
 
 from ..core import Table
 from ..sources import local_frame
+from ..wire import wire_op
 
 __all__ = ["train_val_test_split", "pack_sequences", "chunk_documents"]
 
 
+@wire_op("train_val_test_split", tables=("t",),
+         kwargs=("fractions", "on", "salt", "labels"))
 def train_val_test_split(t: Table, fractions=(0.98, 0.01, 0.01),
                          on: str = "doc_id", salt: int = 42,
                          labels=("train", "val", "test")) -> Table:
@@ -71,6 +74,31 @@ def train_val_test_split(t: Table, fractions=(0.98, 0.01, 0.01),
     return Table(t.df.withColumn("split", expr), t._name)
 
 
+def _check_pack_args(budget: int, sep_tokens: int) -> None:
+    if budget <= 0:
+        raise ValueError("budget must be positive")
+    if sep_tokens < 0:
+        raise ValueError(
+            f"sep_tokens must be >= 0, got {sep_tokens}")
+
+
+def _pack_schema(t, budget, order_by, sep_tokens, **_):
+    """The remote form's schema: the local path samples range boundaries
+    and collects bucket totals eagerly — that runs server-side at
+    replay, never at plan-construction time."""
+    _check_pack_args(budget, sep_tokens)
+    if order_by not in t.df.columns:
+        raise ValueError(f"no column {order_by!r} to order by")
+    return T.StructType(
+        list(t.df.schema.fields)
+        + [T.StructField("n_tokens", T.LongType()),
+           T.StructField("tok_start", T.LongType()),
+           T.StructField("shard", T.LongType())])
+
+
+@wire_op("pack_sequences", tables=("t",),
+         kwargs=("budget", "text_col", "order_by", "partitions", "tokenizer",
+                 "sep_tokens"), schema=_pack_schema)
 def pack_sequences(t: Table, budget: int, text_col: str = "text",
                    order_by: str = "doc_id",
                    partitions: int | None = None,
@@ -133,11 +161,7 @@ def pack_sequences(t: Table, budget: int, text_col: str = "text",
     sum through ONE task; at 100 TB that is the difference between a
     parallel pass and a non-starter.
     """
-    if budget <= 0:
-        raise ValueError("budget must be positive")
-    if sep_tokens < 0:
-        raise ValueError(
-            f"sep_tokens must be >= 0, got {sep_tokens}")
+    _check_pack_args(budget, sep_tokens)
     if tokenizer is None:
         toks = F.coalesce(
             F.when(F.length(F.trim(F.col(text_col))) == 0, F.lit(0))
@@ -228,6 +252,8 @@ def pack_sequences(t: Table, budget: int, text_col: str = "text",
     return scoped_persist(Table(out, t._name), bucketed)
 
 
+@wire_op("chunk_documents", tables=("t",),
+         kwargs=("max_tokens", "overlap", "text_col", "tokenizer"))
 def chunk_documents(t: Table, max_tokens: int, overlap: int = 0,
                     text_col: str = "text", tokenizer=None) -> Table:
     """Split documents into sliding-window token chunks — the
@@ -291,94 +317,3 @@ def chunk_documents(t: Table, max_tokens: int, overlap: int = 0,
            .drop("__toks", "__nt", "__nch", "chunk_toks"))
     return Table(out, t._name)
 
-
-# Wire dialect (late r12, extending the VERDICT r11 #3 sweep): the
-# packing family serializes — split/chunk are pure literal-args
-# projections (recorded schema = the lazy local plan over the remote
-# leaf's empty frame), pack_sequences runs its eager boundary sampling
-# and bucket-offset collects SERVER-side at replay, so its client-side
-# schema is HAND-WRITTEN (plan construction must stay jobless).
-import functools  # noqa: E402
-
-from .selection import _client_of, _require_tree, _wire_result  # noqa: E402
-
-_local_train_val_test_split = train_val_test_split
-_local_pack_sequences = pack_sequences
-_local_chunk_documents = chunk_documents
-
-
-@functools.wraps(_local_train_val_test_split)
-def train_val_test_split(t: Table, fractions=(0.98, 0.01, 0.01),
-                         on: str = "doc_id", salt: int = 42,
-                         labels=("train", "val", "test")) -> Table:
-    if _client_of(t) is None:
-        return _local_train_val_test_split(t, fractions, on, salt,
-                                           labels)
-    local = _local_train_val_test_split(t, fractions, on, salt, labels)
-    node = {"op": "train_val_test_split",
-            "args": [_require_tree(t, "train_val_test_split"),
-                     {"fractions": [float(f) for f in fractions],
-                      "on": on, "salt": int(salt),
-                      "labels": [str(x) for x in labels]}]}
-    return _wire_result(t, local.df, node)
-
-
-@functools.wraps(_local_pack_sequences)
-def pack_sequences(t: Table, budget: int, text_col: str = "text",
-                   order_by: str = "doc_id",
-                   partitions: int | None = None,
-                   tokenizer=None, sep_tokens: int = 0) -> Table:
-    if _client_of(t) is None:
-        return _local_pack_sequences(t, budget, text_col, order_by,
-                                     partitions, tokenizer, sep_tokens)
-    if budget <= 0:
-        raise ValueError("budget must be positive")
-    if sep_tokens < 0:
-        raise ValueError(
-            f"sep_tokens must be >= 0, got {sep_tokens}")
-    if order_by not in t.df.columns:
-        raise ValueError(f"no column {order_by!r} to order by")
-    kw = {"budget": int(budget), "text_col": text_col,
-          "order_by": order_by,
-          "partitions": (None if partitions is None
-                         else int(partitions))}
-    if sep_tokens:
-        # only present when set: separator-free plans keep the r13
-        # form; sep plans reject loudly on older servers (unknown kw)
-        kw["sep_tokens"] = int(sep_tokens)
-    if tokenizer is not None:
-        # only present when set: whitespace plans keep the r12 form;
-        # tokenizer plans reject loudly on r12 servers (unknown kw) —
-        # never a silent whitespace recount
-        from .tokenizer import _tokenizer_wire
-        kw["tokenizer"] = _tokenizer_wire(tokenizer)
-    node = {"op": "pack_sequences",
-            "args": [_require_tree(t, "pack_sequences"), kw]}
-    # hand-written schema: the local path samples range boundaries and
-    # collects bucket totals eagerly — that belongs server-side at
-    # replay, never at plan-construction time
-    schema = T.StructType(
-        list(t.df.schema.fields)
-        + [T.StructField("n_tokens", T.LongType()),
-           T.StructField("tok_start", T.LongType()),
-           T.StructField("shard", T.LongType())])
-    empty = local_frame(t.df.sparkSession, [], schema)
-    return _wire_result(t, empty, node)
-
-
-@functools.wraps(_local_chunk_documents)
-def chunk_documents(t: Table, max_tokens: int, overlap: int = 0,
-                    text_col: str = "text", tokenizer=None) -> Table:
-    if _client_of(t) is None:
-        return _local_chunk_documents(t, max_tokens, overlap, text_col,
-                                      tokenizer)
-    local = _local_chunk_documents(t, max_tokens, overlap, text_col,
-                                   tokenizer)
-    kw = {"max_tokens": int(max_tokens), "overlap": int(overlap),
-          "text_col": text_col}
-    if tokenizer is not None:
-        from .tokenizer import _tokenizer_wire
-        kw["tokenizer"] = _tokenizer_wire(tokenizer)
-    node = {"op": "chunk_documents",
-            "args": [_require_tree(t, "chunk_documents"), kw]}
-    return _wire_result(t, local.df, node)

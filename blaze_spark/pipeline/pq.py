@@ -774,10 +774,10 @@ write_pq_codes = _lg(write_pq_codes)
 # the server (read_pq_codes at server build) and score over blaze://.
 import functools as _functools  # noqa: E402
 
-from .selection import _client_of as _cof  # noqa: E402
-from .selection import _require_tree as _rt  # noqa: E402
-from .selection import _same_server as _ss  # noqa: E402
-from .selection import _wire_result as _wr  # noqa: E402
+from ..wire import _client_of as _cof  # noqa: E402
+from ..wire import _require_tree as _rt  # noqa: E402
+from ..wire import _same_server as _ss  # noqa: E402
+from ..wire import _wire_result as _wr  # noqa: E402
 
 # 8 MB of float64 — far above any sane (m ≤ 64, ks ≤ 256) codebook,
 # far below anything that should ride a JSON node

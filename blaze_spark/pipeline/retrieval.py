@@ -45,6 +45,7 @@ from pyspark.sql.window import Window
 
 from ..core import Table
 from ..sources import local_frame
+from ..wire import _client_of, _require_tree, _wire_result
 from .curation import _tokens
 
 _SALT = 32          # top-k pre-aggregation fan-in per query
@@ -231,8 +232,6 @@ def bm25_topk(corpus: Table, queries, k: int = 10,
               max_queries: int = 10_000,
               round_to: int = 6,
               persist: bool = True) -> Table:
-    from .selection import _client_of, _require_tree, _wire_result
-
     if _client_of(corpus) is None:
         if isinstance(queries, Table) and _client_of(queries) is not None:
             raise TypeError(

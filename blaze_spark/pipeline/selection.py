@@ -1062,47 +1062,13 @@ def weighted_sample(t: Table | DataFrame, score_col: str,
 
 import functools  # noqa: E402
 
+from ..wire import _client_of, _require_tree, _wire_result  # noqa: E402
+
 _local_hashed_bucket_counts = hashed_bucket_counts
 _local_quality_classifier = quality_classifier
 _local_dsir_log_weights = dsir_log_weights
 _local_weighted_sample = weighted_sample
 _local_train_quality_classifier = train_quality_classifier
-
-
-def _client_of(x):
-    return getattr(x, "_client", None) if isinstance(x, Table) else None
-
-
-def _same_server(a, b) -> bool:
-    """Two remote tables live on the same server when they share a
-    client OR their clients point at the same normalized URL (the
-    core.with_fk precedent — two data() calls against one server must
-    compose)."""
-    ca, cb = _client_of(a), _client_of(b)
-    if ca is None or cb is None:
-        return False
-    return ca is cb or getattr(ca, "url", None) == getattr(cb, "url",
-                                                           object())
-
-
-def _require_tree(t: Table, fn_name: str) -> dict:
-    if t._tree is None:
-        raise ValueError(
-            f"{fn_name}: the remote input's expression left the "
-            "serializable tree subset (an operator outside interop's "
-            "dialect was applied) — compute() the serializable prefix "
-            "first, then rebuild from the result")
-    return t._tree
-
-
-def _wire_result(t: Table, local_df: DataFrame, node: dict) -> Table:
-    """A remote expression: schema-only local frame + recorded node.
-    ``_new`` preserves the RemoteTable class, so ``compute()`` POSTs
-    the tree and only the result crosses the wire."""
-    out = t._new(local_df)
-    out._client = t._client
-    out._tree = node
-    return out
 
 
 def _literal_counts(df, side: str, client):

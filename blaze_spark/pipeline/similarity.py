@@ -1002,64 +1002,68 @@ def semantic_dedup(corpus: Table, threshold: float = 0.95,
     # one cache — previously the returned plan re-derived scan + assign
     # UDF because the projection cache was released at construction
     # time (r16, guide §5; the r15 finding-#9 pattern one layer down).
-    # Scope: _retain_cache ties the release to the result frame.
-    from .dedup import _retain_cache
+    # Scope: _retain_cache ties the release to the result frame; if
+    # construction raises first, the finally drops the only reference.
+    from .dedup import _retain_cache, acquire_cache
 
     # the norm rides IN the cache (not recomputed per read): av/bv below
     # each re-read the corpus, and the aggregate-HOF norm is the
     # expensive projection
     tagged = (ivf_assign(corpus, centroids, vec_col).df
-              .withColumn("__semdedup_norm", _norm(F.col(vec_col))).persist())
-    c = tagged.select(F.col(id_col).alias("vid"),
-                      F.col(vec_col).alias("v"),
-                      F.col("__semdedup_norm").alias("n"),
-                      "cell")
-    hot = (c.groupBy("cell")
-           .agg(F.count(F.lit(1)).alias("cnt"))
-           .filter(F.col("cnt") > max_cell).select("cell"))
-    ids = c.select("vid", "cell") \
-        .join(F.broadcast(hot), "cell", "left_anti")
-    pairs = (ids.alias("l").join(ids.alias("r"), "cell")
-             .filter(F.col("l.vid") < F.col("r.vid"))
-             .select(F.col("l.vid").alias("vec_a"),
-                     F.col("r.vid").alias("vec_b")))
-    av = c.select(F.col("vid").alias("vec_a"),
-                  F.col("v").alias("va"), F.col("n").alias("na"))
-    bv = c.select(F.col("vid").alias("vec_b"),
-                  F.col("v").alias("vb"), F.col("n").alias("nb"))
-    cos = _dot(F.col("va"), F.col("vb")) / \
-        (F.col("na") * F.col("nb"))
-    dups = (pairs.join(av, "vec_a").join(bv, "vec_b")
-            .withColumn("cosine", cos)
-            .filter(F.col("cosine") >= threshold)
-            .select("vec_a", "vec_b"))
-    # canonical_docs' label propagation runs its eager bounded rounds
-    # HERE (reading the cache); the returned join keeps reading it.
-    # __n is cache-internal — drop it from the annotated result.
-    out = canonical_docs(Table(tagged, "semantic_dedup"), dups,
-                         id_col=id_col, left="vec_a",
-                         right="vec_b", max_iter=max_iter)
-    out = Table(out.df.drop("__semdedup_norm"), "semantic_dedup")
-    if keep == "min_id":
-        res = Table(out.df, "semantic_dedup")
+              .withColumn("__semdedup_norm", _norm(F.col(vec_col))))
+    release = acquire_cache(tagged)
+    try:
+        c = tagged.select(F.col(id_col).alias("vid"),
+                          F.col(vec_col).alias("v"),
+                          F.col("__semdedup_norm").alias("n"),
+                          "cell")
+        hot = (c.groupBy("cell")
+               .agg(F.count(F.lit(1)).alias("cnt"))
+               .filter(F.col("cnt") > max_cell).select("cell"))
+        ids = c.select("vid", "cell") \
+            .join(F.broadcast(hot), "cell", "left_anti")
+        pairs = (ids.alias("l").join(ids.alias("r"), "cell")
+                 .filter(F.col("l.vid") < F.col("r.vid"))
+                 .select(F.col("l.vid").alias("vec_a"),
+                         F.col("r.vid").alias("vec_b")))
+        av = c.select(F.col("vid").alias("vec_a"),
+                      F.col("v").alias("va"), F.col("n").alias("na"))
+        bv = c.select(F.col("vid").alias("vec_b"),
+                      F.col("v").alias("vb"), F.col("n").alias("nb"))
+        cos = _dot(F.col("va"), F.col("vb")) / \
+            (F.col("na") * F.col("nb"))
+        dups = (pairs.join(av, "vec_a").join(bv, "vec_b")
+                .withColumn("cosine", cos)
+                .filter(F.col("cosine") >= threshold)
+                .select("vec_a", "vec_b"))
+        # canonical_docs' label propagation runs its eager bounded rounds
+        # HERE (reading the cache); the returned join keeps reading it.
+        # __n is cache-internal — drop it from the annotated result.
+        out = canonical_docs(Table(tagged, "semantic_dedup"), dups,
+                             id_col=id_col, left="vec_a",
+                             right="vec_b", max_iter=max_iter)
+        out = Table(out.df.drop("__semdedup_norm"), "semantic_dedup")
+        if keep == "min_id":
+            res = out
+        else:
+            # the paper's rule: within each cluster the survivor is the member
+            # FARTHEST from its cell centroid (lowest cosine); one window over
+            # cluster_id (clusters are pair-bounded and small)
+            from pyspark.sql import Window
+
+            ranked = out.df.withColumn(
+                "_cc", _centroid_cos_udf(centroids)(F.col(vec_col),
+                                                    F.col("cell")))
+            w = Window.partitionBy("cluster_id") \
+                .orderBy(F.col("_cc").asc(), F.col(id_col).asc())
+            ranked = (ranked
+                      .withColumn("keep", F.row_number().over(w) == 1)
+                      .drop("_cc"))
+            res = Table(ranked, "semantic_dedup")
         _retain_cache(res.df, tagged)
         return res
-    # the paper's rule: within each cluster the survivor is the member
-    # FARTHEST from its cell centroid (lowest cosine); one window over
-    # cluster_id (clusters are pair-bounded and small)
-    from pyspark.sql import Window
-
-    ranked = out.df.withColumn(
-        "_cc", _centroid_cos_udf(centroids)(F.col(vec_col),
-                                            F.col("cell")))
-    w = Window.partitionBy("cluster_id") \
-        .orderBy(F.col("_cc").asc(), F.col(id_col).asc())
-    ranked = (ranked
-              .withColumn("keep", F.row_number().over(w) == 1)
-              .drop("_cc"))
-    res = Table(ranked, "semantic_dedup")
-    _retain_cache(res.df, tagged)
-    return res
+    finally:
+        release()
 
 
 def assign_clusters(docs: Table, embeddings: Table,
@@ -1099,7 +1103,7 @@ def assign_clusters(docs: Table, embeddings: Table,
                 f"assign_clusters: docs already has a '{taken}' "
                 "column — rename or drop it first (the assignment "
                 "join would produce an ambiguous column)")
-    from .dedup import _retain_cache
+    from .dedup import _retain_cache, acquire_cache
     from .ivf import ivf_assign, kmeans_fit
 
     if centroids is None:
@@ -1115,19 +1119,23 @@ def assign_clusters(docs: Table, embeddings: Table,
     # bounded the way the at-rest cell index is (r16, guide §5).
     cells = (ivf_assign(embeddings, centroids, vec_col).df
              .select(F.col(id_col).alias("__aid"),
-                     F.col("cell").cast("int").alias("cell"))
-             .persist())
-    out = (docs.df
-           .join(cells, F.col(doc_id_col) == F.col("__aid"), "left")
-           .drop("__aid")
-           .withColumn("cell", F.coalesce(F.col("cell"), F.lit(-1))))
-    _retain_cache(out, cells)
+                     F.col("cell").cast("int").alias("cell")))
+    release = acquire_cache(cells)
+    try:
+        out = (docs.df
+               .join(cells, F.col(doc_id_col) == F.col("__aid"), "left")
+               .drop("__aid")
+               .withColumn("cell",
+                           F.coalesce(F.col("cell"), F.lit(-1))))
+        _retain_cache(out, cells)
+    finally:
+        release()
     return Table(out, "assign_clusters")
 
 
 from ..core import _localize_guard as _lg  # noqa: E402
-from .selection import (_client_of, _require_tree,  # noqa: E402
-                        _same_server, _wire_result)
+from ..wire import (_client_of, _require_tree,  # noqa: E402
+                    _same_server, _wire_result)
 
 _local_assign_clusters = assign_clusters
 

@@ -66,7 +66,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import Table
-from ..sources import local_frame
+from ..wire import wire_op
 from .selection import _MAX_BUCKETS
 from .tokenizer import (BPETokenizer, VocabTokenizer, WhitespaceTokenizer,
                         WordPieceTokenizer, _bytes_to_unicode,
@@ -113,6 +113,9 @@ def _validate_wf_args(max_words: int, min_count: int) -> None:
         raise ValueError(f"min_count must be >= 1, got {min_count}")
 
 
+@wire_op("word_frequencies", tables=("t",),
+         kwargs=("text_col", "lowercase", "byte_level", "max_words",
+                 "min_count"))
 def word_frequencies(t: Table, text_col: str = "text",
                      lowercase: bool = False, byte_level: bool = False,
                      max_words: int = _MAX_BUCKETS,
@@ -645,42 +648,9 @@ def train_unigram(t: Table | None = None, *, word_freq=None,
                             space_marker=space_marker)
 
 
-# ---------------------------------------------------------------------------
-# Wire dialect: word_frequencies serializes (the unary literal-args
-# pattern — interop._PIPE_WIRE); the trainers stay local-only for
-# corpus inputs and consume remote word_freq= relations via compute().
-
-import functools  # noqa: E402
-
-from .selection import _client_of, _require_tree, _wire_result  # noqa: E402
-
-_local_word_frequencies = word_frequencies
-
-
-@functools.wraps(_local_word_frequencies)
-def word_frequencies(t: Table, text_col: str = "text",
-                     lowercase: bool = False, byte_level: bool = False,
-                     max_words: int = _MAX_BUCKETS,
-                     min_count: int = 1):
-    if _client_of(t) is None:
-        return _local_word_frequencies(t, text_col, lowercase,
-                                       byte_level, max_words,
-                                       min_count)
-    _validate_wf_args(max_words, min_count)
-    node = {"op": "word_frequencies",
-            "args": [_require_tree(t, "word_frequencies"),
-                     {"text_col": text_col,
-                      "lowercase": bool(lowercase),
-                      "byte_level": bool(byte_level),
-                      "max_words": int(max_words),
-                      "min_count": int(min_count)}]}
-    spark = t.df.sparkSession
-    empty = local_frame(spark, [], "word string, cnt long")
-    return _wire_result(t, empty, node)
-
-
-def _local_tokenizer_stats(t: Table, tokenizer=None,
-                           text_col: str = "text") -> DataFrame:
+@wire_op("tokenizer_stats", tables=("t",), kwargs=("text_col", "tokenizer"))
+def tokenizer_stats(t: Table, tokenizer=None,
+                    text_col: str = "text") -> DataFrame:
     """One-row corpus tokenization report — the numbers a tokenizer
     choice is judged by: ``(n_docs, total_words, total_tokens,
     fertility, avg_doc_tokens)`` with fertility = tokens per
@@ -707,19 +677,3 @@ def _local_tokenizer_stats(t: Table, tokenizer=None,
         (F.round(F.col("total_tokens") / F.col("n_docs"), 4)
          + F.lit(0.0)).alias("avg_doc_tokens"))
 
-
-@functools.wraps(_local_tokenizer_stats)
-def tokenizer_stats(t: Table, tokenizer=None, text_col: str = "text"):
-    if _client_of(t) is None:
-        return _local_tokenizer_stats(t, tokenizer, text_col)
-    from .tokenizer import _tokenizer_wire
-    kw = {"text_col": text_col}
-    if tokenizer is not None:
-        kw["tokenizer"] = _tokenizer_wire(tokenizer)
-    node = {"op": "tokenizer_stats",
-            "args": [_require_tree(t, "tokenizer_stats"), kw]}
-    empty = local_frame(
-        t.df.sparkSession, [],
-        "n_docs long, total_words long, total_tokens long, "
-        "fertility double, avg_doc_tokens double")
-    return _wire_result(t, empty, node)

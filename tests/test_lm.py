@@ -130,26 +130,6 @@ def test_counts_partials_sum(spark, ldocs):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_explode_path_equals_literal(spark, ldocs):
-    a = ngram_lm_logprob(ldocs, n_buckets=B, n=2)
-    b = ngram_lm_logprob(ldocs, n_buckets=B, n=2, prefer_literal=True)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    # and for the unigram constant-denominator special case
-    a1 = ngram_lm_logprob(ldocs, n_buckets=B, n=1)
-    b1 = ngram_lm_logprob(ldocs, n_buckets=B, n=1, prefer_literal=True)
-    assert sorted(map(tuple, a1.collect())) == \
-        sorted(map(tuple, b1.collect()))
-
-
-def test_literal_scoring_shuffle_free(spark, ldocs):
-    from blaze_spark.plans import exchange_count
-
-    fit = ngram_lm_fit(ldocs, n_buckets=B, n=2)
-    out = ngram_lm_logprob(ldocs, counts=fit, n_buckets=B, n=2,
-                           prefer_literal=True)
-    assert exchange_count(out) == 0  # counts folded into the projection
-
-
 def test_reference_fit_scores_other_corpus(spark, ldocs):
     other = data([(9, "the cat sat"), (10, "zz qq vv ww")],
                  spark=spark, schema="doc_id bigint, text string",
@@ -374,9 +354,6 @@ def test_backoff_validation(spark, ldocs):
         ngram_lm_logprob(ldocs, n_buckets=B, backoff=1.5)
     with pytest.raises(ValueError, match="n >= 2"):
         ngram_lm_logprob(ldocs, n_buckets=B, n=1, backoff=0.4)
-    with pytest.raises(ValueError, match="add-α only"):
-        ngram_lm_logprob(ldocs, n_buckets=B, backoff=0.4,
-                         prefer_literal=True)
     # an add-α fit carries no 'uni' rows: refit, never score silently
     plain = ngram_lm_fit(ldocs, n_buckets=B, n=2)
     with pytest.raises(ValueError, match="unigrams=True"):
@@ -700,9 +677,6 @@ def test_interp_validation(spark, ldocs):
     with pytest.raises(ValueError, match="alternative smoothing"):
         ngram_lm_logprob(ldocs, n_buckets=B, backoff=0.4,
                          interpolate=0.5)
-    with pytest.raises(ValueError, match="prefer_literal"):
-        ngram_lm_logprob(ldocs, n_buckets=B, interpolate=0.5,
-                         prefer_literal=True)
     plain = ngram_lm_fit(ldocs, n_buckets=B, n=2)  # no 'uni' rows
     with pytest.raises(ValueError, match="interpolate= needs"):
         ngram_lm_logprob(ldocs, counts=plain, n_buckets=B,
@@ -982,9 +956,6 @@ def test_kn_validation(spark, ldocs):
         ngram_lm_logprob(ldocs, n_buckets=B, kneser_ney=0.0)
     with pytest.raises(ValueError, match="kneser_ney requires"):
         ngram_lm_logprob(ldocs, n_buckets=B, n=1, kneser_ney=0.75)
-    with pytest.raises(ValueError, match="add-α only"):
-        ngram_lm_logprob(ldocs, n_buckets=B, kneser_ney=0.75,
-                         prefer_literal=True)
     with pytest.raises(ValueError, match="continuations=True"):
         ngram_lm_fit(ldocs, n_buckets=B, n=1, continuations=True)
     # an add-α fit has no type kinds: loud refit guidance

@@ -2513,6 +2513,66 @@ def test_assign_clusters_refuses_taken_columns(spark):
         assign_clusters(d_aid, e, centroids=cents)
 
 
+def _failed_call_leaves_no_cache(spark, monkeypatch, call):
+    """Run ``call`` (which must raise mid-construction) and check that
+    every frame it persisted was released: re-running each one must not
+    fill a cache entry, so the persistent-RDD set ends where it began."""
+    import pytest as _pytest
+
+    cls = type(spark.range(1))   # the session's concrete DataFrame class
+    persisted = []
+    orig = cls.persist
+
+    def spy(self, *a, **k):
+        persisted.append(self)
+        return orig(self, *a, **k)
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    monkeypatch.setattr(cls, "persist", spy)
+    with _pytest.raises(Exception, match="nope"):
+        call()
+    monkeypatch.setattr(cls, "persist", orig)
+    assert persisted, "the op failed before it persisted anything"
+    for df in persisted:
+        df.count()   # a leaked cache entry materializes here
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
+def test_semantic_dedup_failure_releases_its_cache(spark, monkeypatch):
+    """A failure after the tagged-corpus persist (a bad id column)
+    leaves no persisted frame behind."""
+    import numpy as np
+
+    from blaze_spark import data
+    from blaze_spark.pipeline import semantic_dedup
+
+    t = data([(i, [1.0, float(i % 3), 0.0]) for i in range(8)],
+             spark=spark, schema="vec_id long, embedding array<double>",
+             name="sd_leak")
+    cents = np.eye(3, dtype=np.float32)
+    _failed_call_leaves_no_cache(spark, monkeypatch, lambda: semantic_dedup(
+        t, threshold=0.99, centroids=cents, id_col="nope"))
+
+
+def test_assign_clusters_failure_releases_its_cache(spark, monkeypatch):
+    """A failure after the (id, cell) persist (a bad doc id column)
+    leaves no persisted frame behind."""
+    import numpy as np
+
+    from blaze_spark import data
+    from blaze_spark.pipeline import assign_clusters
+
+    d = data([(i, "t") for i in range(4)], spark=spark,
+             schema="doc_id bigint, text string", name="ac_leak_docs")
+    e = data([(i, [1.0, 0.0]) for i in range(4)], spark=spark,
+             schema="vec_id bigint, embedding array<float>",
+             name="ac_leak_vecs")
+    cents = np.eye(2, dtype=np.float32)
+    _failed_call_leaves_no_cache(spark, monkeypatch, lambda: assign_clusters(
+        d, e, centroids=cents, doc_id_col="nope"))
+
+
 # ---------------------------------------------------------------------------
 # Winnowing fingerprints (Schleimer et al. 2003) — r15
 
