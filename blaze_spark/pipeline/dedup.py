@@ -154,6 +154,18 @@ def scoped_persist(owner: Table, cached: DataFrame) -> Table:
     return owner
 
 
+def _is_refcounted(df: DataFrame) -> bool:
+    """Whether ``df``'s plan holds a ``_CACHE_REFS`` registration (a
+    scoped or acquired cache) — as opposed to a raw caller persist the
+    refcount never saw."""
+    try:
+        key = _cache_key(df)
+    except Exception:
+        return False
+    with _CACHE_LOCK:
+        return key in _CACHE_REFS
+
+
 def acquire_cache(df: DataFrame):
     """Persist ``df`` for an explicit construction scope and return an
     idempotent release callable (call it in a ``finally``).

@@ -5,15 +5,18 @@ similarity.py).
 Structure:
 - :func:`kmeans_fit` — Lloyd's iterations on the corpus.  Assignments are
   an Arrow-batched numpy matmul (vectorized pandas UDF); centroid updates
-  are per-cluster mean vectors via ``applyInPandas`` (k groups).  Only the
-  k x dim centroid matrix ever reaches the driver — the corpus itself
-  never collects.
+  are a JVM ``avg`` per (cell, vector position) whose k·dim rows are
+  collected and reassembled on the driver.  Only the k x dim centroid
+  matrix ever reaches the driver — the corpus itself never collects.
 - :func:`ivf_assign` — one pass tagging each corpus row with its nearest
   centroid id (this is the "inverted file": at scale you'd partition/
   cluster the stored table by this id).
-- :func:`ivf_topk` — each query probes its ``nprobe`` nearest centroids
-  and scores only rows in those cells: an equi-join on cell id instead of
-  a cross join — the IVF pruning that makes ANN sublinear.
+- :func:`ivf_topk` — the guarded query block is probed on the driver
+  (each query's ``nprobe`` nearest cells) and broadcast into ONE
+  ``mapInPandas`` scan of the corpus: each partition assigns its rows to
+  cells, scores only (query, row) pairs in probed cells and emits its
+  per-query top-k — the IVF pruning that makes ANN sublinear, with no
+  join and no per-pair UDF round trip.
 """
 
 from __future__ import annotations
@@ -28,23 +31,49 @@ from ..sources import local_frame
 __all__ = ["kmeans_fit", "ivf_assign", "ivf_topk", "ivf_neardup_pairs"]
 
 
+def _check_ann_params(**vals) -> None:
+    """Reject non-positive ``k``/``nprobe`` before any job: ``nprobe=0``
+    used to return an empty result and ``nprobe=-1`` to probe all but one
+    cell (argpartition on a negative index), both silently."""
+    for name, v in vals.items():
+        if v is not None and int(v) < 1:
+            raise ValueError(f"{name} must be >= 1, got {v}")
+
+
+def _cell_dists(m: np.ndarray, centroids: np.ndarray) -> np.ndarray:
+    """Squared L2 from each row of ``m`` to each centroid, less the row's
+    own |x|^2 (constant per row, so argmin/argpartition ignore it)."""
+    return (-2.0 * m @ centroids.T
+            + (centroids ** 2).sum(axis=1)[None, :])
+
+
+def _assign_cells(m: np.ndarray, centroids: np.ndarray) -> np.ndarray:
+    """Nearest cell id per row (int32)."""
+    return _cell_dists(m, centroids).argmin(axis=1).astype(np.int32)
+
+
+def _probe_cells(vectors: np.ndarray, centroids: np.ndarray,
+                 nprobe: int) -> np.ndarray:
+    """(n, min(nprobe, k_cells)) int32 ids of each vector's nearest cells
+    — argpartition (top-n, no full sort); every cell once ``nprobe``
+    covers them all.  The one probe expression behind ivf_topk,
+    ivf_neardup_pairs and pq's IVF-PQ routes."""
+    k_cells = centroids.shape[0]
+    take = min(nprobe, k_cells)
+    if take >= k_cells:
+        return np.tile(np.arange(k_cells, dtype=np.int32),
+                       (len(vectors), 1))
+    d = _cell_dists(vectors, centroids)
+    return np.argpartition(d, take - 1, axis=1)[:, :take].astype(np.int32)
+
+
 def _probe_udf(centroids: np.ndarray, nprobe: int):
-    """array<int> of each vector's ``nprobe`` nearest cell ids (shared by
-    ivf_topk and ivf_neardup_pairs; argpartition — top-n, no full sort —
-    and nprobe clamped to the cell count)."""
+    """array<int> of each vector's ``nprobe`` nearest cell ids."""
     from pyspark.sql.functions import pandas_udf
 
     def _probe(s):
         m = np.stack(s.to_numpy()).astype(np.float64)
-        d = (-2.0 * m @ centroids.T
-             + (centroids ** 2).sum(axis=1)[None, :])
-        take = min(nprobe, centroids.shape[0])
-        if take < centroids.shape[0]:
-            cells = np.argpartition(d, take - 1, axis=1)[:, :take] \
-                .astype(np.int32)
-        else:
-            cells = np.tile(np.arange(take, dtype=np.int32), (len(m), 1))
-        return pd.Series(list(cells))
+        return pd.Series(list(_probe_cells(m, centroids, nprobe)))
 
     _probe.__annotations__ = {"s": pd.Series, "return": pd.Series}
     return pandas_udf(_probe, "array<int>")
@@ -55,10 +84,7 @@ def _assign_udf(centroids: np.ndarray):
 
     def _assign(s):
         m = np.stack(s.to_numpy()).astype(np.float64)       # (batch, dim)
-        # squared L2 to each centroid: |x|^2 - 2 x.c + |c|^2
-        d = (-2.0 * m @ centroids.T
-             + (centroids ** 2).sum(axis=1)[None, :])
-        return pd.Series(d.argmin(axis=1).astype(np.int32))
+        return pd.Series(_assign_cells(m, centroids))
 
     _assign.__annotations__ = {"s": pd.Series, "return": pd.Series}
     return pandas_udf(_assign, "int")
@@ -107,9 +133,11 @@ def kmeans_fit(corpus: Table, k: int = 16, iters: int = 5,
     accumulation order — and with it every centroid byte — is
     unchanged.
 
-    Centroid updates are a JVM aggregation (:func:`_cell_means`) — no
-    per-cell pandas materialization anywhere in the fit path, so the fit
-    is safe on the FULL corpus, not just on samples."""
+    Centroid updates are a JVM partial ``avg`` per (cell, vector
+    position): only those k·dim rows are collected and reassembled into
+    the centroid matrix on the driver — no per-cell pandas
+    materialization anywhere in the fit path, so the fit is safe on the
+    FULL corpus, not just on samples."""
     base = corpus.df.select(F.col(id_col).alias("__kid"),
                             F.col(vec_col).alias("v")).persist()
     try:
@@ -149,43 +177,125 @@ def ivf_assign(corpus: Table, centroids: np.ndarray,
         "ivf_assign")
 
 
+# gathered (query, row) pair-vector budget per scan chunk, in float64
+# cells: 2M = 16 MB per gathered side (the query rows, the corpus rows
+# and their product are each this size)
+_PAIR_CHUNK_CELLS = 2_000_000
+
+
+def _topk_select(qi, nid, cos, k: int):
+    """Each query row's first ``k`` (qi, nid, cos) under the final
+    window's order: cosine descending with NaN LAST (the Arrow bridge
+    turns a NaN cosine into a SQL NULL, and a descending sort puts NULLs
+    last), then neighbor id ascending."""
+    key = np.where(np.isnan(cos), np.inf, -cos)
+    o = np.lexsort((nid, key, qi))
+    qs = qi[o]
+    # rank within the query's run of the sorted order
+    keep = o[np.arange(len(qs)) - np.searchsorted(qs, qs) < k]
+    return qi[keep], nid[keep], cos[keep]
+
+
+def _ivf_scan_topk(batches, qids, qraw, probed, centroids, k: int,
+                   chunk_cells: int = _PAIR_CHUNK_CELLS):
+    """One corpus partition of :func:`ivf_topk`'s fused scan: assign each
+    row to its cell, score only (query, row) pairs whose cell the query
+    probes (self-matches excluded), and yield the partition's per-query
+    top-k as one (query_id, neighbor_id, cosine) frame.
+
+    The cosine is the former per-pair UDF's arithmetic, per pair: a
+    float64 elementwise product summed over the row, divided by the
+    product of the two row norms — a matmul would change low bits and
+    could flip near-tied ranks.  Queries are taken in ranges whose
+    gathered pair vectors stay under ``chunk_cells`` floats (one query
+    at least)."""
+    qn = np.linalg.norm(qraw, axis=1)
+    k_cells = centroids.shape[0]
+    held = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        nids = pdf["nid"].to_numpy()
+        m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+        cells = _assign_cells(m, centroids)
+        cn = np.linalg.norm(m, axis=1)
+        # rows grouped by cell: cell c owns order[start[c]:start[c]+cnt[c]]
+        order = np.argsort(cells, kind="stable")
+        cnt = np.bincount(cells, minlength=k_cells)
+        start = np.cumsum(cnt) - cnt
+        cum = np.cumsum(cnt[probed].sum(axis=1))
+        step = max(1, chunk_cells // m.shape[1])
+        q0 = 0
+        while q0 < len(qids):
+            done = cum[q0 - 1] if q0 else 0
+            q1 = max(q0 + 1, int(np.searchsorted(cum, done + step,
+                                                 side="right")))
+            # one (query, probed cell) entry per block of that cell's rows
+            qq = np.repeat(np.arange(q0, q1), probed.shape[1])
+            cc = probed[q0:q1].ravel()
+            n_each = cnt[cc]
+            offs = np.arange(n_each.sum()) - np.repeat(
+                np.cumsum(n_each) - n_each, n_each)
+            qi = np.repeat(qq, n_each)
+            ri = order[np.repeat(start[cc], n_each) + offs]
+            keep = nids[ri] != qids[qi]
+            qi, ri = qi[keep], ri[keep]
+            cos = ((qraw[qi] * m[ri]).sum(axis=1)
+                   / (qn[qi] * cn[ri]))
+            held = _topk_select(np.concatenate((held[0], qi)),
+                                np.concatenate((held[1], nids[ri])),
+                                np.concatenate((held[2], cos)), k)
+            q0 = q1
+    if len(held[0]):
+        yield pd.DataFrame({"query_id": qids[held[0]],
+                            "neighbor_id": held[1], "cosine": held[2]})
+
+
 def ivf_topk(corpus: Table, queries: Table, centroids: np.ndarray, k: int = 5,
              nprobe: int = 4, id_col: str = "vec_id",
              vec_col: str = "embedding", round_to: int | None = 4,
-             max_broadcast_queries: int = 100_000) -> Table:
-    """Approximate top-k cosine: probe the nprobe nearest cells per query.
+             max_queries: int | None = 100_000) -> Table:
+    """Approximate top-k cosine: score each query against the corpus rows
+    in its ``nprobe`` nearest cells.  Output (query_id, neighbor_id,
+    cosine), self-matches excluded, ties broken by neighbor id.
 
-    The query side (queries x nprobe rows, each carrying its vector) is
-    broadcast only while it is plausibly broadcast-sized: past
-    ``max_broadcast_queries`` the plan falls back to a shuffled equi-join
-    on the cell id (the corpus side is already hashed by cell, so the
-    fallback is one exchange per side, never a driver-memory explosion) —
-    same guard pattern as :func:`similarity.cosine_topk`
-    (VERDICT r6 #3).  Pass ``max_broadcast_queries=None`` to skip the
-    sizing probe (one cheap ``limit(n+1)`` job) and force the broadcast."""
-    from .similarity import _pair_cosine_udf
+    The ``pq_topk`` scan contract: the query block is collected under
+    the ``max_queries`` guard (raises past it — slice the query side with
+    :func:`similarity.batched_topk`; pass ``None`` to skip the sizing
+    probe), probed on the driver, and broadcast once as (ids, vectors,
+    probed cells, centroids).  ONE ``mapInPandas`` pass per corpus
+    partition then assigns rows to cells, scores the probed pairs and
+    keeps an exact per-query top-k, so the merge after the scan sees at
+    most ``partitions × queries × k`` rows — never a candidate pair per
+    row, and no vector crosses a join or a shuffle."""
+    _check_ann_params(k=k, nprobe=nprobe)
+    from .pq import _collect_query_block
+    from .similarity import _query_guard, _rank_topk
 
-    tagged = ivf_assign(corpus, centroids, vec_col).df.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        "cell")
+    _query_guard(queries, id_col, max_queries, "ivf_topk",
+                 "the query block is collected and broadcast to every "
+                 "corpus partition. Slice the query side with "
+                 "batched_topk")
+    qids, qraw, _ = _collect_query_block(
+        Table(queries.df.filter(F.col(id_col).isNotNull())), id_col,
+        vec_col)
+    spark = corpus.df.sparkSession
+    if not len(qids):
+        return Table(local_frame(
+            spark, [], "query_id long, neighbor_id long, cosine double"),
+            "ivf_topk")
+    bc = spark.sparkContext.broadcast(
+        (qids, qraw, _probe_cells(qraw, centroids, nprobe), centroids))
+    kk = int(k)
 
-    probe_udf = _probe_udf(centroids, nprobe)
-    q = queries.df.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.explode(probe_udf(F.col(vec_col))).alias("cell"))
+    def _scan(batches):
+        yield from _ivf_scan_topk(batches, *bc.value, kk)
 
-    broadcast_q = True
-    if max_broadcast_queries is not None:
-        probe = (queries.df.select(id_col)
-                 .limit(max_broadcast_queries + 1).count())
-        broadcast_q = probe <= max_broadcast_queries
-    scored = (tagged.join(F.broadcast(q) if broadcast_q else q, "cell")
-              .filter(F.col("neighbor_id") != F.col("query_id"))
-              .withColumn("cosine",
-                          _pair_cosine_udf()(F.col("qv"), F.col("cv"))))
-    from .similarity import _rank_topk
-
-    return Table(_rank_topk(scored, k, round_to), "ivf_topk")
+    cand = (corpus.df.filter(F.col(id_col).isNotNull())
+            .select(F.col(id_col).alias("nid"), F.col(vec_col).alias("v"))
+            .mapInPandas(_scan,
+                         "query_id long, neighbor_id long, cosine double"))
+    return Table(_rank_topk(cand, kk, round_to), "ivf_topk")
 
 
 def ivf_neardup_pairs(corpus: Table, threshold: float = 0.9,
@@ -235,6 +345,7 @@ def ivf_neardup_pairs(corpus: Table, threshold: float = 0.9,
     ``warn_truncation=False``.  Pass ``n_vectors`` (or ``centroids``
     from a saved quantizer) to skip the sizing scan on production
     paths."""
+    _check_ann_params(k=k, nprobe=nprobe)
     if centroids is None:
         if k is None:
             n = (n_vectors if n_vectors is not None

@@ -555,8 +555,9 @@ def _ivf_pq_scored(codes: Table, queries: Table, centroids: np.ndarray,
     ``adist <= radius`` per query when ``min_cosine`` is set (range
     mode, radius bias-corrected like :func:`_pq_range_scored`).
     (None, None) for an empty query block."""
-    from .ivf import ivf_assign
+    from .ivf import _check_ann_params, _probe_cells, ivf_assign
 
+    _check_ann_params(nprobe=nprobe)
     if cell_col not in codes.df.columns:
         if vec_col in codes.df.columns:
             assigned = ivf_assign(codes, centroids, vec_col=vec_col)
@@ -579,19 +580,13 @@ def _ivf_pq_scored(codes: Table, queries: Table, centroids: np.ndarray,
     bc = spark.sparkContext.broadcast((qids, _adc_tables(qx, codebooks)))
     # driver-side probe on the RAW vectors — must rank cells exactly as
     # ivf_assign's raw-space squared-L2 does for the same vector
-    dcell = (-2.0 * qraw @ centroids.T
-             + (centroids ** 2).sum(axis=1)[None, :])
-    take_c = min(nprobe, centroids.shape[0])
-    probed = np.argpartition(dcell, take_c - 1, axis=1)[:, :take_c] \
-        if take_c < centroids.shape[0] \
-        else np.tile(np.arange(take_c), (len(qraw), 1))
+    probed = _probe_cells(qraw, centroids, nprobe)
     radii = (None if min_cosine is None
              else _range_radii(qx, codebooks, min_cosine, correct_bias))
     if radii is None:
         qcells = local_frame(
             spark,
-            [(int(q), int(c)) for q, cs in zip(qids, probed[:, :take_c])
-             for c in cs],
+            [(int(q), int(c)) for q, cs in zip(qids, probed) for c in cs],
             "query_id long, cell int")
     else:
         # the per-query radius rides the broadcast probe relation, so
@@ -599,7 +594,7 @@ def _ivf_pq_scored(codes: Table, queries: Table, centroids: np.ndarray,
         qcells = local_frame(
             spark,
             [(int(q), int(c), float(r))
-             for q, cs, r in zip(qids, probed[:, :take_c], radii)
+             for q, cs, r in zip(qids, probed, radii)
              for c in cs],
             "query_id long, cell int, radius double")
     if cell_col != "cell":
@@ -953,6 +948,9 @@ def ivf_pq_topk(codes: Table, queries, centroids, codebooks,
                 code_col: str = "pq_code", vec_col: str = "embedding",
                 cell_col: str = "cell", round_to: int | None = 4,
                 max_queries: int = 10_000) -> Table:
+    from .ivf import _check_ann_params
+
+    _check_ann_params(k=k, nprobe=nprobe)
     client = _cof(codes)
     if client is None:
         if _cof(queries) is not None:

@@ -523,7 +523,6 @@ def ann_topk(corpus: Table | None, queries: Table, k: int = 5,
              target_cell: int = 256, codes: Table | None = None,
              store: str | None = None, codebooks=None,
              max_queries: int = 10_000,
-             max_broadcast_queries: int = 100_000,
              **backend_kwargs) -> Table:
     """Top-k cosine neighbors with AUTOMATIC regime choice — the search
     sibling of :func:`neardup_pairs` (r7 #5's dispatcher extended to
@@ -563,21 +562,23 @@ def ann_topk(corpus: Table | None, queries: Table, k: int = 5,
       the data's actual geometry; measured 10.6 s vs 50.9 s brute force
       at 200k vectors (PLANS.md r9 PQ table).
 
-    Guard knobs are NAMED params with each backend's own default
-    (ADVICE r9 — the kwarg surface must not change exception class with
-    corpus size): ``max_queries`` reaches the routes that build
-    per-query driver/broadcast state (exact, PQ, IVF-PQ — they RAISE
-    past it), ``max_broadcast_queries`` reaches IVF's broadcast→shuffle
-    plan fallback; LSH has neither (its query side rides a bucketed
-    equi-join).  Remaining ``backend_kwargs`` are validated at entry
-    against the union of every route's signature — an unknown name
-    raises ``TypeError`` immediately, on every route alike — and each
-    route then receives only the names it accepts (inapplicable knobs
-    are inert by contract, like ``max_queries`` on the LSH route)."""
-    guard_kwargs = {"max_queries": max_queries,
-                    "max_broadcast_queries": max_broadcast_queries}
+    The guard knob is a NAMED param (ADVICE r9 — the kwarg surface must
+    not change exception class with corpus size): ``max_queries``
+    reaches every route that collects or broadcasts per-query state
+    (exact, IVF, PQ, IVF-PQ — they RAISE past it; slice larger query
+    sets with :func:`batched_topk`); LSH has none (its query side rides
+    a bucketed equi-join).  ``k`` and ``nprobe`` below 1 raise
+    ``ValueError`` before any job.  Remaining ``backend_kwargs`` are
+    validated at entry against the union of every route's signature —
+    an unknown name raises ``TypeError`` immediately, on every route
+    alike — and each route then receives only the names it accepts
+    (inapplicable knobs are inert by contract, like ``max_queries`` on
+    the LSH route)."""
     from . import pq as pq_mod
-    from .ivf import ivf_topk, kmeans_fit
+    from .ivf import _check_ann_params, ivf_topk, kmeans_fit
+
+    _check_ann_params(k=k, nprobe=nprobe)
+    guard_kwargs = {"max_queries": max_queries}
     routes = (cosine_topk, lsh_cosine_topk, ivf_topk,
               pq_mod.pq_topk, pq_mod.ivf_pq_topk)
     accepted_sets = [_accepted_kwargs(f) for f in routes]
@@ -726,13 +727,15 @@ def pq_neardup_pairs(corpus: Table, threshold: float = 0.9,
         # The persist/release rides the refcounted acquire (ADVICE r15):
         # if the caller already persisted an identical codes frame, the
         # JVM shares one cache entry and a raw unpersist here would
-        # silently un-cache the caller's survivor.  An already-cached
-        # codes object (caller-owned raw persist, which the refcount
-        # never saw) is left entirely alone — their entry, their
-        # lifetime.
-        from .dedup import acquire_cache
+        # silently un-cache the caller's survivor.  A codes frame the
+        # refcount already holds (a caller's scoped cache) gets one more
+        # reference for the loop, so dropping the caller's holder
+        # mid-loop cannot unpersist it; only a raw caller persist, which
+        # the refcount never saw, is left entirely alone — their entry,
+        # their lifetime.
+        from .dedup import _is_refcounted, acquire_cache
 
-        if not codes.df.is_cached:
+        if not codes.df.is_cached or _is_refcounted(codes.df):
             codes_release = acquire_cache(codes.df)
         codes = Table(codes.df, "pq_neardup_codes")
     def _one_chunk(i: int):

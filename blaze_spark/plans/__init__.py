@@ -69,3 +69,17 @@ def exchange_count(t) -> int:
     broadcast exchanges excluded.  The first scale question for any
     operator: how many times does the data cross the network?"""
     return physical_plan(t).count("Arguments: hashpartitioning")
+
+
+def python_eval_count(t) -> int:
+    """Number of Python evaluation nodes in the plan (ArrowEvalPython,
+    BatchEvalPython, MapInPandas/MapInArrow, FlatMapGroupsInPandas, ...).
+    Each one costs a Python worker session per partition it runs on —
+    a fixed startup cost whatever the row count — and chained nodes in
+    one stage run concurrently, multiplying live workers."""
+    import re
+
+    ids = {i for i, name in re.findall(r"^\((\d+)\) (\w+)",
+                                       physical_plan(t), re.M)
+           if any(k in name for k in ("Python", "InPandas", "InArrow"))}
+    return len(ids)

@@ -677,33 +677,193 @@ def test_kmeans_fit_path_has_no_grouped_pandas(spark, emb):
     assert np.allclose(centroids, ref, atol=1e-6)
 
 
-def test_ivf_topk_query_broadcast_guard(spark, emb):
-    """VERDICT r6 #3: past ``max_broadcast_queries`` the query side must
-    fall back to a shuffled equi-join (no broadcast hint), with results
-    identical to the broadcast plan."""
+def _ivf_topk_join_reference(corpus, queries, centroids, k, nprobe,
+                             round_to=4):
+    """The former ivf_topk formulation, kept as the reference: corpus
+    rows tagged by the assign UDF, queries exploded over their probed
+    cells by the probe UDF, a broadcast equi-join on the cell and the
+    per-pair cosine UDF, ranked by the shared window tail."""
+    from pyspark.sql import functions as F
+
+    from blaze_spark.pipeline.ivf import _assign_udf, _probe_udf
+    from blaze_spark.pipeline.similarity import (_pair_cosine_udf,
+                                                 _rank_topk)
+
+    tagged = corpus.df.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"),
+        _assign_udf(centroids)(F.col("embedding")).alias("cell"))
+    q = queries.df.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
+        F.explode(_probe_udf(centroids, nprobe)(F.col("embedding")))
+        .alias("cell"))
+    scored = (tagged.join(F.broadcast(q), "cell")
+              .filter(F.col("neighbor_id") != F.col("query_id"))
+              .withColumn("cosine",
+                          _pair_cosine_udf()(F.col("qv"), F.col("cv"))))
+    return _rank_topk(scored, k, round_to)
+
+
+def test_ivf_topk_fused_scan_equals_join_reference(spark, emb):
+    """The fused per-partition scan returns exactly the former
+    join + per-pair-UDF result (multiset of rows, raw and rounded
+    cosines): planted duplicates (exact cosine ties broken by neighbor
+    id), a zero vector on both sides (NaN cosine -> NULL, ranked last),
+    nprobe >= k_cells, duplicate query ids, an empty query set and a
+    7-way repartitioned and a single-partition corpus.  The k=60 case
+    over a small corpus reaches the NULL tail of every query's list."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from blaze_spark import Table, concat
+    from blaze_spark.pipeline.ivf import ivf_topk, kmeans_fit
+
+    base = emb.df.select("vec_id", "embedding")
+    copies = Table(base.filter("vec_id < 20")
+                   .withColumn("vec_id", F.col("vec_id") + 1_000_000))
+    zero = Table(base.filter("vec_id = 0").select(
+        F.lit(2_000_000).cast("long").alias("vec_id"),
+        F.expr("transform(embedding, x -> cast(0.0 as float))")
+        .alias("embedding")))
+    corpus = concat(Table(base), copies, zero)
+    cents = kmeans_fit(corpus, k=4, iters=2)
+    q1 = corpus.df.filter("vec_id < 6 OR vec_id = 1000003 "
+                          "OR vec_id = 2000000")
+    queries = Table(q1.union(corpus.df.filter("vec_id < 2")))
+    small = concat(Table(base.filter("vec_id < 40")), copies, zero)
+
+    def same(c, q, k, nprobe, round_to=4):
+        got = ivf_topk(c, q, cents, k=k, nprobe=nprobe,
+                       round_to=round_to).df.collect()
+        want = _ivf_topk_join_reference(c, q, cents, k, nprobe,
+                                        round_to).collect()
+        assert Counter(map(tuple, got)) == Counter(map(tuple, want))
+        return got
+
+    out = same(corpus, queries, 5, 2)
+    assert any(r.cosine is None for r in out)  # the zero-vector query
+    same(corpus, queries, 5, 2, round_to=None)
+    same(corpus, queries, 5, 4)                 # nprobe == k_cells
+    same(corpus, queries, 5, 9)                 # nprobe > k_cells
+    same(Table(corpus.df.repartition(7)), queries, 5, 2)
+    # one partition: its local top-k IS the answer, so a wrong local
+    # order cannot hide behind the final window's re-sort
+    same(Table(corpus.df.coalesce(1)), queries, 5, 4)
+    tail = same(Table(small.df.coalesce(1)), queries, 60, 4,
+                round_to=None)
+    assert any(r.cosine is None for r in tail
+               if r.query_id != 2_000_000)      # the NULL tail
+    assert same(corpus, Table(corpus.df.filter("vec_id < 0")), 5, 2) == []
+
+
+def test_ivf_scan_topk_is_chunking_invariant():
+    """The fused scan's per-partition kernel gives the same top-k
+    whether a batch's queries are scored in one chunk or one query per
+    chunk (a pair budget below one query's pairs), across two batches,
+    with duplicate query ids and self-matches in the corpus."""
+    import numpy as np
+    import pandas as pd
+
+    from blaze_spark.pipeline.ivf import _ivf_scan_topk, _probe_cells
+
+    rng = np.random.default_rng(7)
+    cents = rng.normal(size=(3, 8))
+    qids = np.array([1, 1, 4, 9, 12, 30, 31])
+    qraw = rng.normal(size=(len(qids), 8))
+    probed = _probe_cells(qraw, cents, 2)
+    corpus = rng.normal(size=(40, 8)).astype(np.float32)
+    batches = [pd.DataFrame({"nid": np.arange(lo, lo + 20),
+                             "v": list(corpus[lo:lo + 20])})
+               for lo in (0, 20)]
+
+    def run(chunk_cells):
+        out = pd.concat(_ivf_scan_topk(iter(batches), qids, qraw, probed,
+                                       cents, 4, chunk_cells))
+        assert (out.query_id != out.neighbor_id).all()
+        return sorted(map(tuple, out.to_numpy()))
+
+    one = run(1)
+    assert one == run(10_000_000)
+    assert len(one) == 4 * len(qids)
+
+
+def test_ivf_topk_plan_is_one_python_scan(spark, emb):
+    """Plan pin: the fused scan is the only Python evaluation node — no
+    assign/probe/pair UDFs — and nothing is joined by broadcast."""
     from blaze_spark import Table
     from blaze_spark.pipeline.ivf import ivf_topk, kmeans_fit
-    from blaze_spark.plans import physical_plan
+    from blaze_spark.plans import physical_plan, python_eval_count
 
-    centroids = kmeans_fit(emb, k=4, iters=2)
+    cents = kmeans_fit(emb, k=4, iters=2)
+    out = ivf_topk(emb, Table(emb.df.filter("vec_id < 8")), cents, k=3,
+                   nprobe=2)
+    assert python_eval_count(out) == 1
+    assert "BroadcastHashJoin" not in physical_plan(out)
+
+
+def test_ivf_topk_max_queries_guard_and_batching(spark, emb):
+    """ivf_topk collects its query block, so past ``max_queries`` it
+    raises with batched_topk advice; batched_topk through the IVF route
+    (its max_queries=None override) equals a single call."""
+    from collections import Counter
+
+    from blaze_spark import Table
+    from blaze_spark.pipeline import batched_topk
+    from blaze_spark.pipeline.ivf import ivf_topk, kmeans_fit
+
+    cents = kmeans_fit(emb, k=4, iters=2)
     queries = Table(emb.df.filter("vec_id < 8"))
+    with pytest.raises(ValueError, match="batched_topk"):
+        ivf_topk(emb, queries, cents, k=3, nprobe=2, max_queries=4)
+    single = ivf_topk(emb, queries, cents, k=3, nprobe=2).df.collect()
+    batched = batched_topk(emb, queries, k=3, queries_per_batch=3,
+                           exact_max=100, centroids=cents,
+                           nprobe=2).df.collect()
+    assert len(single) == 24
+    assert Counter(map(tuple, batched)) == Counter(map(tuple, single))
 
-    b = ivf_topk(emb, queries, centroids, k=3, nprobe=2,
-                 max_broadcast_queries=None)
-    nb = ivf_topk(emb, queries, centroids, k=3, nprobe=2,
-                  max_broadcast_queries=4)  # 8 queries > 4 -> trips
 
-    # with auto-broadcast disabled, only the hinted plan may broadcast
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+_BAD_ANN_PARAMS = [(r, bad) for r in ("ivf_topk", "ivf_pq_topk",
+                                      "ivf_pq_range_search",
+                                      "ivf_neardup_pairs", "ann_topk")
+                   for bad in ({"nprobe": 0}, {"nprobe": -1}, {"k": 0})
+                   if not (r == "ivf_pq_range_search" and "k" in bad)]
+
+
+@pytest.mark.parametrize("route,bad", _BAD_ANN_PARAMS)
+def test_ann_routes_reject_nonpositive_k_and_nprobe(spark, emb, route,
+                                                    bad):
+    """``nprobe=0`` used to return an empty result and ``nprobe=-1`` to
+    probe all cells but one, both silently; now ``k``/``nprobe`` below 1
+    raise at construction, before any job."""
+    import numpy as np
+
+    from blaze_spark import Table
+    from blaze_spark.pipeline import (ann_topk, ivf_pq_range_search,
+                                      ivf_pq_topk)
+    from blaze_spark.pipeline.ivf import ivf_neardup_pairs, ivf_topk
+
+    cents = np.ones((4, 64))
+    cb = np.ones((8, 16, 8))
+    q = Table(emb.df.filter("vec_id < 2"))
+    calls = {
+        "ivf_topk": lambda kw: ivf_topk(emb, q, cents, **kw),
+        "ivf_pq_topk": lambda kw: ivf_pq_topk(emb, q, cents, cb, **kw),
+        "ivf_pq_range_search":
+            lambda kw: ivf_pq_range_search(emb, q, cents, cb, **kw),
+        "ivf_neardup_pairs":
+            lambda kw: ivf_neardup_pairs(emb, centroids=cents, **kw),
+        "ann_topk": lambda kw: ann_topk(emb, q, **kw),
+    }
+    sc = spark.sparkContext
+    group = f"ann-params-{route}-{sorted(bad.items())}"
+    sc.setJobGroup(group, "invalid ANN parameters")
     try:
-        assert "BroadcastHashJoin" in physical_plan(b.df)
-        assert "BroadcastHashJoin" not in physical_plan(nb.df)
-        rows_b = sorted(map(tuple, b.df.collect()))
-        rows_nb = sorted(map(tuple, nb.df.collect()))
+        with pytest.raises(ValueError, match=f"{next(iter(bad))} must be"):
+            calls[route](bad)
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert rows_b == rows_nb
+        sc.setJobGroup(None, None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
 
 
 # -- r8: loud hot-cell truncation + regime auto-dispatch -----------------
@@ -2078,6 +2238,67 @@ def test_pq_neardup_chunk_loop_leaves_caller_persist_alone(spark, emb):
     assert not codes2.df.is_cached  # scope released its own persist
 
 
+def test_pq_neardup_chunk_loop_failure_keeps_refcount_balanced(
+        spark, emb, monkeypatch):
+    """A codes frame the caller holds through the refcount (a scoped
+    cache, not a raw persist) gets one more reference for the chunk
+    loop.  A forced failure inside the loop must leave the persisted
+    RDDs as they were, and the loop's reference must be gone: the
+    caller's own release then unpersists the codes."""
+    from blaze_spark.pipeline import pq as pq_mod
+    from blaze_spark.pipeline import pq_encode, pq_fit, pq_neardup_pairs
+    from blaze_spark.pipeline.dedup import acquire_cache
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    cb = pq_fit(emb, m=8, ks=16, iters=2, train_rows=2000)
+    codes = pq_encode(emb, cb)
+    before = persistent()
+    caller_release = acquire_cache(codes.df)
+    codes.df.count()  # fill the caller's cache
+    held = persistent()
+
+    def failing(*a, **kw):
+        raise RuntimeError("forced chunk failure")
+
+    monkeypatch.setattr(pq_mod, "_pq_range_scored", failing)
+    with pytest.raises(RuntimeError, match="forced chunk failure"):
+        pq_neardup_pairs(emb, codes=codes, codebooks=cb, threshold=0.9,
+                         queries_per_batch=100)
+    assert persistent() == held
+    assert codes.df.storageLevel.useMemory  # the caller still holds it
+    caller_release()
+    assert persistent() == before
+
+
+def test_pq_neardup_chunk_loop_outlives_the_callers_holder(
+        spark, emb, monkeypatch):
+    """Dropping the caller's scoped holder while the chunk loop runs
+    must not unpersist the codes under the remaining chunks; the loop's
+    own reference releases them once it is done."""
+    from blaze_spark.pipeline import pq as pq_mod
+    from blaze_spark.pipeline import pq_encode, pq_fit, pq_neardup_pairs
+    from blaze_spark.pipeline.dedup import acquire_cache
+
+    cb = pq_fit(emb, m=8, ks=16, iters=2, train_rows=2000)
+    codes = pq_encode(emb, cb)
+    caller_release = acquire_cache(codes.df)
+    real = pq_mod._pq_range_scored
+    cached_in_loop = []
+
+    def spy(*a, **kw):
+        caller_release()  # idempotent: the first chunk drops the holder
+        cached_in_loop.append(codes.df.storageLevel.useMemory)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(pq_mod, "_pq_range_scored", spy)
+    pq_neardup_pairs(emb, codes=codes, codebooks=cb, threshold=0.9,
+                     queries_per_batch=100).df.count()
+    assert len(cached_in_loop) == 5 and all(cached_in_loop)
+    assert not codes.df.storageLevel.useMemory
+
+
 def test_pq_neardup_pairs_matches_exact_truth(spark, emb, tmp_path):
     """r10: corpus self-dedup over the at-rest PQ codes — candidates
     from the bias-corrected ADC range scan, decisions from the exact
@@ -2158,11 +2379,17 @@ def test_ann_topk_kwarg_surface_uniform(spark, emb):
     assert sim.ann_topk(emb, q, k=3, max_queries=5).df.count() == 6
     with pytest.raises(ValueError, match="max_queries"):
         sim.ann_topk(emb, q, k=3, max_queries=1)
-    # ...and is inert (never TypeError) on the IVF and LSH routes;
-    # max_broadcast_queries=1 exercises IVF's shuffled-join fallback
-    out = sim.ann_topk(emb, q, k=3, exact_max=100, centroids=cents,
-                       max_queries=1, max_broadcast_queries=1).df
-    assert set(out.columns) == {"query_id", "neighbor_id", "cosine"}
+    # ...and the IVF route, which collects its query block too...
+    assert sim.ann_topk(emb, q, k=3, exact_max=100, centroids=cents,
+                        max_queries=5).df.count() == 6
+    with pytest.raises(ValueError, match="max_queries"):
+        sim.ann_topk(emb, q, k=3, exact_max=100, centroids=cents,
+                     max_queries=1)
+    # (IVF's former second knob is gone from the surface)
+    with pytest.raises(TypeError, match="max_broadcast_queries"):
+        sim.ann_topk(emb, q, k=3, exact_max=100, centroids=cents,
+                     max_broadcast_queries=1)
+    # ...and is inert (never TypeError) on the LSH route
     out = sim.ann_topk(emb, q, k=3, exact_max=100, threshold=0.9,
                        max_queries=1).df
     assert set(out.columns) == {"query_id", "neighbor_id", "cosine"}

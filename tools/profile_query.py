@@ -2,6 +2,8 @@
 """Profile one or more registry queries under the bench's exact config:
 warm once, then min-of-N floors under the projection-forcing action
 (bit_xor of xxhash64 over every output column — bench.py's _force).
+Each query's line also reports its plan's Python evaluation node count
+(blaze_spark.plans.python_eval_count).
 
 Usage:
     python tools/profile_query.py [--plan DIR] [--reps N] name [name ...]
@@ -63,6 +65,7 @@ def main():
 
     import __spark_entry__ as entry
     from bench import _force, _shuffle_partitions
+    from blaze_spark.plans import python_eval_count
 
     sf_str = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -103,7 +106,12 @@ def main():
             # reps would read it instead of refilling — bench.py reps
             # always refill, so the floors must too
             del df
-        _force(fn(spark, SF_DIR))  # warm
+        warm = fn(spark, SF_DIR)
+        _force(warm)
+        # each Python evaluation node costs one worker session per
+        # partition it runs on, whatever its row count
+        py_nodes = python_eval_count(warm)
+        del warm  # same reason as the plan capture frame above
         runs = []
         for _ in range(args.reps):
             try:
@@ -116,7 +124,8 @@ def main():
             runs.append(time.time() - t0)
         runs.sort()
         print(f"{name}: min {runs[0]:.3f}s median "
-              f"{runs[len(runs) // 2]:.3f}s max {runs[-1]:.3f}s ({n} rows)")
+              f"{runs[len(runs) // 2]:.3f}s max {runs[-1]:.3f}s ({n} rows, "
+              f"{py_nodes} python eval nodes)")
     spark.stop()
 
 
