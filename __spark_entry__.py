@@ -64,6 +64,7 @@ from blaze_spark.pipeline import (  # noqa: E402
     top_ngram_share,
     topk_recall,
 )
+from blaze_spark.cache import carry  # noqa: E402
 from blaze_spark.sources import local_frame  # noqa: E402
 
 
@@ -84,20 +85,6 @@ def _served(spark: SparkSession, datasets: dict, **kw):
         yield f"blaze://127.0.0.1:{srv.port}"
     finally:
         srv.stop()
-
-
-def _keep(df: DataFrame, *holders) -> DataFrame:
-    """Carry the scoped caches of intermediate pipeline results onto
-    the frame an entry actually RETURNS (r15, guide §5): deriving the
-    deterministic oracle order with a bare ``.df.orderBy(...)`` builds
-    a NEW DataFrame without the Python-side cache holder, so the
-    library's scoped persists were released at construction time and
-    the driver's timed action silently re-derived every cached subtree
-    (measured: the benched popularity plan re-scanned parquet 5x —
-    the exact naive plan the r14 scoped persists eliminated)."""
-    from blaze_spark.pipeline.dedup import carry_caches
-    return carry_caches(df, *(h.df if isinstance(h, Table) else h
-                              for h in holders))
 
 
 def _fprobe(col, scale: int = 4):
@@ -1275,7 +1262,7 @@ def neardup_dispatch_pairs(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     corpus = _planted_corpus(e)   # shared truth-bed: ~N/10 planted dups
     pairs = neardup_pairs(corpus, threshold=0.9)
-    return _keep(pairs.df.orderBy("vec_a", "vec_b"), pairs)
+    return carry(pairs.df.orderBy("vec_a", "vec_b"), pairs)
 
 
 def ann_auto_topk(spark, sf_dir):
@@ -1401,7 +1388,7 @@ def pack_sequences_string_key(spark, sf_dir):
     g = by([packed.shard], n_docs=packed.doc_id.nelements(),
            total_tokens=packed.n_tokens.sum(),
            first_key=packed.skey.min(), last_key=packed.skey.max())
-    return _keep(g.df, packed)
+    return g.df
 
 
 def window_edges_per_user(spark, sf_dir):
@@ -1567,7 +1554,7 @@ def pack_sequences_docs(spark, sf_dir):
     g = by([packed.shard], n_docs=packed.doc_id.nelements(),
            total_tokens=packed.n_tokens.sum(),
            first_doc=packed.doc_id.min(), last_doc=packed.doc_id.max())
-    return _keep(g.df, packed)
+    return g.df
 
 
 def chunk_documents_docs(spark, sf_dir):
@@ -1609,7 +1596,7 @@ def pack_tokenized_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     vt = VocabTokenizer(_TOK_VOCAB, fallback_chars=4)
     packed = pack_sequences(d, budget=512, partitions=4, tokenizer=vt)
-    return _keep(packed.df.select("doc_id", "n_tokens", "tok_start",
+    return carry(packed.df.select("doc_id", "n_tokens", "tok_start",
                                   "shard")
                  .orderBy("doc_id"), packed)
 
@@ -1647,7 +1634,7 @@ def pack_bpe_docs(spark, sf_dir):
                         ("s", "c"), ("sc", "an")])
     packed = pack_sequences(d, budget=4096, partitions=4,
                             tokenizer=bpe)
-    return _keep(packed.df.select("doc_id", "n_tokens", "tok_start",
+    return carry(packed.df.select("doc_id", "n_tokens", "tok_start",
                                   "shard")
                  .orderBy("doc_id"), packed)
 
@@ -1669,7 +1656,7 @@ def pack_wordpiece_docs(spark, sf_dir):
          "##er", "##ed", "##e", "##r", "##n", "##t"])
     packed = pack_sequences(d, budget=4096, partitions=4,
                             tokenizer=wp)
-    return _keep(packed.df.select("doc_id", "n_tokens", "tok_start",
+    return carry(packed.df.select("doc_id", "n_tokens", "tok_start",
                                   "shard")
                  .orderBy("doc_id"), packed)
 
@@ -1754,7 +1741,7 @@ def training_shards_pipeline(spark, sf_dir):
            n_docs=packed.doc_id.nunique(),
            total_tokens=packed.n_tokens.sum(),
            first_chunk=packed.chunk_key.min())
-    return _keep(g.df, packed)
+    return g.df
 
 
 def consistency_incremental_minhash(spark, sf_dir):
@@ -2902,10 +2889,10 @@ def train_quality_classifier_docs(spark, sf_dir):
     from blaze_spark.pipeline import train_quality_classifier
 
     d = _t(spark, sf_dir, "documents")
-    # persist=True: one tokenization pass feeds both epochs (execution
-    # plan only — the fitted weights are pinned identical either way)
+    # two epochs: the fit caches its features, so one tokenization
+    # pass feeds both (execution plan only — weights pinned identical)
     m = train_quality_classifier(d, "lang = 'en'", n_buckets=1024,
-                                 epochs=2, lr=4.0, persist=True)
+                                 epochs=2, lr=4.0)
     return m.classify(d).orderBy("doc_id")
 
 
@@ -2924,11 +2911,12 @@ def train_classifier_init_docs(spark, sf_dir):
     from blaze_spark.pipeline import train_quality_classifier
 
     d = _t(spark, sf_dir, "documents")
-    # persist=True: one tokenization pass feeds the init count + both
-    # epochs (execution plan only — weights pinned identical)
+    # the fit caches its features: one tokenization pass feeds the
+    # init count + both epochs (execution plan only — weights pinned
+    # identical)
     m = train_quality_classifier(d, "lang = 'en'", n_buckets=1024,
                                  epochs=2, lr=4.0, lr_decay=0.5,
-                                 init_intercept=True, persist=True)
+                                 init_intercept=True)
     return m.classify(d).orderBy("doc_id")
 
 
@@ -3087,7 +3075,7 @@ def ngram_lm_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     out = ngram_lm_logprob(d, n_buckets=1024, n=2)
-    return _keep(out.orderBy("doc_id"), out)
+    return carry(out.orderBy("doc_id"), out)
 
 
 def perplexity_filter_docs(spark, sf_dir):
@@ -3102,7 +3090,7 @@ def perplexity_filter_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     out = perplexity_filter(d, n_buckets=1024, n=2,
                             min_ppl=19.0, max_ppl=37.0)
-    return _keep(out.select("doc_id", "source", "n_grams", "logp",
+    return carry(out.select("doc_id", "source", "n_grams", "logp",
                             "avg_logp", "ppl").orderBy("doc_id"), out)
 
 
@@ -3132,7 +3120,7 @@ def winnow_candidates_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     out = winnow_candidates(d, k=3, w=4, min_shared=2, max_bucket=1000)
-    return _keep(out.df.orderBy("doc_a", "doc_b"), out)
+    return carry(out.df.orderBy("doc_a", "doc_b"), out)
 
 
 def bm25_topk_docs(spark, sf_dir):
@@ -3149,7 +3137,7 @@ def bm25_topk_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     out = bm25_topk(d, ["table scan fast", "spark stream window",
                         "customer order query"], k=10)
-    return _keep(out.df.orderBy("query_id", "doc_id"), out)
+    return carry(out.df.orderBy("query_id", "doc_id"), out)
 
 
 def c4_clean_docs(spark, sf_dir):
@@ -3194,7 +3182,7 @@ def perplexity_buckets_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     out = perplexity_buckets(d, n_buckets=1024, n=2, by_col="lang")
-    return _keep(out.select("doc_id", "lang", "n_grams", "ppl",
+    return carry(out.select("doc_id", "lang", "n_grams", "ppl",
                             "ppl_bucket").orderBy("doc_id"), out)
 
 
@@ -3216,7 +3204,7 @@ def ngram_lm_backoff_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     out = perplexity_filter(d, n_buckets=1024, n=2, backoff=0.4,
                             min_ppl=16.5, max_ppl=19.5)
-    return _keep(out.select("doc_id", "source", "n_grams", "logp",
+    return carry(out.select("doc_id", "source", "n_grams", "logp",
                             "avg_logp", "ppl").orderBy("doc_id"), out)
 
 
@@ -3241,7 +3229,7 @@ def ngram_lm_kn_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     out = perplexity_filter(d, n_buckets=1024, n=2, kneser_ney=0.75,
                             min_ppl=17.0, max_ppl=18.5)
-    return _keep(out.select("doc_id", "source", "n_grams", "logp",
+    return carry(out.select("doc_id", "source", "n_grams", "logp",
                             "avg_logp", "ppl").orderBy("doc_id"), out)
 
 
@@ -3328,7 +3316,7 @@ def semantic_dedup_embeddings(spark, sf_dir):
                          kmeans_iters=3)
     # r16: the tagged-corpus cache is scoped to the result — carry it
     # through the oracle-order derivation so the timed plan reads it
-    return _keep(out.df.select("vec_id", "cell", "cluster_id",
+    return carry(out.df.select("vec_id", "cell", "cluster_id",
                                F.col("keep").cast("int").alias("keep"))
                  .orderBy("vec_id"), out)
 
@@ -3353,7 +3341,7 @@ def bloom_two_phase_decontam_docs(spark, sf_dir):
     rep = bloom_two_phase_contamination(corpus, deny, n=2,
                                         threshold=0.2,
                                         m_bits=1 << 16, k=5)
-    return _keep(rep.orderBy("doc_id"), rep)
+    return carry(rep.orderBy("doc_id"), rep)
 
 
 def blaze_client_pq(spark, sf_dir):
@@ -3399,7 +3387,7 @@ def ngram_lm_backoff3_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     out = perplexity_filter(d, n_buckets=1024, n=3, backoff=0.4,
                             min_ppl=1.8, max_ppl=2.0)
-    return _keep(out.select("doc_id", "source", "n_grams", "logp",
+    return carry(out.select("doc_id", "source", "n_grams", "logp",
                             "avg_logp", "ppl").orderBy("doc_id"), out)
 
 
@@ -3417,7 +3405,7 @@ def pack_sep_docs(spark, sf_dir):
     g = by([packed.shard], n_docs=packed.doc_id.nelements(),
            total_tokens=packed.n_tokens.sum(),
            first_doc=packed.doc_id.min(), last_doc=packed.doc_id.max())
-    return _keep(g.df, packed)
+    return g.df
 
 
 def ngram_lm_interp_docs(spark, sf_dir):
@@ -3438,7 +3426,7 @@ def ngram_lm_interp_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     out = perplexity_filter(d, n_buckets=1024, n=2, interpolate=0.5,
                             min_ppl=20.0, max_ppl=21.5)
-    return _keep(out.select("doc_id", "source", "n_grams", "logp",
+    return carry(out.select("doc_id", "source", "n_grams", "logp",
                             "avg_logp", "ppl").orderBy("doc_id"), out)
 
 
@@ -3794,7 +3782,7 @@ def cluster_mix_docs(spark, sf_dir):
     kept = apply_source_mix(tagged, w, source_col="cell")
     # r16: the scoped (id, cell) cache rides on tagged — carry it so
     # both mixture arms of the timed plan read it (not 2 assign UDFs)
-    return _keep(kept.df.select("doc_id", "cell").orderBy("doc_id"),
+    return carry(kept.df.select("doc_id", "cell").orderBy("doc_id"),
                  tagged)
 
 
@@ -3825,7 +3813,7 @@ def dup_span_popularity_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     q = dup_span_popularity(d, n=5)
-    return _keep(q.df.orderBy("min_docs"), q)
+    return carry(q.df.orderBy("min_docs"), q)
 
 
 def dup_maximal_spans_docs(spark, sf_dir):

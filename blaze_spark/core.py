@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import schema as _s
+from .cache import carry
 
 __all__ = [
     "Table",
@@ -1014,11 +1015,12 @@ class Table:
         return self._df
 
     def _new(self, df: DataFrame) -> "Table":
-        """Subclass-preserving constructor (StreamTable ops stay streaming)."""
+        """Subclass-preserving constructor (StreamTable ops stay
+        streaming); the derived frame keeps this table's owned caches."""
         t = type(self)(df, self._name)
         t._fks = dict(self._fks)
         t._lineage = self._lineage | {t._token}
-        return t
+        return carry(t, self)
 
     def _shares_ancestor(self, other: "Table") -> bool:
         return bool(self._lineage & other._lineage)
@@ -1776,7 +1778,7 @@ def _derived(df: DataFrame, *parents: Table) -> Table:
     mixed-parent derivations fall back to the plain Table."""
     cls = type(parents[0]) if parents and all(
         type(p) is type(parents[0]) for p in parents) else Table
-    t = cls(df)
+    t = carry(cls(df), *parents)
     for p in parents:
         t._lineage = t._lineage | p._lineage
     # subclass-carried state: first parent wins (shared memo by design)

@@ -57,10 +57,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache import owned_cache
 from ..core import Table, _localize_guard
 from ..sources import local_frame
 from .curation import ngram_array
-from .dedup import _retain_cache, _spread
+from .dedup import _spread
 
 __all__ = ["BloomFilter", "build_bloom", "build_ngram_bloom",
            "bloom_contains", "bloom_contamination",
@@ -324,35 +325,35 @@ def bloom_two_phase_contamination(t: Table, reference: Table,
     # persist Spark re-executes the corpus explode + k probe joins once
     # per consumer (r15 measured the un-persisted plan at 14 parquet
     # scans / 13 broadcast builds; guide §2.4/§5).
-    probed = _hit_expr(grams, bloom, F.col("g")).persist()
-    hitset = probed.filter(F.col("_bloom_hit")).select("g").distinct()
-    ref_g = _spread(reference.df, text_col).select(
-        F.explode(F.array_distinct(
-            ngram_array(F.col(text_col), n))).alias("g"))
-    true_g = (ref_g.join(F.broadcast(hitset), "g", "left_semi")
-              .distinct().withColumn("_in_ref", F.lit(1)))
-    # One aggregation covers what used to be two doc-keyed aggregations
-    # plus a doc-keyed join-back: a gram can only be in ``true_g`` if it
-    # hit the bloom (zero false negatives), so joining ALL probed grams
-    # against the broadcast verified set and summing ``_in_ref`` counts
-    # exactly the flagged-and-verified grams, while count(*) is the
-    # per-doc gram total — byte-identical output, one Exchange fewer.
-    out = (probed.join(F.broadcast(true_g), "g", "left")
-           .groupBy(id_col)
-           .agg(F.count(F.lit(1)).cast(T.LongType()).alias("n_ngrams"),
-                F.sum(F.coalesce(F.col("_in_ref"), F.lit(0)))
-                .alias("_n_exact")))
-    n_cont = F.coalesce(F.col("_n_exact"), F.lit(0)) \
-        .cast(T.LongType())
-    final = out.select(
-        F.col(id_col), F.col("n_ngrams"),
-        n_cont.alias("n_contaminated"),
-        F.round(n_cont / F.col("n_ngrams"), 4)
-        .alias("contamination_rate"),
-        (n_cont / F.col("n_ngrams") >= threshold)
-        .cast(T.IntegerType()).alias("contaminated"))
-    _retain_cache(final, probed)
-    return final
+    probed = _hit_expr(grams, bloom, F.col("g"))
+    with owned_cache(probed) as c:
+        hitset = probed.filter(F.col("_bloom_hit")).select("g").distinct()
+        ref_g = _spread(reference.df, text_col).select(
+            F.explode(F.array_distinct(
+                ngram_array(F.col(text_col), n))).alias("g"))
+        true_g = (ref_g.join(F.broadcast(hitset), "g", "left_semi")
+                  .distinct().withColumn("_in_ref", F.lit(1)))
+        # One aggregation covers what used to be two doc-keyed aggregations
+        # plus a doc-keyed join-back: a gram can only be in ``true_g`` if it
+        # hit the bloom (zero false negatives), so joining ALL probed grams
+        # against the broadcast verified set and summing ``_in_ref`` counts
+        # exactly the flagged-and-verified grams, while count(*) is the
+        # per-doc gram total — byte-identical output, one Exchange fewer.
+        out = (probed.join(F.broadcast(true_g), "g", "left")
+               .groupBy(id_col)
+               .agg(F.count(F.lit(1)).cast(T.LongType()).alias("n_ngrams"),
+                    F.sum(F.coalesce(F.col("_in_ref"), F.lit(0)))
+                    .alias("_n_exact")))
+        n_cont = F.coalesce(F.col("_n_exact"), F.lit(0)) \
+            .cast(T.LongType())
+        final = out.select(
+            F.col(id_col), F.col("n_ngrams"),
+            n_cont.alias("n_contaminated"),
+            F.round(n_cont / F.col("n_ngrams"), 4)
+            .alias("contamination_rate"),
+            (n_cont / F.col("n_ngrams") >= threshold)
+            .cast(T.IntegerType()).alias("contaminated"))
+        return c.transfer(final)
 
 
 # two reserved word_idx rows carry the probe parameters, so a saved

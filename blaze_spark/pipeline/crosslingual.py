@@ -40,6 +40,7 @@ import random
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import owned_cache
 from ..core import Table
 from .dedup import _P, _spread, lsh_band_pairs
 
@@ -121,11 +122,11 @@ def crosslingual_minhash_candidates(t: Table, lexicon: Table,
             .alias(f"m{j}") for j in range(num_perm)]
     sig = F.expr("array(" + ", ".join(f"m{j}" for j in range(num_perm)) + ")")
     sigs = (con.groupBy("doc_id").agg(*mins)
-            .select("doc_id", sig.alias("signature"))).persist()
-    from .dedup import scoped_persist
-    return scoped_persist(
-        Table(lsh_band_pairs(sigs, num_perm, bands, max_bucket),
-              "crosslingual_minhash_candidates"), sigs)
+            .select("doc_id", sig.alias("signature")))
+    with owned_cache(sigs) as c:
+        return c.transfer(Table(
+            lsh_band_pairs(sigs, num_perm, bands, max_bucket),
+            "crosslingual_minhash_candidates"))
 
 
 # r8 silent-empty audit: no wire-dialect form -> remote inputs raise

@@ -26,188 +26,15 @@ All-pairs anything is absent by construction.
 from __future__ import annotations
 
 import random
-import threading
-import weakref
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache import carry, owned_cache
 from ..core import Table
 from ..wire import wire_op
 
-
-# Live registrations per (JVM session identity, canonicalized-plan hash):
-# Spark's CacheManager keys cached data by CANONICALIZED PLAN, so two
-# logically-identical persisted frames (two constructions of the same
-# entry held at once, or two operators persisting the same sub-frame)
-# share ONE JVM cache entry — persist() on the second is a no-op.  A
-# plain per-object finalizer then kills the shared entry when the FIRST
-# frame dies, silently un-caching the survivor (its timed plan degrades
-# to the naive re-derivation — the r15 finding-#9 failure mode, one
-# layer down).  Release therefore refcounts on the plan key and
-# unpersists only when the LAST identical registration dies.
-# Mutations are guarded by _CACHE_LOCK: finalize callbacks run on
-# whichever thread triggers GC, so two concurrent releases of identical
-# frames could interleave their read-modify-write and leak the entry
-# (ADVICE r15).
-_CACHE_REFS: dict = {}
-_CACHE_LOCK = threading.Lock()
-
-
-def _cache_key(df: DataFrame):
-    """Refcount key for a persisted frame: (JVM session identity,
-    semanticHash of the analyzed plan, output dtypes).  semanticHash is
-    32-bit — adding the schema shrinks the collision surface between
-    distinct plans sharing one count (ADVICE r15) without changing the
-    sharing behavior for genuinely identical plans (same plan ⇒ same
-    schema).  Raises on Spark Connect frames (no ``_jdf``); callers
-    fall back to per-object release."""
-    jdf = df._jdf
-    return (jdf.sparkSession().hashCode(),
-            jdf.queryExecution().analyzed().semanticHash(),
-            tuple(df.dtypes))
-
-
-def _retain_cache(holder: DataFrame, cached: DataFrame) -> None:
-    """Keep ``cached``'s persisted blocks alive for as long as ``holder``
-    is reachable.  ``holder`` must be the object the caller actually keeps
-    — the RESULT DataFrame, not the Table wrapper (VERDICT r2: entry
-    queries return ``.df`` and drop the Table immediately, so a
-    Table-keyed finalizer fired *before* the action ran and the corpus
-    pass executed twice).
-
-    Mechanics: ``cached`` rides in ``holder._blaze_caches`` (refcount
-    keeps it alive as long as any holder lives; propagated through
-    derived results via ``carry_caches``), and the unpersist finalizer is
-    attached to ``cached`` ITSELF, firing when the last holder drops it —
-    the JVM handle is captured so the callback does not need the Python
-    wrapper it is finalizing.  Because the JVM cache entry is shared
-    across logically-identical frames, the actual unpersist is gated on
-    ``_CACHE_REFS`` reaching zero for the plan's canonical key."""
-    caches = getattr(holder, "_blaze_caches", None)
-    if caches is None:
-        caches = []
-        holder._blaze_caches = caches
-    if any(c is cached for c in caches):
-        return
-    caches.append(cached)
-    if getattr(cached, "_blaze_release_armed", False):
-        return  # finalizer already registered by another holder
-    try:
-        jdf = cached._jdf  # classic py4j session
-        try:
-            key = _cache_key(cached)
-            with _CACHE_LOCK:
-                _CACHE_REFS[key] = _CACHE_REFS.get(key, 0) + 1
-        except Exception:
-            key = None  # plan hash unavailable: per-object release
-
-        def _release(j=jdf, k=key):
-            try:
-                if k is not None:
-                    with _CACHE_LOCK:
-                        live = _CACHE_REFS.get(k, 1) - 1
-                        if live > 0:
-                            # an identical frame still holds the entry
-                            _CACHE_REFS[k] = live
-                            return
-                        _CACHE_REFS.pop(k, None)
-                j.unpersist(False)
-            except Exception:
-                pass  # session already stopped
-
-        weakref.finalize(cached, _release)
-    except Exception:
-        # Spark Connect: no _jdf.  Fall back to releasing when the holder
-        # dies (the closure pins ``cached``, so cached-keyed finalization
-        # would never fire).  Multiple holders → multiple unpersist calls;
-        # idempotent.
-        def _release_connect(c=cached):
-            try:
-                c.unpersist(False)
-            except Exception:
-                pass
-
-        weakref.finalize(holder, _release_connect)
-    cached._blaze_release_armed = True
-
-
-def carry_caches(out: DataFrame, *upstreams: DataFrame) -> DataFrame:
-    """Propagate scoped caches from upstream result DataFrames onto a
-    derived result, so a chained operator (e.g. LSH candidates → n-gram
-    verify) keeps the signature cache alive until ITS caller is done."""
-    for src in upstreams:
-        for c in getattr(src, "_blaze_caches", ()):
-            _retain_cache(out, c)
-    return out
-
-
-def scoped_persist(owner: Table, cached: DataFrame) -> Table:
-    """Tie a persisted intermediate's lifetime to the result *DataFrame*
-    (``owner.df`` — the object callers keep after dropping the Table):
-    the cached blocks are unpersisted (non-blocking) once no result
-    referencing them remains.  Holding the result keeps re-computes
-    cheap; dropping it frees executor memory instead of leaking cached
-    lineage for the life of the session (ADVICE r1 + VERDICT r2 #1)."""
-    _retain_cache(owner.df, cached)
-    return owner
-
-
-def _is_refcounted(df: DataFrame) -> bool:
-    """Whether ``df``'s plan holds a ``_CACHE_REFS`` registration (a
-    scoped or acquired cache) — as opposed to a raw caller persist the
-    refcount never saw."""
-    try:
-        key = _cache_key(df)
-    except Exception:
-        return False
-    with _CACHE_LOCK:
-        return key in _CACHE_REFS
-
-
-def acquire_cache(df: DataFrame):
-    """Persist ``df`` for an explicit construction scope and return an
-    idempotent release callable (call it in a ``finally``).
-
-    Registration and release go through the same ``_CACHE_REFS``
-    refcount as :func:`_retain_cache`: Spark's CacheManager keys cached
-    data by canonicalized plan, so a raw ``persist()``/``unpersist()``
-    pair around a frame that is logically identical to one persisted
-    elsewhere (e.g. a scoped-persist holder still alive in the caller)
-    would share THEIR JVM entry and then silently un-cache the survivor
-    on release (ADVICE r15 — the pq_neardup_pairs codes persist).  The
-    refcount is incremented BEFORE ``persist()`` so a concurrent
-    finalizer on the identical plan cannot fire into the gap."""
-    try:
-        key = _cache_key(df)
-    except Exception:
-        key = None  # Spark Connect / no plan hash: per-object release
-    if key is not None:
-        with _CACHE_LOCK:
-            _CACHE_REFS[key] = _CACHE_REFS.get(key, 0) + 1
-    df.persist()
-    released = []
-
-    def _release():
-        # test-and-set under the lock: two threads releasing at once
-        # must not both pass the guard and decrement twice
-        with _CACHE_LOCK:
-            if released:
-                return
-            released.append(True)
-            if key is not None:
-                live = _CACHE_REFS.get(key, 1) - 1
-                if live > 0:
-                    _CACHE_REFS[key] = live
-                    return  # an identical frame still holds it
-                _CACHE_REFS.pop(key, None)
-        try:
-            df.unpersist(False)
-        except Exception:
-            pass  # session already stopped
-
-    return _release
 
 # Mersenne prime 2^31-1: (a*h+b) stays under 2^62 — no 64-bit overflow,
 # safe under ANSI arithmetic.
@@ -711,35 +538,35 @@ def dup_span_popularity(t: Table, n: int = 5, text_col: str = "text",
                 .distinct()
                 .groupBy("__key")
                 .agg(F.count(F.lit(1)).alias("__ndocs"))
-                .filter(F.col("__ndocs") >= 2)).persist()
+                .filter(F.col("__ndocs") >= 2))
     per_doc_level = (pos.join(dup_keys, "__key")
                      .groupBy(id_col, "__ndocs")
-                     .agg(F.count(F.lit(1)).alias("__w"))).persist()
-    gram_h = (dup_keys.groupBy("__ndocs")
-              .agg(F.count(F.lit(1)).alias("__g")))
-    win_h = (per_doc_level.groupBy("__ndocs")
-             .agg(F.sum("__w").alias("__w")))
-    doc_h = (per_doc_level.groupBy(id_col)
-             .agg(F.max("__ndocs").alias("__ndocs"))
-             .groupBy("__ndocs")
-             .agg(F.count(F.lit(1)).alias("__d")))
-    merged = (gram_h
-              .join(win_h, "__ndocs", "full")
-              .join(doc_h, "__ndocs", "full")
-              .select(F.col("__ndocs"),
-                      F.coalesce("__g", F.lit(0)).alias("__g"),
-                      F.coalesce("__w", F.lit(0)).alias("__w"),
-                      F.coalesce("__d", F.lit(0)).alias("__d")))
-    w = (Window.orderBy(F.col("__ndocs").desc())
-         .rowsBetween(Window.unboundedPreceding, 0))
-    out = merged.select(
-        F.col("__ndocs").cast("int").alias("min_docs"),
-        F.sum("__g").over(w).cast("long").alias("n_dup_grams"),
-        F.sum("__w").over(w).cast("long").alias("n_dup_windows"),
-        F.sum("__d").over(w).cast("long").alias("n_docs"))
-    _retain_cache(out, dup_keys)
-    _retain_cache(out, per_doc_level)
-    return Table(out, t._name)
+                     .agg(F.count(F.lit(1)).alias("__w")))
+    with owned_cache(dup_keys) as keys_c, \
+            owned_cache(per_doc_level) as level_c:
+        gram_h = (dup_keys.groupBy("__ndocs")
+                  .agg(F.count(F.lit(1)).alias("__g")))
+        win_h = (per_doc_level.groupBy("__ndocs")
+                 .agg(F.sum("__w").alias("__w")))
+        doc_h = (per_doc_level.groupBy(id_col)
+                 .agg(F.max("__ndocs").alias("__ndocs"))
+                 .groupBy("__ndocs")
+                 .agg(F.count(F.lit(1)).alias("__d")))
+        merged = (gram_h
+                  .join(win_h, "__ndocs", "full")
+                  .join(doc_h, "__ndocs", "full")
+                  .select(F.col("__ndocs"),
+                          F.coalesce("__g", F.lit(0)).alias("__g"),
+                          F.coalesce("__w", F.lit(0)).alias("__w"),
+                          F.coalesce("__d", F.lit(0)).alias("__d")))
+        w = (Window.orderBy(F.col("__ndocs").desc())
+             .rowsBetween(Window.unboundedPreceding, 0))
+        out = merged.select(
+            F.col("__ndocs").cast("int").alias("min_docs"),
+            F.sum("__g").over(w).cast("long").alias("n_dup_grams"),
+            F.sum("__w").over(w).cast("long").alias("n_dup_windows"),
+            F.sum("__d").over(w).cast("long").alias("n_docs"))
+        return level_c.transfer(keys_c.transfer(Table(out, t._name)))
 
 
 def minhash_signatures(t: Table, text_col: str = "text", id_col: str = "doc_id",
@@ -805,10 +632,11 @@ def minhash_candidates(t: Table, text_col: str = "text", id_col: str = "doc_id",
     # the hot-bucket count pass and the pair generation — without this the
     # whole corpus pass runs twice (at 100 TB: one pass vs two)
     sigs = minhash_signatures(t, text_col, id_col, num_perm, shingle_k,
-                              seed, max_tokens=max_tokens).df.persist()
-    return scoped_persist(
-        Table(lsh_band_pairs(sigs, num_perm, bands, max_bucket),
-              "minhash_candidates"), sigs)
+                              seed, max_tokens=max_tokens).df
+    with owned_cache(sigs) as c:
+        return c.transfer(Table(
+            lsh_band_pairs(sigs, num_perm, bands, max_bucket),
+            "minhash_candidates"))
 
 
 def lsh_band_pairs(sigs: DataFrame, num_perm: int, bands: int,
@@ -898,7 +726,7 @@ def ngram_jaccard_pairs(t: Table, candidates: Table, text_col: str = "text",
     )
     # the candidate side may carry a scoped signature cache — keep it
     # alive until THIS result is dropped (chained-op propagation)
-    return Table(carry_caches(out, c), "ngram_jaccard_pairs")
+    return Table(carry(out, c), "ngram_jaccard_pairs")
 
 
 def edit_distance_pairs(t: Table, candidates: Table,
@@ -955,7 +783,7 @@ def edit_distance_pairs(t: Table, candidates: Table,
         # failed verification by definition
         out = out.filter((F.col("edit_distance") >= 0)
                          & (F.col("edit_distance") <= max_dist))
-    return Table(carry_caches(out, c), "edit_distance_pairs")
+    return Table(carry(out, c), "edit_distance_pairs")
 
 
 def exact_jaccard_pairs(t: Table, text_col: str = "text",
@@ -978,29 +806,30 @@ def exact_jaccard_pairs(t: Table, text_col: str = "text",
     64-bit form (see :func:`_shingle_hash_df`)."""
     src = _spread(
         t.df.select(F.col(id_col).alias("doc_id"), F.col(text_col)), "doc_id")
-    docs = _shingle_hash_df(src, text_col, shingle_k).persist()
-    sizes = docs.select("doc_id", F.size("sh").alias("sz"))
-    ex = docs.select("doc_id", F.explode("sh").alias("h"))
-    if max_shingle_df is not None:
-        hot = (ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-               .filter(F.col("df") > max_shingle_df).select("h"))
-        ex = ex.join(F.broadcast(hot), "h", "left_anti")
-    inter = (ex.alias("a").join(ex.alias("b"), "h")
-             .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-             .groupBy(F.col("a.doc_id").alias("doc_a"),
-                      F.col("b.doc_id").alias("doc_b"))
-             .agg(F.count(F.lit(1)).alias("inter")))
-    out = (inter
-           .join(sizes.withColumnsRenamed({"doc_id": "doc_a",
-                                           "sz": "sz_a"}), "doc_a")
-           .join(sizes.withColumnsRenamed({"doc_id": "doc_b",
-                                           "sz": "sz_b"}), "doc_b")
-           .withColumn("jaccard", F.col("inter")
-                       / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
-           .filter(F.col("jaccard") >= min_jaccard)
-           .select("doc_a", "doc_b",
-                   F.round("jaccard", 4).alias("jaccard")))
-    return scoped_persist(Table(out, "exact_jaccard_pairs"), docs)
+    docs = _shingle_hash_df(src, text_col, shingle_k)
+    with owned_cache(docs) as c:
+        sizes = docs.select("doc_id", F.size("sh").alias("sz"))
+        ex = docs.select("doc_id", F.explode("sh").alias("h"))
+        if max_shingle_df is not None:
+            hot = (ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
+                   .filter(F.col("df") > max_shingle_df).select("h"))
+            ex = ex.join(F.broadcast(hot), "h", "left_anti")
+        inter = (ex.alias("a").join(ex.alias("b"), "h")
+                 .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+                 .groupBy(F.col("a.doc_id").alias("doc_a"),
+                          F.col("b.doc_id").alias("doc_b"))
+                 .agg(F.count(F.lit(1)).alias("inter")))
+        out = (inter
+               .join(sizes.withColumnsRenamed({"doc_id": "doc_a",
+                                               "sz": "sz_a"}), "doc_a")
+               .join(sizes.withColumnsRenamed({"doc_id": "doc_b",
+                                               "sz": "sz_b"}), "doc_b")
+               .withColumn("jaccard", F.col("inter")
+                           / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
+               .filter(F.col("jaccard") >= min_jaccard)
+               .select("doc_a", "doc_b",
+                       F.round("jaccard", 4).alias("jaccard")))
+        return c.transfer(Table(out, "exact_jaccard_pairs"))
 
 
 def simhash_chunks(lo: Column, hi: Column) -> Column:
@@ -1089,41 +918,42 @@ def simhash_candidates(t: Table, text_col: str = "text", id_col: str = "doc_id",
     inside the array — no self-join."""
     # persist: the token-explode + 64-vote aggregation feeds the hot-chunk
     # count pass and the pair generation — one corpus pass, not two
-    sh = simhash(t, text_col, id_col).df.persist()
-    chunks = sh.select(
-        "doc_id", "sim_lo", "sim_hi",
-        F.explode(simhash_chunks(F.col("sim_lo"), F.col("sim_hi")))
-        .alias("c"),
-    ).select("doc_id", "sim_lo", "sim_hi",
-             F.col("c.ci").alias("ci"), F.col("c.chunk").alias("chunk"))
+    sh = simhash(t, text_col, id_col).df
+    with owned_cache(sh) as c:
+        chunks = sh.select(
+            "doc_id", "sim_lo", "sim_hi",
+            F.explode(simhash_chunks(F.col("sim_lo"), F.col("sim_hi")))
+            .alias("c"),
+        ).select("doc_id", "sim_lo", "sim_hi",
+                 F.col("c.ci").alias("ci"), F.col("c.chunk").alias("chunk"))
 
-    hot = (chunks.groupBy("ci", "chunk")
-           .agg(F.count(F.lit(1)).alias("n"))
-           .filter(F.col("n") > max_bucket).select("ci", "chunk"))
-    cold = chunks.join(F.broadcast(hot), ["ci", "chunk"], "left_anti")
-    grouped = (cold.groupBy("ci", "chunk")
-               .agg(F.array_sort(F.collect_list(
-                   F.struct("doc_id", "sim_lo", "sim_hi"))).alias("docs"))
-               .filter(F.size("docs") >= 2))
+        hot = (chunks.groupBy("ci", "chunk")
+               .agg(F.count(F.lit(1)).alias("n"))
+               .filter(F.col("n") > max_bucket).select("ci", "chunk"))
+        cold = chunks.join(F.broadcast(hot), ["ci", "chunk"], "left_anti")
+        grouped = (cold.groupBy("ci", "chunk")
+                   .agg(F.array_sort(F.collect_list(
+                       F.struct("doc_id", "sim_lo", "sim_hi"))).alias("docs"))
+                   .filter(F.size("docs") >= 2))
 
-    def _pair(x, y):
-        ham = simhash_hamming(x["sim_lo"], x["sim_hi"],
-                              y["sim_lo"], y["sim_hi"])
-        return F.struct(x["doc_id"].alias("doc_a"),
-                        y["doc_id"].alias("doc_b"), ham.alias("hamming"))
+        def _pair(x, y):
+            ham = simhash_hamming(x["sim_lo"], x["sim_hi"],
+                                  y["sim_lo"], y["sim_hi"])
+            return F.struct(x["doc_id"].alias("doc_a"),
+                            y["doc_id"].alias("doc_b"), ham.alias("hamming"))
 
-    pair_arr = F.flatten(F.transform(
-        F.col("docs"),
-        lambda x, i: F.transform(
-            F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-            lambda y: _pair(x, y))))
-    pairs = (
-        grouped.select(F.explode(pair_arr).alias("pr"))
-        .select("pr.doc_a", "pr.doc_b", "pr.hamming")
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-    return scoped_persist(Table(pairs, "simhash_candidates"), sh)
+        pair_arr = F.flatten(F.transform(
+            F.col("docs"),
+            lambda x, i: F.transform(
+                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
+                lambda y: _pair(x, y))))
+        pairs = (
+            grouped.select(F.explode(pair_arr).alias("pr"))
+            .select("pr.doc_a", "pr.doc_b", "pr.hamming")
+            .filter(F.col("hamming") <= max_hamming)
+            .distinct()
+        )
+        return c.transfer(Table(pairs, "simhash_candidates"))
 
 
 # r8 silent-empty audit: no wire-dialect form -> remote inputs raise
@@ -1235,25 +1065,26 @@ def winnow_candidates(t: Table, k: int = 5, w: int = 4,
     if max_bucket < 2:
         raise ValueError(
             f"winnow_candidates: max_bucket must be >= 2, got {max_bucket}")
-    fps = winnow_fingerprints(t, k, w, text_col, id_col).df.persist()
-    hot = (fps.groupBy("gram_hash")
-           .agg(F.count(F.lit(1)).alias("n"))
-           .filter(F.col("n") > max_bucket).select("gram_hash"))
-    cold = fps.join(F.broadcast(hot), "gram_hash", "left_anti")
-    grouped = (cold.select("gram_hash", "doc_id").distinct()
-               .groupBy("gram_hash")
-               .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-               .filter(F.size("docs") >= 2))
-    pair_arr = F.flatten(F.transform(
-        F.col("docs"),
-        lambda x, i: F.transform(
-            F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-            lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")))))
-    pairs = (grouped.select(F.explode(pair_arr).alias("pr"))
-             .groupBy("pr.doc_a", "pr.doc_b")
-             .agg(F.count(F.lit(1)).cast(T.LongType()).alias("n_shared"))
-             .filter(F.col("n_shared") >= min_shared))
-    return scoped_persist(Table(pairs, "winnow_candidates"), fps)
+    fps = winnow_fingerprints(t, k, w, text_col, id_col).df
+    with owned_cache(fps) as c:
+        hot = (fps.groupBy("gram_hash")
+               .agg(F.count(F.lit(1)).alias("n"))
+               .filter(F.col("n") > max_bucket).select("gram_hash"))
+        cold = fps.join(F.broadcast(hot), "gram_hash", "left_anti")
+        grouped = (cold.select("gram_hash", "doc_id").distinct()
+                   .groupBy("gram_hash")
+                   .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
+                   .filter(F.size("docs") >= 2))
+        pair_arr = F.flatten(F.transform(
+            F.col("docs"),
+            lambda x, i: F.transform(
+                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
+                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")))))
+        pairs = (grouped.select(F.explode(pair_arr).alias("pr"))
+                 .groupBy("pr.doc_a", "pr.doc_b")
+                 .agg(F.count(F.lit(1)).cast(T.LongType()).alias("n_shared"))
+                 .filter(F.col("n_shared") >= min_shared))
+        return c.transfer(Table(pairs, "winnow_candidates"))
 
 
 from ..core import _localize_guard as _lg  # noqa: E402

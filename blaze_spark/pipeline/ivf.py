@@ -25,6 +25,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from ..cache import owned_cache
 from ..core import Table
 from ..sources import local_frame
 
@@ -122,11 +123,12 @@ def kmeans_fit(corpus: Table, k: int = 16, iters: int = 5,
     (VERDICT r5 #6): each Lloyd iteration re-reads it for the assign
     UDF, so without the persist a 5-iteration fit is 5 full corpus
     scans — at 100 TB that is the difference between one
-    materialization and five.  Released in a ``finally`` so a failed
-    iteration never leaks executor memory.  The deterministic init is
-    a TakeOrdered over the SAME persisted frame (r16, guide §2.4):
-    TakeOrdered computes every partition to find the global smallest
-    ids, so the one init job also FILLS the cache — the previous shape
+    materialization and five.  Held in an ``owned_cache`` construction
+    scope, so a failed iteration never leaks executor memory.  The
+    deterministic init is a TakeOrdered over the SAME persisted frame
+    (r16, guide §2.4): TakeOrdered computes every partition to find the
+    global smallest ids, so the one init job also FILLS the cache — the
+    previous shape
     scanned the corpus once for the init and a second time for the
     first iteration's cache fill.  The cached projection keeps the scan
     partitioning either way, so the per-partition partial ``avg``
@@ -139,8 +141,8 @@ def kmeans_fit(corpus: Table, k: int = 16, iters: int = 5,
     materialization anywhere in the fit path, so the fit is safe on the
     FULL corpus, not just on samples."""
     base = corpus.df.select(F.col(id_col).alias("__kid"),
-                            F.col(vec_col).alias("v")).persist()
-    try:
+                            F.col(vec_col).alias("v"))
+    with owned_cache(base):
         init = (base.orderBy("__kid").limit(k)
                 .select("v").toPandas()["v"])
         centroids = np.stack(init.to_numpy()).astype(np.float64)
@@ -163,8 +165,6 @@ def kmeans_fit(corpus: Table, k: int = 16, iters: int = 5,
             if np.allclose(new, centroids, atol=1e-9):
                 break
             centroids = new
-    finally:
-        base.unpersist()
     return centroids
 
 

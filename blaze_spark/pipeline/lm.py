@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache import carry, owned_cache
 from ..core import Table
 from ..sources import local_frame
 from .curation import _tokens
@@ -775,130 +776,126 @@ def ngram_lm_logprob(t: Table, reference: Table | None = None,
     # scoring pass — the fit's every (kind, bucket) row re-hashes a
     # bucket the scoring frame already computes, so derive the counts
     # from the persisted frame instead of a second scan (r15, guide
-    # §2.4; the persist is scoped to the result via _retain_cache).
+    # §2.4; the cache is owned by the result via owned_cache).
     # Streaming frames keep the two-pass plan: persist() needs a
     # batch plan, and the streaming entry points score via counts=.
+    ladder_args = backoff is not None or interpolate is not None
+    kn_args = kneser_ney is not None
     ex = None
     if counts is None and reference is None and not t.df.isStreaming:
-        ladder_args = backoff is not None or interpolate is not None
-        kn_args = kneser_ney is not None
         ex = _score_frame(
             t.df, text_col, id_col, n_buckets, n,
             range(n - 1, 1, -1) if (ladder_args or kn_args) else (),
-            ladder_args or kn_args, tokenizer).persist()
-        counts = _self_fit_counts(ex, n, ladder_args, kn_args)
-    model = _lm_model(t, reference, counts, text_col, n_buckets, n,
-                      smoothing, backoff, _fn_name, tokenizer,
-                      interpolate, kneser_ney)
-    self_fit = ex is not None
-    if model[0] == "kn":
-        out = _logprob_kn(t, model, text_col, id_col, n_buckets, n,
-                          smoothing, tokenizer, _ex=ex)
+            ladder_args or kn_args, tokenizer)
+    with owned_cache(ex) as c:
         if ex is not None:
-            from .dedup import _retain_cache
-            _retain_cache(out, ex)
-        return out
+            counts = _self_fit_counts(ex, n, ladder_args, kn_args)
+        model = _lm_model(t, reference, counts, text_col, n_buckets, n,
+                          smoothing, backoff, _fn_name, tokenizer,
+                          interpolate, kneser_ney)
+        if model[0] == "kn":
+            return c.transfer(_logprob_kn(
+                t, model, text_col, id_col, n_buckets, n, smoothing,
+                tokenizer, _ex=ex))
 
-    spark = t.df.sparkSession
-    kind = model[0]
-    ln_g, ln_c = model[1], model[2]
-    lng = local_frame(
-        spark, [(int(b), v) for b, v in ln_g.items()],
-        "bucket long, lng double")
-    lnc = local_frame(
-        spark, [(int(b), v) for b, v in ln_c.items()],
-        "bucket long, lnc double")
-    laddered = kind in ("backoff", "interp")
-    levels = model[5] if laddered else []
-    if ex is None:
-        ex = _score_frame(t.df, text_col, id_col, n_buckets, n,
-                          [k for k, _, _ in levels], laddered,
-                          tokenizer)
-    joined = (ex
-              .join(F.broadcast(lng), ex["gb"] == lng["bucket"], "left")
-              .drop(lng["bucket"])
-              .join(F.broadcast(lnc), ex["cb"] == lnc["bucket"], "left")
-              .drop(lnc["bucket"]))
-    if laddered:
-        ln_u, miss_u = model[3], model[4]
-        for k, ln_gk, ln_ck in levels:
-            lgk = local_frame(
-                spark, [(int(b), v) for b, v in ln_gk.items()],
-                f"bucket long, lng{k} double")
-            lck = local_frame(
-                spark, [(int(b), v) for b, v in ln_ck.items()],
-                f"bucket long, lnc{k} double")
+        spark = t.df.sparkSession
+        kind = model[0]
+        ln_g, ln_c = model[1], model[2]
+        lng = local_frame(
+            spark, [(int(b), v) for b, v in ln_g.items()],
+            "bucket long, lng double")
+        lnc = local_frame(
+            spark, [(int(b), v) for b, v in ln_c.items()],
+            "bucket long, lnc double")
+        laddered = kind in ("backoff", "interp")
+        levels = model[5] if laddered else []
+        if ex is None:
+            ex = _score_frame(t.df, text_col, id_col, n_buckets, n,
+                              [k for k, _, _ in levels], laddered,
+                              tokenizer)
+        joined = (ex
+                  .join(F.broadcast(lng), ex["gb"] == lng["bucket"], "left")
+                  .drop(lng["bucket"])
+                  .join(F.broadcast(lnc), ex["cb"] == lnc["bucket"], "left")
+                  .drop(lnc["bucket"]))
+        if laddered:
+            ln_u, miss_u = model[3], model[4]
+            for k, ln_gk, ln_ck in levels:
+                lgk = local_frame(
+                    spark, [(int(b), v) for b, v in ln_gk.items()],
+                    f"bucket long, lng{k} double")
+                lck = local_frame(
+                    spark, [(int(b), v) for b, v in ln_ck.items()],
+                    f"bucket long, lnc{k} double")
+                joined = (joined
+                          .join(F.broadcast(lgk),
+                                joined[f"gb{k}"] == lgk["bucket"], "left")
+                          .drop(lgk["bucket"])
+                          .join(F.broadcast(lck),
+                                joined[f"cb{k}"] == lck["bucket"], "left")
+                          .drop(lck["bucket"]))
+            lnu = local_frame(
+                spark, [(int(b), v) for b, v in ln_u.items()],
+                "bucket long, lnu double")
             joined = (joined
-                      .join(F.broadcast(lgk),
-                            joined[f"gb{k}"] == lgk["bucket"], "left")
-                      .drop(lgk["bucket"])
-                      .join(F.broadcast(lck),
-                            joined[f"cb{k}"] == lck["bucket"], "left")
-                      .drop(lck["bucket"]))
-        lnu = local_frame(
-            spark, [(int(b), v) for b, v in ln_u.items()],
-            "bucket long, lnu double")
-        joined = (joined
-                  .join(F.broadcast(lnu),
-                        joined["ub"] == lnu["bucket"], "left")
-                  .drop(lnu["bucket"]))
-        back = F.coalesce(F.col("lnu"), F.lit(miss_u))
-        if kind == "interp":
-            # Jelinek–Mercer mixture chain, lowest order first: the
-            # unigram base is always present; an evidence-less order
-            # mixes in 0 (its λ-mass falls through).  exp/ln per gram
-            # — still codegen, and the ln() tables stay shared with
-            # backoff so the two schemes cannot drift.
-            lam = model[6]
-            p = F.exp(back)
-            for k, _, _ in reversed(levels):      # ascending 2..n−1
-                mle = F.when(
-                    F.col(f"lng{k}").isNotNull()
-                    & F.col(f"lnc{k}").isNotNull(),
-                    F.exp(F.col(f"lng{k}") - F.col(f"lnc{k}"))
+                      .join(F.broadcast(lnu),
+                            joined["ub"] == lnu["bucket"], "left")
+                      .drop(lnu["bucket"]))
+            back = F.coalesce(F.col("lnu"), F.lit(miss_u))
+            if kind == "interp":
+                # Jelinek–Mercer mixture chain, lowest order first: the
+                # unigram base is always present; an evidence-less order
+                # mixes in 0 (its λ-mass falls through).  exp/ln per gram
+                # — still codegen, and the ln() tables stay shared with
+                # backoff so the two schemes cannot drift.
+                lam = model[6]
+                p = F.exp(back)
+                for k, _, _ in reversed(levels):      # ascending 2..n−1
+                    mle = F.when(
+                        F.col(f"lng{k}").isNotNull()
+                        & F.col(f"lnc{k}").isNotNull(),
+                        F.exp(F.col(f"lng{k}") - F.col(f"lnc{k}"))
+                    ).otherwise(F.lit(0.0))
+                    p = F.lit(lam) * mle + F.lit(1.0 - lam) * p
+                mle_n = F.when(
+                    F.col("lng").isNotNull() & F.col("lnc").isNotNull(),
+                    F.exp(F.col("lng") - F.col("lnc"))
                 ).otherwise(F.lit(0.0))
-                p = F.lit(lam) * mle + F.lit(1.0 - lam) * p
-            mle_n = F.when(
-                F.col("lng").isNotNull() & F.col("lnc").isNotNull(),
-                F.exp(F.col("lng") - F.col("lnc"))
-            ).otherwise(F.lit(0.0))
-            per_gram = F.log(F.lit(lam) * mle_n
-                             + F.lit(1.0 - lam) * p)
-        elif not levels:
-            # n == 2: the r12 expression, verbatim
-            per_gram = F.when(
-                F.col("lng").isNotNull() & F.col("lnc").isNotNull(),
-                F.greatest(F.col("lng") - F.col("lnc"), back)
-            ).otherwise(back)
+                per_gram = F.log(F.lit(lam) * mle_n
+                                 + F.lit(1.0 - lam) * p)
+            elif not levels:
+                # n == 2: the r12 expression, verbatim
+                per_gram = F.when(
+                    F.col("lng").isNotNull() & F.col("lnc").isNotNull(),
+                    F.greatest(F.col("lng") - F.col("lnc"), back)
+                ).otherwise(back)
+            else:
+                # the order ladder: greatest() SKIPS NULL operands, so an
+                # evidence-less order simply falls out of the max; the
+                # unigram floor is always non-null.  Each level's λ-hop
+                # multiplier is already folded into its gram table.
+                cand = [F.when(
+                    F.col("lng").isNotNull() & F.col("lnc").isNotNull(),
+                    F.col("lng") - F.col("lnc"))]
+                for k, _, _ in levels:
+                    cand.append(F.when(
+                        F.col(f"lng{k}").isNotNull()
+                        & F.col(f"lnc{k}").isNotNull(),
+                        F.col(f"lng{k}") - F.col(f"lnc{k}")))
+                cand.append(back)
+                per_gram = F.greatest(*cand)
         else:
-            # the order ladder: greatest() SKIPS NULL operands, so an
-            # evidence-less order simply falls out of the max; the
-            # unigram floor is always non-null.  Each level's λ-hop
-            # multiplier is already folded into its gram table.
-            cand = [F.when(
-                F.col("lng").isNotNull() & F.col("lnc").isNotNull(),
-                F.col("lng") - F.col("lnc"))]
-            for k, _, _ in levels:
-                cand.append(F.when(
-                    F.col(f"lng{k}").isNotNull()
-                    & F.col(f"lnc{k}").isNotNull(),
-                    F.col(f"lng{k}") - F.col(f"lnc{k}")))
-            cand.append(back)
-            per_gram = F.greatest(*cand)
-    else:
-        _, _, _, miss_g, miss_c = model
-        per_gram = (F.coalesce(F.col("lng"), F.lit(miss_g))
-                    - F.coalesce(F.col("lnc"), F.lit(miss_c)))
-    scored = (joined
-              .groupBy(id_col, "n_grams")
-              .agg(F.sum(F.when(F.col("ev"), per_gram)
-                         .otherwise(F.lit(0.0))).alias("s")))
-    out = scored.select(F.col(id_col), F.col("n_grams"),
-                        *_lm_exports())
-    if self_fit:
-        from .dedup import _retain_cache
-        _retain_cache(out, ex)
-    return out
+            _, _, _, miss_g, miss_c = model
+            per_gram = (F.coalesce(F.col("lng"), F.lit(miss_g))
+                        - F.coalesce(F.col("lnc"), F.lit(miss_c)))
+        scored = (joined
+                  .groupBy(id_col, "n_grams")
+                  .agg(F.sum(F.when(F.col("ev"), per_gram)
+                             .otherwise(F.lit(0.0))).alias("s")))
+
+        out = scored.select(F.col(id_col), F.col("n_grams"),
+                            *_lm_exports())
+        return c.transfer(out)
 
 
 def _logprob_kn(t: Table, model, text_col: str, id_col: str,
@@ -1038,8 +1035,7 @@ def perplexity_filter(t: Table, reference: Table | None = None,
     if min_ppl is not None:
         cond = cond & (key >= min_ppl)
     kept = scores.filter(F.col("ppl").isNotNull() & cond)
-    from .dedup import carry_caches
-    return carry_caches(t.df.join(kept, id_col, "inner"), scores)
+    return carry(t.df.join(kept, id_col, "inner"), scores)
 
 
 def perplexity_buckets(t: Table, reference: Table | None = None,
@@ -1053,8 +1049,7 @@ def perplexity_buckets(t: Table, reference: Table | None = None,
                        backoff: float | None = None,
                        tokenizer=None,
                        interpolate: float | None = None,
-                       kneser_ney=None,
-                       persist: bool = True) -> DataFrame:
+                       kneser_ney=None) -> DataFrame:
     """CCNet's head/middle/tail split (Wenzek et al. 2020): score every
     document's perplexity under the reference LM, then bucket by the
     corpus' own ppl quantiles — ``by_col="lang"`` reproduces the paper's
@@ -1071,8 +1066,8 @@ def perplexity_buckets(t: Table, reference: Table | None = None,
     :func:`perplexity_filter` posture).
 
     Scale shape: the scorer's one corpus scan produces a SKINNY
-    (id, exports) relation that is persisted (``persist=True``, scoped
-    to the result's lifetime) because two consumers read it — the
+    (id, exports) relation that is persisted (owned by the result,
+    released with it) because two consumers read it — the
     per-group percentile aggregation (shuffles only (group, ppl) pairs
     onto a ≤ #groups key space) and the final join back onto ``t``.
     The thresholds relation is #groups rows and broadcasts; bucketing
@@ -1118,37 +1113,32 @@ def perplexity_buckets(t: Table, reference: Table | None = None,
         backoff=backoff, tokenizer=tokenizer, interpolate=interpolate,
         kneser_ney=kneser_ney, _fn_name="perplexity_buckets")
     scored = scores.filter(F.col("ppl").isNotNull())
-    if persist:
-        scored = scored.persist()
-    if by_col is not None:
-        keyed = t.df.select(id_col, by_col).join(scored, id_col)
-        thr = (keyed.groupBy(by_col)
-               .agg(F.percentile("ppl", qs).alias("__thr")))
-    else:
-        thr = scored.groupBy().agg(
-            F.percentile("ppl", qs).alias("__thr"))
-    joined = t.df.join(scored, id_col, "inner")
-    joined = (joined.join(F.broadcast(thr), by_col)
-              if by_col is not None
-              else joined.crossJoin(F.broadcast(thr)))
-    bucket = F.when(F.col("ppl") <= F.col("__thr")[0],
-                    F.lit(labels[0]))
-    for i in range(1, len(qs)):
-        bucket = bucket.when(F.col("ppl") <= F.col("__thr")[i],
-                             F.lit(labels[i]))
-    bucket = bucket.otherwise(F.lit(labels[-1]))
-    # pin the output order (joins reorder around their keys): the id,
-    # the corpus' remaining columns, the four LM exports, the bucket —
-    # the perplexity_filter convention + ppl_bucket
-    cols = ([id_col]
-            + [c for c in t.df.columns if c != id_col]
-            + [name for name, _ in _LM_SCHEMA] + ["ppl_bucket"])
-    out = joined.withColumn("ppl_bucket", bucket).select(*cols)
-    from .dedup import _retain_cache, carry_caches
-    carry_caches(out, scores)
-    if persist:
-        _retain_cache(out, scored)
-    return out
+    with owned_cache(scored) as owner:
+        if by_col is not None:
+            keyed = t.df.select(id_col, by_col).join(scored, id_col)
+            thr = (keyed.groupBy(by_col)
+                   .agg(F.percentile("ppl", qs).alias("__thr")))
+        else:
+            thr = scored.groupBy().agg(
+                F.percentile("ppl", qs).alias("__thr"))
+        joined = t.df.join(scored, id_col, "inner")
+        joined = (joined.join(F.broadcast(thr), by_col)
+                  if by_col is not None
+                  else joined.crossJoin(F.broadcast(thr)))
+        bucket = F.when(F.col("ppl") <= F.col("__thr")[0],
+                        F.lit(labels[0]))
+        for i in range(1, len(qs)):
+            bucket = bucket.when(F.col("ppl") <= F.col("__thr")[i],
+                                 F.lit(labels[i]))
+        bucket = bucket.otherwise(F.lit(labels[-1]))
+        # pin the output order (joins reorder around their keys): the id,
+        # the corpus' remaining columns, the four LM exports, the bucket —
+        # the perplexity_filter convention + ppl_bucket
+        cols = ([id_col]
+                + [c for c in t.df.columns if c != id_col]
+                + [name for name, _ in _LM_SCHEMA] + ["ppl_bucket"])
+        out = joined.withColumn("ppl_bucket", bucket).select(*cols)
+        return owner.transfer(carry(out, scores))
 
 
 # ---------------------------------------------------------------------------
@@ -1380,12 +1370,12 @@ def perplexity_buckets(t: Table, reference: Table | None = None,
                        smoothing: float = 1.0,
                        backoff: float | None = None, tokenizer=None,
                        interpolate: float | None = None,
-                       kneser_ney=None, persist: bool = True):
+                       kneser_ney=None):
     if _client_of(t) is None:
         return _local_perplexity_buckets(
             t, reference, counts, quantiles, labels, by_col, text_col,
             id_col, n_buckets, n, smoothing, backoff, tokenizer,
-            interpolate, kneser_ney, persist)
+            interpolate, kneser_ney)
     qs = [float(q) for q in quantiles]
     if not qs or any(not 0.0 < q < 1.0 for q in qs) \
             or any(b <= a for a, b in zip(qs, qs[1:])):
@@ -1404,8 +1394,6 @@ def perplexity_buckets(t: Table, reference: Table | None = None,
     args[3]["labels"] = [str(x) for x in labels]
     if by_col is not None:
         args[3]["by_col"] = by_col
-    if not persist:
-        args[3]["persist"] = False
     node = {"op": "perplexity_buckets", "args": args}
     empty = local_frame(t.df.sparkSession, [], T.StructType(
         [t.df.schema[id_col]]

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache import owned_cache
 from ..core import Table
 from ..sources import local_frame
 from ..wire import wire_op
@@ -216,40 +217,39 @@ def pack_sequences(t: Table, budget: int, text_col: str = "text",
         # global order)
         pid = pid + F.coalesce(
             (F.col(order_by) > F.lit(b)).cast("int"), F.lit(0))
+    from pyspark.sql import Window
+
     # persist the tokenized+bucketed projection: the totals job and the
     # final plan otherwise EACH scan the corpus.  Purely a perf lever —
     # pid/n_tokens are deterministic projections, so a recompute (cache
     # eviction, dropped holder) reproduces identical values.
-    bucketed = base.withColumn("__pid", pid).persist()
+    bucketed = base.withColumn("__pid", pid)
+    with owned_cache(bucketed) as c:
+        w = (Window.partitionBy("__pid").orderBy(order_by)
+             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        local = bucketed.withColumn("__cum", F.sum(cost).over(w))
 
-    from pyspark.sql import Window
-    w = (Window.partitionBy("__pid").orderBy(order_by)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    local = bucketed.withColumn("__cum", F.sum(cost).over(w))
-
-    # one row per bucket: (pid, total) — tiny, driver-safe; bucket ids
-    # are ordinal in key order by construction
-    totals = (bucketed.groupBy("__pid")
-              .agg(F.sum(cost).alias("tot"))
-              .collect())
-    totals.sort(key=lambda r: r["__pid"])
-    rows, acc = [], 0
-    for r in totals:
-        rows.append((int(r["__pid"]), acc))
-        acc += int(r["tot"])
-    off_df = local_frame(spark, rows, "__pid int, __off long")
-    out = (local.join(F.broadcast(off_df), "__pid", "left")
-           .withColumn("tok_start",
-                       (F.col("__cum") - F.col(cost)
-                        + F.coalesce(F.col("__off"), F.lit(0)))
-                       .cast("long"))
-           .withColumn("shard",
-                       F.floor(F.col("tok_start") / F.lit(budget))
-                       .cast("long"))
-           .drop("__pid", "__cum", "__off", "__cost"))
-    from .dedup import scoped_persist
-
-    return scoped_persist(Table(out, t._name), bucketed)
+        # one row per bucket: (pid, total) — tiny, driver-safe; bucket ids
+        # are ordinal in key order by construction
+        totals = (bucketed.groupBy("__pid")
+                  .agg(F.sum(cost).alias("tot"))
+                  .collect())
+        totals.sort(key=lambda r: r["__pid"])
+        rows, acc = [], 0
+        for r in totals:
+            rows.append((int(r["__pid"]), acc))
+            acc += int(r["tot"])
+        off_df = local_frame(spark, rows, "__pid int, __off long")
+        out = (local.join(F.broadcast(off_df), "__pid", "left")
+               .withColumn("tok_start",
+                           (F.col("__cum") - F.col(cost)
+                            + F.coalesce(F.col("__off"), F.lit(0)))
+                           .cast("long"))
+               .withColumn("shard",
+                           F.floor(F.col("tok_start") / F.lit(budget))
+                           .cast("long"))
+               .drop("__pid", "__cum", "__off", "__cost"))
+        return c.transfer(Table(out, t._name))
 
 
 @wire_op("chunk_documents", tables=("t",),

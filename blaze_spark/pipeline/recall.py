@@ -28,8 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import carry
 from ..core import Table
-from .dedup import carry_caches
 
 
 def _df(t) -> DataFrame:
@@ -61,7 +61,7 @@ def pair_recall(truth, found, a: str = "doc_a", b: str = "doc_b") -> Table:
         F.round(F.col("n_hit") / F.col("n_found"), 4).alias("precision"))
     # either side may carry a scoped signature/vector cache — keep them
     # alive until this result is dropped (chained-op propagation)
-    return Table(carry_caches(out, tdf, fdf), "pair_recall")
+    return Table(carry(out, tdf, fdf), "pair_recall")
 
 
 def topk_recall(truth, found, query_col: str = "query_id",

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..cache import owned_cache
 from ..core import Table
 from ..sources import local_frame
 from ..wire import _client_of, _require_tree, _wire_result
@@ -88,8 +89,7 @@ def bm25_topk(corpus: Table, queries, k: int = 10,
               query_id_col: str = "query_id",
               query_text_col: str = "query",
               max_queries: int = 10_000,
-              round_to: int = 6,
-              persist: bool = True) -> Table:
+              round_to: int = 6) -> Table:
     """Exact BM25 top-k documents per keyword query (Robertson &
     Zaragoza 2009, the Okapi ``k1``/``b`` form with the non-negative
     "plus-one" idf ``ln(1 + (N − df + ½)/(df + ½))`` — Lucene's
@@ -115,15 +115,14 @@ def bm25_topk(corpus: Table, queries, k: int = 10,
     :func:`~blaze_spark.pipeline.similarity.cosine_topk` needs its
     ANN escape hatch.
 
-    ``persist=True`` (default) caches the skinny hits relation between
-    its two consumers (df aggregation, scoring join); without it Spark
+    The skinny hits relation is cached between its two consumers (df
+    aggregation, scoring join), owned by the result; without it Spark
     re-executes the whole tokenize→explode subtree — a THIRD corpus
-    scan, which at 100 TB is a second full read of the corpus.  The
-    trade is measured and honest: at the gate SFs the recompute is
-    CHEAPER than the cache materialization (sf0.1 interleaved A/B:
-    ~1.9 s no-persist vs ~2.2 s persist min-floors — the corpus is
-    40 MB there), so small-corpus callers can pass ``persist=False``;
-    the default serves the scale the engine is built for."""
+    scan, which at 100 TB is a second full read of the corpus.  At the
+    gate SFs the recompute is cheaper than the cache materialization
+    (sf0.1 interleaved A/B: ~1.9 s no-persist vs ~2.2 s persist
+    min-floors — the corpus is 40 MB there); the cache serves the
+    scale the engine is built for."""
     if k < 1:
         raise ValueError(f"bm25_topk: k must be >= 1, got {k}")
     if k1 <= 0:
@@ -172,42 +171,38 @@ def bm25_topk(corpus: Table, queries, k: int = 10,
     # shuffle.  hits is the skinny (doc, term, tf, dl) relation
     # (docs × query-vocabulary, not docs × vocabulary), scoped to the
     # result's lifetime (the perplexity_buckets posture).
-    if persist:
-        hits = hits.persist()
-    dfreq = hits.groupBy("term").agg(
-        F.count(F.lit(1)).cast(T.LongType()).alias("df"))
-    idf = F.log(F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5)))
-    contrib = (idf * F.col("tf") * F.lit(k1 + 1.0)
-               / (F.col("tf") + F.lit(k1)
-                  * (F.lit(1.0 - b)
-                     + F.lit(b) * F.col("dl") / F.col("avgdl"))))
-    scored = (hits.join(F.broadcast(dfreq), "term")
-              .crossJoin(F.broadcast(stats))
-              .withColumn("c_micro",
-                          F.round(contrib * _MICRO, 0)
-                          .cast(T.LongType()))
-              .join(F.broadcast(qterms), "term")
-              .groupBy("query_id", "doc_id")
-              .agg(F.sum("c_micro").alias("s_micro")))
-    local_w = Window.partitionBy(
-        "query_id", F.pmod(F.xxhash64("doc_id"), F.lit(_SALT))).orderBy(
-        F.col("s_micro").desc(), F.col("doc_id"))
-    final_w = Window.partitionBy("query_id").orderBy(
-        F.col("s_micro").desc(), F.col("doc_id"))
-    out = (scored
-           .withColumn("__lr", F.row_number().over(local_w))
-           .filter(F.col("__lr") <= k)
-           .withColumn("__r", F.row_number().over(final_w))
-           .filter(F.col("__r") <= k)
-           .select("query_id", "doc_id",
-                   (F.round(F.col("s_micro") / F.lit(float(_MICRO)),
-                            round_to) + F.lit(0.0)).alias("score")))
-    if persist:
-        from .dedup import _retain_cache
-        _retain_cache(out, hits)
-    return Table(out, "bm25_topk")
+    with owned_cache(hits) as c:
+        dfreq = hits.groupBy("term").agg(
+            F.count(F.lit(1)).cast(T.LongType()).alias("df"))
+        idf = F.log(F.lit(1.0)
+                    + (F.col("n_docs") - F.col("df") + F.lit(0.5))
+                    / (F.col("df") + F.lit(0.5)))
+        contrib = (idf * F.col("tf") * F.lit(k1 + 1.0)
+                   / (F.col("tf") + F.lit(k1)
+                      * (F.lit(1.0 - b)
+                         + F.lit(b) * F.col("dl") / F.col("avgdl"))))
+        scored = (hits.join(F.broadcast(dfreq), "term")
+                  .crossJoin(F.broadcast(stats))
+                  .withColumn("c_micro",
+                              F.round(contrib * _MICRO, 0)
+                              .cast(T.LongType()))
+                  .join(F.broadcast(qterms), "term")
+                  .groupBy("query_id", "doc_id")
+                  .agg(F.sum("c_micro").alias("s_micro")))
+        local_w = Window.partitionBy(
+            "query_id", F.pmod(F.xxhash64("doc_id"), F.lit(_SALT))
+        ).orderBy(F.col("s_micro").desc(), F.col("doc_id"))
+        final_w = Window.partitionBy("query_id").orderBy(
+            F.col("s_micro").desc(), F.col("doc_id"))
+        out = (scored
+               .withColumn("__lr", F.row_number().over(local_w))
+               .filter(F.col("__lr") <= k)
+               .withColumn("__r", F.row_number().over(final_w))
+               .filter(F.col("__r") <= k)
+               .select("query_id", "doc_id",
+                       (F.round(F.col("s_micro") / F.lit(float(_MICRO)),
+                                round_to) + F.lit(0.0)).alias("score")))
+        return c.transfer(Table(out, "bm25_topk"))
 
 
 # ---------------------------------------------------------------------------
@@ -230,8 +225,7 @@ def bm25_topk(corpus: Table, queries, k: int = 10,
               query_id_col: str = "query_id",
               query_text_col: str = "query",
               max_queries: int = 10_000,
-              round_to: int = 6,
-              persist: bool = True) -> Table:
+              round_to: int = 6) -> Table:
     if _client_of(corpus) is None:
         if isinstance(queries, Table) and _client_of(queries) is not None:
             raise TypeError(
@@ -240,7 +234,7 @@ def bm25_topk(corpus: Table, queries, k: int = 10,
                 "first (or register the corpus on the same server)")
         return _local_bm25_topk(corpus, queries, k, k1, b, text_col,
                                 id_col, query_id_col, query_text_col,
-                                max_queries, round_to, persist)
+                                max_queries, round_to)
     # guard-before-POST: scalar contract errors surface locally
     if k < 1:
         raise ValueError(f"bm25_topk: k must be >= 1, got {k}")
@@ -291,8 +285,6 @@ def bm25_topk(corpus: Table, queries, k: int = 10,
           "query_text_col": query_text_col, "round_to": int(round_to)}
     if max_queries is None:
         kw["max_queries"] = None
-    if not persist:
-        kw["persist"] = False
     node = {"op": "bm25_topk",
             "args": [_require_tree(corpus, "bm25_topk"), enc, kw]}
     empty = local_frame(corpus.df.sparkSession, [], T.StructType([

@@ -46,6 +46,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache import owned_cache
 from ..core import Table
 from ..sources import local_frame
 from .curation import _tokens, ngram_array
@@ -472,7 +473,6 @@ class TrainedQualityModel:
 def train_quality_classifier(t: Table, label, text_col: str = "text",
                              n_buckets: int = 4096, n: int = 1,
                              epochs: int = 3, lr: float = 4.0,
-                             persist: bool = False,
                              init_intercept: bool = False,
                              lr_decay: float = 1.0
                              ) -> TrainedQualityModel:
@@ -528,8 +528,9 @@ def train_quality_classifier(t: Table, label, text_col: str = "text",
     Convergence guidance (measured on the fixture corpora): a
     strongly separable label (disjoint vocabularies) separates in 2-3
     epochs; a WEAK signal (one informative token among dozens, ~10%
-    positive class) needs ~100 epochs at lr 1-2 — use ``persist=True``
-    so a long fit costs one tokenization, not one per epoch.  Where
+    positive class) needs ~100 epochs at lr 1-2; a multi-epoch fit
+    caches its features, so it costs one tokenization, not one per
+    epoch.  Where
     the aids pay (pinned fixture): on the 10%-positive mixture corpus
     the base-rate start reaches a mean-residual at epoch 10 that the
     zero start needs ~3× the epochs to match — at 100 TB each epoch
@@ -551,10 +552,10 @@ def train_quality_classifier(t: Table, label, text_col: str = "text",
     ONE map-side-combinable aggregation on ≤ n_buckets+1 keys; the
     driver loop touches only the bounded (bucket, gradient) relation
     (the tokenizer_train.py split applied to a linear model).  Nothing
-    driver-side grows with the corpus.  ``persist=True`` caches the
-    (y, buckets) projection across epochs — one tokenization total
-    instead of one per epoch — when the cluster has the memory/disk
-    for it."""
+    driver-side grows with the corpus.  When the fit reads the
+    (y, buckets) projection more than once (``epochs + init_intercept
+    > 1``) it is cached across the reads — one tokenization total
+    instead of one per epoch."""
     _validate_features(n_buckets, n)
     if epochs < 1:
         raise ValueError(f"epochs must be >= 1, got {epochs}")
@@ -575,12 +576,12 @@ def train_quality_classifier(t: Table, label, text_col: str = "text",
     feats = _spread(t.df, text_col).select(y, F.coalesce(
         ngram_buckets(c, n_buckets, n),
         F.array().cast(T.ArrayType(T.LongType()))).alias("bks"))
-    if persist:
-        feats = feats.persist()
     w: dict = {}
     b0 = 0
     history: list = []
-    try:
+    # each epoch (and the init count pass) reads feats: cache it when
+    # it is read more than once
+    with owned_cache(feats if epochs + init_intercept > 1 else None):
         if init_intercept:
             import math
 
@@ -642,9 +643,6 @@ def train_quality_classifier(t: Table, label, text_col: str = "text",
                     w[b] = nw
                 else:
                     w.pop(b, None)
-    finally:
-        if persist:
-            feats.unpersist()
     return TrainedQualityModel(w, b0, n_buckets, n, history)
 
 
@@ -1241,12 +1239,11 @@ def dsir_log_weights(raw: Table, target: Table | None = None,
 def train_quality_classifier(t: Table, label, text_col: str = "text",
                              n_buckets: int = 4096, n: int = 1,
                              epochs: int = 3, lr: float = 4.0,
-                             persist: bool = False,
                              init_intercept: bool = False,
                              lr_decay: float = 1.0):
     if _client_of(t) is None:
         return _local_train_quality_classifier(
-            t, label, text_col, n_buckets, n, epochs, lr, persist,
+            t, label, text_col, n_buckets, n, epochs, lr,
             init_intercept, lr_decay)
     # the fit is EAGER (a driver epoch loop), so the remote form is
     # eager too: ONE round trip runs the whole loop where the corpus
@@ -1262,8 +1259,7 @@ def train_quality_classifier(t: Table, label, text_col: str = "text",
     if not 0.0 < lr_decay <= 1.0:
         raise ValueError(f"lr_decay must be in (0, 1], got {lr_decay}")
     kw = {"text_col": text_col, "n_buckets": int(n_buckets),
-          "n": int(n), "epochs": int(epochs),
-          "lr": float(lr), "persist": bool(persist)}
+          "n": int(n), "epochs": int(epochs), "lr": float(lr)}
     # the r15 convergence aids ride the wire only when engaged, so
     # default-fit trees stay readable by pre-r15 servers
     if init_intercept:

@@ -20,6 +20,7 @@ from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache import owned_cache
 from ..core import Table
 from ..sources import local_frame
 
@@ -326,18 +327,24 @@ def embedding_neardup_pairs(corpus: Table, threshold: float = 0.9,
     c = corpus.df.select(F.col(id_col).alias("vid"),
                          F.col(vec_col).alias("v"),
                          _norm(F.col(vec_col)).alias("n"))
-    if not exact:
-        # the LSH path reads the corpus repeatedly (param count, signature
-        # pass, and the two vector re-joins) — persist ONCE, scoped to the
-        # returned result's lifetime (see dedup._retain_cache)
-        c = c.persist()
+
+    def _cut(scored):
+        out = scored.filter(F.col("cosine") >= threshold)
+        if round_to is not None:
+            out = out.withColumn("cosine",
+                                 F.round("cosine", round_to) + F.lit(0.0))
+        return Table(out, "embedding_neardup_pairs")
+
     if exact:
         l, r = c.alias("l"), c.alias("r")
         cos = _dot(F.col("l.v"), F.col("r.v")) / (F.col("l.n") * F.col("r.n"))
-        scored = l.join(r, F.col("l.vid") < F.col("r.vid")).select(
+        return _cut(l.join(r, F.col("l.vid") < F.col("r.vid")).select(
             F.col("l.vid").alias("vec_a"), F.col("r.vid").alias("vec_b"),
-            cos.alias("cosine"))
-    else:
+            cos.alias("cosine")))
+    # the LSH path reads the corpus repeatedly (param count, signature
+    # pass, and the two vector re-joins) — persist ONCE, owned by the
+    # returned result
+    with owned_cache(c) as c_own:
         if n_planes is None or n_tables is None:
             # auto-size from the corpus count; ``n_vectors`` lets callers
             # who know it (or can estimate it from catalog stats) skip the
@@ -359,51 +366,43 @@ def embedding_neardup_pairs(corpus: Table, threshold: float = 0.9,
         # over the corpus — persist so the hot-bucket count and the two
         # sides of the pair self-join share one signature computation
         entries = (c.select("vid", sig_udf(F.col("v")).alias("sigs"))
-                   .select("vid", F.posexplode("sigs").alias("tbl", "sig"))
-                   .persist())
-        hot = (entries.groupBy("tbl", "sig")
-               .agg(F.count(F.lit(1)).alias("cnt"))
-               .filter(F.col("cnt") > max_bucket).select("tbl", "sig"))
-        cold = entries.join(F.broadcast(hot), ["tbl", "sig"], "left_anti")
-        # Pair generation is an ID-ONLY equi-self-join on (table, sig) —
-        # WholeStageCodegen end to end.  The in-array alternative
-        # (collect_list + transform i<j pairing) evaluates Catalyst
-        # lambdas INTERPRETED per emitted pair: at sf1's 6.5M candidates
-        # that measured 45 s vs ~8 s for this join, and the gap widens
-        # with scale.  Joining ids costs two shuffles of (id, tbl, sig)
-        # rows — O(N·tables) longs, never vectors — and the join output
-        # pipelines straight into the pair-dedup aggregation without
-        # materializing.  (dedup.lsh_band_pairs keeps the in-array form:
-        # shingle-text buckets stay tiny under its max_bucket, where the
-        # collect_list saves the second shuffle.)
-        pairs = (cold.alias("l")
-                 .join(cold.alias("r"), ["tbl", "sig"])
-                 .filter(F.col("l.vid") < F.col("r.vid"))
-                 .select(F.col("l.vid").alias("vec_a"),
-                         F.col("r.vid").alias("vec_b"))
-                 .distinct())              # shuffle carries two ids per pair
-        # norms computed ONCE per vector (N rows), carried as one double
-        # through the id-keyed joins; the per-pair dot is the zip_with/
-        # aggregate form (see cosine_topk's note — the unrolled SQL
-        # variant measured 3.5x slower and was reverted in r5)
-        av = c.select(F.col("vid").alias("vec_a"), F.col("v").alias("va"),
-                      F.col("n").alias("na"))
-        bv = c.select(F.col("vid").alias("vec_b"), F.col("v").alias("vb"),
-                      F.col("n").alias("nb"))
-        joined = pairs.join(av, "vec_a").join(bv, "vec_b")
-        cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-        scored = (joined.withColumn("cosine", cos)
-                  .select("vec_a", "vec_b", "cosine"))
-    out = scored.filter(F.col("cosine") >= threshold)
-    if round_to is not None:
-        out = out.withColumn("cosine",
-                                F.round("cosine", round_to) + F.lit(0.0))
-    if not exact:
-        from .dedup import _retain_cache
-
-        _retain_cache(out, c)
-        _retain_cache(out, entries)
-    return Table(out, "embedding_neardup_pairs")
+                   .select("vid", F.posexplode("sigs").alias("tbl", "sig")))
+        with owned_cache(entries) as e_own:
+            hot = (entries.groupBy("tbl", "sig")
+                   .agg(F.count(F.lit(1)).alias("cnt"))
+                   .filter(F.col("cnt") > max_bucket).select("tbl", "sig"))
+            cold = entries.join(F.broadcast(hot), ["tbl", "sig"], "left_anti")
+            # Pair generation is an ID-ONLY equi-self-join on (table, sig) —
+            # WholeStageCodegen end to end.  The in-array alternative
+            # (collect_list + transform i<j pairing) evaluates Catalyst
+            # lambdas INTERPRETED per emitted pair: at sf1's 6.5M candidates
+            # that measured 45 s vs ~8 s for this join, and the gap widens
+            # with scale.  Joining ids costs two shuffles of (id, tbl, sig)
+            # rows — O(N·tables) longs, never vectors — and the join
+            # output pipelines straight into the pair-dedup aggregation
+            # without materializing.  (dedup.lsh_band_pairs keeps the
+            # in-array form: shingle-text buckets stay tiny under its
+            # max_bucket, where the collect_list saves the second
+            # shuffle.)
+            pairs = (cold.alias("l")
+                     .join(cold.alias("r"), ["tbl", "sig"])
+                     .filter(F.col("l.vid") < F.col("r.vid"))
+                     .select(F.col("l.vid").alias("vec_a"),
+                             F.col("r.vid").alias("vec_b"))
+                     .distinct())  # shuffle carries two ids per pair
+            # norms computed ONCE per vector (N rows), carried as one double
+            # through the id-keyed joins; the per-pair dot is the zip_with/
+            # aggregate form (see cosine_topk's note — the unrolled SQL
+            # variant measured 3.5x slower and was reverted in r5)
+            av = c.select(F.col("vid").alias("vec_a"), F.col("v").alias("va"),
+                          F.col("n").alias("na"))
+            bv = c.select(F.col("vid").alias("vec_b"), F.col("v").alias("vb"),
+                          F.col("n").alias("nb"))
+            joined = pairs.join(av, "vec_a").join(bv, "vec_b")
+            cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+            scored = (joined.withColumn("cosine", cos)
+                      .select("vec_a", "vec_b", "cosine"))
+            return e_own.transfer(c_own.transfer(_cut(scored)))
 
 
 def lsh_cosine_topk(corpus: Table, queries: Table, k: int = 5,
@@ -713,30 +712,19 @@ def pq_neardup_pairs(corpus: Table, threshold: float = 0.9,
                       or vec_col in codes.df.columns))
     bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_batches))
     parts = []
-    codes_release = None
     if n_batches > 1:
         # guide §5 (r15): every chunk's candidate scan reads the codes
         # relation, and a DERIVED codes frame (pq_encode over a float
         # corpus) re-ran the full assign+encode once PER CHUNK — at 22
         # chunks that is 22 corpus encodes for one dedup pass.  Persist
         # it for the life of the eager chunk loop; the scope is
-        # construction-only (released in the finally: the returned plan
-        # reads the checkpointed chunk candidates and the float corpus,
-        # never the codes).  Codes are the 32x-smaller-by-design
-        # relation, so the cache is bounded the same way the store is.
-        # The persist/release rides the refcounted acquire (ADVICE r15):
-        # if the caller already persisted an identical codes frame, the
-        # JVM shares one cache entry and a raw unpersist here would
-        # silently un-cache the caller's survivor.  A codes frame the
-        # refcount already holds (a caller's scoped cache) gets one more
-        # reference for the loop, so dropping the caller's holder
-        # mid-loop cannot unpersist it; only a raw caller persist, which
-        # the refcount never saw, is left entirely alone — their entry,
-        # their lifetime.
-        from .dedup import _is_refcounted, acquire_cache
-
-        if not codes.df.is_cached or _is_refcounted(codes.df):
-            codes_release = acquire_cache(codes.df)
+        # construction-only (the returned plan reads the checkpointed
+        # chunk candidates and the float corpus, never the codes).
+        # Codes are the 32x-smaller-by-design relation, so the cache is
+        # bounded the same way the store is.  owned_cache takes one more
+        # reference on codes a caller's owned cache already holds (so
+        # dropping the caller's holder mid-loop cannot unpersist them)
+        # and borrows a raw caller persist without ever releasing it.
         codes = Table(codes.df, "pq_neardup_codes")
     def _one_chunk(i: int):
         chunk = (corpus if n_batches == 1
@@ -762,7 +750,7 @@ def pq_neardup_pairs(corpus: Table, threshold: float = 0.9,
             bc.destroy()
         return pairs
 
-    try:
+    with owned_cache(codes.df if n_batches > 1 else None):
         if n_batches > 1:
             # guide §2.6 (r16): the chunk scans are independent jobs
             # over the cached codes relation — a two-wide pool lets the
@@ -778,9 +766,6 @@ def pq_neardup_pairs(corpus: Table, threshold: float = 0.9,
                          if p is not None]
         else:
             parts = [p for p in (_one_chunk(0),) if p is not None]
-    finally:
-        if codes_release is not None:
-            codes_release()
     if not parts:
         return Table(local_frame(
             spark, [], "vec_a long, vec_b long, cosine double"),
@@ -1005,17 +990,14 @@ def semantic_dedup(corpus: Table, threshold: float = 0.95,
     # one cache — previously the returned plan re-derived scan + assign
     # UDF because the projection cache was released at construction
     # time (r16, guide §5; the r15 finding-#9 pattern one layer down).
-    # Scope: _retain_cache ties the release to the result frame; if
-    # construction raises first, the finally drops the only reference.
-    from .dedup import _retain_cache, acquire_cache
-
+    # Scope: the result owns the cache; if construction raises first,
+    # leaving the owned_cache block drops the only reference.
     # the norm rides IN the cache (not recomputed per read): av/bv below
     # each re-read the corpus, and the aggregate-HOF norm is the
     # expensive projection
     tagged = (ivf_assign(corpus, centroids, vec_col).df
               .withColumn("__semdedup_norm", _norm(F.col(vec_col))))
-    release = acquire_cache(tagged)
-    try:
+    with owned_cache(tagged) as owner:
         c = tagged.select(F.col(id_col).alias("vid"),
                           F.col(vec_col).alias("v"),
                           F.col("__semdedup_norm").alias("n"),
@@ -1063,10 +1045,7 @@ def semantic_dedup(corpus: Table, threshold: float = 0.95,
                       .withColumn("keep", F.row_number().over(w) == 1)
                       .drop("_cc"))
             res = Table(ranked, "semantic_dedup")
-        _retain_cache(res.df, tagged)
-        return res
-    finally:
-        release()
+        return owner.transfer(res)
 
 
 def assign_clusters(docs: Table, embeddings: Table,
@@ -1106,7 +1085,6 @@ def assign_clusters(docs: Table, embeddings: Table,
                 f"assign_clusters: docs already has a '{taken}' "
                 "column — rename or drop it first (the assignment "
                 "join would produce an ambiguous column)")
-    from .dedup import _retain_cache, acquire_cache
     from .ivf import ivf_assign, kmeans_fit
 
     if centroids is None:
@@ -1123,17 +1101,13 @@ def assign_clusters(docs: Table, embeddings: Table,
     cells = (ivf_assign(embeddings, centroids, vec_col).df
              .select(F.col(id_col).alias("__aid"),
                      F.col("cell").cast("int").alias("cell")))
-    release = acquire_cache(cells)
-    try:
+    with owned_cache(cells) as owner:
         out = (docs.df
                .join(cells, F.col(doc_id_col) == F.col("__aid"), "left")
                .drop("__aid")
                .withColumn("cell",
                            F.coalesce(F.col("cell"), F.lit(-1))))
-        _retain_cache(out, cells)
-    finally:
-        release()
-    return Table(out, "assign_clusters")
+        return owner.transfer(Table(out, "assign_clusters"))
 
 
 from ..core import _localize_guard as _lg  # noqa: E402

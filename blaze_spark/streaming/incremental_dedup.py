@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import owned_cache
 from ..core import Table
 from ..pipeline.dedup import minhash_signatures
 from ..sources import local_frame
@@ -513,7 +514,7 @@ def process_batch(batch: Table, store_path: str, text_col: str = "text",
         batch_id = (max(all_ids) + 1) if all_ids else 0
     if method == "minhash":
         sigs = minhash_signatures(batch, text_col, id_col, num_perm,
-                                  shingle_k, seed).df.persist()
+                                  shingle_k, seed).df
         raw_entries = _band_entries(sigs, num_perm, bands)
         est = _est_jaccard(num_perm)
     else:
@@ -522,102 +523,107 @@ def process_batch(batch: Table, store_path: str, text_col: str = "text",
                 "num_perm/bands/shingle_k/seed are minhash-only knobs; "
                 "the simhash path takes none of them — remove the "
                 "arguments (or use method='minhash')")
-        sigs = _simhash_sigs(batch, text_col, id_col).persist()
+        sigs = _simhash_sigs(batch, text_col, id_col)
         raw_entries = _simhash_entries(sigs)
         est = _est_simhash()
-    # hot-bucket cap (same skew guard as the batch paths' max_bucket):
-    # a degenerate bucket in THIS batch — e.g. the all-zeros simhash
-    # chunk of templated docs — would otherwise collect_list the whole
-    # batch into one task AND row-multiply against the store probe.
-    # The cap applies to the PAIRING sides only; the store still receives
-    # a bounded deterministic sample (first max_bucket doc_ids) of each
-    # hot bucket, so hot-bucket docs are not silently unindexed for that
-    # band forever (ADVICE r6).  Hot buckets are rare by construction, so
-    # they are collected for logging and the common no-hot path pays no
-    # extra join or window.
-    hot_rows = (raw_entries.groupBy("band", "bhash")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") > max_bucket).collect())
-    if hot_rows:
-        import warnings
+    with owned_cache(sigs):
+        # hot-bucket cap (same skew guard as the batch paths' max_bucket):
+        # a degenerate bucket in THIS batch — e.g. the all-zeros simhash
+        # chunk of templated docs — would otherwise collect_list the whole
+        # batch into one task AND row-multiply against the store probe.
+        # The cap applies to the PAIRING sides only; the store still receives
+        # a bounded deterministic sample (first max_bucket doc_ids) of each
+        # hot bucket, so hot-bucket docs are not silently unindexed for that
+        # band forever (ADVICE r6).  Hot buckets are rare by construction, so
+        # they are collected for logging and the common no-hot path pays no
+        # extra join or window.
+        hot_rows = (raw_entries.groupBy("band", "bhash")
+                    .agg(F.count(F.lit(1)).alias("n"))
+                    .filter(F.col("n") > max_bucket).collect())
+        if hot_rows:
+            import warnings
 
-        from pyspark.sql import Window
+            from pyspark.sql import Window
 
-        excluded = sum(r.n for r in hot_rows)
-        warnings.warn(
-            f"incremental {method} batch {batch_id}: {len(hot_rows)} hot "
-            f"bucket(s) over max_bucket={max_bucket} — {excluded} entries "
-            "excluded from pairing this batch; the store keeps the first "
-            f"{max_bucket} doc_ids per hot bucket", stacklevel=2)
-        hot = F.broadcast(local_frame(
-            spark, [(int(r.band), int(r.bhash)) for r in hot_rows],
-            "band int, bhash long"))
-        entries = raw_entries.join(hot, ["band", "bhash"],
-                                   "left_anti").persist()
-        w = Window.partitionBy("band", "bhash").orderBy("doc_id")
-        store_entries = (raw_entries
-                         .withColumn("__rn", F.row_number().over(w))
-                         .filter(F.col("__rn") <= max_bucket).drop("__rn"))
-    else:
-        entries = raw_entries.persist()
-        store_entries = entries
+            excluded = sum(r.n for r in hot_rows)
+            warnings.warn(
+                f"incremental {method} batch {batch_id}: {len(hot_rows)} "
+                f"hot bucket(s) over max_bucket={max_bucket} — {excluded} "
+                "entries excluded from pairing this batch; the store keeps "
+                f"the first {max_bucket} doc_ids per hot bucket",
+                stacklevel=2)
+            hot = F.broadcast(local_frame(
+                spark, [(int(r.band), int(r.bhash)) for r in hot_rows],
+                "band int, bhash long"))
+            entries = raw_entries.join(hot, ["band", "bhash"],
+                                       "left_anti")
+            w = Window.partitionBy("band", "bhash").orderBy("doc_id")
+            store_entries = (raw_entries
+                             .withColumn("__rn", F.row_number().over(w))
+                             .filter(F.col("__rn") <= max_bucket)
+                             .drop("__rn"))
+        else:
+            entries = raw_entries
+            store_entries = entries
+        with owned_cache(entries):
+            # probe the persistent index: store-side scan prunes on band
+            # (partition column) and the broadcast join dynamically
+            # filters bhash.  A retried batch must not probe its own
+            # previous (failed) attempt: read only the ingest
+            # subdirectories that are not this batch's.
+            pairs = []
+            probe_ids = [i for i in existing if i != batch_id]
+            if probe_ids:
+                store = spark.read.option("basePath", root).parquet(
+                    *[f"{root}/ingest={i}" for i in probe_ids])
+                vs_store = (
+                    store.join(
+                        F.broadcast(entries.withColumnsRenamed(
+                            {"doc_id": "new_doc", "signature": "new_sig"})),
+                        ["band", "bhash"])
+                    .filter(F.col("doc_id") != F.col("new_doc"))
+                    .select(F.col("new_doc"),
+                            F.col("doc_id").alias("matched_doc"),
+                            est(F.col("new_sig"), F.col("signature"))
+                            .alias("est_jaccard"))
+                )
+                pairs.append(vs_store)
 
-    # probe the persistent index: store-side scan prunes on band (partition
-    # column) and the broadcast join dynamically filters bhash.  A retried
-    # batch must not probe its own previous (failed) attempt: read only the
-    # ingest subdirectories that are not this batch's.
-    pairs = []
-    probe_ids = [i for i in existing if i != batch_id]
-    if probe_ids:
-        store = spark.read.option("basePath", root).parquet(
-            *[f"{root}/ingest={i}" for i in probe_ids])
-        vs_store = (
-            store.join(
-                F.broadcast(entries.withColumnsRenamed(
-                    {"doc_id": "new_doc", "signature": "new_sig"})),
-                ["band", "bhash"])
-            .filter(F.col("doc_id") != F.col("new_doc"))
-            .select(F.col("new_doc"), F.col("doc_id").alias("matched_doc"),
-                    est(F.col("new_sig"), F.col("signature"))
-                    .alias("est_jaccard"))
-        )
-        pairs.append(vs_store)
+            # in-batch pairs: same bucket-local pairing as the batch path
+            grouped = (entries.groupBy("band", "bhash")
+                       .agg(F.array_sort(F.collect_list(
+                           F.struct("doc_id", "signature"))).alias("docs"))
+                       .filter(F.size("docs") >= 2))
+            pair_arr = F.flatten(F.transform(
+                F.col("docs"),
+                lambda x, i: F.transform(
+                    F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
+                    lambda y: F.struct(
+                        y["doc_id"].alias("new_doc"),
+                        x["doc_id"].alias("matched_doc"),
+                        est(x["signature"], y["signature"])
+                        .alias("est_jaccard")))))
+            in_batch = (grouped.select(F.explode(pair_arr).alias("pr"))
+                        .select("pr.new_doc", "pr.matched_doc",
+                                "pr.est_jaccard"))
+            pairs.append(in_batch)
 
-    # in-batch pairs: same bucket-local pairing as the batch path
-    grouped = (entries.groupBy("band", "bhash")
-               .agg(F.array_sort(F.collect_list(
-                   F.struct("doc_id", "signature"))).alias("docs"))
-               .filter(F.size("docs") >= 2))
-    pair_arr = F.flatten(F.transform(
-        F.col("docs"),
-        lambda x, i: F.transform(
-            F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-            lambda y: F.struct(
-                y["doc_id"].alias("new_doc"),
-                x["doc_id"].alias("matched_doc"),
-                est(x["signature"], y["signature"]).alias("est_jaccard")))))
-    in_batch = (grouped.select(F.explode(pair_arr).alias("pr"))
-                .select("pr.new_doc", "pr.matched_doc", "pr.est_jaccard"))
-    pairs.append(in_batch)
+            out = pairs[0]
+            for p in pairs[1:]:
+                out = out.unionByName(p)
+            out = (out.groupBy("new_doc", "matched_doc")
+                   .agg(F.max("est_jaccard").alias("est_jaccard")))
 
-    out = pairs[0]
-    for p in pairs[1:]:
-        out = out.unionByName(p)
-    out = (out.groupBy("new_doc", "matched_doc")
-           .agg(F.max("est_jaccard").alias("est_jaccard")))
+            # sink-first materialization: executors write the pairs, the
+            # driver never holds them; overwrite of the batch_id
+            # subdirectory makes a retry idempotent
+            sink_root = pairs_path or (store_path.rstrip("/") + "_pairs")
+            batch_dir = f"{sink_root}/batch_id={batch_id}"
+            out.write.mode("overwrite").parquet(batch_dir)
 
-    # sink-first materialization: executors write the pairs, the driver
-    # never holds them; overwrite of the batch_id subdirectory makes a
-    # retry idempotent
-    sink_root = pairs_path or (store_path.rstrip("/") + "_pairs")
-    batch_dir = f"{sink_root}/batch_id={batch_id}"
-    out.write.mode("overwrite").parquet(batch_dir)
-
-    (store_entries.select("doc_id", "band", "bhash", "signature")
-     .write.mode("overwrite").partitionBy("band")
-     .parquet(f"{root}/ingest={batch_id}"))
-    sigs.unpersist()
-    entries.unpersist()
+            (store_entries.select("doc_id", "band", "bhash", "signature")
+             .write.mode("overwrite").partitionBy("band")
+             .parquet(f"{root}/ingest={batch_id}"))
     # explicit schema: an empty result may have written no data files
     return spark.read.schema(out.schema).parquet(batch_dir)
 

@@ -76,6 +76,18 @@ def test_cached_table(t):
     assert len(cache) == 2
 
 
+def test_cached_table_confirms_hits_with_same_semantics(t, monkeypatch):
+    """A semanticHash collision is a miss, not another plan's rows:
+    hits are confirmed with sameSemantics (the cached.ExprCache rule)."""
+    cache = CachedTable()
+    monkeypatch.setattr(type(t.df), "semanticHash", lambda self: 7)
+    a = cache.compute(t[t.amount > 75])
+    b = cache.compute(t[t.amount > 100])
+    assert len(a) == 2
+    assert len(b) != len(a)
+    assert b.equals(t[t.amount > 100].compute())
+
+
 def test_cached_table_entry_cap_not_memoized(t):
     """VERDICT r5 #5: a result larger than max_entry_bytes is returned
     but never stored — the driver memo cannot grow past its caps."""

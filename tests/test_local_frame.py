@@ -177,7 +177,7 @@ def test_no_create_dataframe_outside_the_helper():
     assert {s[:2] for s in sites} == _ALLOWED
 
 
-# -- acquire_cache release race ----------------------------------------------
+# -- owned_cache release race -----------------------------------------------
 
 class _FakeFrame:
     def __init__(self):
@@ -210,24 +210,24 @@ class _RendezvousFlag(list):
 
 
 def test_acquire_cache_concurrent_release_decrements_once(monkeypatch):
-    from blaze_spark.pipeline import dedup
+    """Two threads releasing one ``owned_cache`` reference at once drop
+    it once: the release guard is a test-and-set under the lock."""
+    from blaze_spark import cache
 
     key = ("test-session", 12345, (("x", "int"),))
-    monkeypatch.setattr(dedup, "_cache_key", lambda df: key)
-    monkeypatch.setitem(dedup._CACHE_REFS, key, 1)  # another holder
+    monkeypatch.setattr(cache, "_cache_key", lambda df: key)
+    monkeypatch.setitem(cache._CACHE_REFS, key, 1)  # another holder
     frame = _FakeFrame()
-    release = dedup.acquire_cache(frame)
-    assert dedup._CACHE_REFS[key] == 2
+    owner = cache.owned_cache(frame)
+    assert cache._CACHE_REFS[key] == 2
 
-    cell = release.__closure__[release.__code__.co_freevars.index(
-        "released")]
-    cell.cell_contents = _RendezvousFlag()
-    threads = [threading.Thread(target=release) for _ in range(2)]
+    owner._done = _RendezvousFlag()
+    threads = [threading.Thread(target=owner.release) for _ in range(2)]
     for th in threads:
         th.start()
     for th in threads:
         th.join(10)
-    assert dedup._CACHE_REFS[key] == 1
+    assert cache._CACHE_REFS[key] == 1
     assert frame.unpersists == 0
-    release()
-    assert dedup._CACHE_REFS[key] == 1
+    owner.release()
+    assert cache._CACHE_REFS[key] == 1

@@ -551,17 +551,21 @@ def test_neardup_caller_supplied_count_skips_sizing_scan(spark, emb, monkeypatch
 
 
 def test_retain_cache_connect_branch_releases_on_holder_drop():
-    """The Spark Connect branch of _retain_cache (no _jdf): the unpersist
-    finalizer attaches to the HOLDER (the closure pins the cached object,
-    so cached-keyed finalization could never fire).  Exercised with stubs
-    — no Connect server in this environment (see OPERATORS.md)."""
+    """The Spark Connect branch of ``CacheOwner.transfer`` (no _jdf):
+    the unpersist finalizer attaches to the HOLDER (a closure over the
+    cached object pins it, so cached-keyed finalization could never
+    fire).  Exercised with stubs — no Connect server in this
+    environment (see OPERATORS.md)."""
     import gc
 
-    from blaze_spark.pipeline.dedup import _retain_cache
+    from blaze_spark.cache import carry, owned_cache
 
     released = []
 
     class FakeCached:  # no _jdf attribute -> Connect path
+        def persist(self):
+            return self
+
         def unpersist(self, blocking):
             released.append(blocking)
 
@@ -570,11 +574,11 @@ def test_retain_cache_connect_branch_releases_on_holder_drop():
 
     cached = FakeCached()
     holder = FakeHolder()
-    _retain_cache(holder, cached)
-    assert cached._blaze_release_armed is True
+    with owned_cache(cached) as c:
+        assert c.transfer(holder) is holder
     assert holder._blaze_caches == [cached]
-    # re-registering the same cache on the same holder is a no-op
-    _retain_cache(holder, cached)
+    # carrying the same cache onto the same holder is a no-op
+    carry(holder, holder)
     assert holder._blaze_caches == [cached]
     assert not released
     del holder
@@ -2245,9 +2249,9 @@ def test_pq_neardup_chunk_loop_failure_keeps_refcount_balanced(
     loop.  A forced failure inside the loop must leave the persisted
     RDDs as they were, and the loop's reference must be gone: the
     caller's own release then unpersists the codes."""
+    from blaze_spark.cache import owned_cache
     from blaze_spark.pipeline import pq as pq_mod
     from blaze_spark.pipeline import pq_encode, pq_fit, pq_neardup_pairs
-    from blaze_spark.pipeline.dedup import acquire_cache
 
     def persistent():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
@@ -2255,7 +2259,7 @@ def test_pq_neardup_chunk_loop_failure_keeps_refcount_balanced(
     cb = pq_fit(emb, m=8, ks=16, iters=2, train_rows=2000)
     codes = pq_encode(emb, cb)
     before = persistent()
-    caller_release = acquire_cache(codes.df)
+    caller = owned_cache(codes.df)
     codes.df.count()  # fill the caller's cache
     held = persistent()
 
@@ -2268,7 +2272,7 @@ def test_pq_neardup_chunk_loop_failure_keeps_refcount_balanced(
                          queries_per_batch=100)
     assert persistent() == held
     assert codes.df.storageLevel.useMemory  # the caller still holds it
-    caller_release()
+    caller.release()
     assert persistent() == before
 
 
@@ -2277,18 +2281,18 @@ def test_pq_neardup_chunk_loop_outlives_the_callers_holder(
     """Dropping the caller's scoped holder while the chunk loop runs
     must not unpersist the codes under the remaining chunks; the loop's
     own reference releases them once it is done."""
+    from blaze_spark.cache import owned_cache
     from blaze_spark.pipeline import pq as pq_mod
     from blaze_spark.pipeline import pq_encode, pq_fit, pq_neardup_pairs
-    from blaze_spark.pipeline.dedup import acquire_cache
 
     cb = pq_fit(emb, m=8, ks=16, iters=2, train_rows=2000)
     codes = pq_encode(emb, cb)
-    caller_release = acquire_cache(codes.df)
+    caller = owned_cache(codes.df)
     real = pq_mod._pq_range_scored
     cached_in_loop = []
 
     def spy(*a, **kw):
-        caller_release()  # idempotent: the first chunk drops the holder
+        caller.release()  # idempotent: the first chunk drops the holder
         cached_in_loop.append(codes.df.storageLevel.useMemory)
         return real(*a, **kw)
 
@@ -2740,7 +2744,7 @@ def test_assign_clusters_refuses_taken_columns(spark):
         assign_clusters(d_aid, e, centroids=cents)
 
 
-def _failed_call_leaves_no_cache(spark, monkeypatch, call):
+def _failed_call_leaves_no_cache(spark, monkeypatch, call, match="nope"):
     """Run ``call`` (which must raise mid-construction) and check that
     every frame it persisted was released: re-running each one must not
     fill a cache entry, so the persistent-RDD set ends where it began."""
@@ -2757,13 +2761,77 @@ def _failed_call_leaves_no_cache(spark, monkeypatch, call):
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet())
     monkeypatch.setattr(cls, "persist", spy)
-    with _pytest.raises(Exception, match="nope"):
+    with _pytest.raises(Exception, match=match):
         call()
     monkeypatch.setattr(cls, "persist", orig)
     assert persisted, "the op failed before it persisted anything"
     for df in persisted:
         df.count()   # a leaked cache entry materializes here
     assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
+def _nope(*a, **k):
+    raise RuntimeError("nope")
+
+
+def _fail_lm(spark, monkeypatch, tmp_path, docs, emb):
+    from blaze_spark.pipeline import ngram_lm_logprob
+
+    # the self-fit frame is persisted before the model rejects smoothing
+    return (lambda: ngram_lm_logprob(docs, n_buckets=64, smoothing=0.0),
+            "smoothing must be > 0")
+
+
+def _fail_pack(spark, monkeypatch, tmp_path, docs, emb):
+    from blaze_spark.pipeline import pack_sequences, packing
+
+    monkeypatch.setattr(packing, "local_frame", _nope)  # after the totals
+    return lambda: pack_sequences(docs, budget=500, partitions=2), "nope"
+
+
+def _fail_neardup(spark, monkeypatch, tmp_path, docs, emb):
+    from blaze_spark.pipeline import embedding_neardup_pairs, similarity
+
+    monkeypatch.setattr(similarity, "lsh_auto_params", _nope)  # sizing
+    return lambda: embedding_neardup_pairs(emb, threshold=0.9), "nope"
+
+
+def _fail_ingest(spark, monkeypatch, tmp_path, docs, emb):
+    from blaze_spark.streaming.incremental_dedup import process_batch
+
+    writer = type(spark.range(1).write)
+    monkeypatch.setattr(writer, "parquet", _nope)  # the pairs sink write
+    return lambda: process_batch(docs, str(tmp_path / "store")), "nope"
+
+
+def _fail_kmeans(spark, monkeypatch, tmp_path, docs, emb):
+    from blaze_spark.pipeline.ivf import kmeans_fit
+
+    monkeypatch.setattr(type(emb.df), "collect", _nope)  # the Lloyd loop
+    return lambda: kmeans_fit(emb, k=4, iters=2), "nope"
+
+
+def _fail_trainer(spark, monkeypatch, tmp_path, docs, emb):
+    from blaze_spark.pipeline import selection, train_quality_classifier
+
+    # the first epoch's update, after its gradient job read the cache
+    monkeypatch.setattr(selection, "_round_half_away", _nope)
+    return (lambda: train_quality_classifier(
+        docs, "doc_id % 2 = 0", n_buckets=64, epochs=2), "nope")
+
+
+@pytest.mark.parametrize("case", [
+    _fail_lm, _fail_pack, _fail_neardup, _fail_ingest, _fail_kmeans,
+    _fail_trainer], ids=["ngram_lm_logprob", "pack_sequences",
+                         "embedding_neardup_pairs", "incremental_ingest",
+                         "kmeans_fit", "train_quality_classifier"])
+def test_failed_call_leaves_no_cache(spark, monkeypatch, tmp_path, docs,
+                                     emb, case):
+    """A failure after an operator's persist — in its owned_cache
+    block, a construction scope or a result scope alike — leaves no
+    persisted frame behind."""
+    call, match = case(spark, monkeypatch, tmp_path, docs, emb)
+    _failed_call_leaves_no_cache(spark, monkeypatch, call, match)
 
 
 def test_semantic_dedup_failure_releases_its_cache(spark, monkeypatch):

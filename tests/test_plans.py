@@ -326,18 +326,16 @@ def test_identical_plan_cache_survives_first_holder_release(spark):
     reads its cache, and the LAST release still unpersists (no leak)."""
     import gc
 
-    from blaze_spark.pipeline.dedup import _retain_cache
+    from blaze_spark.cache import owned_cache
 
     def build():
         cached = (spark.range(1000)
-                  .selectExpr("id", "id * 37 as cache_race_probe")
-                  .persist())
-        out = cached.groupBy().sum("cache_race_probe")
-        _retain_cache(out, cached)
-        return out
+                  .selectExpr("id", "id * 37 as cache_race_probe"))
+        with owned_cache(cached) as c:
+            return c.transfer(cached.groupBy().sum("cache_race_probe"))
 
     a = build()
-    b = build()  # persist() no-ops: same canonical plan as a's
+    b = build()  # a refcount bump: same canonical plan as a's
     del a
     gc.collect()  # a's finalizer fires — must NOT un-cache b
     try:
@@ -358,28 +356,32 @@ def test_acquire_cache_scope_shares_the_refcounted_entry(spark):
     used a raw persist()/unpersist() pair, bypassing the refcounted
     release — if the caller had persisted an identical codes frame
     (shared JVM cache entry), the scope's release silently un-cached
-    the caller's survivor.  Pin acquire_cache: a release inside the
-    scope leaves the identically-planned holder's cache readable, and
-    the holder's own release still frees the entry (no leak)."""
+    the caller's survivor.  Pin the construction scope of owned_cache:
+    a release inside the scope leaves the identically-planned holder's
+    cache readable, and the holder's own release still frees the entry
+    (no leak)."""
     import gc
 
-    from blaze_spark.pipeline.dedup import _retain_cache, acquire_cache
+    from blaze_spark.cache import owned_cache
 
     def frame():
         return spark.range(1000).selectExpr(
             "id", "id * 41 as acquire_scope_probe")
 
-    cached = frame().persist()
-    holder = cached.groupBy().sum("acquire_scope_probe")
-    _retain_cache(holder, cached)
+    def hold():
+        cached = frame()
+        with owned_cache(cached) as c:
+            return c.transfer(cached.groupBy().sum("acquire_scope_probe"))
 
-    release = acquire_cache(frame())  # identical plan: shares the entry
-    release()
-    release()  # idempotent
+    holder = hold()
+
+    scope = owned_cache(frame())  # identical plan: shares the entry
+    scope.release()
+    scope.release()  # idempotent
     plan = holder._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan, plan  # survivor kept its cache
 
-    del holder, cached
+    del holder
     gc.collect()  # last registration gone — entry must actually release
     fresh = frame().groupBy().sum("acquire_scope_probe")
     plan = fresh._jdf.queryExecution().executedPlan().toString()

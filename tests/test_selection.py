@@ -649,13 +649,19 @@ def _round_half_away_ref(x):
     return int(_m.floor(x + 0.5)) if x >= 0 else -int(_m.floor(-x + 0.5))
 
 
-def test_train_classifier_persist_path_equal(spark, labeled_docs):
-    from blaze_spark.pipeline import train_quality_classifier
+def test_train_classifier_persist_path_equal(spark, labeled_docs,
+                                             monkeypatch):
+    """A multi-epoch fit caches its features; the fitted model equals
+    the uncached fit's."""
+    from blaze_spark.cache import owned_cache
+    from blaze_spark.pipeline import selection, train_quality_classifier
 
     a = train_quality_classifier(labeled_docs, "y = 1", n_buckets=512,
-                                 epochs=2, persist=True)
+                                 epochs=2)
+    monkeypatch.setattr(selection, "owned_cache",
+                        lambda df: owned_cache(None))
     b = train_quality_classifier(labeled_docs, "y = 1", n_buckets=512,
-                                 epochs=2, persist=False)
+                                 epochs=2)
     assert a.weights == b.weights
     assert a.intercept_milli == b.intercept_milli
 
@@ -1148,9 +1154,9 @@ def test_train_classifier_init_speeds_weak_signal_residual(spark):
         return h["abs_residual_micro"] / h["n_docs"]
 
     plain = train_quality_classifier(t, "y = 1", n_buckets=512,
-                                     epochs=30, lr=2.0, persist=True)
+                                     epochs=30, lr=2.0)
     aided = train_quality_classifier(t, "y = 1", n_buckets=512,
-                                     epochs=10, lr=2.0, persist=True,
+                                     epochs=10, lr=2.0,
                                      init_intercept=True)
     # epoch 1 starts one intercept-travel closer: base-rate residual
     # (~0.18 at 10% positives), not the zero model's 0.5
