@@ -38,9 +38,8 @@ subtrees).  Bare reductions aggregate server-side through a one-entry
 summary tree (``rt.col.sum().compute()`` never reads the empty local
 frame), and so do the 1-D column ops (compute/peek/distinct/sort/head)
 and Table iteration.  Every pipeline/operator entry point OUTSIDE this
-subset raises immediately on a remote input
-(``core._localize_guard``) instead of silently computing over the
-empty frame.  Scalar
+subset is declared ``@wire.local_only`` and raises immediately on a
+remote input instead of silently computing over the empty frame.  Scalar
 expressions cover arithmetic, comparisons, boolean logic, isin, like,
 coalesce, shift (string keys), every public ``.str`` / ``.dt``
 accessor method, and the math-function family

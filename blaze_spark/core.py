@@ -1805,33 +1805,6 @@ def _derived(df: DataFrame, *parents: Table) -> Table:
     return t
 
 
-def _localize_guard(fn):
-    """Wrap a pipeline/operator entry point that has no wire-dialect form
-    so a remote (blaze://) table input raises IMMEDIATELY with guidance
-    (r8 silent-empty audit).  Without the guard these functions build
-    plain local plans over the RemoteTable's empty schema-only frame —
-    the result computes 0 rows with no error, the exact contract
-    violation ADVICE r7 flagged for the curation passes.  Eager
-    operators (quantizer fits, boundary sampling) would otherwise crash
-    obscurely or mis-fit on the empty frame before compute() is ever
-    reached, so the check belongs at entry, not on the result."""
-    import functools
-
-    @functools.wraps(fn)
-    def op(*args, **kwargs):
-        for a in list(args) + list(kwargs.values()):
-            if isinstance(a, Table) and getattr(a, "_client", None) is not None:
-                raise TypeError(
-                    f"{fn.__name__} is outside the remote wire dialect: "
-                    "it would compute locally over the remote table's "
-                    "empty schema-only frame.  compute() the remote "
-                    "expression first (or register the operator's inputs "
-                    "on the server) and rebuild a local table from the "
-                    "result.")
-        return fn(*args, **kwargs)
-    return op
-
-
 def _unary_pass(t: Table, df: DataFrame, op: str, *tree_args) -> Table:
     """Build the result of a unary table→table pipeline pass (curation /
     text projections), preserving derivation metadata AND recording the
@@ -2045,6 +2018,13 @@ def hypertable_rollup(t: Table, ts_col: str, units=("year", "month", "day"),
 
     Output: one row per (unit, bucket) with ``grain`` naming the level.
     """
+    units = tuple(units)
+    if not reductions:
+        raise ValueError("hypertable_rollup needs at least one "
+                         "named reduction")
+    if not all(isinstance(u, str) for u in units):
+        raise ValueError(f"hypertable_rollup units must be unit "
+                         f"strings, got {units!r}")
     df = t.df
     trunc_cols = {u: F.to_date(F.date_trunc(u, F.col(ts_col))).alias(f"__{u}")
                   for u in units}
@@ -2060,44 +2040,19 @@ def hypertable_rollup(t: Table, ts_col: str, units=("year", "month", "day"),
                         F.col(f"__{u}")).otherwise(bucket)
     # bucket as string with an ALL sentinel: NULL dates stringify
     # differently across engines/arrow versions — sidestep entirely
-    out = rolled.select(
+    out = _derived(rolled.select(
         grain.alias("grain"),
         F.coalesce(bucket.cast(T.StringType()), F.lit("ALL")).alias("bucket"),
-        *[F.col(name) for name in reductions])
-    return Table(out, "hypertable_rollup")
-
-
-_local_hypertable_rollup = hypertable_rollup
-
-
-def hypertable_rollup(t: Table, ts_col: str, units=("year", "month", "day"),
-                      **reductions: Reduction) -> Table:
-    """Wire-aware entry (late r12): a remote table serializes as a
-    ``hypertable_rollup`` node — ts_col/units as literals, the named
-    reductions as their recorded subtrees (the by/summary pattern);
-    a reduction built outside the dialect raises with guidance.  Local
-    tables run :func:`_local_hypertable_rollup` unchanged."""
-    if getattr(t, "_client", None) is None:
-        return _local_hypertable_rollup(t, ts_col, units, **reductions)
-    # lazy import: wire imports core at ITS top
-    from .wire import _require_tree, _wire_result
-
-    if not reductions:
-        raise ValueError("hypertable_rollup needs at least one "
-                         "named reduction")
-    rts = {}
-    for n, r in reductions.items():
-        if r._tree is None:
-            raise ValueError(
-                f"hypertable_rollup reduction {n!r} is not serializable "
-                "to the tree dialect (built from ops outside the "
-                "recorded subset) — compute() locally instead")
-        rts[n] = r._tree
-    node = {"op": "hypertable_rollup",
-            "args": [_require_tree(t, "hypertable_rollup"), ts_col,
-                     [str(u) for u in units], rts]}
-    local = _local_hypertable_rollup(t, ts_col, units, **reductions)
-    return _wire_result(t, local.df, node)
+        *[F.col(name) for name in reductions]), t)
+    out._name = "hypertable_rollup"
+    # wire node when the input and every reduction carry trees (the
+    # summary/by pattern): ts_col/units as literals, reductions as
+    # their recorded subtrees
+    rts = {n: r._tree for n, r in reductions.items()}
+    if t._tree is not None and all(v is not None for v in rts.values()):
+        out._tree = {"op": "hypertable_rollup",
+                     "args": [t._tree, ts_col, list(units), rts]}
+    return out
 
 
 def summary(**reductions: Reduction) -> Table:

@@ -19,9 +19,9 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .core import ColExpr, Reduction, Table, by, concat, join, summary
+from .core import (ColExpr, Reduction, Table, by, concat,
+                   hypertable_rollup, join, summary)
 from . import wire
 from .sources import data, local_frame
 
@@ -218,51 +218,18 @@ def from_tree(tree: dict, *, spark: SparkSession | None = None,
                   "language_id", "quality_features", "fingerprint",
                   "repetition_features", "pii_scrub", "token_stats",
                   "gopher_rules", "c4_clean", "hash_sample",
-                  # model-based selection family (r11): the bounded
-                  # model/counts relations ride as literal row lists
-                  # inside the node; corpora ride as subtrees
-                  "hashed_bucket_counts", "quality_classifier",
-                  "dsir_log_weights", "weighted_sample",
-                  # r14: in-engine classifier TRAINING — the label
-                  # predicate rides as an expression subtree, the whole
-                  # epoch loop runs where the corpus lives, and only
-                  # the fitted ≤ n_buckets+1 row model crosses back
-                  # (intercept at pseudo-bucket -1)
-                  "train_quality_classifier",
-                  # n-gram LM family (r11): same closure pattern — the
-                  # ≤ 2·n_buckets fit relation rides as literal rows,
-                  # the reference corpus as a same-server subtree
-                  "ngram_lm_fit", "ngram_lm_logprob",
-                  "perplexity_filter", "perplexity_buckets",
-                  # r15: BM25 retrieval — corpus as a subtree, the
-                  # bounded query side as literal [id, text] rows or a
-                  # same-server subtree
-                  "bm25_topk",
-                  # mixture execution: weights as literal rows or a
-                  # same-server subtree
-                  "apply_source_mix",
+                  "hypertable_rollup",
                   # every registered wire op (blaze_spark.wire): table
-                  # subtrees + one literal-kwargs dict.  The
-                  # approximate generators (random planes, trained
-                  # quantizers) stay deliberately non-serializable.
-                  *wire_ops, "hypertable_rollup",
-                  # r13: trained-artifact APPLICATION — the codebooks
-                  # and the bounded query block ride as literal
-                  # relations, the code scan runs where the store
-                  # lives.  Fits stay non-serializable (eager/random).
-                  "pq_topk", "ivf_pq_topk", "assign_clusters",
+                  # subtrees + one keyword dict.  The approximate
+                  # generators (random planes, quantizer fits) stay
+                  # deliberately non-serializable (@local_only).
+                  *wire_ops,
                   # r14 (ROADMAP #11): store-fed counts leaves — a
                   # client names a REGISTERED server-side counts store
                   # and the bounded total relation materializes where
                   # the store lives (LM scoring / DSIR without
                   # literal-rows transfer)
-                  "read_lm_counts", "read_bucket_counts",
-                  # r15 (VERDICT r14 #5): the registered-store posture
-                  # extended to the bloom and PQ/IVF store families —
-                  # decontamination probes and ANN application resolve
-                  # a server-side NAME instead of shipping packed
-                  # filters / codebooks as literal rows
-                  "bloom_contains", "bloom_contamination"}
+                  "read_lm_counts", "read_bucket_counts"}
 
     def walk(node: dict) -> Table:
         op, args = node["op"], node.get("args", [])
@@ -282,7 +249,7 @@ def from_tree(tree: dict, *, spark: SparkSession | None = None,
         if op in ("read_lm_counts", "read_bucket_counts"):
             return _store_leaf(op, args, spark, stores)
         if op in wire_ops:
-            return _wire_node(op, args, walk)
+            return _wire_node(op, args, walk, stores)
         child = walk(args[0])
         if op == "projection":
             return child[args[1]]
@@ -350,6 +317,12 @@ def from_tree(tree: dict, *, spark: SparkSession | None = None,
         if op == "summary":
             reds = {n: _reduction(r, child) for n, r in args[1].items()}
             return summary(**reds)
+        if op == "hypertable_rollup":
+            # args: [child, ts_col, [unit, ...], {name: reduction_tree}]
+            _arity(op, args, 4)
+            reds = {n: _reduction(r, child) for n, r in args[3].items()}
+            return hypertable_rollup(child, args[1], tuple(args[2]),
+                                     **reds)
         if op == "join":
             right = walk(args[1])
             return join(child, right, *args[2:])
@@ -380,57 +353,6 @@ def from_tree(tree: dict, *, spark: SparkSession | None = None,
             # args: [child, frac, on, salt?]
             return child.hash_sample(args[1], on=args[2],
                                      salt=args[3] if len(args) > 3 else 42)
-        if op in ("hashed_bucket_counts", "quality_classifier",
-                  "dsir_log_weights", "weighted_sample",
-                  "train_quality_classifier"):
-            return _selection_node(op, args, child, walk)
-        if op in ("ngram_lm_fit", "ngram_lm_logprob",
-                  "perplexity_filter", "perplexity_buckets"):
-            return _lm_node(op, args, child, walk)
-        if op == "apply_source_mix":
-            return _apply_mix_node(args, child, walk)
-        if op == "bm25_topk":
-            return _bm25_node(args, child, walk)
-        if op == "pq_topk":
-            return _pq_node(op, args, child, walk, stores)
-        if op == "assign_clusters":
-            # r14: trained-codebook APPLICATION (the pq_topk posture —
-            # the k-means fit itself never serializes); args =
-            # [docs_tree, embeddings_tree, centroids_enc, {kw}].
-            # r15: centroids_enc may be the NAME of a registered
-            # centroid store (the read_lm_counts posture)
-            from .pipeline.similarity import assign_clusters as _ac
-
-            _arity(op, args, 4)
-            allowed = {"doc_id_col", "id_col", "vec_col"}
-            kw = dict(args[3]) if len(args) > 3 and args[3] else {}
-            bad = set(kw) - allowed
-            if bad:
-                raise ValueError(
-                    f"{op} wire node carries unknown keyword(s) "
-                    f"{sorted(bad)} — re-serialize with a matching "
-                    "client version")
-            return _ac(child, walk(args[1]),
-                       centroids=_centroids_arg(args[2], stores,
-                                                child), **kw)
-        if op == "ivf_pq_topk":
-            return _ivf_pq_node(op, args, child, walk, stores)
-        if op in ("bloom_contains", "bloom_contamination"):
-            return _bloom_node(op, args, child, stores)
-        if op == "hypertable_rollup":
-            # args: [child, ts_col, units, {name: reduction_tree}] —
-            # the time-hierarchy continuous aggregate (late r12)
-            _arity(op, args, 4)
-            from .core import hypertable_rollup as _ht
-
-            units = args[2]
-            if (not isinstance(units, list)
-                    or not all(isinstance(u, str) for u in units)):
-                raise ValueError(
-                    "hypertable_rollup wire node expects a list of "
-                    "unit strings as args[2]")
-            reds = {n: _reduction(r, child) for n, r in args[3].items()}
-            return _ht(child, args[1], tuple(units), **reds)
         if op in ("language_id", "quality_features", "fingerprint",
                   "repetition_features", "pii_scrub", "token_stats",
                   "gopher_rules", "c4_clean"):
@@ -512,181 +434,12 @@ def _arity(op: str, args: list, max_args: int):
             "version")
 
 
-def _selection_node(op: str, args: list, child: Table, walk):
-    """Replay a model-based selection node (r11).  The model/counts
-    relations arrive as literal ``[[bucket, value], ...]`` row lists
-    (BOUNDED — the client collects them under the ``_MAX_BUCKETS``
-    guard before serializing) or, for counts, as a subtree over the
-    registered datasets; keyword args are re-validated by the local
-    entry points, so a hostile node fails the same way a bad local
-    call does."""
-    from .pipeline import (dsir_log_weights, hashed_bucket_counts,
-                           quality_classifier, weighted_sample)
-
-    spark = child.df.sparkSession
-
-    def _counts_df(enc):
-        if enc is None:
-            return None
-        if isinstance(enc, dict):
-            return walk(enc).df
-        return local_frame(spark, [(int(b), int(c)) for b, c in enc],
-                           "bucket long, cnt long")
-
-    _SEL_KW = {
-        "quality_classifier": {"text_col", "id_col", "n_buckets",
-                               "intercept_milli", "threshold_milli",
-                               "max_map_literal", "n"},
-        "train_quality_classifier": {"text_col", "n_buckets", "n",
-                                     "epochs", "lr", "init_intercept",
-                                     "lr_decay"},
-        "dsir_log_weights": {"text_col", "id_col", "n_buckets",
-                             "smoothing", "n", "max_map_literal"},
-        "weighted_sample": {"n", "key_threshold", "id_col",
-                            "temperature", "seed", "max_n"},
-    }
-
-    def _kw(raw_kw: dict, which: str) -> dict:
-        bad = set(raw_kw) - _SEL_KW[which]
-        if bad:
-            raise ValueError(
-                f"{which} wire node carries unknown keyword(s) "
-                f"{sorted(bad)} — re-serialize with a matching client "
-                "version")
-        return dict(raw_kw)
-
-    def _tf(idx):
-        # optional trailing target_filter expression subtree (r11
-        # one-pass dual-count fit); absent in earlier r11 trees
-        if len(args) <= idx or args[idx] is None:
-            return None
-        return _expr(args[idx], child)
-
-    if op == "hashed_bucket_counts":
-        # args: [child, text_col, n_buckets, n, (target_filter_expr)]
-        _arity(op, args, 5)
-        return Table(hashed_bucket_counts(child, args[1], args[2],
-                                          args[3],
-                                          target_filter=_tf(4)),
-                     "bucket_counts")
-    if op == "train_quality_classifier":
-        # args: [child, label_expr_tree, {kw}] — the fit runs HERE
-        # (eager epoch loop over the registered corpus); the result
-        # relation is the bounded fitted model, intercept at -1
-        _arity(op, args, 3)
-        from .pipeline import train_quality_classifier as _tqc
-
-        label = _expr(args[1], child)
-        m = _tqc(child, label,
-                 **_kw(args[2], "train_quality_classifier"))
-        return Table(local_frame(
-            spark, m.to_rows(), "bucket long, weight_milli long"),
-            "trained_quality_model")
-    if op == "quality_classifier":
-        # args: [child, [[bucket, weight_milli], ...], {kw}]
-        _arity(op, args, 3)
-        wdf = local_frame(
-            spark, [(int(b), int(w)) for b, w in args[1]],
-            "bucket long, weight_milli long")
-        return Table(quality_classifier(child, wdf,
-                                        **_kw(args[2],
-                                              "quality_classifier")),
-                     "quality_classifier")
-    if op == "dsir_log_weights":
-        # args: [child, target_tree|None, raw_counts, target_counts,
-        #        {kw}, (target_filter_expr)] — counts: None | literal
-        #        rows | subtree
-        _arity(op, args, 6)
-        target = walk(args[1]) if args[1] is not None else None
-        return Table(dsir_log_weights(
-            child, target, raw_counts=_counts_df(args[2]),
-            target_counts=_counts_df(args[3]),
-            target_filter=_tf(5),
-            **_kw(args[4], "dsir_log_weights")), "dsir_log_weights")
-    # weighted_sample — args: [child, score_col, {kw}]
-    _arity(op, args, 3)
-    return Table(weighted_sample(child, args[1],
-                                 **_kw(args[2], "weighted_sample")),
-                 "weighted_sample")
-
-
-def _lm_node(op: str, args: list, child: Table, walk):
-    """Replay an n-gram LM node (r11).  The fit relation arrives as
-    literal ``[[kind, bucket, cnt], ...]`` rows (BOUNDED — the client
-    collects under the 2·_MAX_BUCKETS guard before serializing) or as
-    a subtree over the registered datasets; the reference corpus as a
-    subtree; keyword args re-validate through the local entry points,
-    so a hostile node fails the same way a bad local call does."""
-    from .pipeline import ngram_lm_fit, ngram_lm_logprob, \
-        perplexity_buckets, perplexity_filter
-
-    spark = child.df.sparkSession
-
-    if op == "ngram_lm_fit":
-        # args: [child, text_col, n_buckets, n,
-        #        ({kw} — r12: unigrams; r13: tokenizer)]
-        _arity(op, args, 5)
-        kw = {}
-        if len(args) > 4 and args[4]:
-            bad = set(args[4]) - {"unigrams", "tokenizer",
-                                  "continuations"}
-            if bad:
-                raise ValueError(
-                    f"{op} wire node carries unknown keyword(s) "
-                    f"{sorted(bad)} — re-serialize with a matching "
-                    "client version")
-            kw = dict(args[4])
-            if "tokenizer" in kw:
-                from .pipeline.tokenizer import tokenizer_from_wire
-                kw["tokenizer"] = tokenizer_from_wire(kw["tokenizer"])
-        return Table(ngram_lm_fit(child, args[1], args[2], args[3],
-                                  **kw),
-                     "ngram_lm_fit")
-
-    # scoring ops — args: [child, ref_tree|None, counts_enc|None, {kw}]
-    _arity(op, args, 4)
-    reference = walk(args[1]) if args[1] is not None else None
-    counts = None
-    if args[2] is not None:
-        if isinstance(args[2], dict):
-            counts = walk(args[2]).df
-        else:
-            counts = local_frame(
-                spark, [(str(k), int(b), int(c)) for k, b, c in args[2]],
-                "kind string, bucket long, cnt long")
-    allowed = {"text_col", "id_col", "n_buckets", "n", "smoothing",
-               "backoff", "interpolate", "tokenizer", "kneser_ney"}
-    if op == "perplexity_buckets":
-        allowed |= {"quantiles", "labels", "by_col"}
-    elif op == "perplexity_filter":
-        allowed |= {"max_ppl", "min_ppl"}
-    kw = dict(args[3])
-    bad = set(kw) - allowed
-    if bad:
-        raise ValueError(
-            f"{op} wire node carries unknown keyword(s) {sorted(bad)} "
-            "— re-serialize with a matching client version")
-    if "tokenizer" in kw:
-        from .pipeline.tokenizer import tokenizer_from_wire
-        kw["tokenizer"] = tokenizer_from_wire(kw["tokenizer"])
-    if op == "perplexity_buckets":
-        if "quantiles" in kw:
-            kw["quantiles"] = tuple(kw["quantiles"])
-        if "labels" in kw:
-            kw["labels"] = tuple(kw["labels"])
-        return Table(perplexity_buckets(child, reference, counts, **kw),
-                     op)
-    fn = (ngram_lm_logprob if op == "ngram_lm_logprob"
-          else perplexity_filter)
-    return Table(fn(child, reference, counts, **kw), op)
-
-
-def _wire_node(op: str, args: list, walk) -> Table:
+def _wire_node(op: str, args: list, walk, stores: dict) -> Table:
     """Replay a registered wire op (:mod:`blaze_spark.wire`): ``[subtree
     | null per table parameter, {kw}]`` → the public function over the
-    walked tables.  Keyword args re-validate through the local entry
-    point; unknown keywords and extra positional args reject loudly
-    (the version-skew posture)."""
+    walked tables and the decoded keyword arguments.  Arguments
+    re-validate through the local entry point; unknown keywords and
+    extra positional args reject loudly (the version-skew posture)."""
     spec = wire.registry()[op]
     n = len(spec.tables)
     _arity(op, args, n + 1)
@@ -694,21 +447,16 @@ def _wire_node(op: str, args: list, walk) -> Table:
     if not isinstance(kw, dict):
         raise ValueError(f"{op} wire node expects its keyword dict as "
                          f"args[{n}]")
-    bad = set(kw) - spec.kwargs
+    bad = set(kw) - spec.accepted
     if bad:
         raise ValueError(
             f"{op} wire node carries unknown keyword(s) {sorted(bad)} "
             "— re-serialize with a matching client version")
-    missing = [p for p in spec.kwargs if spec.required(p) and p not in kw]
+    missing = [p for p in spec.accepted
+               if spec.required(p) and p not in kw]
     if missing:
         raise ValueError(f"{op} wire node is missing the required "
                          f"keyword(s) {sorted(missing)}")
-    kw = dict(kw)
-    if kw.get("tokenizer") is not None:
-        # tokenizers ride as bounded wire dicts (vocab/merges are
-        # literal relations); hostile forms fail in tokenizer_from_wire
-        from .pipeline.tokenizer import tokenizer_from_wire
-        kw["tokenizer"] = tokenizer_from_wire(kw["tokenizer"])
     tables = {}
     for i, name in enumerate(spec.tables):
         sub = args[i] if i < len(args) else None
@@ -718,8 +466,50 @@ def _wire_node(op: str, args: list, walk) -> Table:
             raise ValueError(f"{op} wire node expects a table subtree "
                              f"({name}) as args[{i}]")
         tables[name] = walk(sub)
+    lead = tables[spec.tables[0]]
+    kw = {p: _wire_arg(spec, p, v, lead, walk, stores)
+          for p, v in kw.items()}
     out = spec.public(**tables, **kw)
+    if spec.eager is not None:
+        out = spec.eager[0](out, lead.df.sparkSession)
     return out if isinstance(out, Table) else Table(out, op)
+
+
+def _wire_arg(spec, p: str, v, lead: Table, walk, stores: dict):
+    """Decode one keyword of a registered op by its declared kind."""
+    if p in spec.exprs:
+        if not isinstance(v, dict):
+            raise ValueError(f"{spec.name} wire node expects {p} as an "
+                             "expression subtree")
+        return _expr(v, lead)
+    if p in spec.stores:
+        if isinstance(v, str):
+            return _named_store(v, stores, p.removesuffix("s"))
+        if spec.stores[p] is None:
+            raise ValueError(f"{spec.name} wire node expects {p} as a "
+                             "registered store NAME")
+        return spec.stores[p][1](v)
+    if p in spec.relations:
+        if isinstance(v, list):
+            return v
+        if isinstance(v, dict) and "op" in v:
+            return walk(v)
+        if (isinstance(v, dict) and set(v) == {"rows", "schema"}
+                and isinstance(v["schema"], str)
+                and isinstance(v["rows"], list)
+                and all(isinstance(r, list) for r in v["rows"])):
+            return Table(local_frame(lead.df.sparkSession,
+                                     [tuple(r) for r in v["rows"]],
+                                     v["schema"]), p)
+        raise ValueError(
+            f"{spec.name} wire node expects {p} as a subtree, a "
+            "{rows, schema} relation or a literal list")
+    if p == "tokenizer" and v is not None:
+        # tokenizers ride as bounded wire dicts (vocab/merges are
+        # literal relations); hostile forms fail in tokenizer_from_wire
+        from .pipeline.tokenizer import tokenizer_from_wire
+        return tokenizer_from_wire(v)
+    return v
 
 
 def _named_store(name: str, stores: dict, what: str) -> str:
@@ -734,226 +524,6 @@ def _named_store(name: str, stores: dict, what: str) -> str:
             "leaves resolve only from the server's registered stores "
             f"{known}")
     return stores[name]
-
-
-def _codebooks_arg(enc, stores: dict, child: Table):
-    """A codebooks wire arg: either the bounded literal dict or (r15)
-    the NAME of a registered codebook store, loaded where it lives
-    (load_codebooks validates completeness via the self-described
-    (m, ks) schema)."""
-    from .pipeline.pq import codebooks_from_wire, load_codebooks
-
-    if isinstance(enc, str):
-        return load_codebooks(_named_store(enc, stores, "codebook"),
-                              spark=child.df.sparkSession)
-    return codebooks_from_wire(enc)
-
-
-def _centroids_arg(enc, stores: dict, child: Table):
-    """A coarse-centroids wire arg: literal dict or (r15) a registered
-    centroid store name."""
-    from .pipeline.ivf import load_centroids
-    from .pipeline.pq import centroids_from_wire
-
-    if isinstance(enc, str):
-        return load_centroids(_named_store(enc, stores, "centroid"),
-                              spark=child.df.sparkSession)
-    return centroids_from_wire(enc)
-
-
-def _bloom_node(op: str, args: list, child: Table, stores: dict):
-    """Replay a bloom-store probe node (r15, VERDICT r14 #5): the
-    packed filter NEVER rides the wire as rows — the node names a
-    registered bloom store and the probe materializes where the store
-    lives.  Two store kinds: 'saved' (save_bloom artifact —
-    self-describing, geometry rides in reserved rows) and
-    'incremental' (the streaming ingest store — the client passes the
-    geometry, which read_bloom re-validates against the format
-    stamp)."""
-    from .pipeline.bloom import (bloom_contains, bloom_contamination,
-                                 load_bloom)
-    from .streaming.incremental_bloom import read_bloom
-
-    spark = child.df.sparkSession
-    if op == "bloom_contains":
-        _arity(op, args, 4)          # [child, name, key_col, {kw}]
-        kw = dict(args[3]) if len(args) > 3 and args[3] else {}
-        allowed = {"out_col", "store", "m_bits", "k", "store_n"}
-    else:
-        _arity(op, args, 3)          # [child, name, {kw}]
-        kw = dict(args[2]) if len(args) > 2 and args[2] else {}
-        allowed = {"n", "text_col", "id_col", "threshold",
-                   "store", "m_bits", "k", "store_n"}
-    bad = set(kw) - allowed
-    if bad:
-        raise ValueError(
-            f"{op} wire node carries unknown keyword(s) {sorted(bad)} "
-            "— re-serialize with a matching client version")
-    path = _named_store(args[1], stores, "bloom")
-    kind = kw.pop("store", "saved")
-    geom = {g: kw.pop(g) for g in ("m_bits", "k", "store_n")
-            if g in kw}
-    if kind == "saved":
-        if geom:
-            raise ValueError(
-                f"{op}: {sorted(geom)} apply only to "
-                "store='incremental' — a saved bloom artifact is "
-                "self-describing")
-        bloom = load_bloom(spark, path)
-    elif kind == "incremental":
-        bloom = read_bloom(
-            spark, path, m_bits=int(geom.get("m_bits", 1 << 23)),
-            k=int(geom.get("k", 7)),
-            n=(None if geom.get("store_n") is None
-               else int(geom["store_n"])))
-    else:
-        raise ValueError(
-            f"{op}: unknown store kind {kind!r} — expected 'saved' "
-            "or 'incremental'")
-    if op == "bloom_contains":
-        if not isinstance(args[2], str):
-            raise ValueError(
-                "bloom_contains wire node expects the key column "
-                "name as args[2]")
-        return Table(bloom_contains(child, bloom, args[2], **kw), op)
-    return Table(bloom_contamination(child, bloom, **kw), op)
-
-
-def _pq_node(op: str, args: list, child: Table, walk, stores: dict):
-    """Replay a trained-PQ application node (r13): args = [codes_tree,
-    codebooks_enc, queries_enc, {kw}].  The codebooks rebuild from
-    their bounded literal dict or (r15) resolve from a registered
-    codebook store by name; queries arrive as sorted literal
-    (id, vector) rows or a same-server subtree; keyword args
-    re-validate through the local entry point."""
-    from .pipeline.pq import pq_topk
-
-    _arity(op, args, 4)
-    allowed = {"k", "id_col", "code_col", "vec_col", "round_to",
-               "max_queries"}
-    kw = dict(args[3]) if len(args) > 3 and args[3] else {}
-    bad = set(kw) - allowed
-    if bad:
-        raise ValueError(
-            f"{op} wire node carries unknown keyword(s) {sorted(bad)} "
-            "— re-serialize with a matching client version")
-    codebooks = _codebooks_arg(args[1], stores, child)
-    if isinstance(args[2], dict):
-        queries = walk(args[2])
-    else:
-        if not isinstance(args[2], list) or not args[2]:
-            raise ValueError(
-                f"{op} wire node expects literal (id, vector) query "
-                "rows or a subtree as args[2]")
-        spark = child.df.sparkSession
-        id_col = kw.get("id_col", "vec_id")
-        vec_col = kw.get("vec_col", "embedding")
-        queries = Table(local_frame(
-            spark, [(int(q), [float(x) for x in v]) for q, v in args[2]],
-            f"{id_col} long, {vec_col} array<double>"), "queries")
-    return pq_topk(child, queries, codebooks, **kw)
-
-
-def _ivf_pq_node(op: str, args: list, child: Table, walk,
-                 stores: dict):
-    """Replay an IVF-PQ application node (r13 second half): args =
-    [codes_tree, centroids_enc, codebooks_enc, queries_enc, {kw}].
-    Same posture as _pq_node plus the coarse centroids as a second
-    bounded literal — the nprobe-pruned isin filter then applies at
-    THIS server's scan.  r15: either artifact may instead NAME a
-    registered store."""
-    from .pipeline.pq import ivf_pq_topk
-
-    _arity(op, args, 5)
-    allowed = {"k", "nprobe", "id_col", "code_col", "vec_col",
-               "cell_col", "round_to", "max_queries"}
-    kw = dict(args[4]) if len(args) > 4 and args[4] else {}
-    bad = set(kw) - allowed
-    if bad:
-        raise ValueError(
-            f"{op} wire node carries unknown keyword(s) {sorted(bad)} "
-            "— re-serialize with a matching client version")
-    centroids = _centroids_arg(args[1], stores, child)
-    codebooks = _codebooks_arg(args[2], stores, child)
-    if isinstance(args[3], dict):
-        queries = walk(args[3])
-    else:
-        if not isinstance(args[3], list) or not args[3]:
-            raise ValueError(
-                f"{op} wire node expects literal (id, vector) query "
-                "rows or a subtree as args[3]")
-        spark = child.df.sparkSession
-        id_col = kw.get("id_col", "vec_id")
-        vec_col = kw.get("vec_col", "embedding")
-        queries = Table(local_frame(
-            spark, [(int(q), [float(x) for x in v]) for q, v in args[3]],
-            f"{id_col} long, {vec_col} array<double>"), "queries")
-    return ivf_pq_topk(child, queries, centroids, codebooks, **kw)
-
-
-def _bm25_node(args: list, child: Table, walk):
-    """Replay a BM25 retrieval node (r15): corpus as the walked child,
-    the bounded query side as literal [query_id, query] rows or a
-    same-server subtree.  Keyword args re-validate through the local
-    entry point, so a hostile node fails like a bad local call."""
-    from .pipeline import bm25_topk
-
-    _arity("bm25_topk", args, 3)
-    allowed = {"k", "k1", "b", "text_col", "id_col", "query_id_col",
-               "query_text_col", "max_queries", "round_to"}
-    kw = dict(args[2])
-    bad = set(kw) - allowed
-    if bad:
-        raise ValueError(
-            f"bm25_topk wire node carries unknown keyword(s) "
-            f"{sorted(bad)} — re-serialize with a matching client "
-            "version")
-    if isinstance(args[1], dict):
-        queries = walk(args[1])
-    else:
-        if (not isinstance(args[1], list) or not args[1]
-                or not all(isinstance(p, list) and len(p) == 2
-                           and isinstance(p[0], int)
-                           and isinstance(p[1], str)
-                           for p in args[1])):
-            raise ValueError(
-                "bm25_topk wire node expects literal [query_id, query] "
-                "rows or a subtree as args[1]")
-        spark = child.df.sparkSession
-        qid = kw.get("query_id_col", "query_id")
-        qtx = kw.get("query_text_col", "query")
-        queries = local_frame(
-            spark, [(int(i), q) for i, q in args[1]],
-            T.StructType([T.StructField(qid, T.LongType()),
-                          T.StructField(qtx, T.StringType())]))
-    return bm25_topk(child, queries, **kw)
-
-
-def _apply_mix_node(args: list, child: Table, walk):
-    """Replay mixture execution (mid-r11): args = [child, weights_enc,
-    {kw}], the weights as bounded literal rows or a same-server
-    subtree."""
-    from .pipeline import apply_source_mix
-
-    op = "apply_source_mix"
-    _arity(op, args, 3)
-    kw = dict(args[2])
-    bad = set(kw) - {"source_col", "id_col", "seed", "allow_upsample"}
-    if bad:
-        raise ValueError(
-            f"{op} wire node carries unknown keyword(s) {sorted(bad)} "
-            "— re-serialize with a matching client version")
-    if isinstance(args[1], dict):
-        weights = walk(args[1]).df
-    else:
-        spark = child.df.sparkSession
-        src_col = kw.get("source_col", "source")
-        weights = local_frame(
-            spark, [(s, float(w)) for s, w in args[1]],
-            T.StructType([T.StructField(src_col, T.StringType()),
-                          T.StructField("sample_weight",
-                                        T.DoubleType())]))
-    return apply_source_mix(child, weights, **kw)
 
 
 def compute_tree(tree: dict, *, spark: SparkSession | None = None,

@@ -58,8 +58,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..cache import owned_cache
-from ..core import Table, _localize_guard
+from ..core import Table
 from ..sources import local_frame
+from ..wire import local_only, wire_op
 from .curation import ngram_array
 from .dedup import _spread
 
@@ -146,7 +147,7 @@ def _positions(key, m_bits: int, k: int):
             for j in range(k)]
 
 
-@_localize_guard
+@local_only
 def build_bloom(t: Table, key_col: str, m_bits: int = 1 << 23,
                 k: int = 7) -> BloomFilter:
     """Build a bloom over the values of ``key_col`` (NULLs skipped —
@@ -177,7 +178,7 @@ def build_bloom(t: Table, key_col: str, m_bits: int = 1 << 23,
     return BloomFilter(packed.localCheckpoint(eager=True), m_bits, k)
 
 
-@_localize_guard
+@local_only
 def build_ngram_bloom(t: Table, n: int = 3, text_col: str = "text",
                       m_bits: int = 1 << 23,
                       k: int = 7) -> BloomFilter:
@@ -229,14 +230,78 @@ def _hit_expr(df: DataFrame, bloom: BloomFilter, key) -> DataFrame:
     return out.drop(*drop)
 
 
-@_localize_guard
+def _check_store(fn_name: str, store: str, m_bits, k, store_n) -> None:
+    """The store-kind keywords of a bloom given by store path/NAME."""
+    if store == "saved":
+        if m_bits is not None or k is not None or store_n is not None:
+            raise ValueError(
+                f"{fn_name}: m_bits/k/store_n apply only to "
+                "store='incremental' — a saved bloom artifact is "
+                "self-describing")
+    elif store != "incremental":
+        raise ValueError(
+            f"{fn_name}: unknown store kind {store!r} — expected 'saved' "
+            "or 'incremental'")
+
+
+def _resolve_bloom(t, bloom, fn_name: str, store: str, m_bits, k,
+                   store_n) -> "BloomFilter":
+    """A BloomFilter as is; a string is a bloom store PATH (over the wire
+    the server maps a registered store NAME to it): a 'saved'
+    save_bloom artifact (self-describing) or an 'incremental' streaming
+    ingest store (geometry re-validated against its format stamp)."""
+    if not isinstance(bloom, str):
+        return _require_bloom(bloom)
+    _check_store(fn_name, store, m_bits, k, store_n)
+    spark = (t.df if isinstance(t, Table) else t).sparkSession
+    if store == "saved":
+        return load_bloom(spark, bloom)
+    from ..streaming.incremental_bloom import read_bloom
+    return read_bloom(
+        spark, bloom,
+        m_bits=(1 << 23) if m_bits is None else int(m_bits),
+        k=7 if k is None else int(k),
+        n=None if store_n is None else int(store_n))
+
+
+def _contains_schema(t, out_col, store, m_bits, k, store_n, **_):
+    _check_store("bloom_contains", store, m_bits, k, store_n)
+    return T.StructType(list(t.df.schema.fields)
+                        + [T.StructField(out_col, T.BooleanType())])
+
+
+def _contamination_schema(t, id_col, store, m_bits, k, store_n, **_):
+    _check_store("bloom_contamination", store, m_bits, k, store_n)
+    return T.StructType([
+        t.df.schema[id_col],
+        T.StructField("n_ngrams", T.LongType()),
+        T.StructField("n_contaminated", T.LongType()),
+        T.StructField("contamination_rate", T.DoubleType()),
+        T.StructField("contaminated", T.IntegerType())])
+
+
+_STORE_KW = ("store", "m_bits", "k", "store_n")
+
+
+# the packed filter NEVER rides the wire as rows: a remote probe NAMES a
+# server-registered bloom store (BlazeSparkServer(stores={name: path}))
+# and the probe materializes where the store lives
+@wire_op("bloom_contains", tables=("t",), stores={"bloom": None},
+         kwargs=("key_col", "out_col", *_STORE_KW),
+         schema=_contains_schema)
 def bloom_contains(t: Table, bloom, key_col: str,
-                   out_col: str = "bloom_hit") -> DataFrame:
+                   out_col: str = "bloom_hit", *,
+                   store: str = "saved", m_bits: int | None = None,
+                   k: int | None = None,
+                   store_n: int | None = None) -> DataFrame:
     """``t`` plus a boolean ``out_col``: True iff ``key_col`` MAY be
     in the reference set (guaranteed True for every inserted key —
     zero false negatives; False positives at the built filter's FPR).
-    NULL keys are not members (False)."""
-    bloom = _require_bloom(bloom)
+    NULL keys are not members (False).  ``bloom`` is a BloomFilter or
+    a bloom store path (``store``/``m_bits``/``k``/``store_n`` select
+    and check its kind, see :func:`_resolve_bloom`)."""
+    bloom = _resolve_bloom(t, bloom, "bloom_contains", store, m_bits,
+                           k, store_n)
     df = t.df if isinstance(t, Table) else t
     if key_col not in df.columns:
         raise ValueError(f"no column {key_col!r} in {df.columns}")
@@ -247,16 +312,23 @@ def bloom_contains(t: Table, bloom, key_col: str,
         .otherwise(F.col("_bloom_hit"))).drop("_bloom_hit")
 
 
-@_localize_guard
+@wire_op("bloom_contamination", tables=("t",), stores={"bloom": None},
+         kwargs=("n", "text_col", "id_col", "threshold", *_STORE_KW),
+         schema=_contamination_schema)
 def bloom_contamination(t: Table, bloom, n: int = 3,
                         text_col: str = "text",
                         id_col: str = "doc_id",
-                        threshold: float = 0.2) -> DataFrame:
+                        threshold: float = 0.2, *,
+                        store: str = "saved",
+                        m_bits: int | None = None,
+                        k: int | None = None,
+                        store_n: int | None = None) -> DataFrame:
     """``contamination_report`` against a BLOOM of the reference's
     n-grams instead of the exact broadcast set: per training document,
     the share of its distinct n-grams that (may) appear in the
     reference.  Same output shape — ``(id_col, n_ngrams,
-    n_contaminated, contamination_rate, contaminated)``.
+    n_contaminated, contamination_rate, contaminated)``.  ``bloom`` is
+    a BloomFilter or a bloom store path, as in :func:`bloom_contains`.
 
     Guarantees: a document with NO flagged gram is certainly clean
     (zero false negatives), so dropping the flagged set removes every
@@ -264,7 +336,8 @@ def bloom_contamination(t: Table, bloom, n: int = 3,
     ``contamination_rate`` by ≈ the filter's FPR; for an exact final
     report, run ``contamination_report`` on just the flagged subset
     (a tiny fraction of the corpus) — the two-phase rescue."""
-    bloom = _require_bloom(bloom)
+    bloom = _resolve_bloom(t, bloom, "bloom_contamination", store,
+                           m_bits, k, store_n)
     grams = _spread(t.df, id_col).select(
         F.col(id_col),
         F.explode(F.array_distinct(
@@ -284,7 +357,7 @@ def bloom_contamination(t: Table, bloom, n: int = 3,
                 .alias("contaminated")))
 
 
-@_localize_guard
+@local_only
 def bloom_two_phase_contamination(t: Table, reference: Table,
                                   n: int = 3, text_col: str = "text",
                                   id_col: str = "doc_id",
@@ -382,127 +455,3 @@ def load_bloom(spark, path: str) -> BloomFilter:
             "reserved parameter rows) — was it written by save_bloom?")
     return BloomFilter(df.filter(F.col("word_idx") >= 0),
                        int(meta[_META_M]), int(meta[_META_K]))
-
-
-# ---------------------------------------------------------------------
-# wire forms (r15, VERDICT r14 #5): the packed filter NEVER rides the
-# wire as rows — a remote probe NAMES a server-registered bloom store
-# (BlazeSparkServer(stores={name: path})) and the probe materializes
-# where the store lives (the read_lm_counts posture applied to the
-# bloom family).  Two store kinds: 'saved' (save_bloom artifact,
-# self-describing) and 'incremental' (the streaming ingest store —
-# geometry kwargs re-validate against its format stamp).
-
-import functools as _functools  # noqa: E402
-
-from ..wire import _client_of, _require_tree, _wire_result  # noqa: E402
-
-_local_bloom_contains = bloom_contains
-_local_bloom_contamination = bloom_contamination
-
-
-def _store_geom_kw(fn_name: str, store: str, m_bits, k, store_n) -> dict:
-    """Validate the store-kind kwargs and encode them for the wire
-    (present only when non-default, the version-skew posture)."""
-    if store == "saved":
-        if m_bits is not None or k is not None or store_n is not None:
-            raise ValueError(
-                f"{fn_name}: m_bits/k/store_n apply only to "
-                "store='incremental' — a saved bloom artifact is "
-                "self-describing")
-        return {}
-    if store == "incremental":
-        kw = {"store": "incremental"}
-        if m_bits is not None:
-            kw["m_bits"] = int(m_bits)
-        if k is not None:
-            kw["k"] = int(k)
-        if store_n is not None:
-            kw["store_n"] = int(store_n)
-        return kw
-    raise ValueError(
-        f"{fn_name}: unknown store kind {store!r} — expected 'saved' "
-        "or 'incremental'")
-
-
-def _bloom_from_path(t, path: str, fn_name: str, store: str,
-                     m_bits, k, store_n) -> "BloomFilter":
-    """Local-string convenience: resolve a store PATH exactly like the
-    server resolves a registered name."""
-    _store_geom_kw(fn_name, store, m_bits, k, store_n)
-    spark = (t.df if isinstance(t, Table) else t).sparkSession
-    if store == "saved":
-        return load_bloom(spark, path)
-    from ..streaming.incremental_bloom import read_bloom
-    return read_bloom(
-        spark, path,
-        m_bits=(1 << 23) if m_bits is None else int(m_bits),
-        k=7 if k is None else int(k),
-        n=None if store_n is None else int(store_n))
-
-
-@_functools.wraps(_local_bloom_contains)
-def bloom_contains(t: Table, bloom, key_col: str,
-                   out_col: str = "bloom_hit", *,
-                   store: str = "saved", m_bits: int | None = None,
-                   k: int | None = None, store_n: int | None = None):
-    if _client_of(t) is None:
-        if isinstance(bloom, str):
-            bloom = _bloom_from_path(t, bloom, "bloom_contains",
-                                     store, m_bits, k, store_n)
-        return _local_bloom_contains(t, bloom, key_col, out_col)
-    if not isinstance(bloom, str):
-        raise TypeError(
-            "bloom_contains over blaze://: a packed filter does not "
-            "ride the wire as rows — register the bloom store on the "
-            "server (BlazeSparkServer(stores={name: path})) and pass "
-            "its NAME")
-    kw = {"out_col": out_col}
-    kw.update(_store_geom_kw("bloom_contains", store, m_bits, k,
-                             store_n))
-    node = {"op": "bloom_contains",
-            "args": [_require_tree(t, "bloom_contains"), bloom,
-                     key_col, kw]}
-    spark = t.df.sparkSession
-    empty = local_frame(spark, [], T.StructType(
-        list(t.df.schema.fields)
-        + [T.StructField(out_col, T.BooleanType())]))
-    return _wire_result(t, empty, node)
-
-
-@_functools.wraps(_local_bloom_contamination)
-def bloom_contamination(t: Table, bloom, n: int = 3,
-                        text_col: str = "text",
-                        id_col: str = "doc_id",
-                        threshold: float = 0.2, *,
-                        store: str = "saved",
-                        m_bits: int | None = None,
-                        k: int | None = None,
-                        store_n: int | None = None):
-    if _client_of(t) is None:
-        if isinstance(bloom, str):
-            bloom = _bloom_from_path(t, bloom, "bloom_contamination",
-                                     store, m_bits, k, store_n)
-        return _local_bloom_contamination(t, bloom, n, text_col,
-                                          id_col, threshold)
-    if not isinstance(bloom, str):
-        raise TypeError(
-            "bloom_contamination over blaze://: a packed filter does "
-            "not ride the wire as rows — register the bloom store on "
-            "the server (BlazeSparkServer(stores={name: path})) and "
-            "pass its NAME")
-    kw = {"n": int(n), "text_col": text_col, "id_col": id_col,
-          "threshold": float(threshold)}
-    kw.update(_store_geom_kw("bloom_contamination", store, m_bits, k,
-                             store_n))
-    node = {"op": "bloom_contamination",
-            "args": [_require_tree(t, "bloom_contamination"), bloom,
-                     kw]}
-    spark = t.df.sparkSession
-    empty = local_frame(spark, [], T.StructType(
-        [t.df.schema[id_col],
-         T.StructField("n_ngrams", T.LongType()),
-         T.StructField("n_contaminated", T.LongType()),
-         T.StructField("contamination_rate", T.DoubleType()),
-         T.StructField("contaminated", T.IntegerType())]))
-    return _wire_result(t, empty, node)

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from ..cache import owned_cache
 from ..core import Table
+from ..wire import local_only
 from .dedup import _P, _spread, lsh_band_pairs
 
 
@@ -63,6 +64,7 @@ def _concepts(src: DataFrame, lexicon: DataFrame,
                     .alias("concept")))
 
 
+@local_only
 def crosslingual_fingerprint(t: Table, lexicon: Table,
                              text_col: str = "text",
                              id_col: str = "doc_id",
@@ -86,6 +88,7 @@ def crosslingual_fingerprint(t: Table, lexicon: Table,
         "crosslingual_fingerprint")
 
 
+@local_only
 def crosslingual_dedup(t: Table, lexicon: Table, text_col: str = "text",
                        id_col: str = "doc_id",
                        broadcast_lexicon: bool = True) -> Table:
@@ -100,6 +103,7 @@ def crosslingual_dedup(t: Table, lexicon: Table, text_col: str = "text",
         "crosslingual_dedup")
 
 
+@local_only
 def crosslingual_minhash_candidates(t: Table, lexicon: Table,
                                     text_col: str = "text",
                                     id_col: str = "doc_id",
@@ -127,12 +131,3 @@ def crosslingual_minhash_candidates(t: Table, lexicon: Table,
         return c.transfer(Table(
             lsh_band_pairs(sigs, num_perm, bands, max_bucket),
             "crosslingual_minhash_candidates"))
-
-
-# r8 silent-empty audit: no wire-dialect form -> remote inputs raise
-# at entry instead of computing over the empty schema-only frame
-from ..core import _localize_guard as _lg  # noqa: E402
-
-crosslingual_fingerprint = _lg(crosslingual_fingerprint)
-crosslingual_dedup = _lg(crosslingual_dedup)
-crosslingual_minhash_candidates = _lg(crosslingual_minhash_candidates)

@@ -30,8 +30,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import Table, _unary_pass
-from ..wire import _client_of, _require_tree, _wire_result, wire_op
+from ..wire import wire_op
 from .text import quality_features
+
+# Bounded driver/broadcast state: counts tables, literal maps and DSIR
+# log-ratio tables are all O(n_buckets).  64k buckets ≈ the largest
+# hashed-feature models in published pipelines (DSIR uses 10k).  A
+# mixture plan (one row per source) ships under the same bound.
+_MAX_BUCKETS = 65_536
 
 
 def _tokens(col: Column) -> Column:
@@ -790,6 +796,30 @@ def corpus_report(t: Table, text_col: str = "text",
     )
 
 
+def _checked_plan(weights, source_col: str, bound: float, over: str):
+    """The plan relation with its weights validated executor-side: a
+    NULL weight or one above ``bound`` raises during the broadcast
+    build (assert_true inside a predicate is never pruned, unlike an
+    unused projected column)."""
+    if isinstance(weights, Table):
+        weights = weights.df
+    w = F.col("sample_weight")
+    return weights.select(source_col, "sample_weight").filter(
+        F.assert_true(w.isNotNull(), F.concat(
+            F.lit("apply_source_mix: weights row for source "),
+            F.coalesce(F.col(source_col).cast("string"), F.lit("NULL")),
+            F.lit(" has NULL sample_weight — a mixture plan must carry "
+                  "a weight for every listed source"))).isNull()
+        & F.assert_true(w.isNull() | (w <= F.lit(bound)), F.concat(
+            F.lit("apply_source_mix: sample_weight "),
+            w.cast("string"), F.lit(over))).isNull())
+
+
+@wire_op("apply_source_mix", tables=("t",),
+         relations={"weights": (
+             _MAX_BUCKETS,
+             lambda df, a: df.select(a["source_col"], "sample_weight"))},
+         kwargs=("source_col", "id_col", "seed", "allow_upsample"))
 def apply_source_mix(t: Table, weights: DataFrame,
                      source_col: str = "source", id_col: str = "doc_id",
                      seed: int = 42,
@@ -861,16 +891,11 @@ def apply_source_mix(t: Table, weights: DataFrame,
         # of exactly 1; executor-side assert_true in the broadcast
         # relation's filter (the _MAX_UPSAMPLE pattern) so corrupt
         # plans raise at the broadcast build, never prune away.
-        checked = weights.select(source_col, "sample_weight").filter(
-            F.assert_true(
-                F.col("sample_weight") <= F.lit(1.0 + 1e-9),
-                F.concat(F.lit("apply_source_mix: sample_weight "),
-                         F.col("sample_weight").cast("string"),
-                         F.lit(" exceeds 1 — this is an UPSAMPLING "
-                               "plan; execute it with apply_source_mix"
-                               "(..., allow_upsample=True) instead of "
-                               "letting the default executor clamp it "
-                               "to keep-once"))).isNull())
+        checked = _checked_plan(
+            weights, source_col, 1.0 + 1e-9,
+            " exceeds 1 — this is an UPSAMPLING plan; execute it with "
+            "apply_source_mix(..., allow_upsample=True) instead of "
+            "letting the default executor clamp it to keep-once")
         thr = F.lpad(F.lower(F.hex(F.floor(w * F.lit(float(16 ** 8))))),
                      8, "0")
         joined = t.df.join(F.broadcast(checked), source_col)
@@ -885,14 +910,10 @@ def apply_source_mix(t: Table, weights: DataFrame,
     # executor-side in the plan relation's filter (assert_true inside
     # a predicate is never pruned, unlike an unused projected column),
     # ~#sources rows, so a corrupt plan raises at the broadcast build.
-    checked = weights.select(source_col, "sample_weight").filter(
-        F.assert_true(
-            F.col("sample_weight") <= F.lit(float(_MAX_UPSAMPLE)),
-            F.concat(F.lit("apply_source_mix: sample_weight "),
-                     F.col("sample_weight").cast("string"),
-                     F.lit(f" exceeds the upsample bound "
-                           f"{_MAX_UPSAMPLE} — is this a mixture "
-                           "plan?"))).isNull())
+    checked = _checked_plan(
+        weights, source_col, float(_MAX_UPSAMPLE),
+        f" exceeds the upsample bound {_MAX_UPSAMPLE} — is this a "
+        "mixture plan?")
     frac = w - F.floor(w)
     thr = F.lpad(F.lower(F.hex(F.floor(frac * F.lit(float(16 ** 8))))),
                  8, "0")
@@ -909,74 +930,3 @@ def apply_source_mix(t: Table, weights: DataFrame,
 # any weight above this is a corrupt plan, not a mixture: even mT5's
 # most aggressive low-resource rebalances repeat sources O(100)×
 _MAX_UPSAMPLE = 10_000
-
-
-# ---------------------------------------------------------------------------
-# Wire dialect (mid-r11): mixture execution serializes — a remote
-# rebalancing service executes the plan server-side, with only the
-# kept rows crossing the wire.  The weights relation is ~#sources
-# rows, so a LOCAL weights frame ships as literal rows (the
-# selection-family closure pattern); a same-server weights expression
-# (e.g. a remote temperature_source_mix result) rides as a subtree.
-import functools  # noqa: E402
-
-_local_apply_source_mix = apply_source_mix
-
-
-@functools.wraps(_local_apply_source_mix)
-def apply_source_mix(t: Table, weights, source_col: str = "source",
-                     id_col: str = "doc_id", seed: int = 42,
-                     allow_upsample: bool = False) -> Table:
-    if _client_of(t) is None:
-        if isinstance(weights, Table) \
-                and getattr(weights, "_client", None) is not None:
-            raise TypeError(
-                "applying a REMOTE weights plan to a LOCAL corpus "
-                "mixes engines — compute() the weights first (or "
-                "register the corpus on the same server)")
-        if isinstance(weights, Table):
-            weights = weights.df
-        return _local_apply_source_mix(t, weights, source_col, id_col,
-                                       seed, allow_upsample)
-    from .selection import _MAX_BUCKETS  # selection imports this module
-
-    client = t._client
-    if isinstance(weights, Table):
-        if _client_of(weights) is not client:
-            raise TypeError(
-                "weights is a table from a different server (or a "
-                "local Table) — the plan must live on the same server "
-                "as the corpus, or be passed as a bounded local "
-                "DataFrame")
-        enc = _require_tree(weights, "apply_source_mix weights")
-    else:
-        rows = (weights.select(F.col(source_col).cast(T.StringType()),
-                               F.col("sample_weight")
-                               .cast(T.DoubleType()))
-                .limit(_MAX_BUCKETS + 1).collect())
-        if len(rows) > _MAX_BUCKETS:
-            raise ValueError(
-                f"apply_source_mix: weights has more than "
-                f"{_MAX_BUCKETS} rows — mixture plans are per-SOURCE "
-                "relations; was a per-document frame passed?")
-        for r in rows:
-            # contract error naming the bad row, not a bare float(None)
-            # TypeError (ADVICE r11) — mirroring the NULL-source
-            # handling in the sort key below
-            if r[1] is None:
-                raise ValueError(
-                    "apply_source_mix: weights row for source "
-                    f"{r[0]!r} has NULL sample_weight — a mixture "
-                    "plan must carry a weight for every listed source")
-        enc = sorted(([r[0], float(r[1])] for r in rows),
-                     key=lambda p: (p[0] is None, p[0]))
-    kw = {"source_col": source_col, "id_col": id_col,
-          "seed": int(seed)}
-    local_df = t.df
-    if allow_upsample:
-        kw["allow_upsample"] = True  # loud on r11 servers (unknown kw)
-        local_df = t.df.withColumn(
-            "copy_idx", F.lit(0).cast(T.IntegerType()))
-    node = {"op": "apply_source_mix",
-            "args": [_require_tree(t, "apply_source_mix"), enc, kw]}
-    return _wire_result(t, local_df, node)

@@ -33,7 +33,7 @@ from pyspark.sql import types as T
 
 from ..cache import carry, owned_cache
 from ..core import Table
-from ..wire import wire_op
+from ..wire import local_only, wire_op
 
 
 # Mersenne prime 2^31-1: (a*h+b) stays under 2^62 — no 64-bit overflow,
@@ -569,6 +569,7 @@ def dup_span_popularity(t: Table, n: int = 5, text_col: str = "text",
         return level_c.transfer(keys_c.transfer(Table(out, t._name)))
 
 
+@local_only
 def minhash_signatures(t: Table, text_col: str = "text", id_col: str = "doc_id",
                        num_perm: int = 32, shingle_k: int = 5,
                        seed: int = 42,
@@ -616,6 +617,7 @@ def minhash_signatures(t: Table, text_col: str = "text", id_col: str = "doc_id",
     )
 
 
+@local_only
 def minhash_candidates(t: Table, text_col: str = "text", id_col: str = "doc_id",
                        num_perm: int = 32, bands: int = 8, shingle_k: int = 5,
                        seed: int = 42, max_bucket: int = 1000,
@@ -704,6 +706,7 @@ def lsh_band_pairs(sigs: DataFrame, num_perm: int, bands: int,
     )
 
 
+@local_only
 def ngram_jaccard_pairs(t: Table, candidates: Table, text_col: str = "text",
                         id_col: str = "doc_id", shingle_k: int = 5) -> Table:
     """Exact shingle-set Jaccard for candidate pairs only (verification
@@ -729,6 +732,11 @@ def ngram_jaccard_pairs(t: Table, candidates: Table, text_col: str = "text",
     return Table(carry(out, c), "ngram_jaccard_pairs")
 
 
+# local-only DELIBERATELY: the candidates input comes from the
+# approximate generators (MinHash/SimHash), which are not
+# wire-expressible — a remote verify over locally generated candidates
+# would silently mix engines
+@local_only
 def edit_distance_pairs(t: Table, candidates: Table,
                         text_col: str = "text", id_col: str = "doc_id",
                         max_chars: int = 10_000,
@@ -786,6 +794,7 @@ def edit_distance_pairs(t: Table, candidates: Table,
     return Table(carry(out, c), "edit_distance_pairs")
 
 
+@local_only
 def exact_jaccard_pairs(t: Table, text_col: str = "text",
                         id_col: str = "doc_id", shingle_k: int = 5,
                         min_jaccard: float = 0.8,
@@ -854,6 +863,7 @@ def simhash_hamming(a_lo: Column, a_hi: Column,
             + F.bit_count(a_hi.bitwiseXOR(b_hi)))
 
 
+@local_only
 def simhash(t: Table, text_col: str = "text", id_col: str = "doc_id",
             max_tokens: int = 65535) -> Table:
     """64-bit SimHash as two 32-bit halves (hi, lo) — bit-voting over token
@@ -906,6 +916,7 @@ def simhash(t: Table, text_col: str = "text", id_col: str = "doc_id",
     )
 
 
+@local_only
 def simhash_candidates(t: Table, text_col: str = "text", id_col: str = "doc_id",
                        max_hamming: int = 3, max_bucket: int = 1000) -> Table:
     """Near-dup pairs with Hamming distance <= max_hamming.  Pigeonhole:
@@ -1085,19 +1096,3 @@ def winnow_candidates(t: Table, k: int = 5, w: int = 4,
                  .agg(F.count(F.lit(1)).cast(T.LongType()).alias("n_shared"))
                  .filter(F.col("n_shared") >= min_shared))
         return c.transfer(Table(pairs, "winnow_candidates"))
-
-
-from ..core import _localize_guard as _lg  # noqa: E402
-
-minhash_signatures = _lg(minhash_signatures)
-minhash_candidates = _lg(minhash_candidates)
-ngram_jaccard_pairs = _lg(ngram_jaccard_pairs)
-# edit_distance_pairs stays guarded DELIBERATELY: its candidates input
-# comes from the approximate generators (MinHash/SimHash), which are
-# not wire-expressible — a remote verify over locally generated
-# candidates would silently mix engines
-edit_distance_pairs = _lg(edit_distance_pairs)
-exact_jaccard_pairs = _lg(exact_jaccard_pairs)
-simhash = _lg(simhash)
-simhash_candidates = _lg(simhash_candidates)
-

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..cache import owned_cache
 from ..core import Table
 from ..sources import local_frame
+from ..wire import local_only
 
 __all__ = ["kmeans_fit", "ivf_assign", "ivf_topk", "ivf_neardup_pairs"]
 
@@ -113,6 +114,7 @@ def _cell_means(assigned):
                     .alias("centroid")))
 
 
+@local_only
 def kmeans_fit(corpus: Table, k: int = 16, iters: int = 5,
                vec_col: str = "embedding", id_col: str = "vec_id",
                seed: int = 42) -> np.ndarray:
@@ -168,6 +170,7 @@ def kmeans_fit(corpus: Table, k: int = 16, iters: int = 5,
     return centroids
 
 
+@local_only
 def ivf_assign(corpus: Table, centroids: np.ndarray,
                vec_col: str = "embedding") -> Table:
     """Tag rows with their IVF cell id (partition/cluster by this at rest)."""
@@ -251,6 +254,7 @@ def _ivf_scan_topk(batches, qids, qraw, probed, centroids, k: int,
                             "neighbor_id": held[1], "cosine": held[2]})
 
 
+@local_only
 def ivf_topk(corpus: Table, queries: Table, centroids: np.ndarray, k: int = 5,
              nprobe: int = 4, id_col: str = "vec_id",
              vec_col: str = "embedding", round_to: int | None = 4,
@@ -298,6 +302,7 @@ def ivf_topk(corpus: Table, queries: Table, centroids: np.ndarray, k: int = 5,
     return Table(_rank_topk(cand, kk, round_to), "ivf_topk")
 
 
+@local_only
 def ivf_neardup_pairs(corpus: Table, threshold: float = 0.9,
                       k: int | None = None, nprobe: int = 2,
                       iters: int = 3, id_col: str = "vec_id",
@@ -445,13 +450,3 @@ def load_centroids(path: str, spark=None) -> np.ndarray:
     spark = spark or SparkSession.getActiveSession()
     rows = spark.read.parquet(path).orderBy("cell_id").collect()
     return np.array([r.centroid for r in rows], dtype=np.float64)
-
-
-# r8 silent-empty audit: no wire-dialect form -> remote inputs raise
-# at entry instead of computing over the empty schema-only frame
-from ..core import _localize_guard as _lg  # noqa: E402
-
-kmeans_fit = _lg(kmeans_fit)
-ivf_assign = _lg(ivf_assign)
-ivf_topk = _lg(ivf_topk)
-ivf_neardup_pairs = _lg(ivf_neardup_pairs)

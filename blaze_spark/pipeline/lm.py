@@ -65,6 +65,7 @@ from pyspark.sql import types as T
 from ..cache import carry, owned_cache
 from ..core import Table
 from ..sources import local_frame
+from ..wire import wire_op
 from .curation import _tokens
 from .selection import _MAX_BUCKETS, _bucket_of, _validate_features
 
@@ -132,7 +133,18 @@ def _uni_at(tk, i, n: int):
 # n ≤ 5) and each order adds 2·n_buckets rows to the bounded fit
 _MAX_BACKOFF_ORDER = 8
 
+# the scorers' four exports after the id column
+_LM_SCHEMA = ("n_grams", T.IntegerType()), ("logp", T.DoubleType()), \
+    ("avg_logp", T.DoubleType()), ("ppl", T.DoubleType())
 
+# the optional fit arguments every scorer passes through
+_LM_KWARGS = ("text_col", "id_col", "n_buckets", "n", "smoothing",
+              "backoff", "tokenizer", "interpolate", "kneser_ney")
+
+
+@wire_op("ngram_lm_fit", tables=("t",),
+         kwargs=("text_col", "n_buckets", "n", "unigrams", "tokenizer",
+                 "continuations"))
 def ngram_lm_fit(t: Table, text_col: str = "text",
                  n_buckets: int = 4096, n: int = 2,
                  unigrams: bool = False, tokenizer=None,
@@ -410,26 +422,12 @@ _MAX_LM_KINDS = (2 * _MAX_BACKOFF_ORDER - 1) + \
     (3 * _MAX_BACKOFF_ORDER - 4)
 
 
-def _bounded_lm_counts(counts: DataFrame,
-                       fn_name: str = "ngram_lm_logprob"
-                       ) -> dict[str, dict]:
-    """Collect a fit relation driver-side, validated and bounded —
-    duplicate (kind, bucket) rows SUM (a union of two snapshots'
-    partials is a legitimate counts frame; the selection family's
-    additive contract).  ``fn_name`` names the actual entry point in
-    every error (ADVICE r11: perplexity_filter and the wire literal
-    path reach this too).  Returns kind → {bucket: cnt}; kinds beyond
-    'gram'/'ctx' ('uni' and the intermediate 'gram{k}'/'ctx{k}'
-    orders) are present only for ``unigrams=True`` (backoff) fits."""
-    if isinstance(counts, Table):
-        # a read_lm_counts('blaze://…::store') leaf (or any remote
-        # expression) fed to a LOCAL corpus: route loudly — the
-        # store-fed form needs the corpus on the same server
-        raise TypeError(
-            f"{fn_name}: counts is a Table/remote expression but the "
-            "corpus is local — register the corpus on the same server "
-            "for store-fed scoring, or materialize the counts locally "
-            "first (spark.createDataFrame(leaf.compute()))")
+def _lm_counts_frame(counts, fn_name: str) -> DataFrame:
+    """A fit relation as a DataFrame, shape-checked, duplicate
+    (kind, bucket) rows SUMMED (a union of two snapshots' partials is a
+    legitimate counts frame; the selection family's additive
+    contract)."""
+    counts = counts.df if isinstance(counts, Table) else counts
     types = dict(counts.dtypes)
     integral = ("tinyint", "smallint", "int", "bigint")
     if (types.get("kind") != "string"
@@ -439,8 +437,28 @@ def _bounded_lm_counts(counts: DataFrame,
             f"{fn_name}: counts must be a (kind STRING, bucket, "
             f"cnt) integer relation (ngram_lm_fit output), got columns "
             f"{counts.dtypes}")
-    agg = (counts.groupBy("kind", "bucket")
-           .agg(F.sum("cnt").cast(T.LongType()).alias("cnt")))
+    return (counts.groupBy("kind", "bucket")
+            .agg(F.sum("cnt").cast(T.LongType()).alias("cnt")))
+
+
+# the scorers' counts relation: over the wire a local fit ships summed,
+# so the bound counts distinct (kind, bucket) rows
+_COUNTS_RELATION = {"counts": (_MAX_LM_KINDS * _MAX_BUCKETS,
+                               lambda df, a: _lm_counts_frame(df,
+                                                              "counts"))}
+
+
+def _bounded_lm_counts(counts,
+                       fn_name: str = "ngram_lm_logprob"
+                       ) -> dict[str, dict]:
+    """Collect a fit relation driver-side, validated, summed
+    (:func:`_lm_counts_frame`) and bounded.  ``fn_name`` names the
+    actual entry point in every error (ADVICE r11: perplexity_filter
+    reaches this too).
+    Returns kind → {bucket: cnt}; kinds beyond 'gram'/'ctx' ('uni' and
+    the intermediate 'gram{k}'/'ctx{k}' orders) are present only for
+    ``unigrams=True`` (backoff) fits."""
+    agg = _lm_counts_frame(counts, fn_name)
     cap = _MAX_LM_KINDS * _MAX_BUCKETS
     rows = agg.limit(cap + 1).collect()
     if len(rows) > cap:
@@ -540,20 +558,11 @@ def _kn_model(kinds: dict, n: int, n_buckets: int, smoothing,
             levels, {b: float(c) for b, c in t1.items()}, T, D)
 
 
-def _lm_model(t: Table, reference, counts, text_col, n_buckets, n,
-              smoothing, backoff=None, fn_name="ngram_lm_logprob",
-              tokenizer=None, interpolate=None, kneser_ney=None):
-    """Resolve the fit → per-bucket ln() tables (hoisted driver-side:
-    the hot path below does lookups and one subtraction — or one
-    NULL-skipping greatest() over the order ladder for backoff, or the
-    Jelinek–Mercer mixture chain for interpolate — per gram).  Returns
-    ``("add_alpha", ln_g, ln_c, miss_g, miss_c)``, ``("backoff", ln_g,
-    ln_c, ln_u, miss_u, levels)`` or ``("interp", ln_g, ln_c, ln_u,
-    miss_u, levels, lam)``; ``levels`` is ``[(k, ln_gk, ln_ck), ...]``
-    for the intermediate orders n−1..2 (empty when n == 2) — for
-    backoff each order's ``(n−k)·ln λ`` multiplier is folded into
-    ``ln_gk`` driver-side, for interp the tables are raw (the mixture
-    weights apply in the scoring expression)."""
+def _check_lm(fn_name, n_buckets, n, smoothing, backoff, interpolate,
+              kneser_ney, reference, counts) -> None:
+    """The scorers' argument checks (no job: a counts relation is
+    shape-checked, not collected)."""
+    _validate_features(n_buckets, n)
     if smoothing <= 0:
         raise ValueError(f"smoothing must be > 0, got {smoothing}")
     if sum(x is not None for x in (backoff, interpolate,
@@ -590,21 +599,34 @@ def _lm_model(t: Table, reference, counts, text_col, n_buckets, n,
         raise ValueError(
             f"{fn_name}: pass either reference= (fit here) or "
             "counts= (precomputed ngram_lm_fit output), not both")
-    for side, v in (("reference", reference), ("counts", counts)):
-        if isinstance(v, Table) and getattr(v, "_client", None) is not None:
-            raise TypeError(
-                f"scoring a LOCAL corpus against a REMOTE {side} mixes "
-                "engines — compute() the remote expression first (or "
-                "register the corpus on the same server and score "
-                "there)")
+    if counts is not None:
+        _lm_counts_frame(counts, fn_name)
+
+
+def _lm_model(t: Table, reference, counts, text_col, n_buckets, n,
+              smoothing, backoff=None, fn_name="ngram_lm_logprob",
+              tokenizer=None, interpolate=None, kneser_ney=None):
+    """Resolve the fit → per-bucket ln() tables (hoisted driver-side:
+    the hot path below does lookups and one subtraction — or one
+    NULL-skipping greatest() over the order ladder for backoff, or the
+    Jelinek–Mercer mixture chain for interpolate — per gram).  Returns
+    ``("add_alpha", ln_g, ln_c, miss_g, miss_c)``, ``("backoff", ln_g,
+    ln_c, ln_u, miss_u, levels)`` or ``("interp", ln_g, ln_c, ln_u,
+    miss_u, levels, lam)``; ``levels`` is ``[(k, ln_gk, ln_ck), ...]``
+    for the intermediate orders n−1..2 (empty when n == 2) — for
+    backoff each order's ``(n−k)·ln λ`` multiplier is folded into
+    ``ln_gk`` driver-side, for interp the tables are raw (the mixture
+    weights apply in the scoring expression)."""
+    _check_lm(fn_name, n_buckets, n, smoothing, backoff, interpolate,
+              kneser_ney, reference, counts)
+    lower_lam = backoff if backoff is not None else interpolate
+    which = "backoff" if backoff is not None else "interpolate"
     if counts is None:
         counts = ngram_lm_fit(reference if reference is not None else t,
                               text_col, n_buckets, n,
                               unigrams=lower_lam is not None,
                               tokenizer=tokenizer,
                               continuations=kneser_ney is not None)
-    if isinstance(counts, Table):
-        counts = counts.df
     kinds = _bounded_lm_counts(counts, fn_name)
     if kneser_ney is not None:
         return _kn_model(kinds, n, n_buckets, smoothing, kneser_ney,
@@ -671,6 +693,26 @@ def _lm_model(t: Table, reference, counts, text_col, n_buckets, n,
             math.log(smoothing * n_buckets))  # unseen ctx bucket
 
 
+def _scores_schema(t, fn_name, keep_columns: bool, id_col, n_buckets, n,
+                   smoothing, backoff, interpolate, kneser_ney, reference,
+                   counts, **_) -> list:
+    """Validate a scorer call; its output fields: the id (then, for the
+    filters, the corpus' remaining columns) and the four exports."""
+    _check_lm(fn_name, n_buckets, n, smoothing, backoff, interpolate,
+              kneser_ney, reference, counts)
+    rest = [f for f in t.df.schema.fields
+            if f.name != id_col] if keep_columns else []
+    return ([t.df.schema[id_col], *rest]
+            + [T.StructField(c, dt) for c, dt in _LM_SCHEMA])
+
+
+def _logprob_schema(t, _fn_name, **a):
+    return T.StructType(_scores_schema(t, _fn_name, False, **a))
+
+
+@wire_op("ngram_lm_logprob", tables=("t", "reference"),
+         relations=_COUNTS_RELATION,
+         kwargs=_LM_KWARGS, schema=_logprob_schema)
 def ngram_lm_logprob(t: Table, reference: Table | None = None,
                      counts: DataFrame | None = None,
                      text_col: str = "text", id_col: str = "doc_id",
@@ -989,6 +1031,22 @@ def _lm_exports():
     )
 
 
+def _check_band(max_ppl, min_ppl) -> None:
+    if max_ppl is None and min_ppl is None:
+        raise ValueError(
+            "perplexity_filter: pass max_ppl and/or min_ppl — an "
+            "unbounded band keeps everything")
+
+
+def _filter_schema(t, max_ppl, min_ppl, **a):
+    _check_band(max_ppl, min_ppl)
+    return T.StructType(_scores_schema(t, "perplexity_filter", True, **a))
+
+
+@wire_op("perplexity_filter", tables=("t", "reference"),
+         relations=_COUNTS_RELATION,
+         kwargs=("max_ppl", "min_ppl", *_LM_KWARGS),
+         schema=_filter_schema)
 def perplexity_filter(t: Table, reference: Table | None = None,
                       counts: DataFrame | None = None,
                       max_ppl: float | None = None,
@@ -1017,13 +1075,8 @@ def perplexity_filter(t: Table, reference: Table | None = None,
     scorer once per band clause inside an interpreted Filter — 28.3 →
     2.1 s at sf0.1 with this structure, PLANS.md r11).  The kept
     scores then broadcast-hash-join back onto ``t`` on ``id_col``."""
-    if max_ppl is None and min_ppl is None:
-        raise ValueError(
-            "perplexity_filter: pass max_ppl and/or min_ppl — an "
-            "unbounded band keeps everything")
-    # _local_ngram_lm_logprob (bound below): the module-level name is
-    # rebound to the wire wrapper, which has no _fn_name knob
-    scores = _local_ngram_lm_logprob(
+    _check_band(max_ppl, min_ppl)
+    scores = ngram_lm_logprob(
         t, reference=reference, counts=counts, text_col=text_col,
         id_col=id_col, n_buckets=n_buckets, n=n, smoothing=smoothing,
         backoff=backoff, tokenizer=tokenizer, interpolate=interpolate,
@@ -1038,6 +1091,50 @@ def perplexity_filter(t: Table, reference: Table | None = None,
     return carry(t.df.join(kept, id_col, "inner"), scores)
 
 
+def _check_buckets(t, quantiles, labels, by_col, id_col) -> None:
+    qs = [float(q) for q in quantiles]
+    if not qs or any(not 0.0 < q < 1.0 for q in qs) \
+            or any(b <= a for a, b in zip(qs, qs[1:])):
+        raise ValueError(
+            f"perplexity_buckets: quantiles must be strictly "
+            f"increasing within (0, 1), got {tuple(quantiles)}")
+    if len(labels) != len(qs) + 1:
+        raise ValueError(
+            f"perplexity_buckets: {len(qs)} quantile cut(s) define "
+            f"{len(qs) + 1} buckets but {len(labels)} label(s) were "
+            "passed")
+    if len(set(labels)) != len(labels):
+        raise ValueError(
+            f"perplexity_buckets: duplicate bucket labels {labels}")
+    if by_col is not None and by_col not in t.df.columns:
+        raise ValueError(
+            f"perplexity_buckets: by_col {by_col!r} is not a column of "
+            f"the corpus ({t.df.columns})")
+    if by_col == id_col:
+        raise ValueError(
+            f"perplexity_buckets: by_col == id_col ({id_col!r}) — "
+            "per-document groups would make every document its own "
+            "tercile; group on a coarser column (e.g. lang)")
+    # loud guard instead of an opaque ambiguous-column analysis error
+    # (the assign_clusters posture, ADVICE r14)
+    taken = {"__thr", "ppl_bucket"} & set(t.df.columns)
+    if taken:
+        raise ValueError(
+            f"perplexity_buckets: the corpus already carries "
+            f"{sorted(taken)} — rename or drop before bucketing")
+
+
+def _buckets_schema(t, quantiles, labels, by_col, **a):
+    _check_buckets(t, quantiles, labels, by_col, a["id_col"])
+    return T.StructType(
+        _scores_schema(t, "perplexity_buckets", True, **a)
+        + [T.StructField("ppl_bucket", T.StringType())])
+
+
+@wire_op("perplexity_buckets", tables=("t", "reference"),
+         relations=_COUNTS_RELATION,
+         kwargs=("quantiles", "labels", "by_col", *_LM_KWARGS),
+         schema=_buckets_schema)
 def perplexity_buckets(t: Table, reference: Table | None = None,
                        counts: DataFrame | None = None,
                        quantiles: tuple = (1.0 / 3.0, 2.0 / 3.0),
@@ -1077,37 +1174,9 @@ def perplexity_buckets(t: Table, reference: Table | None = None,
     SAME round-4 ppl multiset on both engines (Spark ``percentile`` ≙
     DuckDB ``quantile_cont``, the percentile_prices precedent), and the
     bucket comparisons then see identical doubles on both sides."""
+    _check_buckets(t, quantiles, labels, by_col, id_col)
     qs = [float(q) for q in quantiles]
-    if not qs or any(not 0.0 < q < 1.0 for q in qs) \
-            or any(b <= a for a, b in zip(qs, qs[1:])):
-        raise ValueError(
-            f"perplexity_buckets: quantiles must be strictly "
-            f"increasing within (0, 1), got {tuple(quantiles)}")
-    if len(labels) != len(qs) + 1:
-        raise ValueError(
-            f"perplexity_buckets: {len(qs)} quantile cut(s) define "
-            f"{len(qs) + 1} buckets but {len(labels)} label(s) were "
-            "passed")
-    if len(set(labels)) != len(labels):
-        raise ValueError(
-            f"perplexity_buckets: duplicate bucket labels {labels}")
-    if by_col is not None and by_col not in t.df.columns:
-        raise ValueError(
-            f"perplexity_buckets: by_col {by_col!r} is not a column of "
-            f"the corpus ({t.df.columns})")
-    if by_col == id_col:
-        raise ValueError(
-            f"perplexity_buckets: by_col == id_col ({id_col!r}) — "
-            "per-document groups would make every document its own "
-            "tercile; group on a coarser column (e.g. lang)")
-    # loud guard instead of an opaque ambiguous-column analysis error
-    # (the assign_clusters posture, ADVICE r14)
-    taken = {"__thr", "ppl_bucket"} & set(t.df.columns)
-    if taken:
-        raise ValueError(
-            f"perplexity_buckets: the corpus already carries "
-            f"{sorted(taken)} — rename or drop before bucketing")
-    scores = _local_ngram_lm_logprob(
+    scores = ngram_lm_logprob(
         t, reference=reference, counts=counts, text_col=text_col,
         id_col=id_col, n_buckets=n_buckets, n=n, smoothing=smoothing,
         backoff=backoff, tokenizer=tokenizer, interpolate=interpolate,
@@ -1139,265 +1208,3 @@ def perplexity_buckets(t: Table, reference: Table | None = None,
                 + [name for name, _ in _LM_SCHEMA] + ["ppl_bucket"])
         out = joined.withColumn("ppl_bucket", bucket).select(*cols)
         return owner.transfer(carry(out, scores))
-
-
-# ---------------------------------------------------------------------------
-# Wire dialect: the LM family serializes over blaze:// (the selection
-# family's r11 closure pattern — VERDICT r10 established the posture:
-# bounded relations ship as LITERAL tables in the node, corpora ride as
-# same-server subtrees; reference parity blaze/server/server.py:411-477
-# to_tree/from_tree).  A fit relation is ≤ 2·n_buckets rows, so a
-# remote perplexity-filtering service needs only the tree — no code or
-# corpus ever crosses the wire.
-
-import functools  # noqa: E402
-
-from ..wire import _client_of, _require_tree, _wire_result  # noqa: E402
-
-_local_ngram_lm_fit = ngram_lm_fit
-_local_ngram_lm_logprob = ngram_lm_logprob
-_local_perplexity_filter = perplexity_filter
-_local_perplexity_buckets = perplexity_buckets
-
-_LM_SCHEMA = ("n_grams", T.IntegerType()), ("logp", T.DoubleType()), \
-    ("avg_logp", T.DoubleType()), ("ppl", T.DoubleType())
-
-
-def _literal_lm_counts(counts, client, fn_name="ngram_lm_logprob"):
-    """Encode a fit relation for the wire: a same-server remote
-    expression rides as its subtree; a local bounded (kind, bucket,
-    cnt) frame collects (duplicates summed, kinds validated) into
-    sorted literal rows."""
-    if isinstance(counts, Table):
-        ca = _client_of(counts)
-        # identity OR same normalized URL (the _same_server precedent):
-        # a read_lm_counts('blaze://...::store') leaf carries its own
-        # Client instance for the same server (r14)
-        if ca is None or (ca is not client
-                          and getattr(ca, "url", None)
-                          != getattr(client, "url", object())):
-            raise TypeError(
-                "counts is a table from a different server (or a "
-                "local Table) — fit relations must live on the same "
-                "server as the corpus, or be passed as a bounded "
-                "local DataFrame")
-        return _require_tree(counts, "ngram_lm counts")
-    kinds = _bounded_lm_counts(counts, fn_name)
-    return sorted([k, int(b), int(c)]
-                  for k, m in kinds.items()
-                  for b, c in m.items())
-
-
-def _lm_wire_args(t, reference, counts, text_col, id_col, n_buckets,
-                  n, smoothing, fn_name, backoff=None, tokenizer=None,
-                  interpolate=None, kneser_ney=None):
-    _validate_features(n_buckets, n)
-    if smoothing <= 0:
-        raise ValueError(f"smoothing must be > 0, got {smoothing}")
-    if sum(x is not None for x in (backoff, interpolate,
-                                   kneser_ney)) > 1:
-        raise ValueError(
-            f"{fn_name}: backoff=, interpolate= and kneser_ney= are "
-            "alternative smoothing schemes — pass one")
-    if kneser_ney is not None:
-        _validate_kn(kneser_ney, n, fn_name)
-    if backoff is not None and not 0.0 < backoff <= 1.0:
-        raise ValueError(
-            f"{fn_name}: backoff must be in (0, 1], got {backoff}")
-    if interpolate is not None and not 0.0 < interpolate < 1.0:
-        raise ValueError(
-            f"{fn_name}: interpolate must be in (0, 1), got "
-            f"{interpolate}")
-    if backoff is not None or interpolate is not None:
-        which = "backoff" if backoff is not None else "interpolate"
-        if n < 2:
-            raise ValueError(
-                f"{fn_name}: {which} requires n >= 2 — a unigram LM "
-                "has no lower-order relation to fall back on")
-        if n > _MAX_BACKOFF_ORDER:
-            raise ValueError(
-                f"{fn_name}: {which} bounds n at "
-                f"{_MAX_BACKOFF_ORDER}, got n={n}")
-    if counts is not None and reference is not None:
-        raise ValueError(
-            f"{fn_name}: pass either reference= (fit server-side) or "
-            "counts= (precomputed ngram_lm_fit output), not both")
-    client = t._client
-    ref_node = None
-    if reference is not None:
-        if _client_of(reference) is not client:
-            raise TypeError(
-                f"{fn_name} over blaze://: reference must live on the "
-                "SAME server as the corpus (register it there), or "
-                "pass a bounded local counts= frame instead")
-        ref_node = _require_tree(reference, f"{fn_name} reference")
-    enc = (None if counts is None
-           else _literal_lm_counts(counts, client, fn_name))
-    kw = {"text_col": text_col, "id_col": id_col,
-          "n_buckets": int(n_buckets), "n": int(n),
-          "smoothing": float(smoothing)}
-    if backoff is not None:
-        # only present when set: default-smoothing trees stay valid on
-        # r11 servers, backoff trees reject there loudly (unknown kw)
-        kw["backoff"] = float(backoff)
-    if interpolate is not None:
-        # same posture (r13): interp plans reject loudly on servers
-        # that would otherwise silently score add-α
-        kw["interpolate"] = float(interpolate)
-    if kneser_ney is not None:
-        # True ships as-is — the discount estimate belongs where the
-        # counts live (server-side at replay); older servers reject
-        # the unknown keyword loudly
-        kw["kneser_ney"] = (True if kneser_ney is True
-                            else float(kneser_ney))
-    if tokenizer is not None:
-        # same posture (r13): tokenizer plans reject loudly on older
-        # servers — never a silent whitespace recount
-        from .tokenizer import _tokenizer_wire
-        kw["tokenizer"] = _tokenizer_wire(tokenizer)
-    return [_require_tree(t, fn_name), ref_node, enc, kw]
-
-
-@functools.wraps(_local_ngram_lm_fit)
-def ngram_lm_fit(t: Table, text_col: str = "text",
-                 n_buckets: int = 4096, n: int = 2,
-                 unigrams: bool = False, tokenizer=None,
-                 continuations: bool = False):
-    if _client_of(t) is None:
-        return _local_ngram_lm_fit(t, text_col, n_buckets, n, unigrams,
-                                   tokenizer, continuations)
-    _validate_features(n_buckets, n)
-    if unigrams and n < 2:
-        raise ValueError(
-            "ngram_lm_fit: unigrams=True requires n >= 2 — a unigram "
-            "LM has no lower-order relation to back off to")
-    if unigrams and n > _MAX_BACKOFF_ORDER:
-        raise ValueError(
-            f"ngram_lm_fit: unigrams=True bounds n at "
-            f"{_MAX_BACKOFF_ORDER}, got n={n}")
-    if continuations and not 2 <= n <= _MAX_BACKOFF_ORDER:
-        raise ValueError(
-            f"ngram_lm_fit: continuations=True requires 2 <= n <= "
-            f"{_MAX_BACKOFF_ORDER}, got n={n}")
-    args = [_require_tree(t, "ngram_lm_fit"), text_col,
-            int(n_buckets), int(n)]
-    kw5 = {}
-    if unigrams:
-        # appended only when set (kw dict, r12): default fits keep the
-        # r11 4-arg form; an r11 server ignores the 5th arg (its arity
-        # guard is r12), but backoff scoring then fails loudly on the
-        # uni-less fit, so skew never scores silently wrong
-        kw5["unigrams"] = True
-    if continuations:
-        # same skew posture: KN fit trees reject loudly on pre-r13
-        # servers instead of silently dropping the type kinds
-        kw5["continuations"] = True
-    if tokenizer is not None:
-        from .tokenizer import _tokenizer_wire
-        kw5["tokenizer"] = _tokenizer_wire(tokenizer)
-    if kw5:
-        args.append(kw5)
-    node = {"op": "ngram_lm_fit", "args": args}
-    empty = local_frame(
-        t.df.sparkSession, [], "kind string, bucket long, cnt long")
-    return _wire_result(t, empty, node)
-
-
-@functools.wraps(_local_ngram_lm_logprob)
-def ngram_lm_logprob(t: Table, reference: Table | None = None,
-                     counts=None, text_col: str = "text",
-                     id_col: str = "doc_id", n_buckets: int = 4096,
-                     n: int = 2, smoothing: float = 1.0,
-                     backoff: float | None = None, tokenizer=None,
-                     interpolate: float | None = None,
-                     kneser_ney=None):
-    if _client_of(t) is None:
-        return _local_ngram_lm_logprob(
-            t, reference, counts, text_col, id_col, n_buckets, n,
-            smoothing, backoff, tokenizer, interpolate, kneser_ney)
-    args = _lm_wire_args(t, reference, counts, text_col, id_col,
-                         n_buckets, n, smoothing, "ngram_lm_logprob",
-                         backoff, tokenizer, interpolate, kneser_ney)
-    node = {"op": "ngram_lm_logprob", "args": args}
-    empty = local_frame(t.df.sparkSession, [], T.StructType(
-        [t.df.schema[id_col]]
-        + [T.StructField(c, dt) for c, dt in _LM_SCHEMA]))
-    return _wire_result(t, empty, node)
-
-
-@functools.wraps(_local_perplexity_filter)
-def perplexity_filter(t: Table, reference: Table | None = None,
-                      counts=None, max_ppl: float | None = None,
-                      min_ppl: float | None = None,
-                      text_col: str = "text", id_col: str = "doc_id",
-                      n_buckets: int = 4096, n: int = 2,
-                      smoothing: float = 1.0,
-                      backoff: float | None = None, tokenizer=None,
-                      interpolate: float | None = None,
-                      kneser_ney=None):
-    if _client_of(t) is None:
-        return _local_perplexity_filter(
-            t, reference, counts, max_ppl, min_ppl, text_col, id_col,
-            n_buckets, n, smoothing, backoff, tokenizer, interpolate,
-            kneser_ney)
-    if max_ppl is None and min_ppl is None:
-        raise ValueError(
-            "perplexity_filter: pass max_ppl and/or min_ppl — an "
-            "unbounded band keeps everything")
-    args = _lm_wire_args(t, reference, counts, text_col, id_col,
-                         n_buckets, n, smoothing, "perplexity_filter",
-                         backoff, tokenizer, interpolate, kneser_ney)
-    args[3]["max_ppl"] = None if max_ppl is None else float(max_ppl)
-    args[3]["min_ppl"] = None if min_ppl is None else float(min_ppl)
-    node = {"op": "perplexity_filter", "args": args}
-    # join output order: the key, the corpus' remaining columns, then
-    # the four LM exports
-    empty = local_frame(t.df.sparkSession, [], T.StructType(
-        [t.df.schema[id_col]]
-        + [f for f in t.df.schema.fields if f.name != id_col]
-        + [T.StructField(c, dt) for c, dt in _LM_SCHEMA]))
-    return _wire_result(t, empty, node)
-
-
-@functools.wraps(_local_perplexity_buckets)
-def perplexity_buckets(t: Table, reference: Table | None = None,
-                       counts=None,
-                       quantiles: tuple = (1.0 / 3.0, 2.0 / 3.0),
-                       labels: tuple = ("head", "middle", "tail"),
-                       by_col: str | None = None,
-                       text_col: str = "text", id_col: str = "doc_id",
-                       n_buckets: int = 4096, n: int = 2,
-                       smoothing: float = 1.0,
-                       backoff: float | None = None, tokenizer=None,
-                       interpolate: float | None = None,
-                       kneser_ney=None):
-    if _client_of(t) is None:
-        return _local_perplexity_buckets(
-            t, reference, counts, quantiles, labels, by_col, text_col,
-            id_col, n_buckets, n, smoothing, backoff, tokenizer,
-            interpolate, kneser_ney)
-    qs = [float(q) for q in quantiles]
-    if not qs or any(not 0.0 < q < 1.0 for q in qs) \
-            or any(b <= a for a, b in zip(qs, qs[1:])):
-        raise ValueError(
-            f"perplexity_buckets: quantiles must be strictly "
-            f"increasing within (0, 1), got {tuple(quantiles)}")
-    if len(labels) != len(qs) + 1:
-        raise ValueError(
-            f"perplexity_buckets: {len(qs)} quantile cut(s) define "
-            f"{len(qs) + 1} buckets but {len(labels)} label(s) were "
-            "passed")
-    args = _lm_wire_args(t, reference, counts, text_col, id_col,
-                         n_buckets, n, smoothing, "perplexity_buckets",
-                         backoff, tokenizer, interpolate, kneser_ney)
-    args[3]["quantiles"] = qs
-    args[3]["labels"] = [str(x) for x in labels]
-    if by_col is not None:
-        args[3]["by_col"] = by_col
-    node = {"op": "perplexity_buckets", "args": args}
-    empty = local_frame(t.df.sparkSession, [], T.StructType(
-        [t.df.schema[id_col]]
-        + [f for f in t.df.schema.fields if f.name != id_col]
-        + [T.StructField(c, dt) for c, dt in _LM_SCHEMA]
-        + [T.StructField("ppl_bucket", T.StringType())]))
-    return _wire_result(t, empty, node)

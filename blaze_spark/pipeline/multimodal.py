@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import Table
+from ..wire import local_only
 
 IMAGE_SCHEMA = T.StructType([
     T.StructField("content", T.BinaryType()),
@@ -251,6 +252,7 @@ def _y4m_stream_info(raw: bytes):
     return n, num / den
 
 
+@local_only
 def attach_fake_binary(t: Table, id_col: str = "doc_id",
                        n_bytes: int = 256) -> Table:
     """Deterministic fake payload column (sha-based bytes from the id) so
@@ -271,6 +273,7 @@ def attach_fake_binary(t: Table, id_col: str = "doc_id",
     )
 
 
+@local_only
 def decode_images(t: Table, image_col: str = "image", id_col: str = "doc_id",
                   fake: bool = True) -> Table:
     """Decode binary -> (id, width, height, mean_intensity).  Arrow-batched
@@ -308,6 +311,7 @@ def decode_images(t: Table, image_col: str = "image", id_col: str = "doc_id",
                  t._name)
 
 
+@local_only
 def extract_image_features(t: Table, image_col: str = "image",
                            id_col: str = "doc_id", dim: int = 16) -> Table:
     """Feature-extraction stub: deterministic pseudo-embedding from a sha256
@@ -328,6 +332,7 @@ def extract_image_features(t: Table, image_col: str = "image",
                  t._name)
 
 
+@local_only
 def sample_video_frames(t: Table, video_col: str = "video",
                         id_col: str = "doc_id", every_ms: int = 1000,
                         fake: bool = True) -> Table:
@@ -377,6 +382,7 @@ def sample_video_frames(t: Table, video_col: str = "video",
     return Table(t.df.select(*cols).mapInPandas(_frames, out_schema), t._name)
 
 
+@local_only
 def resize_images(t: Table, width: int, height: int,
                   image_col: str = "image", id_col: str = "doc_id",
                   fake: bool = True) -> Table:
@@ -434,6 +440,7 @@ def resize_images(t: Table, width: int, height: int,
                  .mapInPandas(_resize, out_schema), t._name)
 
 
+@local_only
 def attach_fake_audio(t: Table, id_col: str = "doc_id",
                       n_bytes: int = 512) -> Table:
     """Deterministic fake audio payload + metadata (AUDIO_SCHEMA)."""
@@ -457,6 +464,7 @@ def attach_fake_audio(t: Table, id_col: str = "doc_id",
     )
 
 
+@local_only
 def extract_audio_features(t: Table, audio_col: str = "audio",
                            id_col: str = "doc_id", n_mel: int = 8,
                            fake: bool = True) -> Table:
@@ -511,16 +519,3 @@ def extract_audio_features(t: Table, audio_col: str = "audio",
 
     return Table(t.df.select(id_col, audio_col)
                  .mapInPandas(_feat, out_schema), t._name)
-
-
-# r8 silent-empty audit: no wire-dialect form -> remote inputs raise
-# at entry instead of computing over the empty schema-only frame
-from ..core import _localize_guard as _lg  # noqa: E402
-
-attach_fake_binary = _lg(attach_fake_binary)
-decode_images = _lg(decode_images)
-extract_image_features = _lg(extract_image_features)
-sample_video_frames = _lg(sample_video_frames)
-resize_images = _lg(resize_images)
-attach_fake_audio = _lg(attach_fake_audio)
-extract_audio_features = _lg(extract_audio_features)

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from ..core import Table
 from ..sources import local_frame
+from ..wire import local_only, wire_op
 
 __all__ = ["pq_fit", "pq_encode", "pq_decode", "pq_topk", "ivf_pq_topk",
            "pq_range_search", "ivf_pq_range_search",
@@ -82,6 +83,7 @@ def _lloyd(x: np.ndarray, ks: int, iters: int, seed: int) -> np.ndarray:
     return cents
 
 
+@local_only
 def pq_fit(corpus: Table, m: int = 8, ks: int = 256, iters: int = 10,
            vec_col: str = "embedding", id_col: str = "vec_id",
            train_rows: int = 50_000, seed: int = 42) -> np.ndarray:
@@ -328,6 +330,7 @@ def _encode_udf(codebooks: np.ndarray):
     return pandas_udf(_enc, "binary")
 
 
+@local_only
 def pq_encode(corpus: Table, codebooks: np.ndarray,
               vec_col: str = "embedding",
               out_col: str = "pq_code") -> Table:
@@ -341,6 +344,7 @@ def pq_encode(corpus: Table, codebooks: np.ndarray,
         "pq_encode")
 
 
+@local_only
 def pq_decode(codes: Table, codebooks: np.ndarray,
               code_col: str = "pq_code",
               out_col: str = "embedding") -> Table:
@@ -366,6 +370,128 @@ def pq_decode(codes: Table, codebooks: np.ndarray,
         "pq_decode")
 
 
+# 8 MB of float64 — far above any sane (m ≤ 64, ks ≤ 256) codebook,
+# far below anything that should ride a JSON node
+_MAX_CODEBOOK_FLOATS = 1_000_000
+
+
+def codebooks_to_wire(codebooks) -> dict:
+    """Encode trained ``(m, ks, dsub)`` codebooks as a bounded literal
+    relation for a wire node (float64 repr round-trips exactly through
+    JSON, so the replayed ADC tables are bit-identical)."""
+    cb = np.asarray(codebooks, dtype=np.float64)
+    if cb.ndim != 3:
+        raise ValueError(
+            f"codebooks must be a (m, ks, dsub) array, got shape "
+            f"{cb.shape}")
+    if cb.size > _MAX_CODEBOOK_FLOATS:
+        raise ValueError(
+            f"codebooks carry {cb.size} floats (> "
+            f"{_MAX_CODEBOOK_FLOATS}) — is this a trained PQ codebook "
+            "or a corpus?")
+    m, ks, dsub = cb.shape
+    return {"m": int(m), "ks": int(ks), "dsub": int(dsub),
+            "data": [float(x) for x in cb.reshape(-1)]}
+
+
+def codebooks_from_wire(enc) -> np.ndarray:
+    """Rebuild codebooks from their wire dict; mis-shaped/hostile nodes
+    fail loudly."""
+    if not isinstance(enc, dict) or \
+            set(enc) != {"m", "ks", "dsub", "data"}:
+        raise ValueError(
+            "codebooks wire form must be a {m, ks, dsub, data} dict "
+            "(codebooks_to_wire output)")
+    m, ks, dsub = int(enc["m"]), int(enc["ks"]), int(enc["dsub"])
+    if m < 1 or ks < 1 or dsub < 1 or m * ks * dsub > \
+            _MAX_CODEBOOK_FLOATS:
+        raise ValueError(
+            f"codebooks wire form declares an invalid shape "
+            f"({m}, {ks}, {dsub})")
+    data = enc["data"]
+    if len(data) != m * ks * dsub:
+        raise ValueError(
+            f"codebooks wire form carries {len(data)} floats, "
+            f"declared shape needs {m * ks * dsub}")
+    return np.asarray(data, dtype=np.float64).reshape(m, ks, dsub)
+
+
+def centroids_to_wire(centroids) -> dict:
+    """Encode trained coarse centroids — a bounded (k_cells, d)
+    float64 relation — for a wire node (same exact-repr JSON
+    round-trip as codebooks_to_wire)."""
+    c = np.asarray(centroids, dtype=np.float64)
+    if c.ndim != 2:
+        raise ValueError(
+            f"centroids must be a (k_cells, d) array, got shape "
+            f"{c.shape}")
+    if c.size > _MAX_CODEBOOK_FLOATS:
+        raise ValueError(
+            f"centroids carry {c.size} floats (> "
+            f"{_MAX_CODEBOOK_FLOATS}) — is this a trained coarse "
+            "quantizer or a corpus?")
+    k_cells, d = c.shape
+    return {"k_cells": int(k_cells), "d": int(d),
+            "data": [float(x) for x in c.reshape(-1)]}
+
+
+def centroids_from_wire(enc) -> np.ndarray:
+    """Rebuild coarse centroids from their wire dict; mis-shaped/
+    hostile nodes fail loudly."""
+    if not isinstance(enc, dict) or set(enc) != {"k_cells", "d",
+                                                 "data"}:
+        raise ValueError(
+            "centroids wire form must be a {k_cells, d, data} dict "
+            "(centroids_to_wire output)")
+    k_cells, d = int(enc["k_cells"]), int(enc["d"])
+    if k_cells < 1 or d < 1 or k_cells * d > _MAX_CODEBOOK_FLOATS:
+        raise ValueError(
+            f"centroids wire form declares an invalid shape "
+            f"({k_cells}, {d})")
+    data = enc["data"]
+    if len(data) != k_cells * d:
+        raise ValueError(
+            f"centroids wire form carries {len(data)} floats, "
+            f"declared shape needs {k_cells * d}")
+    return np.asarray(data, dtype=np.float64).reshape(k_cells, d)
+
+
+def _topk_schema(k, nprobe=None, **_) -> str:
+    if nprobe is not None:      # ivf_pq_topk's checks, as run locally
+        from .ivf import _check_ann_params
+
+        _check_ann_params(k=k, nprobe=nprobe)
+    return "query_id long, neighbor_id long, cosine double"
+
+
+def _load_artifacts(codes: Table, codebooks, centroids=None):
+    """A string artifact argument is a store PATH (over the wire the
+    server maps a registered store NAME to it)."""
+    spark = codes.df.sparkSession
+    if isinstance(codebooks, str):
+        codebooks = load_codebooks(codebooks, spark=spark)
+    if isinstance(centroids, str):
+        from .ivf import load_centroids
+        centroids = load_centroids(centroids, spark=spark)
+    return codebooks, centroids
+
+
+# the query block ships as the (id, vector) columns the scan reads
+_QUERY_RELATION = {"queries": (
+    "max_queries", lambda df, a: df.select(a["id_col"], a["vec_col"]))}
+
+
+# trained-artifact APPLICATION serializes: the codebooks (and coarse
+# centroids) ride as bounded literals or NAME a registered store, the
+# bounded query block rides as rows or a same-server subtree, and the
+# code scan runs where the store lives — only Q×k rows cross back.
+# FITS stay local-only (pq_fit/pq_encode are eager and sample-dependent)
+@wire_op("pq_topk", tables=("codes",),
+         relations=_QUERY_RELATION,
+         stores={"codebooks": (codebooks_to_wire, codebooks_from_wire)},
+         kwargs=("k", "id_col", "code_col", "vec_col", "round_to",
+                 "max_queries"),
+         schema=_topk_schema)
 def pq_topk(codes: Table, queries: Table, codebooks: np.ndarray,
             k: int = 5, id_col: str = "vec_id",
             code_col: str = "pq_code", vec_col: str = "embedding",
@@ -386,7 +512,8 @@ def pq_topk(codes: Table, queries: Table, codebooks: np.ndarray,
     queries × k`` rows, never N×Q.  The query block is collected to the
     driver under the same ``max_queries`` guard as
     :func:`similarity.cosine_topk` (pass ``None`` to skip the sizing
-    probe)."""
+    probe).  ``codebooks`` may be a :func:`save_codebooks` store path."""
+    codebooks, _ = _load_artifacts(codes, codebooks)
     _adc_guard(queries, id_col, max_queries, "pq_topk")
     qids, _, qx = _collect_query_block(queries, id_col, vec_col)
     spark = codes.df.sparkSession
@@ -463,6 +590,7 @@ def _range_export(cand, round_to: int | None):
     return cand.select("query_id", "neighbor_id", cos.alias("cosine"))
 
 
+@local_only
 def pq_range_search(codes: Table, queries: Table, codebooks: np.ndarray,
                     min_cosine: float = 0.9, id_col: str = "vec_id",
                     code_col: str = "pq_code",
@@ -497,6 +625,13 @@ def pq_range_search(codes: Table, queries: Table, codebooks: np.ndarray,
     return Table(_range_export(cand, round_to), "pq_range_search")
 
 
+@wire_op("ivf_pq_topk", tables=("codes",),
+         relations=_QUERY_RELATION,
+         stores={"centroids": (centroids_to_wire, centroids_from_wire),
+                 "codebooks": (codebooks_to_wire, codebooks_from_wire)},
+         kwargs=("k", "nprobe", "id_col", "code_col", "vec_col",
+                 "cell_col", "round_to", "max_queries"),
+         schema=_topk_schema)
 def ivf_pq_topk(codes: Table, queries: Table, centroids: np.ndarray,
                 codebooks: np.ndarray, k: int = 5, nprobe: int = 4,
                 id_col: str = "vec_id", code_col: str = "pq_code",
@@ -524,7 +659,11 @@ def ivf_pq_topk(codes: Table, queries: Table, centroids: np.ndarray,
     the ADC itself on the unit sphere.  With ``nprobe >= k_cells`` the
     candidate set is the whole corpus and the result is EXACTLY
     ``pq_topk``'s (same ADC, same tie-break) — the differential
-    contract pytest pins."""
+    contract pytest pins.  Either artifact may be a store path."""
+    from .ivf import _check_ann_params
+
+    _check_ann_params(k=k, nprobe=nprobe)
+    codebooks, centroids = _load_artifacts(codes, codebooks, centroids)
     cand, _ = _ivf_pq_scored(codes, queries, centroids, codebooks,
                              nprobe, id_col, code_col, vec_col,
                              cell_col, max_queries, "ivf_pq_topk")
@@ -629,6 +768,7 @@ def _ivf_pq_scored(codes: Table, queries: Table, centroids: np.ndarray,
     return cand.drop("pq_code", cell_col), bc
 
 
+@local_only
 def ivf_pq_range_search(codes: Table, queries: Table,
                         centroids: np.ndarray, codebooks: np.ndarray,
                         min_cosine: float = 0.9, nprobe: int = 4,
@@ -708,6 +848,7 @@ def load_codebooks(path: str, spark=None) -> np.ndarray:
     return cents.reshape(m, ks, -1)
 
 
+@local_only
 def write_pq_codes(codes: Table, path: str, vec_col: str = "embedding",
                    cell_col: str = "cell", code_col: str = "pq_code",
                    mode: str = "overwrite") -> None:
@@ -741,260 +882,3 @@ def read_pq_codes(path: str, code_col: str = "pq_code",
         raise ValueError(f"not a PQ code store (missing {code_col!r}): "
                          f"{path}")
     return t
-
-
-# silent-empty audit (r8 convention): no wire-dialect form — remote
-# inputs raise at entry instead of computing over the empty frame
-from ..core import _localize_guard as _lg  # noqa: E402
-
-pq_fit = _lg(pq_fit)
-pq_encode = _lg(pq_encode)
-pq_decode = _lg(pq_decode)
-pq_topk = _lg(pq_topk)
-ivf_pq_topk = _lg(ivf_pq_topk)
-pq_range_search = _lg(pq_range_search)
-ivf_pq_range_search = _lg(ivf_pq_range_search)
-write_pq_codes = _lg(write_pq_codes)
-
-
-# ---------------------------------------------------------------------------
-# Wire dialect for TRAINED-artifact APPLICATION (r13, VERDICT r12
-# missing #3): a trained codebook is a bounded (m·ks, dsub) relation —
-# exactly the model_weights literal-table precedent — so ADC top-k
-# scoring against a SERVER-side code store serializes: the codebooks
-# and the bounded query block ride inside the node, the 8-byte-code
-# scan runs where the store lives, and only Q×k result rows cross the
-# wire.  FITS stay guarded (pq_fit/pq_encode are eager and sample-
-# dependent — the r10 posture); register the store's codes table on
-# the server (read_pq_codes at server build) and score over blaze://.
-import functools as _functools  # noqa: E402
-
-from ..wire import _client_of as _cof  # noqa: E402
-from ..wire import _require_tree as _rt  # noqa: E402
-from ..wire import _same_server as _ss  # noqa: E402
-from ..wire import _wire_result as _wr  # noqa: E402
-
-# 8 MB of float64 — far above any sane (m ≤ 64, ks ≤ 256) codebook,
-# far below anything that should ride a JSON node
-_MAX_CODEBOOK_FLOATS = 1_000_000
-
-
-def codebooks_to_wire(codebooks) -> dict:
-    """Encode trained ``(m, ks, dsub)`` codebooks as a bounded literal
-    relation for a wire node (float64 repr round-trips exactly through
-    JSON, so the replayed ADC tables are bit-identical)."""
-    cb = np.asarray(codebooks, dtype=np.float64)
-    if cb.ndim != 3:
-        raise ValueError(
-            f"codebooks must be a (m, ks, dsub) array, got shape "
-            f"{cb.shape}")
-    if cb.size > _MAX_CODEBOOK_FLOATS:
-        raise ValueError(
-            f"codebooks carry {cb.size} floats (> "
-            f"{_MAX_CODEBOOK_FLOATS}) — is this a trained PQ codebook "
-            "or a corpus?")
-    m, ks, dsub = cb.shape
-    return {"m": int(m), "ks": int(ks), "dsub": int(dsub),
-            "data": [float(x) for x in cb.reshape(-1)]}
-
-
-def codebooks_from_wire(enc) -> np.ndarray:
-    """Rebuild codebooks from their wire dict; mis-shaped/hostile nodes
-    fail loudly."""
-    if not isinstance(enc, dict) or \
-            set(enc) != {"m", "ks", "dsub", "data"}:
-        raise ValueError(
-            "codebooks wire form must be a {m, ks, dsub, data} dict "
-            "(codebooks_to_wire output)")
-    m, ks, dsub = int(enc["m"]), int(enc["ks"]), int(enc["dsub"])
-    if m < 1 or ks < 1 or dsub < 1 or m * ks * dsub > \
-            _MAX_CODEBOOK_FLOATS:
-        raise ValueError(
-            f"codebooks wire form declares an invalid shape "
-            f"({m}, {ks}, {dsub})")
-    data = enc["data"]
-    if len(data) != m * ks * dsub:
-        raise ValueError(
-            f"codebooks wire form carries {len(data)} floats, "
-            f"declared shape needs {m * ks * dsub}")
-    return np.asarray(data, dtype=np.float64).reshape(m, ks, dsub)
-
-
-def _queries_wire(queries, id_col, vec_col, max_queries, fn_name):
-    """Encode the query block: a same-server expression rides as its
-    subtree; a local Table/DataFrame collects BOUNDED (the _adc_guard
-    limit) into sorted literal rows."""
-    qdf = queries.df if isinstance(queries, Table) else queries
-    cap = max_queries if max_queries is not None else 10_000
-    rows = (qdf.select(F.col(id_col).cast("long"), F.col(vec_col))
-            .limit(int(cap) + 1).collect())
-    if len(rows) > cap:
-        raise ValueError(
-            f"{fn_name}: the query block exceeds max_queries={cap} — "
-            "literal wire queries are bounded; register the query set "
-            "on the server and pass the same-server expression instead")
-    for r in rows:
-        if r[0] is None or r[1] is None:
-            raise ValueError(
-                f"{fn_name}: query rows must carry non-null "
-                f"({id_col}, {vec_col})")
-    return sorted([int(r[0]), [float(x) for x in r[1]]] for r in rows)
-
-
-_guarded_pq_topk = pq_topk
-
-
-@_functools.wraps(_guarded_pq_topk)
-def pq_topk(codes: Table, queries, codebooks, k: int = 5,
-            id_col: str = "vec_id", code_col: str = "pq_code",
-            vec_col: str = "embedding", round_to: int | None = 4,
-            max_queries: int = 10_000) -> Table:
-    client = _cof(codes)
-    if client is None:
-        if _cof(queries) is not None:
-            raise TypeError(
-                "pq_topk: REMOTE queries against a LOCAL code store "
-                "mixes engines — compute() the queries first, or "
-                "register the store on the same server")
-        if isinstance(codebooks, str):
-            # r15 symmetry: a local string is a codebook store PATH
-            codebooks = load_codebooks(
-                codebooks, spark=codes.df.sparkSession)
-        return _guarded_pq_topk(codes, queries, codebooks, k, id_col,
-                                code_col, vec_col, round_to,
-                                max_queries)
-    if isinstance(queries, Table) and _cof(queries) is not None:
-        if not _ss(codes, queries):
-            raise TypeError(
-                "pq_topk: queries live on a DIFFERENT server than the "
-                "code store — register them together, or pass a "
-                "bounded local query frame")
-        q_enc = _rt(queries, "pq_topk queries")
-    else:
-        q_enc = _queries_wire(queries, id_col, vec_col, max_queries,
-                              "pq_topk")
-    # r15 (VERDICT r14 #5): a string codebooks arg NAMES a
-    # server-registered codebook store — the artifact loads where it
-    # lives, no literal-floats transfer
-    cb_enc = codebooks if isinstance(codebooks, str) \
-        else codebooks_to_wire(codebooks)
-    node = {"op": "pq_topk",
-            "args": [_rt(codes, "pq_topk"),
-                     cb_enc, q_enc,
-                     {"k": int(k), "id_col": id_col,
-                      "code_col": code_col, "vec_col": vec_col,
-                      "round_to": (None if round_to is None
-                                   else int(round_to)),
-                      "max_queries": (None if max_queries is None
-                                      else int(max_queries))}]}
-    empty = local_frame(
-        codes.df.sparkSession, [],
-        "query_id long, neighbor_id long, cosine double")
-    return _wr(codes, empty, node)
-
-
-# IVF-PQ application over the wire (r13 second half — the same
-# trained-artifact posture as pq_topk above, plus the coarse
-# centroids as a second bounded literal): nprobe-pruned ADC runs
-# where the cell-partitioned store lives, so the partition-pruning
-# isin filter applies AT THE SERVER'S SCAN and only Q×k rows cross.
-
-def centroids_to_wire(centroids) -> dict:
-    """Encode trained coarse centroids — a bounded (k_cells, d)
-    float64 relation — for a wire node (same exact-repr JSON
-    round-trip as codebooks_to_wire)."""
-    c = np.asarray(centroids, dtype=np.float64)
-    if c.ndim != 2:
-        raise ValueError(
-            f"centroids must be a (k_cells, d) array, got shape "
-            f"{c.shape}")
-    if c.size > _MAX_CODEBOOK_FLOATS:
-        raise ValueError(
-            f"centroids carry {c.size} floats (> "
-            f"{_MAX_CODEBOOK_FLOATS}) — is this a trained coarse "
-            "quantizer or a corpus?")
-    k_cells, d = c.shape
-    return {"k_cells": int(k_cells), "d": int(d),
-            "data": [float(x) for x in c.reshape(-1)]}
-
-
-def centroids_from_wire(enc) -> np.ndarray:
-    """Rebuild coarse centroids from their wire dict; mis-shaped/
-    hostile nodes fail loudly."""
-    if not isinstance(enc, dict) or set(enc) != {"k_cells", "d",
-                                                 "data"}:
-        raise ValueError(
-            "centroids wire form must be a {k_cells, d, data} dict "
-            "(centroids_to_wire output)")
-    k_cells, d = int(enc["k_cells"]), int(enc["d"])
-    if k_cells < 1 or d < 1 or k_cells * d > _MAX_CODEBOOK_FLOATS:
-        raise ValueError(
-            f"centroids wire form declares an invalid shape "
-            f"({k_cells}, {d})")
-    data = enc["data"]
-    if len(data) != k_cells * d:
-        raise ValueError(
-            f"centroids wire form carries {len(data)} floats, "
-            f"declared shape needs {k_cells * d}")
-    return np.asarray(data, dtype=np.float64).reshape(k_cells, d)
-
-
-_guarded_ivf_pq_topk = ivf_pq_topk
-
-
-@_functools.wraps(_guarded_ivf_pq_topk)
-def ivf_pq_topk(codes: Table, queries, centroids, codebooks,
-                k: int = 5, nprobe: int = 4, id_col: str = "vec_id",
-                code_col: str = "pq_code", vec_col: str = "embedding",
-                cell_col: str = "cell", round_to: int | None = 4,
-                max_queries: int = 10_000) -> Table:
-    from .ivf import _check_ann_params
-
-    _check_ann_params(k=k, nprobe=nprobe)
-    client = _cof(codes)
-    if client is None:
-        if _cof(queries) is not None:
-            raise TypeError(
-                "ivf_pq_topk: REMOTE queries against a LOCAL code "
-                "store mixes engines — compute() the queries first, "
-                "or register the store on the same server")
-        if isinstance(centroids, str):
-            from .ivf import load_centroids
-            centroids = load_centroids(
-                centroids, spark=codes.df.sparkSession)
-        if isinstance(codebooks, str):
-            codebooks = load_codebooks(
-                codebooks, spark=codes.df.sparkSession)
-        return _guarded_ivf_pq_topk(codes, queries, centroids,
-                                    codebooks, k, nprobe, id_col,
-                                    code_col, vec_col, cell_col,
-                                    round_to, max_queries)
-    if isinstance(queries, Table) and _cof(queries) is not None:
-        if not _ss(codes, queries):
-            raise TypeError(
-                "ivf_pq_topk: queries live on a DIFFERENT server than "
-                "the code store — register them together, or pass a "
-                "bounded local query frame")
-        q_enc = _rt(queries, "ivf_pq_topk queries")
-    else:
-        q_enc = _queries_wire(queries, id_col, vec_col, max_queries,
-                              "ivf_pq_topk")
-    # r15: string artifact args NAME server-registered stores
-    ce_enc = centroids if isinstance(centroids, str) \
-        else centroids_to_wire(centroids)
-    cb_enc = codebooks if isinstance(codebooks, str) \
-        else codebooks_to_wire(codebooks)
-    node = {"op": "ivf_pq_topk",
-            "args": [_rt(codes, "ivf_pq_topk"),
-                     ce_enc, cb_enc, q_enc,
-                     {"k": int(k), "nprobe": int(nprobe),
-                      "id_col": id_col, "code_col": code_col,
-                      "vec_col": vec_col, "cell_col": cell_col,
-                      "round_to": (None if round_to is None
-                                   else int(round_to)),
-                      "max_queries": (None if max_queries is None
-                                      else int(max_queries))}]}
-    empty = local_frame(
-        codes.df.sparkSession, [],
-        "query_id long, neighbor_id long, cosine double")
-    return _wr(codes, empty, node)

@@ -21,11 +21,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..core import Table, _derived
+from ..wire import local_only
 
 __all__ = ["quantize_embeddings", "dequantize_embeddings",
            "write_quantized", "read_quantized"]
 
 
+@local_only
 def quantize_embeddings(t: Table, vec_col: str = "embedding",
                         out_col: str = "qembedding",
                         scale_col: str = "qscale") -> Table:
@@ -47,6 +49,7 @@ def quantize_embeddings(t: Table, vec_col: str = "embedding",
     return res
 
 
+@local_only
 def dequantize_embeddings(t: Table, q_col: str = "qembedding",
                           scale_col: str = "qscale",
                           out_col: str = "embedding") -> Table:
@@ -63,6 +66,7 @@ def dequantize_embeddings(t: Table, q_col: str = "qembedding",
     return res
 
 
+@local_only
 def write_quantized(t: Table, path: str, vec_col: str = "embedding",
                     q_col: str = "qembedding", scale_col: str = "qscale",
                     mode: str = "overwrite") -> None:
@@ -103,11 +107,3 @@ def read_quantized(path: str, vec_col: str = "embedding",
     if not keep_codes:
         out = Table(out.df.drop(q_col, scale_col), out._name)
     return out
-
-
-# r8 silent-empty audit: no wire-dialect form -> remote inputs raise
-from ..core import _localize_guard as _lg  # noqa: E402
-
-quantize_embeddings = _lg(quantize_embeddings)
-dequantize_embeddings = _lg(dequantize_embeddings)
-write_quantized = _lg(write_quantized)

@@ -30,12 +30,14 @@ from pyspark.sql import functions as F
 
 from ..cache import carry
 from ..core import Table
+from ..wire import local_only
 
 
 def _df(t) -> DataFrame:
     return t.df if isinstance(t, Table) else t
 
 
+@local_only
 def pair_recall(truth, found, a: str = "doc_a", b: str = "doc_b") -> Table:
     """Score an unordered-pair found-set against an exact truth-set.
 
@@ -64,17 +66,10 @@ def pair_recall(truth, found, a: str = "doc_a", b: str = "doc_b") -> Table:
     return Table(carry(out, tdf, fdf), "pair_recall")
 
 
+@local_only
 def topk_recall(truth, found, query_col: str = "query_id",
                 neighbor_col: str = "neighbor_id") -> Table:
     """Score an approximate top-k result against the exact top-k: the
     'pair' is (query, neighbor).  Same one-pass counting as
     :func:`pair_recall`; recall here is the standard ANN recall@k."""
     return pair_recall(truth, found, a=query_col, b=neighbor_col)
-
-
-# r8 silent-empty audit: no wire-dialect form -> remote inputs raise
-# at entry instead of computing over the empty schema-only frame
-from ..core import _localize_guard as _lg  # noqa: E402
-
-pair_recall = _lg(pair_recall)
-topk_recall = _lg(topk_recall)

@@ -46,7 +46,7 @@ from pyspark.sql.window import Window
 from ..cache import owned_cache
 from ..core import Table
 from ..sources import local_frame
-from ..wire import _client_of, _require_tree, _wire_result
+from ..wire import wire_op
 from .curation import _tokens
 
 _SALT = 32          # top-k pre-aggregation fan-in per query
@@ -83,6 +83,36 @@ def _query_relation(queries, spark, query_id_col: str,
     return qdf
 
 
+def _check_bm25(k, k1, b) -> None:
+    if k < 1:
+        raise ValueError(f"bm25_topk: k must be >= 1, got {k}")
+    if k1 <= 0:
+        raise ValueError(f"bm25_topk: k1 must be > 0, got {k1}")
+    if not 0.0 <= b <= 1.0:
+        raise ValueError(f"bm25_topk: b must be in [0, 1], got {b}")
+
+
+def _bm25_schema(corpus, queries, k, k1, b, id_col, query_id_col,
+                 query_text_col, **_) -> T.StructType:
+    """The result schema: ``query_id`` keeps the query relation's id
+    type (a list's ids are LONG)."""
+    _check_bm25(k, k1, b)
+    qdf = _query_relation(queries, corpus.df.sparkSession, query_id_col,
+                          query_text_col)
+    return T.StructType([
+        T.StructField("query_id", qdf.schema[query_id_col].dataType),
+        T.StructField("doc_id", corpus.df.schema[id_col].dataType),
+        T.StructField("score", T.DoubleType())])
+
+
+@wire_op("bm25_topk", tables=("corpus",),
+         relations={"queries": (
+             "max_queries",
+             lambda df, a: df.select(a["query_id_col"],
+                                     a["query_text_col"]))},
+         kwargs=("k", "k1", "b", "text_col", "id_col", "query_id_col",
+                 "query_text_col", "max_queries", "round_to"),
+         schema=_bm25_schema)
 def bm25_topk(corpus: Table, queries, k: int = 10,
               k1: float = 1.2, b: float = 0.75,
               text_col: str = "text", id_col: str = "doc_id",
@@ -123,12 +153,7 @@ def bm25_topk(corpus: Table, queries, k: int = 10,
     (sf0.1 interleaved A/B: ~1.9 s no-persist vs ~2.2 s persist
     min-floors — the corpus is 40 MB there); the cache serves the
     scale the engine is built for."""
-    if k < 1:
-        raise ValueError(f"bm25_topk: k must be >= 1, got {k}")
-    if k1 <= 0:
-        raise ValueError(f"bm25_topk: k1 must be > 0, got {k1}")
-    if not 0.0 <= b <= 1.0:
-        raise ValueError(f"bm25_topk: b must be in [0, 1], got {b}")
+    _check_bm25(k, k1, b)
     spark = corpus.df.sparkSession
     qdf = _query_relation(queries, spark, query_id_col, query_text_col)
     if max_queries is not None:
@@ -203,93 +228,3 @@ def bm25_topk(corpus: Table, queries, k: int = 10,
                        (F.round(F.col("s_micro") / F.lit(float(_MICRO)),
                                 round_to) + F.lit(0.0)).alias("score")))
         return c.transfer(Table(out, "bm25_topk"))
-
-
-# ---------------------------------------------------------------------------
-# Wire dialect: bm25_topk serializes over blaze:// as a literal-args
-# table node (the apply_source_mix closure pattern) — the corpus rides
-# as a subtree, the bounded query side either as another same-server
-# subtree or as a literal [[query_id, query], ...] row list.  Scalar
-# arguments re-validate server-side through the local entry point, so a
-# hostile node fails exactly like a bad local call.
-
-import functools  # noqa: E402
-
-_local_bm25_topk = bm25_topk
-
-
-@functools.wraps(_local_bm25_topk)
-def bm25_topk(corpus: Table, queries, k: int = 10,
-              k1: float = 1.2, b: float = 0.75,
-              text_col: str = "text", id_col: str = "doc_id",
-              query_id_col: str = "query_id",
-              query_text_col: str = "query",
-              max_queries: int = 10_000,
-              round_to: int = 6) -> Table:
-    if _client_of(corpus) is None:
-        if isinstance(queries, Table) and _client_of(queries) is not None:
-            raise TypeError(
-                "bm25_topk: applying a REMOTE query relation to a "
-                "LOCAL corpus mixes engines — compute() the queries "
-                "first (or register the corpus on the same server)")
-        return _local_bm25_topk(corpus, queries, k, k1, b, text_col,
-                                id_col, query_id_col, query_text_col,
-                                max_queries, round_to)
-    # guard-before-POST: scalar contract errors surface locally
-    if k < 1:
-        raise ValueError(f"bm25_topk: k must be >= 1, got {k}")
-    if k1 <= 0:
-        raise ValueError(f"bm25_topk: k1 must be > 0, got {k1}")
-    if not 0.0 <= b <= 1.0:
-        raise ValueError(f"bm25_topk: b must be in [0, 1], got {b}")
-    client = corpus._client
-    if isinstance(queries, Table) and _client_of(queries) is client:
-        enc = _require_tree(queries, "bm25_topk queries")
-    elif isinstance(queries, Table) and _client_of(queries) is not None:
-        raise TypeError(
-            "bm25_topk: queries is a table from a DIFFERENT server — "
-            "the query relation must live on the same server as the "
-            "corpus, or be passed as a list / bounded local DataFrame")
-    else:
-        if isinstance(queries, (list, tuple)):
-            if not queries or not all(isinstance(q, str)
-                                      for q in queries):
-                raise ValueError(
-                    "bm25_topk: a query list must be non-empty strings")
-            enc = [[i, q] for i, q in enumerate(queries)]
-        else:
-            qdf = queries.df if isinstance(queries, Table) else queries
-            if not isinstance(qdf, DataFrame):
-                raise TypeError(
-                    f"bm25_topk: queries must be a Table, DataFrame or "
-                    f"list of strings, got {type(queries).__name__}")
-            cap = max_queries if max_queries is not None else 10_000
-            rows = (qdf.select(query_id_col, query_text_col)
-                    .limit(cap + 1).collect())
-            if len(rows) > cap:
-                raise ValueError(
-                    f"bm25_topk: local query relation exceeds {cap} "
-                    "rows — register it on the server (it then rides "
-                    "as a subtree) instead of shipping literal rows")
-            enc = []
-            for r in rows:
-                if not isinstance(r[0], int):
-                    raise TypeError(
-                        "bm25_topk over blaze://: literal query ids "
-                        f"must be ints, got {r[0]!r} — register the "
-                        "query relation server-side for other id types")
-                enc.append([r[0], "" if r[1] is None else str(r[1])])
-    kw = {"k": int(k), "k1": float(k1), "b": float(b),
-          "text_col": text_col, "id_col": id_col,
-          "query_id_col": query_id_col,
-          "query_text_col": query_text_col, "round_to": int(round_to)}
-    if max_queries is None:
-        kw["max_queries"] = None
-    node = {"op": "bm25_topk",
-            "args": [_require_tree(corpus, "bm25_topk"), enc, kw]}
-    empty = local_frame(corpus.df.sparkSession, [], T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("doc_id",
-                      corpus.df.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType())]))
-    return _wire_result(corpus, empty, node)

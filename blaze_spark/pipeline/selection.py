@@ -49,12 +49,8 @@ from pyspark.sql import types as T
 from ..cache import owned_cache
 from ..core import Table
 from ..sources import local_frame
-from .curation import _tokens, ngram_array
-
-# Bounded driver/broadcast state: counts tables, literal maps and DSIR
-# log-ratio tables are all O(n_buckets).  64k buckets ≈ the largest
-# hashed-feature models in published pipelines (DSIR uses 10k).
-_MAX_BUCKETS = 65_536
+from ..wire import local_only, wire_op
+from .curation import _MAX_BUCKETS, _tokens, ngram_array
 
 # saved-model artifact version (TrainedQualityModel.save/load)
 _QCLS_FORMAT = "qcls1"
@@ -129,6 +125,8 @@ def _as_predicate(v) -> Column:
         f"string, got {type(v).__name__}")
 
 
+@wire_op("hashed_bucket_counts", tables=("t",),
+         kwargs=("text_col", "n_buckets", "n"), exprs=("target_filter",))
 def hashed_bucket_counts(t: Table, text_col: str = "text",
                          n_buckets: int = 4096, n: int = 1,
                          target_filter=None) -> DataFrame:
@@ -212,6 +210,28 @@ def _normalized_weights(weights: DataFrame,
                  .alias("weight_milli")))
 
 
+def _model_weights(weights, bucket_col: str, weight_col: str,
+                   n_buckets: int) -> DataFrame:
+    """The (bucket, weight_milli) model the classifier reads:
+    normalized, and bounded (ADVICE r10) — buckets outside
+    [0, n_buckets) can never match a hashed feature, so they drop
+    BEFORE sizing: a frame with junk bucket ids must neither inflate
+    the literal/broadcast state nor push a ≤10k-real-weight model onto
+    the join path."""
+    if isinstance(weights, Table):
+        weights = weights.df
+    return (_normalized_weights(weights, bucket_col, weight_col)
+            .filter((F.col("bucket") >= 0) & (F.col("bucket") < n_buckets)))
+
+
+def _shipped_weights(df, a) -> DataFrame:
+    # over the wire the model ships as read, under the caller's names
+    return _model_weights(df, a["bucket_col"], a["weight_col"],
+                          a["n_buckets"]).select(
+        F.col("bucket").alias(a["bucket_col"]),
+        F.col("weight_milli").alias(a["weight_col"]))
+
+
 # sizing memo for quality_classifier: semanticHash(normalized+bounded
 # weights plan) -> collected (bucket, weight_milli) rows.  Each entry
 # is ≤ _MAX_BUCKETS rows (~1 MB); 8 distinct models bound the memo.
@@ -219,6 +239,20 @@ _WEIGHT_ROWS_CACHE: dict = {}
 _WEIGHT_ROWS_CACHE_MAX = 8
 
 
+def _classifier_schema(t, id_col, n_buckets, n, **_):
+    _validate_features(n_buckets, n)
+    return T.StructType([t.df.schema[id_col],
+                         T.StructField("n_tokens", T.IntegerType()),
+                         T.StructField("score_milli", T.LongType()),
+                         T.StructField("keep", T.IntegerType())])
+
+
+@wire_op("quality_classifier", tables=("t",),
+         relations={"weights": (_MAX_BUCKETS, _shipped_weights)},
+         kwargs=("text_col", "id_col", "n_buckets", "intercept_milli",
+                 "threshold_milli", "bucket_col", "weight_col",
+                 "max_map_literal", "n"),
+         schema=_classifier_schema)
 def quality_classifier(t: Table, weights: DataFrame,
                        text_col: str = "text", id_col: str = "doc_id",
                        n_buckets: int = 4096,
@@ -262,15 +296,9 @@ def quality_classifier(t: Table, weights: DataFrame,
     caveat applies (CachedTable's): a weights PLAN whose underlying
     data mutates between calls re-reads only on a fresh plan."""
     _validate_features(n_buckets, n)
-    # bound the model relation (ADVICE r10): buckets outside
-    # [0, n_buckets) can never match a hashed feature, so drop them
-    # BEFORE sizing — a frame with junk bucket ids must neither
-    # inflate the literal/broadcast state nor push a ≤10k-real-weight
-    # model onto the join path; past _MAX_BUCKETS real weights the
-    # broadcast would be unbounded, so raise (the dsir_log_weights
-    # counts-frame discipline)
-    wts = (_normalized_weights(weights, bucket_col, weight_col)
-           .filter((F.col("bucket") >= 0) & (F.col("bucket") < n_buckets)))
+    # past _MAX_BUCKETS real weights the broadcast would be unbounded,
+    # so raise (the dsir_log_weights counts-frame discipline)
+    wts = _model_weights(weights, bucket_col, weight_col, n_buckets)
     c = F.col(text_col)
     n_tokens = F.size(_tokens(c)).cast(T.IntegerType())
     cache_key = wts.semanticHash()  # driver-side analysis, no job
@@ -470,6 +498,37 @@ class TrainedQualityModel:
             threshold_milli=threshold_milli)
 
 
+def _check_fit(n_buckets: int, n: int, epochs: int, lr: float,
+               lr_decay: float, **_) -> str:
+    """The trainer's argument checks; returns the wire form's result
+    schema (the model rows, intercept at pseudo-bucket -1)."""
+    _validate_features(n_buckets, n)
+    if epochs < 1:
+        raise ValueError(f"epochs must be >= 1, got {epochs}")
+    if not lr > 0:
+        raise ValueError(f"lr must be > 0, got {lr}")
+    if not 0.0 < lr_decay <= 1.0:
+        raise ValueError(f"lr_decay must be in (0, 1], got {lr_decay}")
+    return "bucket long, weight_milli long"
+
+
+def _model_frame(m: "TrainedQualityModel", spark) -> DataFrame:
+    return local_frame(spark, m.to_rows(), "bucket long, weight_milli long")
+
+
+def _model_from_frame(pdf, a: dict) -> "TrainedQualityModel":
+    return TrainedQualityModel.from_rows(
+        zip(pdf["bucket"], pdf["weight_milli"]), a["n_buckets"], a["n"])
+
+
+# the fit is EAGER (a driver epoch loop), so the remote form is eager
+# too: ONE round trip runs the whole loop where the corpus lives (each
+# epoch's gradient job stays server-side) and only the fitted
+# ≤ n_buckets+1 row model crosses back
+@wire_op("train_quality_classifier", tables=("t",), exprs=("label",),
+         kwargs=("text_col", "n_buckets", "n", "epochs", "lr",
+                 "init_intercept", "lr_decay"),
+         schema=_check_fit, eager=(_model_frame, _model_from_frame))
 def train_quality_classifier(t: Table, label, text_col: str = "text",
                              n_buckets: int = 4096, n: int = 1,
                              epochs: int = 3, lr: float = 4.0,
@@ -556,13 +615,7 @@ def train_quality_classifier(t: Table, label, text_col: str = "text",
     (y, buckets) projection more than once (``epochs + init_intercept
     > 1``) it is cached across the reads — one tokenization total
     instead of one per epoch."""
-    _validate_features(n_buckets, n)
-    if epochs < 1:
-        raise ValueError(f"epochs must be >= 1, got {epochs}")
-    if not lr > 0:
-        raise ValueError(f"lr must be > 0, got {lr}")
-    if not 0.0 < lr_decay <= 1.0:
-        raise ValueError(f"lr_decay must be in (0, 1], got {lr_decay}")
+    _check_fit(n_buckets, n, epochs, lr, lr_decay)
     c = F.col(text_col)
     y = F.coalesce(_as_predicate(label).cast(T.IntegerType()),
                    F.lit(0)).alias("y")
@@ -646,6 +699,67 @@ def train_quality_classifier(t: Table, label, text_col: str = "text",
     return TrainedQualityModel(w, b0, n_buckets, n, history)
 
 
+def _counts_frame(df, side: str) -> DataFrame:
+    """A (bucket, cnt) counts relation as a DataFrame, shape-checked,
+    duplicate buckets SUMMED (ADVICE r10): an unaggregated union of two
+    stores' partials is a legitimate counts frame, and last-wins dict
+    building would silently drop all but one partial — the same
+    additive contract as _normalized_weights and read_bucket_counts."""
+    df = df.df if isinstance(df, Table) else df
+    types = dict(df.dtypes)
+    integral = ("tinyint", "smallint", "int", "bigint")
+    if (types.get("bucket") not in integral
+            or types.get("cnt") not in integral):
+        raise ValueError(
+            f"dsir_log_weights: {side} must be a (bucket, cnt) "
+            f"integer relation (hashed_bucket_counts output), got "
+            f"columns {df.dtypes}")
+    return (df.groupBy("bucket")
+            .agg(F.sum("cnt").cast(T.LongType()).alias("cnt")))
+
+
+def _check_dsir(target, n_buckets, smoothing, raw_counts, target_counts,
+                n, target_filter) -> None:
+    _validate_features(n_buckets, n)
+    if smoothing < 1:
+        raise ValueError(f"smoothing must be a positive integer, got "
+                         f"{smoothing} (zero would send unseen-bucket "
+                         "ratios to ±inf)")
+    if target_filter is not None:
+        # one-pass dual-count fit (r11, VERDICT r10 #3): the target is
+        # a FILTER of raw, so one tokenization emits (bucket, cnt,
+        # target_cnt) — the two-fit form tokenizes the corpus twice
+        if (target is not None or raw_counts is not None
+                or target_counts is not None):
+            raise ValueError(
+                "dsir_log_weights: target_filter= replaces target= / "
+                "raw_counts= / target_counts= — pass it alone")
+    elif target is None and target_counts is None:
+        raise ValueError("dsir_log_weights needs a target corpus: pass "
+                         "target=, target_counts= or target_filter=")
+    for side, c in (("raw_counts", raw_counts),
+                    ("target_counts", target_counts)):
+        if c is not None:
+            _counts_frame(c, side)
+
+
+def _dsir_schema(raw, target, id_col, n_buckets, smoothing, raw_counts,
+                 target_counts, n, target_filter, **_):
+    _check_dsir(target, n_buckets, smoothing, raw_counts, target_counts,
+                n, target_filter)
+    return T.StructType([raw.df.schema[id_col],
+                         T.StructField("n_tokens", T.IntegerType()),
+                         T.StructField("logw", T.DoubleType())])
+
+
+@wire_op("dsir_log_weights", tables=("raw", "target"),
+         relations={side: (_MAX_BUCKETS,
+                           lambda df, a: _counts_frame(df, "counts"))
+                    for side in ("raw_counts", "target_counts")},
+         exprs=("target_filter",),
+         kwargs=("text_col", "id_col", "n_buckets", "smoothing", "n",
+                 "max_map_literal"),
+         schema=_dsir_schema)
 def dsir_log_weights(raw: Table, target: Table | None = None,
                      text_col: str = "text", id_col: str = "doc_id",
                      n_buckets: int = 4096, smoothing: int = 1,
@@ -693,22 +807,8 @@ def dsir_log_weights(raw: Table, target: Table | None = None,
     at sf0.1 and sf10); past that it falls back to explode →
     broadcast-join → per-doc aggregation.  Both paths are pinned equal
     in tests."""
-    if smoothing < 1:
-        raise ValueError(f"smoothing must be a positive integer, got "
-                         f"{smoothing} (zero would send unseen-bucket "
-                         "ratios to ±inf)")
-    if target_filter is not None:
-        # one-pass dual-count fit (r11, VERDICT r10 #3): the target is
-        # a FILTER of raw, so one tokenization emits (bucket, cnt,
-        # target_cnt) — the two-fit form tokenizes the corpus twice
-        if (target is not None or raw_counts is not None
-                or target_counts is not None):
-            raise ValueError(
-                "dsir_log_weights: target_filter= replaces target= / "
-                "raw_counts= / target_counts= — pass it alone")
-    elif target is None and target_counts is None:
-        raise ValueError("dsir_log_weights needs a target corpus: pass "
-                         "target=, target_counts= or target_filter=")
+    _check_dsir(target, n_buckets, smoothing, raw_counts, target_counts,
+                n, target_filter)
     if target_filter is None:
         if raw_counts is None:
             raw_counts = hashed_bucket_counts(raw, text_col, n_buckets,
@@ -724,33 +824,9 @@ def dsir_log_weights(raw: Table, target: Table | None = None,
     # cap turns a mis-shaped USER-supplied counts frame (e.g. raw
     # per-token rows instead of (bucket, cnt)) into a loud error
     # instead of an unbounded driver collect
-    def _bounded(df: DataFrame, side: str) -> dict:
-        if isinstance(df, Table):
-            # a read_bucket_counts('blaze://…::store') leaf (or any
-            # remote expression) fed to a LOCAL corpus: route loudly —
-            # the store-fed form needs the corpus on the same server
-            raise TypeError(
-                f"dsir_log_weights: {side} is a Table/remote "
-                "expression but the corpus is local — register the "
-                "corpus on the same server for store-fed scoring, or "
-                "materialize the counts locally first "
-                "(spark.createDataFrame(leaf.compute()))")
-        types = dict(df.dtypes)
-        integral = ("tinyint", "smallint", "int", "bigint")
-        if (types.get("bucket") not in integral
-                or types.get("cnt") not in integral):
-            raise ValueError(
-                f"dsir_log_weights: {side} must be a (bucket, cnt) "
-                f"integer relation (hashed_bucket_counts output), got "
-                f"columns {df.dtypes}")
-        # duplicate buckets SUM before the bounded collect (ADVICE
-        # r10): an unaggregated union of two stores' partials is a
-        # legitimate counts frame, and last-wins dict building would
-        # silently drop all but one partial — the same additive
-        # contract as _normalized_weights and read_bucket_counts
-        agg = (df.groupBy("bucket")
-               .agg(F.sum("cnt").cast(T.LongType()).alias("cnt")))
-        rows = agg.limit(_MAX_BUCKETS + 1).collect()
+    def _bounded(df, side: str) -> dict:
+        # duplicate buckets SUM before the bounded collect
+        rows = _counts_frame(df, side).limit(_MAX_BUCKETS + 1).collect()
         if len(rows) > _MAX_BUCKETS:
             raise ValueError(
                 f"dsir_log_weights: {side} has more than "
@@ -787,7 +863,6 @@ def dsir_log_weights(raw: Table, target: Table | None = None,
     const = (math.log(r_tot + smoothing * n_buckets)
              - math.log(t_tot + smoothing * n_buckets))
     c = F.col(text_col)
-    _validate_features(n_buckets, n)
     n_tokens = F.size(_tokens(c)).cast(T.IntegerType())
     n_feats = F.size(_feature_array(c, n)).cast(T.IntegerType())
     # the hoisted const applies once per FEATURE (== per token only at
@@ -861,6 +936,7 @@ def _gumbel_key(score_col: str, id_col: str, temperature: float,
                    + gumbel, 6)
 
 
+@local_only
 def calibrate_key_threshold(t: Table | DataFrame, score_col: str,
                             target_n: int, id_col: str = "doc_id",
                             temperature: float = 1.0, seed: int = 42,
@@ -924,6 +1000,7 @@ def calibrate_key_threshold(t: Table | DataFrame, score_col: str,
     return float(keys[k - 1])
 
 
+@local_only
 def calibrate_score_threshold(scored: Table | DataFrame,
                               keep_frac: float | None = None,
                               target_n: int | None = None,
@@ -987,6 +1064,9 @@ def calibrate_score_threshold(scored: Table | DataFrame,
     return int(scores[k - 1])
 
 
+@wire_op("weighted_sample", tables=("t",),
+         kwargs=("score_col", "n", "key_threshold", "id_col",
+                 "temperature", "seed", "max_n"))
 def weighted_sample(t: Table | DataFrame, score_col: str,
                     n: int | None = None,
                     key_threshold: float | None = None,
@@ -1043,266 +1123,3 @@ def weighted_sample(t: Table | DataFrame, score_col: str,
         return keyed.orderBy(F.col("sample_key").desc(),
                              F.col(id_col)).limit(n)
     return keyed.filter(F.col("sample_key") >= float(key_threshold))
-
-
-# ---------------------------------------------------------------------------
-# Wire dialect (r11, VERDICT r10 #1): the selection family serializes
-# over blaze:// instead of raising at entry.  The model/counts
-# relations are BOUNDED (≤ n_buckets rows, enforced above), so they
-# ship as LITERAL tables inside the tree node — the r9 FK/ddof closure
-# pattern; corpora (raw/target) must live on the same server and ride
-# as subtrees.  Reference parity: the server executes ANY registered
-# expression (blaze/server/server.py:411-477 to_tree/from_tree, client
-# blaze/server/client.py:249-258); interop.from_tree replays these
-# nodes against the registered datasets.  A remote input whose own
-# prefix left the serializable subset still fails loudly at entry —
-# fail-loud beats silent-empty (the r8 audit posture, unchanged).
-
-import functools  # noqa: E402
-
-from ..wire import _client_of, _require_tree, _wire_result  # noqa: E402
-
-_local_hashed_bucket_counts = hashed_bucket_counts
-_local_quality_classifier = quality_classifier
-_local_dsir_log_weights = dsir_log_weights
-_local_weighted_sample = weighted_sample
-_local_train_quality_classifier = train_quality_classifier
-
-
-def _literal_counts(df, side: str, client):
-    """Encode a counts relation for the wire: a same-server remote
-    expression rides as its subtree; a local bounded (bucket, cnt)
-    frame collects (duplicates summed) into sorted literal rows."""
-    if isinstance(df, Table):
-        ca = _client_of(df)
-        # identity OR same normalized URL (the _same_server precedent):
-        # a read_bucket_counts('blaze://...::store') leaf carries its
-        # own Client instance for the same server (r14)
-        if ca is None or (ca is not client
-                          and getattr(ca, "url", None)
-                          != getattr(client, "url", object())):
-            raise TypeError(
-                f"{side} is a table from a different server (or a "
-                "local Table) — counts tables must live on the same "
-                "server as the corpus, or be passed as a bounded "
-                "local DataFrame")
-        tree = _require_tree(df, side)
-        return tree
-    types = dict(df.dtypes)
-    integral = ("tinyint", "smallint", "int", "bigint")
-    if (types.get("bucket") not in integral
-            or types.get("cnt") not in integral):
-        raise ValueError(
-            f"{side} must be a (bucket, cnt) integer relation "
-            f"(hashed_bucket_counts output), got columns {df.dtypes}")
-    agg = (df.groupBy("bucket")
-           .agg(F.sum("cnt").cast(T.LongType()).alias("cnt")))
-    rows = agg.limit(_MAX_BUCKETS + 1).collect()
-    if len(rows) > _MAX_BUCKETS:
-        raise ValueError(
-            f"{side} has more than {_MAX_BUCKETS} distinct buckets — "
-            "counts relations are bounded by n_buckets by "
-            "construction")
-    return sorted([int(r["bucket"]), int(r["cnt"])] for r in rows)
-
-
-def _predicate_tree(target_filter, fn_name: str):
-    """Wire form of a target_filter predicate: a recorded ColExpr's
-    expression subtree (binds to the table under evaluation
-    server-side, like a 'selection' node's predicate)."""
-    from ..core import ColExpr
-    if not isinstance(target_filter, ColExpr) \
-            or target_filter._tree is None:
-        raise TypeError(
-            f"{fn_name} over blaze://: target_filter must be a "
-            "serializable expression built from the remote table's "
-            "columns (e.g. rt.source.isin([...]))")
-    return target_filter._tree
-
-
-@functools.wraps(_local_hashed_bucket_counts)
-def hashed_bucket_counts(t: Table, text_col: str = "text",
-                         n_buckets: int = 4096, n: int = 1,
-                         target_filter=None):
-    if _client_of(t) is None:
-        return _local_hashed_bucket_counts(t, text_col, n_buckets, n,
-                                           target_filter)
-    _validate_features(n_buckets, n)
-    tf = (None if target_filter is None
-          else _predicate_tree(target_filter, "hashed_bucket_counts"))
-    node = {"op": "hashed_bucket_counts",
-            "args": [_require_tree(t, "hashed_bucket_counts"),
-                     text_col, int(n_buckets), int(n), tf]}
-    schema = ("bucket long, cnt long" if target_filter is None
-              else "bucket long, cnt long, target_cnt long")
-    empty = local_frame(t.df.sparkSession, [], schema)
-    return _wire_result(t, empty, node)
-
-
-@functools.wraps(_local_quality_classifier)
-def quality_classifier(t: Table, weights, text_col: str = "text",
-                       id_col: str = "doc_id", n_buckets: int = 4096,
-                       intercept_milli: int = 0,
-                       threshold_milli: int = 0,
-                       bucket_col: str = "bucket",
-                       weight_col: str = "weight_milli",
-                       max_map_literal: int = 10_000, n: int = 1):
-    if _client_of(t) is None:
-        return _local_quality_classifier(
-            t, weights, text_col, id_col, n_buckets, intercept_milli,
-            threshold_milli, bucket_col, weight_col, max_map_literal, n)
-    _validate_features(n_buckets, n)
-    if isinstance(weights, Table):
-        raise TypeError(
-            "quality_classifier over blaze://: weights must be a "
-            "LOCAL bounded (bucket, weight_milli) DataFrame — it "
-            "ships as a literal table in the tree")
-    wts = (_normalized_weights(weights, bucket_col, weight_col)
-           .filter((F.col("bucket") >= 0)
-                   & (F.col("bucket") < n_buckets)))
-    wrows = sorted([int(r["bucket"]), int(r["weight_milli"])]
-                   for r in wts.collect())
-    node = {"op": "quality_classifier",
-            "args": [_require_tree(t, "quality_classifier"), wrows,
-                     {"text_col": text_col, "id_col": id_col,
-                      "n_buckets": int(n_buckets),
-                      "intercept_milli": int(intercept_milli),
-                      "threshold_milli": int(threshold_milli),
-                      "max_map_literal": int(max_map_literal),
-                      "n": int(n)}]}
-    spark = t.df.sparkSession
-    empty = local_frame(spark, [], T.StructType(
-        [t.df.schema[id_col],
-         T.StructField("n_tokens", T.IntegerType()),
-         T.StructField("score_milli", T.LongType()),
-         T.StructField("keep", T.IntegerType())]))
-    return _wire_result(t, empty, node)
-
-
-@functools.wraps(_local_dsir_log_weights)
-def dsir_log_weights(raw: Table, target: Table | None = None,
-                     text_col: str = "text", id_col: str = "doc_id",
-                     n_buckets: int = 4096, smoothing: int = 1,
-                     raw_counts=None, target_counts=None, n: int = 1,
-                     max_map_literal: int = 10_000,
-                     target_filter=None):
-    if _client_of(raw) is None:
-        return _local_dsir_log_weights(
-            raw, target, text_col, id_col, n_buckets, smoothing,
-            raw_counts, target_counts, n, max_map_literal,
-            target_filter)
-    _validate_features(n_buckets, n)
-    if smoothing < 1:
-        raise ValueError(f"smoothing must be a positive integer, got "
-                         f"{smoothing} (zero would send unseen-bucket "
-                         "ratios to ±inf)")
-    tf = None
-    if target_filter is not None:
-        if (target is not None or raw_counts is not None
-                or target_counts is not None):
-            raise ValueError(
-                "dsir_log_weights: target_filter= replaces target= / "
-                "raw_counts= / target_counts= — pass it alone")
-        tf = _predicate_tree(target_filter, "dsir_log_weights")
-    elif target is None and target_counts is None:
-        raise ValueError("dsir_log_weights needs a target corpus: pass "
-                         "target=, target_counts= or target_filter=")
-    client = raw._client
-    tgt_node = None
-    if target is not None:
-        if _client_of(target) is not client:
-            raise TypeError(
-                "dsir_log_weights over blaze://: target must live on "
-                "the SAME server as raw (register it there), or pass "
-                "bounded target_counts= instead")
-        tgt_node = _require_tree(target, "dsir_log_weights target")
-    rc = (None if raw_counts is None
-          else _literal_counts(raw_counts, "raw_counts", client))
-    tc = (None if target_counts is None
-          else _literal_counts(target_counts, "target_counts", client))
-    node = {"op": "dsir_log_weights",
-            "args": [_require_tree(raw, "dsir_log_weights"), tgt_node,
-                     rc, tc,
-                     {"text_col": text_col, "id_col": id_col,
-                      "n_buckets": int(n_buckets),
-                      "smoothing": int(smoothing), "n": int(n),
-                      "max_map_literal": int(max_map_literal)}, tf]}
-    spark = raw.df.sparkSession
-    empty = local_frame(spark, [], T.StructType(
-        [raw.df.schema[id_col],
-         T.StructField("n_tokens", T.IntegerType()),
-         T.StructField("logw", T.DoubleType())]))
-    return _wire_result(raw, empty, node)
-
-
-@functools.wraps(_local_train_quality_classifier)
-def train_quality_classifier(t: Table, label, text_col: str = "text",
-                             n_buckets: int = 4096, n: int = 1,
-                             epochs: int = 3, lr: float = 4.0,
-                             init_intercept: bool = False,
-                             lr_decay: float = 1.0):
-    if _client_of(t) is None:
-        return _local_train_quality_classifier(
-            t, label, text_col, n_buckets, n, epochs, lr,
-            init_intercept, lr_decay)
-    # the fit is EAGER (a driver epoch loop), so the remote form is
-    # eager too: ONE round trip runs the whole loop where the corpus
-    # lives (each epoch's gradient job stays server-side — shipping
-    # per-epoch gradients over HTTP would turn a bounded-model fit
-    # into epochs× wire transfers of the same relation); only the
-    # fitted ≤ n_buckets+1 row model crosses back
-    _validate_features(n_buckets, n)
-    if epochs < 1:
-        raise ValueError(f"epochs must be >= 1, got {epochs}")
-    if not lr > 0:
-        raise ValueError(f"lr must be > 0, got {lr}")
-    if not 0.0 < lr_decay <= 1.0:
-        raise ValueError(f"lr_decay must be in (0, 1], got {lr_decay}")
-    kw = {"text_col": text_col, "n_buckets": int(n_buckets),
-          "n": int(n), "epochs": int(epochs), "lr": float(lr)}
-    # the r15 convergence aids ride the wire only when engaged, so
-    # default-fit trees stay readable by pre-r15 servers
-    if init_intercept:
-        kw["init_intercept"] = True
-    if lr_decay != 1.0:
-        kw["lr_decay"] = float(lr_decay)
-    node = {"op": "train_quality_classifier",
-            "args": [_require_tree(t, "train_quality_classifier"),
-                     _predicate_tree(label, "train_quality_classifier"),
-                     kw]}
-    pdf = t._client.compute_tree(node)
-    return TrainedQualityModel.from_rows(
-        zip(pdf["bucket"], pdf["weight_milli"]), n_buckets, n)
-
-
-@functools.wraps(_local_weighted_sample)
-def weighted_sample(t, score_col: str, n: int | None = None,
-                    key_threshold: float | None = None,
-                    id_col: str = "doc_id", temperature: float = 1.0,
-                    seed: int = 42, max_n: int = 1_000_000):
-    if _client_of(t) is None:
-        return _local_weighted_sample(t, score_col, n, key_threshold,
-                                      id_col, temperature, seed, max_n)
-    # the local impl is pure-lazy: run it on the empty schema-only
-    # frame for validation + the exact output schema, then record
-    local = _local_weighted_sample(Table(t.df), score_col, n,
-                                   key_threshold, id_col, temperature,
-                                   seed, max_n)
-    node = {"op": "weighted_sample",
-            "args": [_require_tree(t, "weighted_sample"), score_col,
-                     {"n": None if n is None else int(n),
-                      "key_threshold": (None if key_threshold is None
-                                        else float(key_threshold)),
-                      "id_col": id_col,
-                      "temperature": float(temperature),
-                      "seed": int(seed), "max_n": int(max_n)}]}
-    return _wire_result(t, local, node)
-
-
-# calibrate_key_threshold is an EAGER scalar fit (collects sampled
-# keys driver-side) with no wire-dialect form — remote inputs raise at
-# entry rather than calibrating over the empty schema-only frame
-from ..core import _localize_guard as _lg  # noqa: E402
-
-calibrate_key_threshold = _lg(calibrate_key_threshold)
-calibrate_score_threshold = _lg(calibrate_score_threshold)

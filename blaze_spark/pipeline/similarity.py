@@ -23,6 +23,8 @@ from pyspark.sql import types as T
 from ..cache import owned_cache
 from ..core import Table
 from ..sources import local_frame
+from ..wire import local_only, wire_op
+from .pq import centroids_from_wire, centroids_to_wire
 
 
 def _dot(a, b) -> Column:
@@ -107,6 +109,7 @@ def _rank_topk(scored, k: int, round_to: int | None,
                     if round_to is not None else cos.alias("cosine")))
 
 
+@local_only
 def cosine_topk(corpus: Table, queries: Table, k: int = 5,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 round_to: int | None = 4,
@@ -226,6 +229,7 @@ def lsh_tables_required(n_vectors: int, threshold: float = 0.9,
         math.log(1.0 - recall) / math.log(1.0 - p_all)))
 
 
+@local_only
 def neardup_pairs(corpus: Table, threshold: float = 0.9,
                   id_col: str = "vec_id", vec_col: str = "embedding",
                   n_vectors: int | None = None, dim: int = 64,
@@ -299,6 +303,7 @@ def neardup_pairs(corpus: Table, threshold: float = 0.9,
         **_filter_route_kwargs(embedding_neardup_pairs, backend_kwargs))
 
 
+@local_only
 def embedding_neardup_pairs(corpus: Table, threshold: float = 0.9,
                             id_col: str = "vec_id", vec_col: str = "embedding",
                             n_planes: int | None = None,
@@ -405,6 +410,7 @@ def embedding_neardup_pairs(corpus: Table, threshold: float = 0.9,
             return e_own.transfer(c_own.transfer(_cut(scored)))
 
 
+@local_only
 def lsh_cosine_topk(corpus: Table, queries: Table, k: int = 5,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     n_planes: int = 8, n_tables: int = 8, dim: int = 64,
@@ -456,7 +462,7 @@ def lsh_cosine_topk(corpus: Table, queries: Table, k: int = 5,
 
 def _accepted_kwargs(fn) -> set | None:
     """The keyword names ``fn`` accepts, or None for accept-everything
-    (``**kwargs`` — e.g. a test spy or a _localize_guard-less wrapper
+    (``**kwargs`` — e.g. a test spy or a wrapper
     whose signature cannot be introspected)."""
     import inspect
 
@@ -512,6 +518,7 @@ def _resolve_codes(spark, store: str | None, codes, codebooks,
     return codes
 
 
+@local_only
 def ann_topk(corpus: Table | None, queries: Table, k: int = 5,
              id_col: str = "vec_id", vec_col: str = "embedding",
              threshold: float | None = None,
@@ -643,6 +650,7 @@ def ann_topk(corpus: Table | None, queries: Table, k: int = 5,
                  round_to=round_to)
 
 
+@local_only
 def pq_neardup_pairs(corpus: Table, threshold: float = 0.9,
                      codebooks=None, codes: Table | None = None,
                      store: str | None = None, centroids=None,
@@ -797,6 +805,7 @@ def pq_neardup_pairs(corpus: Table, threshold: float = 0.9,
     return Table(out, "pq_neardup_pairs")
 
 
+@local_only
 def batched_topk(corpus: Table | None, queries: Table, k: int = 5,
                  id_col: str = "vec_id", vec_col: str = "embedding",
                  queries_per_batch: int = 10_000, backend=None,
@@ -933,6 +942,7 @@ def _centroid_cos_udf(centroids):
     return pandas_udf(_cos, "double")
 
 
+@local_only
 def semantic_dedup(corpus: Table, threshold: float = 0.95,
                    k_cells: int = 16, id_col: str = "vec_id",
                    vec_col: str = "embedding", kmeans_iters: int = 5,
@@ -1048,6 +1058,30 @@ def semantic_dedup(corpus: Table, threshold: float = 0.95,
         return owner.transfer(res)
 
 
+def _assign_schema(docs, k_cells, **_):
+    _check_assign(docs, k_cells)
+    return T.StructType(list(docs.df.schema.fields)
+                        + [T.StructField("cell", T.IntegerType())])
+
+
+def _check_assign(docs: Table, k_cells: int) -> None:
+    if k_cells < 1:
+        raise ValueError(f"k_cells must be >= 1, got {k_cells}")
+    for taken in ("cell", "__aid"):
+        if taken in docs.df.columns:
+            raise ValueError(
+                f"assign_clusters: docs already has a '{taken}' "
+                "column — rename or drop it first (the assignment "
+                "join would produce an ambiguous column)")
+
+
+# a TRAINED codebook applies over the wire (the pq_topk posture): the
+# centroids ride as the bounded literal or NAME a registered store; the
+# k-means fit itself is eager and seeded-random, so it never serializes
+@wire_op("assign_clusters", tables=("docs", "embeddings"),
+         stores={"centroids": (centroids_to_wire, centroids_from_wire)},
+         kwargs=("doc_id_col", "id_col", "vec_col"),
+         schema=_assign_schema)
 def assign_clusters(docs: Table, embeddings: Table,
                     k_cells: int = 16, doc_id_col: str = "doc_id",
                     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -1070,23 +1104,21 @@ def assign_clusters(docs: Table, embeddings: Table,
     mixture stratum — silently dropping unembedded docs would skew
     every share downstream; filter ``cell != -1`` to exclude them
     deliberately).  Pass ``centroids=`` (a persisted codebook from
-    ``kmeans_fit``/``load_centroids``) to skip the fit.
+    ``kmeans_fit``/``load_centroids``, or a ``save_centroids`` store
+    path) to skip the fit.
 
     Plan shape: the fit is the bounded ``kmeans_fit``; assignment is
     ONE Arrow pass over the embeddings projected to (id, cell); the
     join back to documents carries id+cell only — vectors ride
-    neither the join nor any shuffle.  Local-only (the fit is
-    eager/seeded-random): remote inputs raise at entry."""
-    if k_cells < 1:
-        raise ValueError(f"k_cells must be >= 1, got {k_cells}")
-    for taken in ("cell", "__aid"):
-        if taken in docs.df.columns:
-            raise ValueError(
-                f"assign_clusters: docs already has a '{taken}' "
-                "column — rename or drop it first (the assignment "
-                "join would produce an ambiguous column)")
-    from .ivf import ivf_assign, kmeans_fit
+    neither the join nor any shuffle.  Over blaze:// pass
+    ``centroids=``: the fit is eager and seeded-random, so it does not
+    serialize."""
+    _check_assign(docs, k_cells)
+    from .ivf import ivf_assign, kmeans_fit, load_centroids
 
+    if isinstance(centroids, str):
+        centroids = load_centroids(centroids,
+                                   spark=docs.df.sparkSession)
     if centroids is None:
         centroids = kmeans_fit(embeddings, k=k_cells,
                                iters=kmeans_iters, vec_col=vec_col,
@@ -1108,68 +1140,3 @@ def assign_clusters(docs: Table, embeddings: Table,
                .withColumn("cell",
                            F.coalesce(F.col("cell"), F.lit(-1))))
         return owner.transfer(Table(out, "assign_clusters"))
-
-
-from ..core import _localize_guard as _lg  # noqa: E402
-from ..wire import (_client_of, _require_tree,  # noqa: E402
-                    _same_server, _wire_result)
-
-_local_assign_clusters = assign_clusters
-
-
-def assign_clusters(docs: Table, embeddings: Table,
-                    k_cells: int = 16, doc_id_col: str = "doc_id",
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    kmeans_iters: int = 5, seed: int = 42,
-                    centroids=None) -> Table:
-    if _client_of(docs) is None and _client_of(embeddings) is None:
-        if isinstance(centroids, str):
-            # r15 symmetry: a local string is a centroid store PATH
-            from .ivf import load_centroids
-            centroids = load_centroids(
-                centroids, spark=docs.df.sparkSession)
-        return _local_assign_clusters(docs, embeddings, k_cells,
-                                      doc_id_col, id_col, vec_col,
-                                      kmeans_iters, seed, centroids)
-    # remote form (r14): a TRAINED codebook APPLIES over the wire —
-    # the pq_topk/ivf_pq_topk trained-artifact posture; the k-means
-    # FIT itself stays local-only (eager, seeded-random)
-    if centroids is None:
-        raise TypeError(
-            "assign_clusters over blaze://: the k-means fit is eager "
-            "and does not serialize — fit locally (kmeans_fit / "
-            "load_centroids) and pass centroids=")
-    if _client_of(docs) is None or not _same_server(docs, embeddings):
-        raise TypeError(
-            "assign_clusters over blaze://: docs and embeddings must "
-            "live on the SAME server (register both there)")
-    from .pq import centroids_to_wire
-
-    # r15: a string centroids arg NAMES a server-registered centroid
-    # store — the codebook loads where it lives
-    ce_enc = centroids if isinstance(centroids, str) \
-        else centroids_to_wire(centroids)
-    node = {"op": "assign_clusters",
-            "args": [_require_tree(docs, "assign_clusters"),
-                     _require_tree(embeddings,
-                                   "assign_clusters embeddings"),
-                     ce_enc,
-                     {"doc_id_col": doc_id_col, "id_col": id_col,
-                      "vec_col": vec_col}]}
-    spark = docs.df.sparkSession
-    empty = local_frame(spark, [], T.StructType(
-        list(docs.df.schema.fields)
-        + [T.StructField("cell", T.IntegerType())]))
-    return _wire_result(docs, empty, node)
-
-
-assign_clusters.__doc__ = _local_assign_clusters.__doc__
-
-cosine_topk = _lg(cosine_topk)
-neardup_pairs = _lg(neardup_pairs)
-embedding_neardup_pairs = _lg(embedding_neardup_pairs)
-lsh_cosine_topk = _lg(lsh_cosine_topk)
-ann_topk = _lg(ann_topk)
-batched_topk = _lg(batched_topk)
-pq_neardup_pairs = _lg(pq_neardup_pairs)
-semantic_dedup = _lg(semantic_dedup)

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from ..core import Table
 from ..pipeline.ivf import ivf_assign
 from ..pipeline.pq import pq_encode
+from ..wire import local_only
 from .incremental_dedup import (_check_sig_format, _compact_store_impl,
                                 _ingest_ids, resolve_store_root)
 
@@ -82,6 +83,7 @@ def _check_pq_format(spark, store_path: str, has_existing: bool,
                       fmt_label="index format")
 
 
+@local_only
 def ingest_pq_batch(batch: Table, store_path: str,
                     codebooks: np.ndarray,
                     centroids: np.ndarray | None = None,
@@ -177,9 +179,3 @@ def compact_pq_store(spark, store_path: str, files_per_cell: int = 1,
     artifacts)."""
     _compact_store_impl(spark, store_path, files_per_cell, "cell",
                         ["_PQ_FORMAT"], strategy, "compact_pq_store")
-
-
-# silent-empty audit: eager store write — remote inputs raise at entry
-from ..core import _localize_guard as _lg  # noqa: E402
-
-ingest_pq_batch = _lg(ingest_pq_batch)

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..core import Table
 from ..pipeline.bloom import (BloomFilter, _validate_mk, build_bloom,
                               build_ngram_bloom)
+from ..wire import local_only
 from .incremental_dedup import (_compact_store_impl, _ingest_ids,
                                 resolve_store_root)
 from .incremental_counts import _check_sig_format
@@ -60,6 +61,7 @@ def _check_bloom_format(spark, root: str, has_existing: bool,
                       fmt_label="filter geometry")
 
 
+@local_only
 def ingest_bloom_batch(batch: Table, store_path: str,
                        key_col: str | None = None,
                        n: int | None = None, text_col: str = "text",
@@ -138,9 +140,3 @@ def compact_bloom_store(spark, store_path: str,
     _compact_store_impl(spark, store_path, 1, None,
                         ["_BLOOM_FORMAT"], strategy,
                         "compact_bloom_store")
-
-
-# silent-empty audit: eager store write — remote inputs raise at entry
-from ..core import _localize_guard as _lg  # noqa: E402
-
-ingest_bloom_batch = _lg(ingest_bloom_batch)

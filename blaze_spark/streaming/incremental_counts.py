@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 from ..core import Table
 from ..pipeline.selection import hashed_bucket_counts
 from ..sources import local_frame
+from ..wire import local_only
 from .incremental_dedup import (_check_sig_format, _compact_store_impl,
                                 _ingest_ids, resolve_store_root)
 
@@ -85,6 +86,7 @@ def _check_counts_format(spark, store_path: str, has_existing: bool,
                       fmt_label="feature space")
 
 
+@local_only
 def ingest_counts_batch(batch: Table, store_path: str,
                         n_buckets: int = 4096, n: int = 1,
                         text_col: str = "text",
@@ -187,6 +189,7 @@ def lm_counts_format(n_buckets: int, n: int,
     return fmt
 
 
+@local_only
 def ingest_lm_counts_batch(batch: Table, store_path: str,
                            n_buckets: int = 4096, n: int = 2,
                            text_col: str = "text",
@@ -292,10 +295,3 @@ def compact_counts_store(spark, store_path: str,
     _compact_store_impl(spark, store_path, 1, None,
                         ["_COUNTS_FORMAT"], strategy,
                         "compact_counts_store")
-
-
-# silent-empty audit: eager store write — remote inputs raise at entry
-from ..core import _localize_guard as _lg  # noqa: E402
-
-ingest_counts_batch = _lg(ingest_counts_batch)
-ingest_lm_counts_batch = _lg(ingest_lm_counts_batch)

@@ -221,8 +221,10 @@ def test_mixture_pair_over_wire(spark):
             rt, tsm(t, alpha=0.5)).compute().doc_id) == local_ids
         with _pytest.raises(TypeError, match="mixes engines"):
             apply_source_mix(t, wr)
-        with _pytest.raises(TypeError, match="different server"):
-            apply_source_mix(rt, t)   # a local TABLE is not a plan
+        # a local TABLE ships as literal rows like a DataFrame, but a
+        # corpus is not a plan: refused at construction
+        with _pytest.raises(Exception, match="sample_weight"):
+            apply_source_mix(rt, t)
     finally:
         srv.stop()
 
@@ -1063,11 +1065,17 @@ def test_upsample_mix_over_wire(spark):
         assert got == want
         assert max(c for _, c in got) >= 1  # duplicates materialized
         # NULL weight in a local literal-encoded plan: contract error
+        # naming the source, raised by the local function where the
+        # plan executes (so locally too)
         bad = spark.createDataFrame(
             [("s0", None), ("s1", 1.0), ("s2", 1.0)],
             "source string, sample_weight double")
-        with pytest.raises(ValueError, match="NULL sample_weight"):
-            apply_source_mix(rt, bad)
+        with pytest.raises(RuntimeError,
+                           match="source s0 has NULL sample_weight"):
+            apply_source_mix(rt, bad).compute()
+        with pytest.raises(Exception,
+                           match="source s0 has NULL sample_weight"):
+            apply_source_mix(t, bad).df.collect()
     finally:
         srv.stop()
 

@@ -217,8 +217,10 @@ def test_wire_validation(spark, ldocs):
     srv.start(port=0)
     try:
         rt = data(f"blaze://127.0.0.1:{srv.port}::ldocs", spark=spark)
-        with pytest.raises(TypeError, match="different server"):
-            ngram_lm_logprob(rt, counts=ldocs)   # local Table, not df
+        # a local Table ships as literal rows, but a docs table is not
+        # a fit relation: refused at construction, before any collect
+        with pytest.raises(ValueError, match="kind STRING"):
+            ngram_lm_logprob(rt, counts=ldocs)
         with pytest.raises(TypeError, match="SAME server"):
             ngram_lm_logprob(rt, reference=ldocs)
         # the mirror image: LOCAL corpus, REMOTE fit — engines don't mix
@@ -228,7 +230,6 @@ def test_wire_validation(spark, ldocs):
             perplexity_filter(rt)
         node = {"op": "ngram_lm_logprob",
                 "args": [{"op": "symbol", "args": ["ldocs"]}, None,
-                         None,
                          {"text_col": "text", "id_col": "doc_id",
                           "n_buckets": B, "n": 2, "smoothing": 1.0,
                           "future_knob": 1}]}
@@ -406,14 +407,14 @@ def test_backoff_wire_roundtrip(spark, ldocs):
     with pytest.raises(ValueError, match="matching client version"):
         interop.from_tree(
             {"op": "ngram_lm_fit",
-             "args": [{"op": "symbol", "args": ["ldocs"]}, "text", B,
-                      2, {"future_knob": True}]},
+             "args": [{"op": "symbol", "args": ["ldocs"]},
+                      {"n_buckets": B, "future_knob": True}]},
             spark=spark, datasets={"ldocs": ldocs})
     with pytest.raises(ValueError, match="matching client version"):
         interop.from_tree(
             {"op": "ngram_lm_fit",
-             "args": [{"op": "symbol", "args": ["ldocs"]}, "text", B,
-                      2, {"unigrams": True}, "extra"]},
+             "args": [{"op": "symbol", "args": ["ldocs"]},
+                      {"n_buckets": B, "unigrams": True}, "extra"]},
             spark=spark, datasets={"ldocs": ldocs})
 
 
@@ -715,7 +716,7 @@ def test_interp_wire_roundtrip(spark, ldocs):
         # byte-identical to the r12 form
         from blaze_spark.interop import to_tree
         plain = ngram_lm_logprob(rt, n_buckets=B, n=2)
-        assert "interpolate" not in to_tree(plain)["args"][3]
+        assert "interpolate" not in to_tree(plain)["args"][2]
     finally:
         srv.stop()
 

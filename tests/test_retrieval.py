@@ -156,17 +156,25 @@ def test_bm25_wire_roundtrip(spark, docs):
     sym = {"op": "symbol", "args": ["bm_docs"]}
     with pytest.raises(ValueError, match="unknown keyword"):
         from_tree({"op": "bm25_topk",
-                   "args": [sym, [[0, "apple"]], {"evil": 1}]},
+                   "args": [sym, {"queries": ["apple"], "evil": 1}]},
                   spark=spark, datasets={"bm_docs": docs},
                   allow_data_uris=False)
-    with pytest.raises(ValueError, match=r"literal \[query_id"):
+    with pytest.raises(ValueError, match="non-empty strings"):
         from_tree({"op": "bm25_topk",
-                   "args": [sym, [["x", "y"]], {}]},
+                   "args": [sym, {"queries": [["x", "y"]]}]},
+                  spark=spark, datasets={"bm_docs": docs},
+                  allow_data_uris=False)
+    with pytest.raises(ValueError, match="subtree"):
+        from_tree({"op": "bm25_topk",
+                   "args": [sym, {"queries": {"evil": 1}}]},
                   spark=spark, datasets={"bm_docs": docs},
                   allow_data_uris=False)
     # a well-formed literal node replays to the local result
     ok = from_tree({"op": "bm25_topk",
-                    "args": [sym, [[0, "apple banana"]], {"k": 3}]},
+                    "args": [sym, {"queries": {
+                        "rows": [[0, "apple banana"]],
+                        "schema": "query_id BIGINT, query STRING"},
+                        "k": 3}]},
                    spark=spark, datasets={"bm_docs": docs},
                    allow_data_uris=False)
     assert sorted(map(tuple, ok.df.collect())) == sorted(map(

@@ -459,7 +459,10 @@ def test_selection_remote_dispatch_records_trees(spark, sdocs):
 
     out = quality_classifier(remote, _weights(spark, [(5, 10)]))
     assert out._tree["op"] == "quality_classifier"
-    assert out._tree["args"][1] == [[5, 10]]
+    # the model ships as literal rows + DDL (the local function
+    # normalizes it server-side, as it does locally)
+    assert out._tree["args"][1]["weights"]["rows"] == [[5.0, 10]]
+    assert "weight_milli" in out._tree["args"][1]["weights"]["schema"]
     assert out.df.schema.simpleString() == \
         "struct<doc_id:bigint,n_tokens:int,score_milli:bigint,keep:int>"
 
@@ -470,8 +473,9 @@ def test_selection_remote_dispatch_records_trees(spark, sdocs):
                                                          n_buckets=64),
                          n_buckets=64)
     # remote counts ride as a SUBTREE, local counts as literal rows
-    assert d._tree["args"][3]["op"] == "hashed_bucket_counts"
-    assert isinstance(d._tree["args"][2], list)
+    assert d._tree["args"][2]["target_counts"]["op"] == \
+        "hashed_bucket_counts"
+    assert "rows" in d._tree["args"][2]["raw_counts"]
     assert d.df.schema.simpleString() == \
         "struct<doc_id:bigint,n_tokens:int,logw:double>"
 
@@ -739,8 +743,9 @@ def test_train_classifier_remote_eager_posts_tree(spark):
     assert m.n_buckets == 64 and m.history == []
     (tree,) = remote._client.trees
     assert tree["op"] == "train_quality_classifier"
-    assert tree["args"][2]["epochs"] == 2
-    assert tree["args"][2]["lr"] == 4.0
+    assert tree["args"][1]["epochs"] == 2
+    assert tree["args"][1]["label"]["op"] == "eq"
+    assert "lr" not in tree["args"][1]     # defaults stay off the node
     # a label that isn't a serializable remote expression fails loudly
     with pytest.raises(TypeError, match="serializable"):
         train_quality_classifier(remote, "y = 1")
@@ -1110,12 +1115,12 @@ def test_train_classifier_aids_guards(spark, labeled_docs):
     assert remote._client.trees == []
     # defaults ride OFF the wire (pre-r15 servers keep reading trees)
     train_quality_classifier(remote, remote.y == 1, epochs=1)
-    kw = remote._client.trees[-1]["args"][2]
+    kw = remote._client.trees[-1]["args"][1]
     assert "init_intercept" not in kw and "lr_decay" not in kw
     # engaged aids ride ON the wire
     train_quality_classifier(remote, remote.y == 1, epochs=1,
                              init_intercept=True, lr_decay=0.5)
-    kw = remote._client.trees[-1]["args"][2]
+    kw = remote._client.trees[-1]["args"][1]
     assert kw["init_intercept"] is True and kw["lr_decay"] == 0.5
 
 

@@ -8,6 +8,8 @@ import urllib.request
 
 import pytest
 
+from blaze_spark.wire import local_only_ops
+
 
 @pytest.fixture(scope="module")
 def server(spark, star):
@@ -747,9 +749,10 @@ def test_selection_wire_fail_loud_paths(spark, star):
         # mixing a remote raw with a local target corpus raises
         with pytest.raises(TypeError, match="SAME server"):
             dsir_log_weights(rt, docs, n_buckets=256)
-        # a remote weights TABLE cannot ship as a literal model
-        with pytest.raises(TypeError, match="LOCAL"):
-            quality_classifier(rt, rt, n_buckets=256)
+        # a same-server weights relation rides as its subtree — it is
+        # never collected into literal rows
+        qc = quality_classifier(rt, rt[["doc_id"]], n_buckets=256)
+        assert qc._tree["args"][1]["weights"]["op"] == "projection"
         # a non-serializable remote prefix fails at entry, not empty
         broken = rt._new(rt.df)
         broken._tree = None
@@ -759,9 +762,8 @@ def test_selection_wire_fail_loud_paths(spark, star):
         # (a newer client) is rejected loudly, never half-applied
         tree = {"op": "weighted_sample",
                 "args": [{"op": "symbol", "args": ["documents"]},
-                         "quality",
-                         {"n": 5, "id_col": "doc_id",
-                          "future_knob": True}]}
+                         {"score_col": "quality", "n": 5,
+                          "id_col": "doc_id", "future_knob": True}]}
         with pytest.raises(ValueError, match="matching client"):
             from_tree(tree, datasets={"documents": docs})
     finally:
@@ -997,58 +999,36 @@ def test_remote_column_ops_and_iteration(spark, served, star):
     assert len(rows) == 3 and rows[0].o_totalprice > 400000.0
 
 
-def test_pipeline_ops_reject_remote_tables(spark, served):
-    """r8 silent-empty audit: every pipeline/operator entry point with no
-    wire-dialect form raises IMMEDIATELY on a remote table instead of
-    building a local plan over the empty schema-only frame.  After the
-    r12 sweep the guarded set is exactly the NON-serializable ops: the
-    approximate generators (random planes, trained quantizers, sampled
-    fits), candidate-input verifiers, eager store/packing builders and
-    the multimodal decoders — everything literal-args serialized."""
-    from blaze_spark import data, pipeline as pl
-    from blaze_spark import operators as ops
+@pytest.mark.parametrize("op", sorted(local_only_ops()))
+def test_local_only_op_rejects_remote_table(spark, served, op):
+    """r8 silent-empty audit: every operator declared ``@local_only``
+    (no wire form: approximate generators, trained quantizers, sampled
+    fits, candidate-input verifiers, eager store builders, multimodal
+    decoders) raises IMMEDIATELY on a remote table — before any Spark
+    job — instead of building a local plan over the empty schema-only
+    frame."""
+    from blaze_spark import data
 
     rt = data(f"blaze://127.0.0.1:{served.port}::orders", spark=spark)
-
-    guarded = [
-        pl.minhash_signatures,
-        pl.minhash_candidates, pl.exact_jaccard_pairs, pl.simhash,
-        pl.simhash_candidates, pl.cosine_topk, pl.neardup_pairs,
-        pl.embedding_neardup_pairs, pl.lsh_cosine_topk,
-        pl.attach_fake_binary, pl.decode_images,
-        pl.extract_image_features, pl.sample_video_frames,
-        pl.pair_recall,
-    ]
-    from blaze_spark.pipeline.multimodal import resize_images
-    guarded.append(resize_images)
-    guarded += [pl.quantize_embeddings, pl.dequantize_embeddings]
-    # pq_topk (r13) and ivf_pq_topk (r13 second half) left this set:
-    # trained-artifact APPLICATION serializes (the fits/encoders stay
-    # guarded)
-    guarded += [pl.pq_fit, pl.pq_encode, pl.pq_decode,
-                pl.write_pq_codes]
-    from blaze_spark.streaming.incremental_ann import ingest_pq_batch
-    guarded.append(ingest_pq_batch)
-    guarded.append(pl.ann_topk)
-    from blaze_spark.pipeline.ivf import ivf_assign, ivf_topk, kmeans_fit
-    from blaze_spark.operators.joins_ext import asof_join
-    guarded += [ivf_assign, ivf_topk, kmeans_fit, pl.semantic_dedup]
-    # tokenizer TRAINERS are eager driver-side fits (r13 second half)
-    # for CORPUS inputs — word_frequencies itself LEFT this set late
-    # r13 (it serializes as a dialect node; the trainers consume its
-    # computed bounded relation via word_freq=)
-    guarded += [pl.train_bpe, pl.train_wordpiece,
-                pl.train_vocab, pl.train_unigram]
-    # bloom BUILDERS are eager store writes — still guarded; the
-    # PROBES left this set in r15 (they serialize against a
-    # REGISTERED store name — a packed BloomFilter object still
-    # refuses, with a pointer to the registry, below)
-    guarded += [pl.build_bloom, pl.build_ngram_bloom,
-                pl.bloom_two_phase_contamination]
-
-    for fn in guarded:
+    sc = spark.sparkContext
+    group = f"local-only-{op}"
+    sc.setJobGroup(group, "remote call of a local-only op")
+    try:
         with pytest.raises(TypeError, match="wire dialect"):
-            fn(rt)
+            local_only_ops()[op](rt)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_pipeline_ops_reject_remote_tables(spark, served):
+    """Beyond the @local_only set (parametrized above): a packed bloom
+    filter does not ride the wire, mixed-engine binary inputs refuse,
+    and sql() refuses a remote temp view."""
+    from blaze_spark import data, pipeline as pl
+    from blaze_spark.operators.joins_ext import asof_join
+
+    rt = data(f"blaze://127.0.0.1:{served.port}::orders", spark=spark)
     # r15: the probes refuse a literal filter on a remote corpus —
     # the registered-store form is the only wire path
     from blaze_spark.pipeline.bloom import BloomFilter

@@ -454,7 +454,8 @@ def test_word_frequencies_wire_and_remote_training(spark, tdocs):
         vt_r = train_vocab(word_freq=wf_r, vocab_size=3)
         assert vt_r.vocab == train_vocab(tdocs, vocab_size=3).vocab
         # corpus-input trainers refuse remote tables, with guidance
-        for fn in (train_bpe, train_wordpiece, train_vocab):
+        for fn in (train_bpe, train_wordpiece, train_vocab,
+                   train_unigram):
             with pytest.raises(TypeError, match="word_freq="):
                 fn(rt)
     finally:

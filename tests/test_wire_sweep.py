@@ -460,18 +460,19 @@ def test_pq_topk_wire_application(spark):
     # version skew: unknown keyword rejects
     import copy
     bad = copy.deepcopy(node)
-    bad["args"][3]["future_knob"] = 1
+    bad["args"][1]["future_knob"] = 1
     with pytest.raises(ValueError, match="matching client version"):
         from_tree(bad, spark=spark, datasets={"codes": codes})
     # hostile codebooks: truncated data rejects before any scan
     bad = copy.deepcopy(node)
-    bad["args"][1]["data"] = bad["args"][1]["data"][:-1]
+    bad["args"][1]["codebooks"]["data"] = \
+        bad["args"][1]["codebooks"]["data"][:-1]
     with pytest.raises(ValueError, match="floats"):
         from_tree(bad, spark=spark, datasets={"codes": codes})
     # mis-shaped query rows reject
     bad = copy.deepcopy(node)
-    bad["args"][2] = "not-rows"
-    with pytest.raises(ValueError, match="query"):
+    bad["args"][1]["queries"] = "not-rows"
+    with pytest.raises(ValueError, match="queries"):
         from_tree(bad, spark=spark, datasets={"codes": codes})
 
 
@@ -536,17 +537,18 @@ def test_ivf_pq_topk_wire_application(spark):
 
     # version skew: unknown keyword rejects
     bad = copy.deepcopy(node)
-    bad["args"][4]["future_knob"] = 1
+    bad["args"][1]["future_knob"] = 1
     with pytest.raises(ValueError, match="matching client version"):
         from_tree(bad, spark=spark, datasets={"codes": codes})
     # hostile centroids: truncated data rejects before any scan
     bad = copy.deepcopy(node)
-    bad["args"][1]["data"] = bad["args"][1]["data"][:-1]
+    bad["args"][1]["centroids"]["data"] = \
+        bad["args"][1]["centroids"]["data"][:-1]
     with pytest.raises(ValueError, match="floats"):
         from_tree(bad, spark=spark, datasets={"codes": codes})
     # mis-shaped centroids dict rejects
     bad = copy.deepcopy(node)
-    bad["args"][1] = {"k_cells": 4}
+    bad["args"][1]["centroids"] = {"k_cells": 4}
     with pytest.raises(ValueError, match="centroids wire form"):
         from_tree(bad, spark=spark, datasets={"codes": codes})
 
@@ -691,13 +693,13 @@ def test_registered_store_namespace_bloom_and_ann(spark, tmp_path):
     # version skew: unknown keyword on the bloom node rejects
     import copy
     bad = copy.deepcopy(bloom_node)
-    bad["args"][2]["future_knob"] = 1
+    bad["args"][1]["future_knob"] = 1
     with pytest.raises(ValueError, match="matching client version"):
         from_tree(bad, spark=spark, datasets={"nsdocs": docs},
                   stores={"refbloom": saved})
     # a raw path in the node does NOT resolve (names only)
     bad = copy.deepcopy(bloom_node)
-    bad["args"][1] = saved
+    bad["args"][1]["bloom"] = saved
     with pytest.raises(KeyError, match="unknown bloom store"):
         from_tree(bad, spark=spark, datasets={"nsdocs": docs},
                   stores={"refbloom": "/elsewhere"})
