@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..cache import owned_cache
 from ..core import Table
 from ..sources import local_frame
-from ..wire import local_only
+from ..wire import local_only, warn_caller
 
 __all__ = ["kmeans_fit", "ivf_assign", "ivf_topk", "ivf_neardup_pairs"]
 
@@ -381,21 +381,19 @@ def ivf_neardup_pairs(corpus: Table, threshold: float = 0.9,
     cap = int(max_cell)
 
     if warn_truncation:
-        import warnings
-
         hot = (entries.groupBy("cell").count()
                .filter(F.col("count") > cap)
                .agg(F.count(F.lit(1)).alias("cells"),
                     F.sum(F.col("count") - cap).alias("dropped"))
                .collect()[0])
         if hot["cells"]:
-            warnings.warn(
+            warn_caller(
                 f"ivf_neardup_pairs: {hot['cells']} cell(s) exceed "
                 f"max_cell={cap}; {hot['dropped']} multi-assigned row(s) "
                 "will be excluded from pair scoring (recall loss on the "
                 "truncated cells).  Raise max_cell, raise k (smaller "
                 "cells), or handle the hot cells offline.",
-                RuntimeWarning, stacklevel=2)
+                RuntimeWarning)
 
     def _cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:

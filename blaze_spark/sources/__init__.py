@@ -4,6 +4,12 @@
 URI-style strings resolve by extension/scheme; schema discovery is Spark's
 reader inference (the reference delegates to ``odo.discover``,
 blaze/expr/literal.py:166-198) with optional explicit ``schema=`` override.
+As in the reference, a leaf discovers its schema once: an inferred file
+schema is memoized per process (``_resolve_schema``), keyed by format,
+paths, reader options, the session's SQL conf and each local file's
+(relative path, size, mtime_ns).  A repeat read of unchanged local files
+declares the memoized schema and runs no Spark job; remote schemes and
+gateway-less (Spark Connect) sessions infer on every read.
 
 Scale notes: parquet/orc readers give Catalyst column pruning + predicate
 pushdown + partition pruning for free; CSV/JSON get projection pushdown.
@@ -14,7 +20,12 @@ parquet/ORC (SURVEY.md §2.1).
 
 from __future__ import annotations
 
+import os
+import re
+import threading
+from collections import OrderedDict
 from typing import Any
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -53,6 +64,11 @@ def data(source: Any, *, spark: SparkSession | None = None,
       - ``jdbc:...`` URIs with ``dbtable=`` option (SQL sources)
       - a ``pyspark.sql.DataFrame``
       - a list of rows / pandas DataFrame (``spark.createDataFrame``)
+
+    A file source without ``schema=`` discovers its schema once per
+    (files, options, session conf): a repeat read of unchanged local
+    files declares the memoized schema and runs no Spark job (see
+    ``_resolve_schema``).  An explicit ``schema=`` is read as given.
     """
     if isinstance(source, Table):
         return source
@@ -95,43 +111,17 @@ def data(source: Any, *, spark: SparkSession | None = None,
             client = Client(url, spark=spark, **ckw)
             return client[dataset] if dataset is not None else client
         f = fmt or _infer_format(source)
-        if f == "parquet":
-            ns_cols = _nanos_timestamp_cols(source)
-            if ns_cols:
-                # Spark cannot scan some TIMESTAMP(NANOS) parquet; read the
-                # raw int64 nanos (legacy conf) and convert to microsecond
-                # timestamps scan-side.  Metadata-only footer sniff, no data
-                # read; conversion is a codegen'd projection.  Spark-4-written
-                # ns files load natively as TimestampType even under the
-                # conf, so convert ONLY the columns that actually came back
-                # as longs — dtype-gated, not sniff-trusted.
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-                from pyspark.sql import functions as F
-                from pyspark.sql import types as T
-
-                df = spark.read.format("parquet").load(source)
-                conv = {
-                    c: F.timestamp_micros((df[c] / 1000).cast("long"))
-                    for c in ns_cols
-                    if isinstance(df.schema[c].dataType, T.LongType)
-                }
-                if conv:
-                    df = df.withColumns(conv)
-                t = Table(_normalize_ntz(df), name or _basename(source))
-                t._tree = {"op": "data", "args": [source]}
-                return t
-        reader = spark.read.format(f)
         if f == "csv":
             options.setdefault("header", "true")
             if schema is None:
                 options.setdefault("inferSchema", "true")
             if source.lower().endswith(".tsv"):
                 options.setdefault("sep", "\t")
-        if schema is not None:
-            reader = reader.schema(schema)
-        for k, v in options.items():
-            reader = reader.option(k, str(v))
-        t = Table(_normalize_ntz(reader.load(source)),
+        ns_cols: tuple[str, ...] = ()
+        if schema is None:
+            schema, ns_cols = _resolve_schema(spark, f, source, options)
+        df = _reader(spark, f, options).schema(schema).load(source)
+        t = Table(_normalize_ntz(_nanos_to_micros(df, ns_cols)),
                   name or _basename(source))
         t._tree = {"op": "data", "args": [source]}
         return t
@@ -139,6 +129,115 @@ def data(source: Any, *, spark: SparkSession | None = None,
     # in-memory rows / pandas
     return Table(_normalize_ntz(spark.createDataFrame(source, schema=schema)),
                  name)
+
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+# LRU of inferred schemas by _schema_key; the bound keeps a process that
+# reads many distinct paths from growing without limit
+_SCHEMA_MEMO_SIZE = 256
+_schema_memo: OrderedDict = OrderedDict()
+_schema_memo_lock = threading.Lock()
+
+
+def _reader(spark: SparkSession, fmt: str, options: dict):
+    reader = spark.read.format(fmt)
+    for k, v in options.items():
+        reader = reader.option(k, str(v))
+    return reader
+
+
+def _resolve_schema(spark: SparkSession, fmt: str, path: str,
+                    options: dict):
+    """``(schema, ns_cols)``: the schema a batch read of ``path`` with
+    ``options`` infers, and its parquet TIMESTAMP(NANOS) columns (a
+    footer sniff).  Sets the nanosAsLong conf when there are any: Spark
+    cannot scan some TIMESTAMP(NANOS) parquet, so the read that follows
+    takes them as raw int64 nanos (see ``_nanos_to_micros``).
+
+    Memoized by ``_schema_key``: a hit runs no Spark job and reads no
+    footer; a miss infers as Spark does and stores the result.  Reads
+    that cannot be keyed (remote schemes, globs, Spark Connect) infer
+    every time."""
+    key = _schema_key(spark, fmt, path, options)
+    with _schema_memo_lock:
+        found = _schema_memo.get(key) if key is not None else None
+        if found is not None:
+            _schema_memo.move_to_end(key)
+    if found is not None:
+        if found[1]:
+            spark.conf.set(_NANOS_AS_LONG, "true")
+        return found
+    ns_cols = tuple(_nanos_timestamp_cols(path)) if fmt == "parquet" else ()
+    if ns_cols:
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    found = (_reader(spark, fmt, options).load(path).schema, ns_cols)
+    if key is not None:
+        with _schema_memo_lock:
+            _schema_memo[key] = found
+            if len(_schema_memo) > _SCHEMA_MEMO_SIZE:
+                _schema_memo.popitem(last=False)
+    return found
+
+
+def _schema_key(spark: SparkSession, fmt: str, path: str, options: dict):
+    """Everything schema inference reads: format, path, reader options,
+    the session's SQL conf (exact) and the local file listing.  None
+    when the read is not memoized: a non-local path, where listing the
+    remote tree on every read could cost more than the job it saves,
+    or a session without a JVM gateway (Spark Connect)."""
+    listing = _local_listing(path)
+    if listing is None:
+        return None
+    try:
+        conf = spark._jsparkSession.conf().getAll().toString()
+    except AttributeError:
+        return None
+    return (fmt, os.path.abspath(listing[0]),
+            tuple(sorted((k, str(v)) for k, v in options.items())),
+            conf, listing[1])
+
+
+def _local_listing(path: str):
+    """``(local path, files)`` with ``files`` the sorted
+    (relative path, size, mtime_ns) of every file under ``path`` (a
+    file or a directory tree); None for a non-local URI, a glob or a
+    path that does not exist."""
+    scheme = re.match(r"([A-Za-z][\w+.-]*):", path)
+    if scheme and scheme.group(1).lower() == "file":
+        path = urlparse(path).path
+    elif scheme or any(c in path for c in "*?[{"):
+        return None
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return path, (("", st.st_size, st.st_mtime_ns),)
+        if not os.path.isdir(path):
+            return None
+        files = []
+        for root, _, names in os.walk(path, followlinks=True):
+            for n in names:
+                full = os.path.join(root, n)
+                st = os.stat(full)
+                files.append((os.path.relpath(full, path), st.st_size,
+                              st.st_mtime_ns))
+    except FileNotFoundError:    # a file went away mid-listing
+        return None
+    return path, tuple(sorted(files))
+
+
+def _nanos_to_micros(df: DataFrame, ns_cols) -> DataFrame:
+    """TIMESTAMP(NANOS) columns read as raw int64 nanos become
+    microsecond timestamps scan-side (a codegen'd projection).
+    Spark-4-written ns files load natively as TimestampType even under
+    the nanosAsLong conf, so only the columns that came back as longs
+    convert: dtype-gated, not sniff-trusted."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    conv = {c: F.timestamp_micros((df[c] / 1000).cast("long"))
+            for c in ns_cols
+            if isinstance(df.schema[c].dataType, T.LongType)}
+    return df.withColumns(conv) if conv else df
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:

@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core import ColExpr, Reduction, Table
-from ..sources import _nanos_timestamp_cols, _rewrite_ntz_schema
+from ..sources import (_nanos_to_micros, _resolve_schema,
+                       _rewrite_ntz_schema)
 
 __all__ = ["StreamTable", "stream_data", "stream_by_window"]
 
@@ -32,15 +33,12 @@ def stream_data(spark: SparkSession, path: str, fmt: str = "parquet",
                 schema=None, max_files_per_trigger: int | None = None,
                 **options) -> "StreamTable":
     """Bind a file-based streaming source.  Schema is required by Spark for
-    file streams; if omitted we sniff it from the existing files (batch
-    metadata read, no data scan)."""
-    ns_cols: list[str] = []
-    if fmt == "parquet":
-        ns_cols = _nanos_timestamp_cols(path)
-        if ns_cols:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    file streams; if omitted it is sniffed from the existing files with
+    the same reader ``options`` through ``data()``'s memoized resolver
+    (a batch metadata read, no data scan; none at all on a repeat)."""
+    ns_cols: tuple[str, ...] = ()
     if schema is None:
-        schema = spark.read.format(fmt).load(path).schema
+        schema, ns_cols = _resolve_schema(spark, fmt, path, options)
     # Naive-timestamp parquet sniffs as TIMESTAMP_NTZ under Spark >= 3.4's
     # inferTimestampNTZ, and withWatermark rejects NTZ event-time columns
     # (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE).  Declare the stream schema
@@ -60,12 +58,7 @@ def stream_data(spark: SparkSession, path: str, fmt: str = "parquet",
     if os.path.isfile(path):
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
-    df = reader.load(path)
-    if ns_cols:
-        df = df.withColumns({
-            c: F.timestamp_micros((df[c] / 1000).cast("long")) for c in ns_cols
-        })
-    return StreamTable(df)
+    return StreamTable(_nanos_to_micros(reader.load(path), ns_cols))
 
 
 class StreamTable(Table):

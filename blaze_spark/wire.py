@@ -69,7 +69,9 @@ import functools
 import importlib
 import inspect
 import numbers
+import os
 import sys
+import warnings
 from dataclasses import dataclass
 from typing import Callable
 
@@ -163,6 +165,18 @@ def local_only(fn):
                          "twice")
     _LOCAL_ONLY[fn.__name__] = op
     return op
+
+
+def warn_caller(message: str, category=UserWarning) -> None:
+    """``warnings.warn`` attributed to the first frame outside
+    ``blaze_spark``: an operator's warning names the user's line, not
+    the ``@local_only``/``@wire_op`` wrapper or a library caller between
+    them (a fixed ``stacklevel`` counts neither)."""
+    pkg = os.path.dirname(__file__) + os.sep
+    level, frame = 2, sys._getframe(1)
+    while frame is not None and frame.f_code.co_filename.startswith(pkg):
+        level, frame = level + 1, frame.f_back
+    warnings.warn(message, category, stacklevel=level)
 
 
 def wire_op(name: str, tables: tuple, kwargs: tuple = (),

@@ -889,10 +889,12 @@ def test_ivf_hot_cell_truncation_warns(spark):
         _w.simplefilter("always")
         n = ivf_neardup_pairs(t, threshold=0.9, k=16,
                               max_cell=50).df.count()
-    msgs = [str(w.message) for w in got
-            if "ivf_neardup_pairs" in str(w.message)]
-    assert msgs, "expected a truncation warning for the degenerate cell"
-    assert "max_cell=50" in msgs[0] and "excluded" in msgs[0]
+    hits = [w for w in got if "ivf_neardup_pairs" in str(w.message)]
+    assert hits, "expected a truncation warning for the degenerate cell"
+    msg = str(hits[0].message)
+    assert "max_cell=50" in msg and "excluded" in msg
+    # attributed to this call, not to the @local_only wrapper
+    assert hits[0].filename == __file__
     assert 0 < n <= 50 * 49 // 2
 
     # a healthy corpus stays silent

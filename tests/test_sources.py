@@ -386,3 +386,144 @@ def test_mongo_uri_query_string_not_absorbed():
     # options without a collection suffix keep working too
     base, db, coll = _parse_mongo_uri("mongodb://h/db?x=y")
     assert (base, db, coll) == ("mongodb://h/db?x=y", "db", None)
+
+
+# -- memoized schema discovery ---------------------------------------------
+
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs fn ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"sources-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "memoized schema discovery")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write(path, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), str(path))
+
+
+def test_repeat_parquet_read_runs_no_job(spark, tmp_path):
+    """A leaf discovers its schema once: a second data() of unchanged
+    parquet declares the memoized schema and runs no Spark job, with the
+    same schema, rows and plan as the inferred read."""
+    from blaze_spark import data
+
+    path = str(tmp_path / "rep.parquet")
+    spark.range(20).selectExpr("id", "id * 2 AS twice", "cast(id AS string) s") \
+        .repartition(2).write.parquet(path)
+    first = data(path, spark=spark)
+    again, jobs = _jobs_run(spark, lambda: data(path, spark=spark))
+    assert jobs == 0
+    inferred = spark.read.parquet(path)
+    assert again.df.schema == first.df.schema == inferred.schema
+    assert again.df.sameSemantics(inferred)
+    assert sorted(again.df.collect()) == sorted(inferred.collect())
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    from blaze_spark import data
+
+    path = tmp_path / "rw.parquet"
+    _write(path, a=[1, 2])
+    assert data(str(path), spark=spark).columns == ["a"]
+    _write(path, a=[1, 2], b=["x", "y"])
+    t = data(str(path), spark=spark)
+    assert t.columns == ["a", "b"]
+    assert sorted(t.df.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_session_conf_change_is_seen(spark, tmp_path):
+    """The SQL conf is part of the key: binaryAsString set between two
+    reads of the same file changes the second read's schema."""
+    from blaze_spark import data
+
+    path = str(tmp_path / "bin.parquet")
+    _write(path, b=[b"ab", b"cd"])
+    assert dict(data(path, spark=spark).df.dtypes)["b"] == "binary"
+    try:
+        spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+        t = data(path, spark=spark)
+        assert dict(t.df.dtypes)["b"] == "string"
+        assert sorted(r.b for r in t.df.collect()) == ["ab", "cd"]
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert dict(data(path, spark=spark).df.dtypes)["b"] == "binary"
+
+
+def test_merge_schema_option_is_part_of_the_key(spark, tmp_path):
+    from blaze_spark import data
+
+    d = tmp_path / "merge.parquet"
+    d.mkdir()
+    _write(d / "part-0.parquet", a=[1])
+    _write(d / "part-1.parquet", a=[2], b=["y"])
+    plain = data(str(d), spark=spark)
+    assert set(plain.columns) <= {"a", "b"}
+    merged = data(str(d), spark=spark, mergeSchema="true")
+    assert sorted(merged.columns) == ["a", "b"]
+    assert sorted(merged.df.collect(), key=lambda r: r.a) == \
+        [(1, None), (2, "y")]
+
+
+def test_hive_partitioned_read_keeps_schema_and_order(spark, tmp_path):
+    from blaze_spark import data
+
+    path = str(tmp_path / "hive.parquet")
+    spark.range(12).selectExpr("id", "id % 3 AS p", "id * 1.5 AS v") \
+        .write.partitionBy("p").parquet(path)
+    inferred = spark.read.parquet(path)
+    for _ in range(2):
+        t = data(path, spark=spark)
+        assert t.df.schema == inferred.schema
+        assert t.columns == ["id", "v", "p"]
+        assert sorted(t.df.collect()) == sorted(inferred.collect())
+    assert t[t.p == 1].nrows() == 4
+
+
+def test_concurrent_reads_share_one_schema(spark, tmp_path):
+    """8 threads (more than the cores) race one cold path through the
+    locked memo: every read gets the inferred schema, and the memo
+    holds it afterwards."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from blaze_spark import data
+
+    path = str(tmp_path / "conc.parquet")
+    spark.range(30).selectExpr("id", "cast(id AS double) x") \
+        .repartition(3).write.parquet(path)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futs = [pool.submit(lambda: data(path, spark=spark).df.schema)
+                    for _ in range(8)]
+            schemas = [f.result(timeout=120) for f in futs]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(s == spark.read.parquet(path).schema for s in schemas)
+    _, jobs = _jobs_run(spark, lambda: data(path, spark=spark))
+    assert jobs == 0
+
+
+def test_stream_data_sniff_keeps_reader_options(spark, tmp_path):
+    """stream_data sniffs the schema with the options it streams with: a
+    CSV header names the columns, as in data() of the same file."""
+    from blaze_spark import data
+    from blaze_spark.streaming import stream_data
+
+    d = tmp_path / "csvsrc"
+    d.mkdir()
+    (d / "rows.csv").write_text("id,name\n1,a\n2,b\n")
+    st = stream_data(spark, str(d), fmt="csv", header="true")
+    assert st.columns == ["id", "name"]
+    assert data(str(d / "rows.csv"), spark=spark).columns == ["id", "name"]
