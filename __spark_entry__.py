@@ -2673,30 +2673,26 @@ def streaming_dsir_pipeline(spark, sf_dir):
                             store, n_buckets=1024, batch_id=bid)
 
     # r15 (guide §2.6): the six ingests are independent jobs writing
-    # disjoint ingest=<id> dirs of two stores — overlap them.  Each
-    # store's batch 0 runs in the first wave so its format stamp is
-    # created exactly once, race-free (the two stores are distinct
-    # roots, so the first wave itself can run concurrently).
+    # disjoint ingest=<id> dirs of two stores — overlap them (the
+    # format stamp's check-and-create is atomic within the process).
     # The ONE-SHOT fit never touches either store, so its
     # construction (dual-count fit job + driver collect) overlaps the
-    # whole ingest phase and the store-fed construction in a second
-    # driver thread (same §2.6 pattern as streaming_lm_pipeline).
+    # store-fed construction in a second driver thread.  It starts
+    # after the ingests: under FIFO scheduling a fit stage submitted
+    # first holds every task slot with its long tasks, and a cold
+    # first pass then stalled the short ingests ~5 s.
     def _one_shot():
         return weighted_sample(
             Table(dsir_log_weights(d, target_filter=tgt_pred,
                                    n_buckets=1024), "dsir_oneshot"),
             "logw", n=100, temperature=0.5)
 
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        list(pool.map(_ing, [(store, bid, store == tgt_store)
+                             for store in (raw_store, tgt_store)
+                             for bid in range(3)]))
     with ThreadPoolExecutor(max_workers=1) as fit_pool:
         one_shot_f = fit_pool.submit(_one_shot)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            list(pool.map(_ing, [(raw_store, 0, False),
-                                 (tgt_store, 0, True)]))
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            list(pool.map(_ing, [(raw_store, 1, False),
-                                 (raw_store, 2, False),
-                                 (tgt_store, 1, True),
-                                 (tgt_store, 2, True)]))
         via_store = weighted_sample(
             Table(dsir_log_weights(
                 d, n_buckets=1024,
@@ -2748,19 +2744,17 @@ def streaming_lm_pipeline(spark, sf_dir):
                                batch_id=bid)
 
     # r15 (guide §2.6): ingests write disjoint ingest=<id> dirs and
-    # are independent jobs — overlap them.  Batch 0 runs alone first
-    # so the format stamp is created exactly once, race-free.  The
-    # ONE-SHOT fit never touches the store, so its construction (a
-    # full fit job + driver collect) overlaps the whole ingest phase
-    # and the store-fed construction in a second driver thread —
-    # measured 8.6 → 5.9 s warm at sf0.1, output verified identical.
+    # are independent jobs — overlap them.  The ONE-SHOT fit never
+    # touches the store, so its construction (a full fit job + driver
+    # collect) overlaps the whole ingest phase and the store-fed
+    # construction in a second driver thread — measured 8.6 → 5.9 s
+    # warm at sf0.1, output verified identical.
     with ThreadPoolExecutor(max_workers=1) as fit_pool:
         one_shot_f = fit_pool.submit(
             perplexity_filter, d, n_buckets=1024, n=2,
             min_ppl=19.0, max_ppl=37.0)
-        _ing(0)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            list(pool.map(_ing, [1, 2]))
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            list(pool.map(_ing, range(3)))
         via_store = perplexity_filter(
             d, counts=read_lm_counts(spark, store, n_buckets=1024,
                                      n=2),
@@ -3709,11 +3703,9 @@ def blaze_client_store_lm(spark, sf_dir):
             ingest_lm_counts_batch(d[d.doc_id % 3 == bid], store,
                                    n_buckets=1024, n=2, batch_id=bid)
 
-        # r15 (guide §2.6): overlap the independent ingests; batch 0
-        # first so the format stamp is created exactly once
-        _ing(0)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            list(pool.map(_ing, [1, 2]))
+        # r15 (guide §2.6): overlap the independent ingests
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            list(pool.map(_ing, range(3)))
         with _served(spark, {"documents": d}, stores={"lm": store}) as url:
             rt = data(f"{url}::documents", spark=spark)
             leaf = read_lm_counts(spark, f"{url}::lm",

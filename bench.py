@@ -40,12 +40,12 @@ def _shuffle_partitions(sf: float, cpus: int) -> int:
         return cpus
     return cpus * 2  # sf1+: more, smaller partitions bound per-task memory
 
-# headline set: the TPC-H-shaped queries + heavy pipeline operators.
-# LEGACY_QUERIES is the 25-query set benched since r6 — the "value"
-# headline sums ONLY these so the cross-round series stays
-# apples-to-apples; the r9 additions below are timed identically and
-# reported in "queries"/"value_full".
-LEGACY_QUERIES = [
+# The timed set, in the order the rounds added it.  The first 25 are
+# LEGACY_QUERIES, benched since r6: the "value" headline sums ONLY these
+# so the cross-round series stays apples-to-apples; every entry is timed
+# identically and reported in BENCH_LOCAL.json and "value_full".
+BENCH_QUERIES = [
+    # legacy: TPC-H-shaped queries + the heavy pipeline operators
     "q01_pricing_summary",
     "q03_shipping_priority",
     "q05_local_supplier",
@@ -71,98 +71,48 @@ LEGACY_QUERIES = [
     "grouping_sets_order_stats",
     "sessionize_user_events",
     "rolling_range_user_values",
-]
-
-# r9 (VERDICT r8 #6): the r8-new heavy operators join the headline set,
-# timed identically but summed separately ("value_new"/"value_full") so
-# the legacy series stays comparable.
-NEW_QUERIES_R9 = [
+    # r9: curation scrubs, quantized chains, the PQ family (each times
+    # codebook fit + encode + probe + recall join)
     "cross_doc_dup_lines_docs",
     "cross_doc_scrub_docs",
     "token_commonness_docs",
     "quantized_neardup_chain",
     "quantized_at_rest_chain",
     "neardup_dispatch_pairs",
-    # late-r9 PQ family: flat ADC scan and the composed IVF-PQ layout
-    # (each times codebook fit + encode + probe + recall join)
     "recall_pq_topk",
     "recall_ivf_pq_topk",
-]
-
-# r10: the round's new operators join the timed set (same rule as r9 —
-# the bench times what the round built; legacy "value" stays the
-# comparable 25-query series).  ann_store_topk times the full prebuilt-
-# store chain (fit + encode + at-rest write + dispatcher query);
-# batched_topk_embeddings times the 5-chunk batched union.
-NEW_QUERIES_R10 = [
+    # r10: prebuilt-store ANN, batched top-k, PQ self-dedup, model-based
+    # selection end to end
     "ann_store_topk",
     "batched_topk_embeddings",
-    # full PQ self-dedup chain: coarse fit + codebook fit + encode +
-    # bias-corrected ADC range scan + exact rescore + recall join
     "recall_pq_neardup",
-    # model-based data selection: literal-map shuffle-free scoring /
-    # two fit passes + broadcast log-ratio scoring / Gumbel-top-k
     "quality_classifier_docs",
     "dsir_weights_docs",
     "dsir_resample_docs",
-    # gate -> classify -> DSIR -> resample -> split, end to end
     "targeted_corpus_build",
-]
-
-# r11: the wire-dialect selection chain (in-process HTTP server +
-# client; classifier -> semi-join gate -> one-pass DSIR -> resample
-# run SERVER-side, only 100 rows cross the wire) and the
-# streaming-native DSIR composite (6 counts-store ingests + store-fed
-# scoring full-joined against the one-shot pipeline).
-NEW_QUERIES_R11 = [
+    # r11: wire-dialect selection, the store-fed DSIR and LM composites
+    # (counts-store ingests + store-fed scoring full-joined against the
+    # one-shot pipeline), bigram LM, dup spans, mixing, edit distance
     "blaze_client_selection",
     "streaming_dsir_pipeline",
-    # CCNet-style bucketized bigram LM: one-pass positioned-index fit
-    # (eager bounded collect, timed) + codegen explode scoring / the
-    # band filter above the scoring aggregation
     "ngram_lm_docs",
     "perplexity_filter_docs",
-    # cross-doc duplicated 5-gram spans: positioned-index explode,
-    # distinct-doc key counts, coverage union / scrub reassembly
     "dup_ngram_spans_docs",
     "dup_ngram_scrub_docs",
-    # the LM band filter over the wire dialect (in-process HTTP server
-    # per rep; fit + score + band + projection all run server-side)
     "blaze_client_lm",
-    # streaming-native LM: 3 counts-store ingests + store-fed band
-    # filter full-joined against the one-shot pipeline
     "streaming_lm_pipeline",
-    # mT5-style alpha-sampling source rebalance (weights window over
-    # ~#sources rows + broadcast md5-keyed execution)
     "temperature_mix_docs",
-    # Levenshtein candidate verification (two equi-joins + per-pair DP)
     "edit_distance_verify_docs",
-    # the mixture pair over the wire (weights ride fit->execute as a
-    # same-server subtree; in-process HTTP server per rep)
     "blaze_client_mix",
-]
-
-# r12: stupid-backoff LM scoring (third broadcast ln() join + the
-# greatest() branch), deterministic upsampling execution (weights > 1
-# explode into copies), and the wire-dialect dedup/decontamination
-# services (in-process HTTP server per rep; the corpora are DERIVED
-# server-side through the dialect).
-NEW_QUERIES_R12 = [
+    # r12: stupid backoff, upsampling, wire dedup/decontamination/packing
+    # (in-process HTTP server per rep)
     "ngram_lm_backoff_docs",
     "upsample_mix_docs",
     "blaze_client_dedup",
     "blaze_client_contamination",
-    # the whole dataset-assembly chain server-side (chunk → split →
-    # pack → shard accounting; in-process HTTP server per rep)
     "blaze_client_packing",
-]
-
-# r13: multi-order stupid backoff (two extra broadcast ln() joins for
-# the trigram ladder), token-true budgets (vocab fold / BPE pandas_udf
-# counting feeding the same distributed prefix sum), and trained-PQ
-# application over the wire (codebooks + query block in the node, ADC
-# scan server-side; fit + encode + server round trip timed whole).
-NEW_QUERIES_R13 = [
+    # r13: multi-order LMs, token-true packing, trained tokenizers,
+    # blooms, SemDeDup, trained PQ over the wire
     "ngram_lm_backoff3_docs",
     "pack_tokenized_docs",
     "chunk_tokenized_docs",
@@ -179,33 +129,17 @@ NEW_QUERIES_R13 = [
     "bloom_two_phase_decontam_docs",
     "semantic_dedup_embeddings",
     "tokenizer_stats_docs",
-]
-
-# r14: the in-engine logistic fit (2 epochs = 2 corpus scans + 2
-# bounded gradient collects, timed whole), maximal dup spans (the
-# scoring-mode aggregations + one per-doc islands window), and
-# store-fed remote LM scoring (3 store ingests + HTTP server + remote
-# chained score per rep — the whole train-of-custody timed, like
-# blaze_client_packing).
-NEW_QUERIES_R14 = [
+    # r14: the in-engine logistic fit, maximal dup spans, store-fed
+    # remote LM scoring (3 store ingests + HTTP server + remote score
+    # per rep), the span-popularity sweep, cluster mixing
     "train_quality_classifier_docs",
     "dup_maximal_spans_docs",
     "blaze_client_store_lm",
-    # second half: the threshold sweep (two corpus scans + cached
-    # histograms) and cluster mixing (k-means fit + Arrow assign +
-    # mixture pair, whole chain per rep)
     "dup_span_popularity_docs",
     "cluster_mix_docs",
-]
-
-# r15: the convergence-aided trainer (init count pre-pass + 2 decayed
-# epochs + classify, whole chain per rep) and the registered bloom-
-# store service (filter build + save + HTTP server + remote probe,
-# whole chain per rep — the blaze_client_store_lm posture).  Late r15:
-# the UniMax mixer (per-language token census + water-filling plan +
-# budgeted keep pass) and the CCNet bucket split (LM fit + score +
-# per-language percentile thresholds + join-back, whole chain per rep).
-NEW_QUERIES_R15 = [
+    # r15: the convergence-aided trainer, the registered bloom-store
+    # service, UniMax, the CCNet bucket split, C4 cleaning, BM25,
+    # winnowing
     "train_classifier_init_docs",
     "blaze_client_store_bloom",
     "unimax_mix_docs",
@@ -214,11 +148,7 @@ NEW_QUERIES_R15 = [
     "bm25_topk_docs",
     "winnow_candidates_docs",
 ]
-
-BENCH_QUERIES = (LEGACY_QUERIES + NEW_QUERIES_R9 + NEW_QUERIES_R10
-                 + NEW_QUERIES_R11 + NEW_QUERIES_R12
-                 + NEW_QUERIES_R13 + NEW_QUERIES_R14
-                 + NEW_QUERIES_R15)
+LEGACY_QUERIES = BENCH_QUERIES[:25]
 
 
 def _force(df) -> int:
@@ -323,21 +253,6 @@ def main():
         "value": round(sum(timings_min[n] for n in LEGACY_QUERIES), 3),
         "value_median": round(sum(timings[n] for n in LEGACY_QUERIES), 3),
         "value_min": round(sum(timings_min[n] for n in LEGACY_QUERIES), 3),
-        # the r9/r10 additions, timed the same way but summed separately
-        # so "value" stays comparable to BENCH_r01..r08
-        "value_new": round(sum(timings_min[n] for n in NEW_QUERIES_R9), 3),
-        "value_new_r10": round(sum(timings_min[n]
-                                   for n in NEW_QUERIES_R10), 3),
-        "value_new_r11": round(sum(timings_min[n]
-                                   for n in NEW_QUERIES_R11), 3),
-        "value_new_r12": round(sum(timings_min[n]
-                                   for n in NEW_QUERIES_R12), 3),
-        "value_new_r13": round(sum(timings_min[n]
-                                   for n in NEW_QUERIES_R13), 3),
-        "value_new_r14": round(sum(timings_min[n]
-                                   for n in NEW_QUERIES_R14), 3),
-        "value_new_r15": round(sum(timings_min[n]
-                                   for n in NEW_QUERIES_R15), 3),
         "value_full": round(sum(timings_min.values()), 3),
         "unit": "sec",
         "queries": timings_min,

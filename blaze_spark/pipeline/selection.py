@@ -454,24 +454,18 @@ class TrainedQualityModel:
                 + [[-2, int(self.n_buckets)], [-3, int(self.n)]])
         (local_frame(spark, rows, "bucket long, weight_milli long")
          .repartition(1).write.mode("overwrite").parquet(path))
-        from ..streaming.incremental_dedup import _check_sig_format
-        _check_sig_format(spark, path, has_existing=False,
-                          expected=_QCLS_FORMAT,
-                          marker_name="_QCLS_FORMAT",
-                          what="quality-classifier model",
-                          fmt_label="model format")
+        from ..streaming.store import QCLS_MODEL, check_format
+        check_format(spark, QCLS_MODEL, path, _QCLS_FORMAT,
+                     has_existing=False)
 
     @classmethod
     def load(cls, spark, path: str) -> "TrainedQualityModel":
         """Rebuild a :meth:`save`d model; the artifact is
         self-describing (geometry rides at pseudo-buckets -2/-3), so
         no kwargs to mismatch."""
-        from ..streaming.incremental_dedup import _check_sig_format
-        _check_sig_format(spark, path, has_existing=True,
-                          expected=_QCLS_FORMAT,
-                          marker_name="_QCLS_FORMAT",
-                          what="quality-classifier model",
-                          fmt_label="model format")
+        from ..streaming.store import QCLS_MODEL, check_format
+        check_format(spark, QCLS_MODEL, path, _QCLS_FORMAT,
+                     has_existing=True)
         rows = spark.read.parquet(path).collect()
         meta = {int(r["bucket"]): int(r["weight_milli"])
                 for r in rows if r["bucket"] in (-2, -3)}

@@ -506,9 +506,9 @@ def _resolve_codes(spark, store: str | None, codes, codebooks,
                 "PQ codebooks that encoded the store (pq.load_codebooks "
                 "reloads a persisted set); codes from foreign codebooks "
                 "would silently rank garbage")
-        from ..streaming.incremental_dedup import _ingest_ids
         from ..streaming.incremental_ann import read_pq_index
-        if _ingest_ids(spark, store):
+        from ..streaming.store import ingest_ids
+        if ingest_ids(spark, store):
             return read_pq_index(spark, store, codebooks, centroids)
         return pq_mod.read_pq_codes(store, spark=spark)
     if codes is not None and codebooks is None:

@@ -6,27 +6,17 @@ ingest pipeline instead sees embeddings arrive continuously and must
 grow the searchable index per micro-batch without an O(corpus) re-encode
 — the ANN sibling of :mod:`incremental_dedup`'s signature store.
 
-Design (same store discipline as the signature store):
-
-- A persistent **code store** (parquet) holds one row per
-  (vec_id, cell?, pq_code).  Layout ``store/ingest=<batch>/
-  [cell=<c>/]part-*.parquet`` — ``ingest`` keys each batch's
-  contribution to its own subdirectory written with mode=overwrite, so
-  a ``foreachBatch`` RETRY of the same batch id replaces its
-  subdirectory instead of appending duplicates (exactly-once, matching
-  the checkpoint contract).  When coarse centroids are provided the
-  batch is cell-assigned and partitioned by ``cell`` inside the
-  subdirectory — ``ivf_pq_topk``'s probed-cell filter then prunes
-  partitions across ALL ingests.
-- **Index identity is the trained artifacts**: codes from different
-  codebooks (or cells from different centroids) NEVER match, so the
-  store is stamped with a ``_PQ_FORMAT`` marker derived from the
-  codebook (and centroid) bytes; probing or appending with different
-  artifacts fails loudly (the exact failure mode the signature store's
-  ``_SIG_FORMAT`` guards — silent wrong-answer, not a crash).
-- Per micro-batch the work is ONE encode pass over the batch — never
-  the corpus.  Reads see only complete (``_SUCCESS``-marked) ingests,
-  so a crashed half-written attempt is never scanned.
+The code store is ingest-partitioned (``streaming.store``: one
+directory per batch keyed by the batch id, complete-only reads, a
+format stamp, compaction).  It holds one row per (vec_id, cell?,
+pq_code); when coarse centroids are provided the batch is
+cell-assigned and partitioned by ``cell`` inside its ingest, so
+``ivf_pq_topk``'s probed-cell filter prunes partitions across ALL
+ingests.  **Index identity is the trained artifacts**: codes from
+different codebooks (or cells from different centroids) never match,
+so the ``_PQ_FORMAT`` stamp is a digest of the codebook (and centroid)
+bytes and other artifacts fail loudly.  Per micro-batch the work is
+ONE encode pass over the batch, never the corpus.
 
 Encoding is deterministic given the codebooks, so the pytest contract
 is EXACT: an N-batch ingest produces the bit-identical code set (and
@@ -43,15 +33,11 @@ import hashlib
 
 import numpy as np
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 from ..core import Table
 from ..pipeline.ivf import ivf_assign
 from ..pipeline.pq import pq_encode
 from ..wire import local_only
-from .incremental_dedup import (_check_sig_format, _compact_store_impl,
-                                _ingest_ids, resolve_store_root)
+from .store import PQ_INDEX, begin_ingest, compact, read_store, stream_ingest
 
 __all__ = ["pq_index_format", "ingest_pq_batch", "incremental_pq_index",
            "read_pq_index", "compact_pq_store"]
@@ -76,13 +62,6 @@ def pq_index_format(codebooks: np.ndarray,
     return tag
 
 
-def _check_pq_format(spark, store_path: str, has_existing: bool,
-                     expected: str) -> None:
-    _check_sig_format(spark, store_path, has_existing, expected,
-                      marker_name="_PQ_FORMAT", what="PQ index store",
-                      fmt_label="index format")
-
-
 @local_only
 def ingest_pq_batch(batch: Table, store_path: str,
                     codebooks: np.ndarray,
@@ -94,24 +73,15 @@ def ingest_pq_batch(batch: Table, store_path: str,
     ``batch_id`` defaults to (max existing ingest id) + 1; pass the
     ``foreachBatch`` batch id from streaming so a checkpoint replay
     overwrites its own subdirectory (exactly-once)."""
-    spark = batch.df.sparkSession
-    root = resolve_store_root(spark, store_path)
-    existing = _ingest_ids(spark, root)
-    _check_pq_format(spark, root, bool(existing),
-                     pq_index_format(codebooks, centroids))
-    if batch_id is None:
-        batch_id = (max(existing) + 1) if existing else 0
-
+    ing = begin_ingest(batch.df.sparkSession, PQ_INDEX, store_path,
+                       pq_index_format(codebooks, centroids), batch_id)
     coded = batch
     if centroids is not None:
         coded = ivf_assign(coded, centroids, vec_col=vec_col)
     coded = pq_encode(coded, codebooks, vec_col=vec_col)
     keep = [id_col, "pq_code"] + (["cell"] if centroids is not None
                                   else [])
-    w = (coded.df.select(*keep).write.mode("overwrite"))
-    if centroids is not None:
-        w = w.partitionBy("cell")
-    w.parquet(f"{root}/ingest={batch_id}")
+    ing.write(coded.df.select(*keep))
 
 
 def incremental_pq_index(stream, store_path: str, checkpoint: str,
@@ -124,15 +94,10 @@ def incremental_pq_index(stream, store_path: str, checkpoint: str,
     checkpoint's batch id.  Codebooks deliberately do not update online
     — retrain + re-encode is a new store (new ``_PQ_FORMAT``), exactly
     like the FAISS recipe of training once on a sample."""
-    def _on_batch(bdf: DataFrame, batch_id: int):
-        if not bdf.head(1):
-            return
-        ingest_pq_batch(Table(bdf), store_path, codebooks, centroids,
-                        id_col, vec_col, batch_id=batch_id)
-
-    return (stream.df.writeStream.foreachBatch(_on_batch)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append").start())
+    return stream_ingest(stream, PQ_INDEX, checkpoint, lambda bdf, bid:
+                         ingest_pq_batch(Table(bdf), store_path, codebooks,
+                                         centroids, id_col, vec_col,
+                                         batch_id=bid))
 
 
 def read_pq_index(spark, store_path: str, codebooks: np.ndarray,
@@ -142,24 +107,9 @@ def read_pq_index(spark, store_path: str, codebooks: np.ndarray,
     Validates the store was built with THESE artifacts, and reads only
     complete ingests (``_SUCCESS``-marked) so a crashed half-written
     batch directory is never searched."""
-    root = resolve_store_root(spark, store_path)
-    complete = _ingest_ids(spark, root, complete_only=True)
-    if not complete:
-        raise ValueError(
-            f"PQ index store at {store_path!r} has no complete ingests "
-            "— nothing to search yet (the path may not exist, the "
-            "stream may not have committed its first batch, or every "
-            "ingest directory is missing its _SUCCESS marker)")
-    _check_pq_format(spark, root, True,
-                     pq_index_format(codebooks, centroids))
-    # explicit complete-dir read (VERDICT r10 #2, same as
-    # read_bucket_counts): a root-wide read's schema inference may
-    # touch a crashed ingest's half-written footer and fail the whole
-    # read; listing the _SUCCESS-complete directories cannot
-    df = (spark.read.option("basePath", root)
-          .parquet(*[f"{root}/ingest={i}" for i in complete])
-          .drop("ingest"))
-    return Table(df, "pq_index")
+    return Table(read_store(spark, PQ_INDEX, store_path,
+                            pq_index_format(codebooks, centroids)),
+                 "pq_index")
 
 
 def compact_pq_store(spark, store_path: str, files_per_cell: int = 1,
@@ -177,5 +127,5 @@ def compact_pq_store(spark, store_path: str, files_per_cell: int = 1,
     manifest flip on object stores.  ``read_pq_index`` answers
     identically before and after (the digest check still validates the
     artifacts)."""
-    _compact_store_impl(spark, store_path, files_per_cell, "cell",
-                        ["_PQ_FORMAT"], strategy, "compact_pq_store")
+    compact(spark, PQ_INDEX, store_path, "compact_pq_store",
+            files_per_cell, strategy)

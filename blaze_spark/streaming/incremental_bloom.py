@@ -9,19 +9,13 @@ additive — that store knob deliberately doesn't exist): a deny set
 that GROWS per snapshot — yesterday's training data plus today's —
 maintains correctly as an ingest-per-batch store OR-merged on read.
 
-Same discipline as the signature/counts/PQ stores
-(``incremental_dedup`` / ``incremental_counts``):
-
-- one bounded (≤ m/64 rows) packed partial per batch keyed by the
-  ``foreachBatch`` batch id — checkpoint replays overwrite their own
-  subdirectory (exactly-once);
-- reads OR-merge ``_SUCCESS``-complete ingests only;
-- a ``_BLOOM_FORMAT`` stamp carrying (m_bits, k, key mode): probe
-  positions are meaningless across geometries, and a raw-key store
-  must never silently extend an n-gram store;
-- generation-manifest aware and compactable through the shared
-  engine (the compacted layout keeps partial rows; reads OR either
-  way).
+The store is ingest-partitioned (``streaming.store``: one bounded
+(≤ m/64 rows) packed partial per batch keyed by the batch id,
+complete-only reads, a format stamp, compaction); a read OR-merges the
+partials.  The stamp carries (m_bits, k, key mode): probe positions are
+meaningless across geometries, and a raw-key store must never silently
+extend an n-gram store.  The writer's schema is fixed, so a read runs
+no schema-inference job.
 
 Scale: each ingest is ≤ m/64 rows regardless of batch size (the
 bit_or packing happens IN the batch's job), so the store grows with
@@ -37,9 +31,7 @@ from ..core import Table
 from ..pipeline.bloom import (BloomFilter, _validate_mk, build_bloom,
                               build_ngram_bloom)
 from ..wire import local_only
-from .incremental_dedup import (_compact_store_impl, _ingest_ids,
-                                resolve_store_root)
-from .incremental_counts import _check_sig_format
+from .store import BLOOM, begin_ingest, compact, read_store, stream_ingest
 
 __all__ = ["bloom_format", "ingest_bloom_batch", "read_bloom",
            "incremental_bloom", "compact_bloom_store"]
@@ -51,14 +43,6 @@ def bloom_format(m_bits: int, k: int, n: int | None = None) -> str:
     (``n=None``) or token n-grams of a text column."""
     mode = "key" if n is None else f"ngram{n}"
     return f"bloom1:m{m_bits}:k{k}:{mode}"
-
-
-def _check_bloom_format(spark, root: str, has_existing: bool,
-                        expected: str) -> None:
-    _check_sig_format(spark, root, has_existing, expected,
-                      marker_name="_BLOOM_FORMAT",
-                      what="bloom store",
-                      fmt_label="filter geometry")
 
 
 @local_only
@@ -77,19 +61,13 @@ def ingest_bloom_batch(batch: Table, store_path: str,
             "ingest_bloom_batch: pass exactly one of key_col= (raw "
             "keys) or n= (token n-grams of text_col)")
     _validate_mk(m_bits, k)
-    spark = batch.df.sparkSession
-    root = resolve_store_root(spark, store_path)
-    existing = _ingest_ids(spark, root)
-    _check_bloom_format(spark, root, bool(existing),
-                        bloom_format(m_bits, k, n))
-    if batch_id is None:
-        batch_id = (max(existing) + 1) if existing else 0
+    ing = begin_ingest(batch.df.sparkSession, BLOOM, store_path,
+                       bloom_format(m_bits, k, n), batch_id)
     if key_col is not None:
         bl = build_bloom(batch, key_col, m_bits, k)
     else:
         bl = build_ngram_bloom(batch, n, text_col, m_bits, k)
-    (bl.df.repartition(1).write.mode("overwrite")
-     .parquet(f"{root}/ingest={batch_id}"))
+    ing.write(bl.df.repartition(1))
 
 
 def read_bloom(spark, store_path: str, m_bits: int = 1 << 23,
@@ -98,18 +76,7 @@ def read_bloom(spark, store_path: str, m_bits: int = 1 << 23,
     per word — the union filter, exactly), geometry validated.
     Probe with ``bloom_contains`` / ``bloom_contamination``."""
     _validate_mk(m_bits, k)
-    root = resolve_store_root(spark, store_path)
-    complete = _ingest_ids(spark, root, complete_only=True)
-    if not complete:
-        raise ValueError(
-            f"bloom store at {store_path!r} has no complete ingests "
-            "— nothing to read yet (the path may not exist, the "
-            "stream may not have committed its first batch, or every "
-            "ingest directory is missing its _SUCCESS marker)")
-    _check_bloom_format(spark, root, True, bloom_format(m_bits, k, n))
-    df = (spark.read.option("basePath", root)
-          .parquet(*[f"{root}/ingest={i}" for i in complete])
-          .drop("ingest"))
+    df = read_store(spark, BLOOM, store_path, bloom_format(m_bits, k, n))
     merged = (df.groupBy("word_idx")
               .agg(F.bit_or("bits").alias("bits")))
     return BloomFilter(merged, m_bits, k)
@@ -122,21 +89,17 @@ def incremental_bloom(stream, store_path: str, checkpoint: str,
     """Maintain the bloom store from a Structured Streaming source:
     ``foreachBatch`` → :func:`ingest_bloom_batch` keyed by the batch
     id.  Returns the started StreamingQuery."""
-    def _on_batch(bdf, batch_id: int):
-        ingest_bloom_batch(Table(bdf, "bloom_batch"), store_path,
-                           key_col=key_col, n=n, text_col=text_col,
-                           m_bits=m_bits, k=k, batch_id=batch_id)
-
-    return (stream.df.writeStream.foreachBatch(_on_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return stream_ingest(stream, BLOOM, checkpoint, lambda bdf, bid:
+                         ingest_bloom_batch(
+                             Table(bdf, "bloom_batch"), store_path,
+                             key_col=key_col, n=n, text_col=text_col,
+                             m_bits=m_bits, k=k, batch_id=bid))
 
 
 def compact_bloom_store(spark, store_path: str,
                         strategy: str | None = None) -> None:
-    """Collapse the complete ingest directories into one (shared
-    compaction engine; partial rows kept — reads OR-merge either
+    """Collapse the complete ingest directories into one
+    (``store.compact``; partial rows kept — reads OR-merge either
     way)."""
-    _compact_store_impl(spark, store_path, 1, None,
-                        ["_BLOOM_FORMAT"], strategy,
-                        "compact_bloom_store")
+    compact(spark, BLOOM, store_path, "compact_bloom_store",
+            strategy=strategy)

@@ -4,31 +4,16 @@ side of DSIR (`pipeline/selection.py`).
 `dsir_log_weights`' scale form takes PRECOMPUTED (bucket, cnt)
 relations ("fit once per corpus snapshot").  On a live ingest there is
 no snapshot: this module maintains the counts as an ingest-partitioned
-parquet store with the exact discipline of the signature and PQ stores
-(`incremental_dedup` / `incremental_ann`):
-
-- one bounded (≤ ``n_buckets`` rows) partial-counts directory per
-  batch, keyed by the ``foreachBatch`` batch id → a checkpoint REPLAY
-  overwrites its own subdirectory (exactly-once);
-- reads sum over ``_SUCCESS``-complete ingests only — a crashed
-  half-written batch is never counted;
-- a ``_COUNTS_FORMAT`` stamp carrying (n_buckets, n) so a store built
-  with one feature space fails loudly under another (bucket ids are
-  meaningless across spaces);
-- generation-manifest aware (``resolve_store_root``) and compactable
-  through the shared engine — rename swap locally, copy-then-repoint
-  ``_CURRENT`` flip on object stores.
-
-Scale: each ingest directory is ≤ ``n_buckets`` rows regardless of
-batch size (the partial aggregation happens IN the batch's Spark job),
-so the store grows with batch COUNT, not corpus size; reading is a sum
-over ≤ batches × n_buckets tiny rows, and periodic
-:func:`compact_counts_store` collapses that back to one directory.
+parquet store (``streaming.store``: one bounded partial per batch keyed
+by the batch id, complete-only reads, a format stamp, compaction).  The
+stamp carries (n_buckets, n): bucket ids are meaningless across feature
+spaces.  Each ingest is ≤ ``n_buckets`` rows regardless of batch size
+(the partial aggregation happens IN the batch's Spark job); a read sums
+the partials.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -36,31 +21,13 @@ from ..core import Table
 from ..pipeline.selection import hashed_bucket_counts
 from ..sources import local_frame
 from ..wire import local_only
-from .incremental_dedup import (_check_sig_format, _compact_store_impl,
-                                _ingest_ids, resolve_store_root)
+from .store import (COUNTS, LM_COUNTS, begin_ingest, compact, read_store,
+                    stream_ingest)
 
 __all__ = ["counts_format", "ingest_counts_batch", "read_bucket_counts",
            "incremental_bucket_counts", "compact_counts_store",
            "lm_counts_format", "ingest_lm_counts_batch",
            "read_lm_counts", "incremental_lm_counts"]
-
-
-# the ingests' write schemas (``hashed_bucket_counts`` and
-# ``ngram_lm_fit`` output): declared on read, so a store read runs no
-# schema-inference job; ``ingest`` still comes from the directory names
-_COUNTS_SCHEMA = "bucket long, cnt long"
-_LM_COUNTS_SCHEMA = "kind string, bucket long, cnt long"
-
-
-def _read_complete(spark, root: str, complete: list[int],
-                   schema: str) -> DataFrame:
-    """The COMPLETE ingest directories, read explicitly (VERDICT r10 #2:
-    a root-wide read's schema inference may touch a crashed ingest's
-    half-written footer and fail the whole read even though partition
-    pruning would exclude its rows) — the compaction engine's form."""
-    return (spark.read.schema(schema).option("basePath", root)
-            .parquet(*[f"{root}/ingest={i}" for i in complete])
-            .drop("ingest"))
 
 
 def _remote_counts_leaf(spark, store_uri: str, op: str, kw: dict,
@@ -96,14 +63,6 @@ def counts_format(n_buckets: int, n: int) -> str:
     return f"1:b{n_buckets}:n{n}"
 
 
-def _check_counts_format(spark, store_path: str, has_existing: bool,
-                         expected: str) -> None:
-    _check_sig_format(spark, store_path, has_existing, expected,
-                      marker_name="_COUNTS_FORMAT",
-                      what="hashed-counts store",
-                      fmt_label="feature space")
-
-
 @local_only
 def ingest_counts_batch(batch: Table, store_path: str,
                         n_buckets: int = 4096, n: int = 1,
@@ -113,18 +72,12 @@ def ingest_counts_batch(batch: Table, store_path: str,
     the store.  ``batch_id`` defaults to (max existing ingest id) + 1;
     pass the ``foreachBatch`` batch id from streaming so a checkpoint
     replay overwrites its own subdirectory (exactly-once)."""
-    spark = batch.df.sparkSession
-    root = resolve_store_root(spark, store_path)
-    existing = _ingest_ids(spark, root)
-    _check_counts_format(spark, root, bool(existing),
-                         counts_format(n_buckets, n))
-    if batch_id is None:
-        batch_id = (max(existing) + 1) if existing else 0
-    counts = hashed_bucket_counts(batch, text_col, n_buckets, n)
+    ing = begin_ingest(batch.df.sparkSession, COUNTS, store_path,
+                       counts_format(n_buckets, n), batch_id)
     # ≤ n_buckets rows: one output file keeps the per-batch footprint
     # (and the read-side listing cost) minimal
-    (counts.repartition(1).write.mode("overwrite")
-     .parquet(f"{root}/ingest={batch_id}"))
+    ing.write(hashed_bucket_counts(batch, text_col, n_buckets, n)
+              .repartition(1))
 
 
 def read_bucket_counts(spark, store_path: str, n_buckets: int = 4096,
@@ -140,17 +93,8 @@ def read_bucket_counts(spark, store_path: str, n_buckets: int = 4096,
         return _remote_counts_leaf(
             spark, store_path, "read_bucket_counts",
             {"n_buckets": int(n_buckets), "n": int(n)},
-            _COUNTS_SCHEMA)
-    root = resolve_store_root(spark, store_path)
-    complete = _ingest_ids(spark, root, complete_only=True)
-    if not complete:
-        raise ValueError(
-            f"hashed-counts store at {store_path!r} has no complete "
-            "ingests — nothing to read yet (the path may not exist, "
-            "the stream may not have committed its first batch, or "
-            "every ingest directory is missing its _SUCCESS marker)")
-    _check_counts_format(spark, root, True, counts_format(n_buckets, n))
-    df = _read_complete(spark, root, complete, _COUNTS_SCHEMA)
+            COUNTS.schema)
+    df = read_store(spark, COUNTS, store_path, counts_format(n_buckets, n))
     return (df.groupBy("bucket")
             .agg(F.sum("cnt").cast(T.LongType()).alias("cnt")))
 
@@ -161,14 +105,11 @@ def incremental_bucket_counts(stream, store_path: str, checkpoint: str,
     """Maintain the counts store from a Structured Streaming source:
     ``foreachBatch`` → :func:`ingest_counts_batch` keyed by the batch
     id.  Returns the started StreamingQuery."""
-    def _on_batch(bdf: DataFrame, batch_id: int):
-        ingest_counts_batch(Table(bdf, "counts_batch"), store_path,
-                            n_buckets=n_buckets, n=n, text_col=text_col,
-                            batch_id=batch_id)
-
-    return (stream.df.writeStream.foreachBatch(_on_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return stream_ingest(stream, COUNTS, checkpoint, lambda bdf, bid:
+                         ingest_counts_batch(
+                             Table(bdf, "counts_batch"), store_path,
+                             n_buckets=n_buckets, n=n,
+                             text_col=text_col, batch_id=bid))
 
 
 def lm_counts_format(n_buckets: int, n: int,
@@ -222,18 +163,12 @@ def ingest_lm_counts_batch(batch: Table, store_path: str,
     hash, so a store can never silently mix tokenizations."""
     from ..pipeline.lm import ngram_lm_fit
 
-    spark = batch.df.sparkSession
-    root = resolve_store_root(spark, store_path)
-    existing = _ingest_ids(spark, root)
-    _check_counts_format(spark, root, bool(existing),
-                         lm_counts_format(n_buckets, n, unigrams,
-                                          tokenizer))
-    if batch_id is None:
-        batch_id = (max(existing) + 1) if existing else 0
-    counts = ngram_lm_fit(batch, text_col, n_buckets, n,
-                          unigrams=unigrams, tokenizer=tokenizer)
-    (counts.repartition(1).write.mode("overwrite")
-     .parquet(f"{root}/ingest={batch_id}"))
+    ing = begin_ingest(batch.df.sparkSession, LM_COUNTS, store_path,
+                       lm_counts_format(n_buckets, n, unigrams, tokenizer),
+                       batch_id)
+    ing.write(ngram_lm_fit(batch, text_col, n_buckets, n,
+                           unigrams=unigrams, tokenizer=tokenizer)
+              .repartition(1))
 
 
 def read_lm_counts(spark, store_path: str, n_buckets: int = 4096,
@@ -255,19 +190,9 @@ def read_lm_counts(spark, store_path: str, n_buckets: int = 4096,
             from ..pipeline.tokenizer import _tokenizer_wire
             kw["tokenizer"] = _tokenizer_wire(tokenizer)
         return _remote_counts_leaf(spark, store_path, "read_lm_counts",
-                                   kw, _LM_COUNTS_SCHEMA)
-    root = resolve_store_root(spark, store_path)
-    complete = _ingest_ids(spark, root, complete_only=True)
-    if not complete:
-        raise ValueError(
-            f"LM counts store at {store_path!r} has no complete "
-            "ingests — nothing to read yet (the path may not exist, "
-            "the stream may not have committed its first batch, or "
-            "every ingest directory is missing its _SUCCESS marker)")
-    _check_counts_format(spark, root, True,
-                         lm_counts_format(n_buckets, n, unigrams,
-                                          tokenizer))
-    df = _read_complete(spark, root, complete, _LM_COUNTS_SCHEMA)
+                                   kw, LM_COUNTS.schema)
+    df = read_store(spark, LM_COUNTS, store_path,
+                    lm_counts_format(n_buckets, n, unigrams, tokenizer))
     return (df.groupBy("kind", "bucket")
             .agg(F.sum("cnt").cast(T.LongType()).alias("cnt")))
 
@@ -279,28 +204,23 @@ def incremental_lm_counts(stream, store_path: str, checkpoint: str,
     """Maintain the LM counts store from a Structured Streaming source:
     ``foreachBatch`` → :func:`ingest_lm_counts_batch` keyed by the
     batch id.  Returns the started StreamingQuery."""
-    def _on_batch(bdf: DataFrame, batch_id: int):
-        ingest_lm_counts_batch(Table(bdf, "lm_counts_batch"),
-                               store_path, n_buckets=n_buckets, n=n,
-                               text_col=text_col, batch_id=batch_id,
-                               unigrams=unigrams, tokenizer=tokenizer)
-
-    return (stream.df.writeStream.foreachBatch(_on_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return stream_ingest(stream, LM_COUNTS, checkpoint, lambda bdf, bid:
+                         ingest_lm_counts_batch(
+                             Table(bdf, "lm_counts_batch"), store_path,
+                             n_buckets=n_buckets, n=n, text_col=text_col,
+                             batch_id=bid, unigrams=unigrams,
+                             tokenizer=tokenizer))
 
 
 def compact_counts_store(spark, store_path: str,
                          strategy: str | None = None) -> None:
-    """Collapse the complete ingest directories into one (the shared
-    compaction engine: complete-only input, format marker carried,
-    atomic rename swap or manifest repoint).  The rewrite keeps the
-    PARTIAL rows (one (bucket, cnt) row per original ingest per
-    bucket) rather than pre-summing — :func:`read_bucket_counts` sums
-    on read either way, and the rewrite stays a pure file-layout
-    operation like the other stores'.  No inner partition column
-    (``part_col=None`` → the engine's single-directory rewrite): the
-    whole relation is ≤ batches × n_buckets tiny rows."""
-    _compact_store_impl(spark, store_path, 1, None,
-                        ["_COUNTS_FORMAT"], strategy,
-                        "compact_counts_store")
+    """Collapse the complete ingest directories of a hashed-counts or
+    LM counts store into one (``store.compact``).  The rewrite keeps
+    the PARTIAL rows rather than pre-summing — the readers sum either
+    way, and the rewrite stays a pure file-layout operation like the
+    other stores'.  One file: the whole relation is ≤ batches ×
+    n_buckets tiny rows."""
+    # both counts kinds share the marker and have no inner partition
+    # column, so COUNTS compacts either
+    compact(spark, COUNTS, store_path, "compact_counts_store",
+            strategy=strategy)

@@ -768,27 +768,34 @@ def test_sig_format_guard_without_jvm_gateway(spark, tmp_path, monkeypatch):
     still stamp/check local stores via plain file IO, not silently no-op."""
     import pytest as _pytest
 
+    import blaze_spark.fsutil as fsutil
     from blaze_spark.streaming import incremental_dedup as inc
+    from blaze_spark.streaming.store import SIGNATURES, check_format
 
     def _no_gateway(spark, path):
         raise RuntimeError("no JVM gateway (Connect)")
 
-    monkeypatch.setattr(inc, "_hadoop_fs", _no_gateway)
+    monkeypatch.setattr(fsutil, "hadoop_fs", _no_gateway)
     store = str(tmp_path / "store")
+
+    def check(has_existing):
+        check_format(spark, SIGNATURES, store, inc._SIG_FORMAT,
+                     has_existing)
+
     # fresh store: stamped through the local-path fallback
-    inc._check_sig_format(spark, store, has_existing=False)
+    check(False)
     marker = tmp_path / "store" / "_SIG_FORMAT"
     assert marker.read_text().strip() == inc._SIG_FORMAT
     # matching stamp passes
-    inc._check_sig_format(spark, store, has_existing=True)
+    check(True)
     # mismatched stamp still fails loudly with no gateway
     marker.write_text("0")
     with _pytest.raises(ValueError, match="signature format"):
-        inc._check_sig_format(spark, store, has_existing=True)
+        check(True)
     # unmarked non-empty store fails loudly with no gateway
     marker.unlink()
     with _pytest.raises(ValueError, match="_SIG_FORMAT"):
-        inc._check_sig_format(spark, store, has_existing=True)
+        check(True)
 
 
 def test_streaming_curation_gate_matches_batch(spark, sf_dir):
@@ -924,21 +931,23 @@ def test_sig_format_guard_remote_store_stamps_via_spark_api(
     fresh store through the Spark API (directory marker) instead of
     leaving it permanently unstampable — otherwise batch 1 warns and
     every later batch dies on _unmarked_err with no way to recover."""
+    import blaze_spark.fsutil as fsutil
     from blaze_spark.streaming import incremental_dedup as inc
+    from blaze_spark.streaming.store import SIGNATURES, check_format
 
     def _no_gateway(spark, path):
         raise RuntimeError("no JVM gateway (Connect)")
 
-    monkeypatch.setattr(inc, "_hadoop_fs", _no_gateway)
+    monkeypatch.setattr(fsutil, "hadoop_fs", _no_gateway)
     # treat the tmp store as remote so the local-file tier is skipped
-    monkeypatch.setattr(inc, "is_local_path", lambda p: False)
+    monkeypatch.setattr(fsutil, "is_local_path", lambda p: False)
     store = str(tmp_path / "rstore")
-    inc._check_sig_format(spark, store, has_existing=False)
+    check_format(spark, SIGNATURES, store, inc._SIG_FORMAT, False)
     # stamped as a directory marker readable by spark.read.text
     rows = spark.read.text(store + "/_SIG_FORMAT").collect()
     assert any(r[0].strip() == inc._SIG_FORMAT for r in rows)
     # and the next batch verifies it instead of raising
-    inc._check_sig_format(spark, store, has_existing=True)
+    check_format(spark, SIGNATURES, store, inc._SIG_FORMAT, True)
 
 
 def test_incremental_simhash_dedup_batches(spark, tmp_path):
@@ -1178,7 +1187,7 @@ def test_incremental_pq_index_read_errors_and_connect_complete_only(
         spark, tmp_path, monkeypatch):
     """Review r9 #3/#6: read_pq_index gives a clear 'no complete
     ingests' error for missing/empty stores (and never stamps a marker
-    as a read side effect); the gateway-less _ingest_ids tier honors
+    as a read side effect); the gateway-less ingest_ids tiers honor
     complete_only via explicit _SUCCESS probes."""
     import os
     import shutil
@@ -1187,9 +1196,10 @@ def test_incremental_pq_index_read_errors_and_connect_complete_only(
 
     from blaze_spark import Table, data
     from blaze_spark.pipeline import pq_fit
-    from blaze_spark.streaming import incremental_dedup as inc
+    import blaze_spark.fsutil as fsutil
     from blaze_spark.streaming.incremental_ann import (ingest_pq_batch,
                                                        read_pq_index)
+    from blaze_spark.streaming.store import ingest_ids
 
     emb = data("/root/testdata/sf0.001/embeddings.parquet", spark=spark)
     cb = pq_fit(emb, m=8, ks=16, iters=2, train_rows=200)
@@ -1206,13 +1216,18 @@ def test_incremental_pq_index_read_errors_and_connect_complete_only(
     os.remove(store + "/ingest=7/_SUCCESS")
 
     # JVM tier: half-written ingest invisible
-    assert inc._ingest_ids(spark, store, complete_only=True) == [0]
-    # gateway-less tier: force the fallback and require the same answer
+    assert ingest_ids(spark, store, complete_only=True) == [0]
+    # gateway-less tiers: force the fallback and require the same answer
     def boom(*a, **k):
         raise RuntimeError("no gateway")
-    monkeypatch.setattr(inc, "_hadoop_fs", boom)
-    assert inc._ingest_ids(spark, store, complete_only=True) == [0]
-    assert inc._ingest_ids(spark, store) == [0, 7]
+    monkeypatch.setattr(fsutil, "hadoop_fs", boom)
+    assert ingest_ids(spark, store, complete_only=True) == [0]
+    assert ingest_ids(spark, store) == [0, 7]
+    # ... and with the local-file tier skipped: the Spark API lists ids
+    # from the partition column and probes each _SUCCESS explicitly
+    monkeypatch.setattr(fsutil, "is_local_path", lambda p: False)
+    assert ingest_ids(spark, store, complete_only=True) == [0]
+    assert ingest_ids(spark, store) == [0, 7]
     monkeypatch.undo()
 
     assert read_pq_index(spark, store, cb).df.count() == 100
