@@ -1075,16 +1075,16 @@ class Table:
                 raise KeyError(f"no foreign key declared on {fk_col}")
             ref, ref_key = self._fks[fk_col]
             if fk_col not in joined:
-                dim = ref.df.select(
-                    F.col(ref_key).alias(f"__fk_{fk_col}"),
-                    *[F.col(c) for c in ref.columns if c != ref_key])
+                dim = ref.df.selectExpr(
+                    f"{_quote(ref_key)} AS {_quote(f'__fk_{fk_col}')}",
+                    *[_quote(c) for c in ref.columns if c != ref_key])
                 df = df.join(F.broadcast(dim),
                              df[fk_col] == dim[f"__fk_{fk_col}"], "left") \
                     .drop(f"__fk_{fk_col}")
                 joined.add(fk_col)
             adds.append((fk_col, field))
         keep = list(self.columns) + [f for _, f in adds]
-        out = self._new(df.select(*dict.fromkeys(keep)))
+        out = self._new(df.selectExpr(*map(_quote, dict.fromkeys(keep))))
         if self._tree is not None:
             # the child tree carries the with_fk registration nodes, so
             # the whole hop replays server-side (r9)
@@ -2134,6 +2134,15 @@ def shift(col: ColExpr, n: int, order_by, partition_by=None) -> ColExpr:
     return col.shift(n, order_by, partition_by)
 
 
+def _quote(*parts: str) -> str:
+    """``parts`` as one dotted, backtick-quoted SQL name (a backtick
+    doubled), so a dot, space or backtick stays part of a name.  Joins and
+    projections go through ``selectExpr``/``F.expr`` text with it: one
+    gateway call for all columns, where each Column-API call
+    (``F.col``, ``.alias``, ``==``) costs several round trips."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+
+
 def join(lhs: Table, rhs: Table, on_left=None, on_right=None,
          how: str = "inner", suffixes: tuple[str, str] = ("_left", "_right"),
          broadcast: bool | None = None) -> Table:
@@ -2160,14 +2169,13 @@ def join(lhs: Table, rhs: Table, on_left=None, on_right=None,
             raise ValueError("cross join takes no join keys")
         rdf = F.broadcast(rhs.df) if broadcast else rhs.df
         joined = lhs.df.alias("__l").crossJoin(rdf.alias("__r"))
-        out = []
-        for c in lhs.columns:
-            name = c + suffixes[0] if c in rhs.columns else c
-            out.append(F.col(f"__l.{c}").alias(name))
-        for c in rhs.columns:
-            name = c + suffixes[1] if c in lhs.columns else c
-            out.append(F.col(f"__r.{c}").alias(name))
-        return _derived(joined.select(*out), lhs, rhs)
+        lcols, rcols = lhs.columns, rhs.columns
+        out = [(_quote("__l", c), c + suffixes[0] if c in rcols else c)
+               for c in lcols]
+        out += [(_quote("__r", c), c + suffixes[1] if c in lcols else c)
+                for c in rcols]
+        return _derived(joined.selectExpr(
+            *[f"{e} AS {_quote(n)}" for e, n in out]), lhs, rhs)
 
     if on_left is None:
         on_left = sorted(set(lhs.columns) & set(rhs.columns))
@@ -2201,10 +2209,8 @@ def join(lhs: Table, rhs: Table, on_left=None, on_right=None,
     ldf, rdf = lhs.df.alias("__l"), rhs.df.alias("__r")
     if broadcast:
         rdf = F.broadcast(rdf)
-    cond = None
-    for lk, rk in zip(on_left, on_right):
-        c = F.col(f"__l.{lk}") == F.col(f"__r.{rk}")
-        cond = c if cond is None else (cond & c)
+    cond = F.expr(" AND ".join(f"{_quote('__l', lk)} = {_quote('__r', rk)}"
+                               for lk, rk in zip(on_left, on_right)))
     joined = ldf.join(rdf, cond, spark_how)
 
     def _record(t: Table) -> Table:
@@ -2222,27 +2228,29 @@ def join(lhs: Table, rhs: Table, on_left=None, on_right=None,
         return _record(_derived(joined, lhs, rhs))
 
     # assemble output schema: keys (promoted/coalesced), then left non-key,
-    # then right non-key, with _left/_right suffixes on collisions
+    # then right non-key, with _left/_right suffixes on collisions; one
+    # (SQL expression, output name) pair per column
     lnk = [c for c in lhs.columns if c not in on_left]
     rnk = [c for c in rhs.columns if c not in on_right]
     out = []
     for lk, rk in zip(on_left, on_right):
         if spark_how == "full":
-            out.append(F.coalesce(F.col(f"__l.{lk}"), F.col(f"__r.{rk}")).alias(lk))
+            key = f"coalesce({_quote('__l', lk)}, {_quote('__r', rk)})"
         elif spark_how == "right":
-            out.append(F.col(f"__r.{rk}").alias(lk))
+            key = _quote("__r", rk)
         else:
-            out.append(F.col(f"__l.{lk}").alias(lk))
+            key = _quote("__l", lk)
+        out.append((key, lk))
     key_names = set(on_left)
     for c in lnk:
-        name = c + suffixes[0] if c in rnk else c
-        out.append(F.col(f"__l.{c}").alias(name))
+        out.append((_quote("__l", c), c + suffixes[0] if c in rnk else c))
     for c in rnk:
         # suffix on collision with a left non-key OR with an output key name
         # (a right non-key may share the LEFT key's name without being a key)
         name = c + suffixes[1] if (c in lnk or c in key_names) else c
-        out.append(F.col(f"__r.{c}").alias(name))
-    return _record(_derived(joined.select(*out), lhs, rhs))
+        out.append((_quote("__r", c), name))
+    return _record(_derived(joined.selectExpr(
+        *[f"{e} AS {_quote(n)}" for e, n in out]), lhs, rhs))
 
 
 def concat(lhs: Table, rhs: Table, *more: Table) -> Table:

@@ -7,9 +7,11 @@ blaze/expr/literal.py:166-198) with optional explicit ``schema=`` override.
 As in the reference, a leaf discovers its schema once: an inferred file
 schema is memoized per process (``_resolve_schema``), keyed by format,
 paths, reader options, the session's SQL conf and each local file's
-(relative path, size, mtime_ns).  A repeat read of unchanged local files
-declares the memoized schema and runs no Spark job; remote schemes and
-gateway-less (Spark Connect) sessions infer on every read.
+(relative path, size, mtime_ns), together with the normalized leaf
+``data()`` built from it.  A repeat read of unchanged local files in the
+same session reuses that leaf: no Spark job and no analysis, a few
+gateway calls.  Remote schemes and gateway-less (Spark Connect) sessions
+infer on every read.
 
 Scale notes: parquet/orc readers give Catalyst column pruning + predicate
 pushdown + partition pruning for free; CSV/JSON get projection pushdown.
@@ -67,8 +69,11 @@ def data(source: Any, *, spark: SparkSession | None = None,
 
     A file source without ``schema=`` discovers its schema once per
     (files, options, session conf): a repeat read of unchanged local
-    files declares the memoized schema and runs no Spark job (see
-    ``_resolve_schema``).  An explicit ``schema=`` is read as given.
+    files reuses the memoized normalized leaf (see ``_leaf``) and runs no
+    Spark job and no analysis.  Two such reads share one plan, so join
+    them through ``join`` (which aliases its sides), not through raw
+    ``a.df[c] == b.df[c]`` column references, which Spark rejects as an
+    ambiguous self-join.  An explicit ``schema=`` is read as given.
     """
     if isinstance(source, Table):
         return source
@@ -117,12 +122,12 @@ def data(source: Any, *, spark: SparkSession | None = None,
                 options.setdefault("inferSchema", "true")
             if source.lower().endswith(".tsv"):
                 options.setdefault("sep", "\t")
-        ns_cols: tuple[str, ...] = ()
         if schema is None:
-            schema, ns_cols = _resolve_schema(spark, f, source, options)
-        df = _reader(spark, f, options).schema(schema).load(source)
-        t = Table(_normalize_ntz(_nanos_to_micros(df, ns_cols)),
-                  name or _basename(source))
+            df = _leaf(spark, f, source, options)
+        else:
+            df = _normalize_ntz(
+                _reader(spark, f, options).schema(schema).load(source))
+        t = Table(df, name or _basename(source))
         t._tree = {"op": "data", "args": [source]}
         return t
 
@@ -132,11 +137,23 @@ def data(source: Any, *, spark: SparkSession | None = None,
 
 
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
-# LRU of inferred schemas by _schema_key; the bound keeps a process that
+# LRU of _Schema entries by _schema_key; the bound keeps a process that
 # reads many distinct paths from growing without limit
 _SCHEMA_MEMO_SIZE = 256
 _schema_memo: OrderedDict = OrderedDict()
 _schema_memo_lock = threading.Lock()
+
+
+class _Schema:
+    """A memo entry: the inferred ``schema``, its parquet
+    TIMESTAMP(NANOS) columns ``ns_cols`` and, once ``data()`` has built
+    it, the normalized ``leaf``: ``(JVM session, JVM Dataset, whether
+    the leaf cast TIMESTAMP_NTZ columns)``."""
+
+    __slots__ = ("schema", "ns_cols", "leaf")
+
+    def __init__(self, schema, ns_cols):
+        self.schema, self.ns_cols, self.leaf = schema, ns_cols, None
 
 
 def _reader(spark: SparkSession, fmt: str, options: dict):
@@ -147,12 +164,12 @@ def _reader(spark: SparkSession, fmt: str, options: dict):
 
 
 def _resolve_schema(spark: SparkSession, fmt: str, path: str,
-                    options: dict):
-    """``(schema, ns_cols)``: the schema a batch read of ``path`` with
-    ``options`` infers, and its parquet TIMESTAMP(NANOS) columns (a
-    footer sniff).  Sets the nanosAsLong conf when there are any: Spark
-    cannot scan some TIMESTAMP(NANOS) parquet, so the read that follows
-    takes them as raw int64 nanos (see ``_nanos_to_micros``).
+                    options: dict) -> _Schema:
+    """The ``_Schema`` of a batch read of ``path`` with ``options``: the
+    schema it infers and its parquet TIMESTAMP(NANOS) columns (a footer
+    sniff).  Sets the nanosAsLong conf when there are any: Spark cannot
+    scan some TIMESTAMP(NANOS) parquet, so the read that follows takes
+    them as raw int64 nanos (see ``_nanos_to_micros``).
 
     Memoized by ``_schema_key``: a hit runs no Spark job and reads no
     footer; a miss infers as Spark does and stores the result.  Reads
@@ -164,19 +181,43 @@ def _resolve_schema(spark: SparkSession, fmt: str, path: str,
         if found is not None:
             _schema_memo.move_to_end(key)
     if found is not None:
-        if found[1]:
+        if found.ns_cols:
             spark.conf.set(_NANOS_AS_LONG, "true")
         return found
     ns_cols = tuple(_nanos_timestamp_cols(path)) if fmt == "parquet" else ()
     if ns_cols:
         spark.conf.set(_NANOS_AS_LONG, "true")
-    found = (_reader(spark, fmt, options).load(path).schema, ns_cols)
+    found = _Schema(_reader(spark, fmt, options).load(path).schema, ns_cols)
     if key is not None:
         with _schema_memo_lock:
             _schema_memo[key] = found
             if len(_schema_memo) > _SCHEMA_MEMO_SIZE:
                 _schema_memo.popitem(last=False)
     return found
+
+
+def _leaf(spark: SparkSession, fmt: str, path: str,
+          options: dict) -> DataFrame:
+    """The normalized leaf frame of an inferred-schema read (read under
+    the resolved schema, nanos converted, NTZ cast).  The memo entry
+    keeps the leaf's JVM Dataset: a hit in the same JVM session wraps it
+    in a new Python ``DataFrame`` (no reader call, no analysis; a fresh
+    wrapper so owned-cache finalizers never attach to the memo's frame)
+    and repeats the non-UTC warning when the leaf cast NTZ columns."""
+    entry = _resolve_schema(spark, fmt, path, options)
+    jsession = getattr(spark, "_jsparkSession", None)
+    leaf = entry.leaf
+    if leaf is not None and leaf[0] is jsession:
+        if leaf[2]:
+            _warn_if_non_utc(spark)
+        return DataFrame(leaf[1], spark)
+    read = _nanos_to_micros(
+        _reader(spark, fmt, options).schema(entry.schema).load(path),
+        entry.ns_cols)
+    df = _normalize_ntz(read)
+    if jsession is not None:
+        entry.leaf = (jsession, df._jdf, df is not read)
+    return df
 
 
 def _schema_key(spark: SparkSession, fmt: str, path: str, options: dict):
@@ -402,21 +443,20 @@ def _rewrite_ntz_schema(schema):
     return new
 
 
-def _warn_if_non_utc(df: DataFrame) -> None:
+def _warn_if_non_utc(spark: SparkSession) -> None:
     """NTZ -> TimestampType is value-preserving only under a UTC session
     zone; warn (don't fail) when a user session is zoned elsewhere."""
     try:
-        tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+        tz = spark.conf.get("spark.sql.session.timeZone")
     except Exception:
         return
     if tz not in ("UTC", "Etc/UTC", "GMT", "+00:00"):
-        import warnings
+        from ..wire import warn_caller
 
-        warnings.warn(
+        warn_caller(
             f"casting TIMESTAMP_NTZ under session timeZone={tz!r}; naive "
             "timestamps are interpreted in that zone — set "
-            "spark.sql.session.timeZone=UTC for value-preserving reads",
-            stacklevel=3)
+            "spark.sql.session.timeZone=UTC for value-preserving reads")
 
 
 def _normalize_ntz(df: DataFrame) -> DataFrame:
@@ -437,7 +477,7 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
             conv[f.name] = F.col(f.name).cast(new)
     if not conv:
         return df
-    _warn_if_non_utc(df)
+    _warn_if_non_utc(df.sparkSession)
     return df.withColumns(conv)
 
 

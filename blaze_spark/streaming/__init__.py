@@ -38,7 +38,8 @@ def stream_data(spark: SparkSession, path: str, fmt: str = "parquet",
     (a batch metadata read, no data scan; none at all on a repeat)."""
     ns_cols: tuple[str, ...] = ()
     if schema is None:
-        schema, ns_cols = _resolve_schema(spark, fmt, path, options)
+        found = _resolve_schema(spark, fmt, path, options)
+        schema, ns_cols = found.schema, found.ns_cols
     # Naive-timestamp parquet sniffs as TIMESTAMP_NTZ under Spark >= 3.4's
     # inferTimestampNTZ, and withWatermark rejects NTZ event-time columns
     # (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE).  Declare the stream schema

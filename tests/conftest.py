@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
+import types
 
 import pytest
 from pyspark.sql import SparkSession
@@ -70,3 +73,35 @@ def cities(spark):
         schema="name string, city string",
         name="cities",
     )
+
+
+@pytest.fixture
+def gateway_commands(spark):
+    """``with gateway_commands() as sent: ...`` counts the py4j commands
+    this thread sends to the JVM while the block runs (``sent.count``).
+    It wraps ``send_command`` on the session's gateway client, whatever
+    its connection class (pinned-thread ``JavaClient`` or
+    ``GatewayClient``), and restores it at teardown."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, open_counts = client.send_command, threading.get_ident(), []
+
+    def counted(*args, **kwargs):
+        if threading.get_ident() == me:
+            for c in open_counts:
+                c.count += 1
+        return send(*args, **kwargs)
+
+    @contextlib.contextmanager
+    def count():
+        c = types.SimpleNamespace(count=0)
+        open_counts.append(c)
+        try:
+            yield c
+        finally:
+            open_counts.remove(c)
+
+    client.send_command = counted
+    try:
+        yield count
+    finally:
+        del client.send_command

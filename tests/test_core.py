@@ -548,6 +548,62 @@ def test_cross_join_rejects_keys(t, cities):
         join(t, cities, on_left="name", how="cross")
 
 
+# -- quoted join projection ----------------------------------------------------
+
+_ODD_NAMES = {"k": "k.id", "a": "a b", "b": "b`c", "v": "v.w x`y"}
+
+
+@pytest.mark.parametrize("how", ["inner", "left", "right", "outer", "full",
+                                 "semi", "anti", "cross"])
+def test_join_odd_column_names(spark, how):
+    """Names with a dot, a space or a backtick (the join key dotted) join
+    as plain names do: the same output names under the same renaming,
+    suffixes included, and the same types, nullability and rows."""
+    from blaze_spark import data
+
+    def joined(name):
+        def table(rows, cols):
+            return data(rows, spark=spark, schema=T.StructType(
+                [T.StructField(name(c), t) for c, t in cols]))
+
+        lhs = table([(1, "x", 10), (2, "y", 20), (3, None, 30)],
+                    [("k", T.LongType()), ("a", T.StringType()),
+                     ("v", T.LongType())])
+        rhs = table([(1, "p", 100), (2, "q", 200), (4, "r", 400)],
+                    [("k", T.LongType()), ("b", T.StringType()),
+                     ("v", T.LongType())])
+        keys = {} if how == "cross" else {"on_left": name("k")}
+        return join(lhs, rhs, how=how, **keys)
+
+    plain, odd = joined(lambda c: c), joined(_ODD_NAMES.get)
+    renamed = [_ODD_NAMES[c[0]] + c[1:] for c in plain.columns]
+    assert odd.columns == renamed
+    assert [(f.dataType, f.nullable) for f in odd.schema.fields] == \
+        [(f.dataType, f.nullable) for f in plain.schema.fields]
+    assert sorted(map(tuple, odd.df.collect()), key=repr) == \
+        sorted(map(tuple, plain.df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("how", ["inner", "outer", "cross"])
+def test_join_construction_is_constant_round_trips(spark, how,
+                                                   gateway_commands):
+    """Building a join of two 40-column tables sends a bounded number of
+    py4j commands: its projection and condition are SQL text, not a
+    Column-API call (several round trips each) per output column."""
+    from blaze_spark import data
+
+    def wide(prefix):
+        return data(spark.range(5).selectExpr(
+            "id AS k", *[f"id + {i} AS {prefix}{i}" for i in range(39)]))
+
+    lhs, rhs = wide("a"), wide("b")
+    keys = {} if how == "cross" else {"on_left": "k"}
+    with gateway_commands() as sent:
+        out = join(lhs, rhs, how=how, **keys)
+    assert sent.count <= 200, sent.count
+    assert len(out.columns) == (80 if how == "cross" else 79)
+
+
 # -- engine-level SortKey (replaces Column-repr sniffing) --------------------
 
 def test_sortkey_desc(t):

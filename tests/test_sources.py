@@ -527,3 +527,124 @@ def test_stream_data_sniff_keeps_reader_options(spark, tmp_path):
     st = stream_data(spark, str(d), fmt="csv", header="true")
     assert st.columns == ["id", "name"]
     assert data(str(d / "rows.csv"), spark=spark).columns == ["id", "name"]
+
+
+# -- memoized leaf frame ------------------------------------------------------
+
+def _write_naive(path, ncols=1):
+    """Parquet with a naive timestamp (reads as TIMESTAMP_NTZ, cast by
+    data()) and ``ncols`` long columns."""
+    import datetime
+
+    import pyarrow as pa
+
+    _write(path, ts=pa.array([datetime.datetime(2024, 5, 1, 12, 30)] * 3,
+                             pa.timestamp("us")),
+           **{f"c{i}": [1, 2, 3] for i in range(ncols)})
+
+
+def test_repeat_read_reuses_the_normalized_leaf(spark, tmp_path):
+    """Each hit is a new Python DataFrame over the memoized leaf: distinct
+    wrappers (so owned-cache state never lands on a shared object), the
+    same plan, the NTZ cast already applied."""
+    from blaze_spark import data
+
+    path = str(tmp_path / "leaf.parquet")
+    _write_naive(path)
+    first = data(path, spark=spark)
+    hits = [data(path, spark=spark) for _ in range(2)]
+    frames = [first.df] + [h.df for h in hits]
+    assert len({id(f) for f in frames}) == 3
+    assert all(h.df._jdf is first.df._jdf for h in hits)
+    assert all(h.df.sameSemantics(first.df) for h in hits)
+    assert dict(hits[1].df.dtypes)["ts"] == "timestamp"
+    assert sorted(hits[1].df.collect()) == sorted(first.df.collect())
+
+
+def test_repeat_read_is_constant_round_trips(spark, tmp_path,
+                                             gateway_commands):
+    """A repeat data() of an unchanged file sends a handful of gateway
+    commands (the conf key and the wrapper), not a reader build, an
+    NTZ cast and its analysis."""
+    from blaze_spark import data
+
+    path = str(tmp_path / "wide.parquet")
+    _write_naive(path, ncols=40)
+    data(path, spark=spark)
+    with gateway_commands() as sent:
+        t = data(path, spark=spark)
+    assert sent.count <= 10, sent.count
+    assert t.columns == ["ts"] + [f"c{i}" for i in range(40)]
+
+
+def test_leaf_memo_never_crosses_sessions(spark, tmp_path):
+    """Sessions with one SQL conf share a memo key, but a hit only reuses
+    a leaf built in the same JVM session."""
+    from blaze_spark import data
+    from blaze_spark.sources import _schema_key
+
+    path = str(tmp_path / "sessions.parquet")
+    _write(path, a=[1, 2])
+    s1, s2 = spark.newSession(), spark.newSession()
+    assert _schema_key(s1, "parquet", path, {}) == \
+        _schema_key(s2, "parquet", path, {})
+    for s in (s1, s2, s1, s2):
+        t = data(path, spark=s)
+        assert t.df._jdf.sparkSession().equals(s._jsparkSession)
+        assert sorted(t.df.collect()) == [(1,), (2,)]
+
+
+def test_ntz_warning_repeats_on_a_memo_hit(spark, tmp_path):
+    """A hit whose leaf cast NTZ columns warns under a non-UTC session as
+    the inferring read did, attributed to the caller."""
+    import warnings
+
+    from blaze_spark import data
+
+    path = str(tmp_path / "warn_hit.parquet")
+    _write_naive(path)
+    old = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        reads = []
+        for _ in range(2):
+            with warnings.catch_warnings(record=True) as w:
+                warnings.simplefilter("always")
+                reads.append(data(path, spark=spark))
+            tz = [x for x in w if "timeZone" in str(x.message)]
+            assert tz and tz[0].filename == __file__
+        assert reads[1].df._jdf is reads[0].df._jdf
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+
+
+def test_nanos_hit_sets_nanos_as_long(spark, tmp_path):
+    """A hit on a TIMESTAMP(NANOS) leaf sets the nanosAsLong conf its
+    scan needs, as the inferring read did."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from blaze_spark import data
+    from blaze_spark.sources import _NANOS_AS_LONG
+
+    path = str(tmp_path / "ns_hit.parquet")
+    ts = datetime.datetime(2024, 5, 1, 12, 30, 45, 123456)
+    pq.write_table(
+        pa.table({"id": [1], "ts": pa.array([ts], pa.timestamp("ns"))}),
+        path, store_schema=False)
+    old = spark.conf.get(_NANOS_AS_LONG, None)
+    try:
+        spark.conf.unset(_NANOS_AS_LONG)
+        first = data(path, spark=spark)
+        spark.conf.unset(_NANOS_AS_LONG)
+        hit = data(path, spark=spark)
+        assert hit.df._jdf is first.df._jdf
+        assert spark.conf.get(_NANOS_AS_LONG) == "true"
+        assert hit.df.collect()[0].ts == ts
+    finally:
+        if old is None:
+            spark.conf.unset(_NANOS_AS_LONG)
+        else:
+            spark.conf.set(_NANOS_AS_LONG, old)
